@@ -212,8 +212,13 @@ object App {
     // split the topic (each message once across them); a new name replays
     val subscription = flag(args, "pulsar.subscription", "pulsar-adapter")
     // --readers N: split each micro-batch into up to N partitions by key
-    // hash (per-key order preserved) so decode parallelizes across tasks
-    val readers = flag(args, "readers", "1")
+    // hash (per-key order preserved) so decode and the remote_write entry
+    // encoding parallelize across tasks; default: the Spark default
+    // parallelism. With --pulsar.executor-consumers, N is also the number of
+    // executor-side KeyShared consumers, so there the default stays 1.
+    val executorConsumers = flag(args, "pulsar.executor-consumers", "false")
+    val readers = flag(args, "readers",
+      if (executorConsumers.toBoolean) "1" else spark.sparkContext.defaultParallelism.toString)
     // the consume side unmarshals with the configured serializer too
     // (pkg/app/consume.go reuses the pulsar serializer choice): json -> the
     // legacy layout, anything compat/avro -> the compat layout with the
@@ -238,8 +243,7 @@ object App {
           // scale-out consume (beyond reference parity): --readers cached
           // per-executor KeyShared consumers (auto-split; sticky ranges and
           // ack timeout tunable)
-          .option("pulsar.executor-consumers",
-            flag(args, "pulsar.executor-consumers", "false"))
+          .option("pulsar.executor-consumers", executorConsumers)
           .option("pulsar.sticky-ranges",
             flag(args, "pulsar.sticky-ranges", "false"))
           .option("pulsar.ack-timeout-ms",

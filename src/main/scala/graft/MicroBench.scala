@@ -106,7 +106,7 @@ object MicroBench {
         val ms = MemoryStream[Sample](spark)
         val q = TenantBatcher(ms.toDS(),
             TenantBatcher.Config(batchSize, 3600000L))
-          .select(col("tenantId"), col("size"))
+          .select(col("tenantId"), size(col("entries")).as("size"))
           .writeStream.format("memory").queryName(name)
           .outputMode("append").start()
         val t0 = System.nanoTime()

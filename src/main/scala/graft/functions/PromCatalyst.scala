@@ -91,6 +91,14 @@ object PromCatalyst {
     toSampleRow(parsed)
   }
 
+  /** The sample's remote_write entry ([[PromKernel.seriesEntry]]), labels
+    * sorted by name: what the consume path buffers and POSTs.
+    */
+  def seriesEntry(labels: MapData, ms: Long, value: Double): Array[Byte] = {
+    val (keys, values) = mapToSortedArrays(labels)
+    K.seriesEntry(keys, values, value, ms)
+  }
+
   // --- partition key --------------------------------------------------------
 
   def seriesKey(labels: MapData, tenant: UTF8String, replicaLabels: ArrayData): UTF8String = {

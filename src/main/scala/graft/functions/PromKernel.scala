@@ -418,6 +418,17 @@ object PromKernel {
     w.result()
   }
 
+  /** One sample as its `WriteRequest.timeseries` entry: tag 1, length, then
+    * a single-sample TimeSeries (remote/write.go:269-284). `names` must be
+    * sorted by [[compareUtf8]], `values` parallel to them. A repeated field
+    * concatenates, so a batch's entries joined ARE its WriteRequest.
+    */
+  def seriesEntry(names: Array[String], values: Array[String], value: Double,
+      timestampMs: Long): Array[Byte] =
+    encodeWriteRequest(PbWriteRequest(Seq(PbTimeSeries(
+      names.indices.map(i => PbLabel(names(i), values(i))),
+      Seq(PbSample(value, timestampMs))))))
+
   private def encodeTimeSeries(ts: PbTimeSeries): Array[Byte] = {
     val w = new ProtoWriter
     ts.labels.foreach { l =>

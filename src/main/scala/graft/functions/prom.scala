@@ -100,6 +100,13 @@ object prom {
   def pb_encode(timeseries: Column): Column =
     invoke(BinaryType, "pbEncode", Seq(expr(timeseries)))
 
+  /** One sample -> its `WriteRequest.timeseries` entry bytes (single-sample
+    * series, labels sorted by name); a batch's entries concatenate into its
+    * WriteRequest.
+    */
+  def pb_series_entry(labels: Column, ms: Column, value: Column): Column =
+    invoke(BinaryType, "seriesEntry", Seq(expr(normLabels(labels)), expr(ms), expr(value)))
+
   /** proto bytes -> timeseries array (null on malformed input). */
   def pb_decode(data: Column): Column =
     invoke(ArrayType(Model.timeseriesSchema, containsNull = false), "pbDecode",

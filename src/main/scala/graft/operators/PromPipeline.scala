@@ -88,6 +88,16 @@ object PromPipeline {
       ).as("labels"),
       array(struct(value.as("value"), timestampMs.as("timestamp"))).as("samples"))
 
+  /** Operator #15, streaming form: each sample as its own remote_write entry
+    * ([[graft.functions.prom.pb_series_entry]]) next to its tenant ("" when
+    * absent). [[graft.streaming.TenantBatcher]] runs this before its tenant
+    * shuffle, so the encoding runs in the source's tasks and the batcher
+    * buffers POST-ready bytes.
+    */
+  def remoteWriteEntries(df: DataFrame): DataFrame =
+    df.select(coalesce(col("tenantId"), lit("")).as("tenantId"),
+      pb_series_entry(col("labels"), col("timestampMs"), col("value")).as("entry"))
+
   /** Operators #14+#15+#16 batch-mode analog: group a micro-batch by tenant,
     * re-encode as one WriteRequest per tenant (snappy(proto)), ready for the
     * HTTP sink. The streaming path with size/deadline semantics lives in

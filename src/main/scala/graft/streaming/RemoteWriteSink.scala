@@ -1,12 +1,15 @@
 package graft.streaming
 
+import java.util.concurrent.ConcurrentHashMap
+
 import graft.functions.PromKernel
 import graft.model.Model.Sample
 
-/** remote_write egress (operator #16, remote/write.go:79-236): re-encode each
-  * batch as prompb (one single-sample TimeSeries per sample, labels sorted by
-  * name — write.go:251-284), snappy-compress, POST with tenant header; error
-  * classes drive ack-vs-retry.
+/** remote_write egress (operator #16, remote/write.go:79-236): each batch is
+  * already prompb entries (one single-sample TimeSeries per sample, labels
+  * sorted by name — write.go:251-284, encoded before the batcher); join them,
+  * snappy-compress, POST with tenant header; error classes drive
+  * ack-vs-retry.
   */
 object RemoteWriteSink {
 
@@ -32,8 +35,10 @@ object RemoteWriteSink {
     */
   final class HttpClient(endpoint: String, val timeoutMs: Long = 30000L) extends Client {
     override def remoteName: String = endpoint
-    @transient private lazy val http = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofMillis(timeoutMs)).build()
+    // looked up, not held: the client is captured in the query's closures and
+    // deserialized by every task, and a client of its own per copy would cost
+    // each task a selector thread and a fresh connection
+    private[graft] def http: java.net.http.HttpClient = HttpClient.shared(timeoutMs)
 
     override def store(tenantId: String, body: Array[Byte]): StoreResult = {
       try {
@@ -60,23 +65,40 @@ object RemoteWriteSink {
     }
   }
 
-  /** Re-encode a batch the way the reference does before POST
-    * (write.go:186-192 + 251-284): per-sample single-series, sorted labels,
-    * proto marshal, snappy.
-    */
-  def encodeBody(samples: Seq[Sample]): Array[Byte] = {
-    val series = samples.map { s =>
-      val sorted = s.labels.toSeq.sortWith((a, b) => PromKernel.compareUtf8(a._1, b._1) < 0)
-      PromKernel.PbTimeSeries(
-        sorted.map { case (k, v) => PromKernel.PbLabel(k, v) },
-        Seq(PromKernel.PbSample(s.value, s.timestampMs)))
-    }
-    PromKernel.snappyCompress(
-      PromKernel.encodeWriteRequest(PromKernel.PbWriteRequest(series)))
+  object HttpClient {
+    private val clients = new ConcurrentHashMap[java.lang.Long, java.net.http.HttpClient]()
+
+    /** One java.net.http client per JVM and connect timeout. */
+    private def shared(timeoutMs: Long): java.net.http.HttpClient =
+      clients.computeIfAbsent(timeoutMs, _ => java.net.http.HttpClient.newBuilder()
+        .connectTimeout(java.time.Duration.ofMillis(timeoutMs)).build())
   }
 
-  /** Process one micro-batch of tenant batches. Recoverable errors throw —
-    * Spark retries the micro-batch without committing offsets, which IS the
+  /** One sample's remote_write entry, labels sorted by name: the Scala twin
+    * of [[graft.operators.PromPipeline.remoteWriteEntries]] over the same
+    * [[PromKernel.seriesEntry]].
+    */
+  def entry(s: Sample): Array[Byte] = {
+    val sorted = s.labels.toSeq.sortWith((a, b) => PromKernel.compareUtf8(a._1, b._1) < 0)
+    PromKernel.seriesEntry(sorted.map(_._1).toArray, sorted.map(_._2).toArray, s.value, s.timestampMs)
+  }
+
+  /** The POST body (write.go:186-192): the entries joined, which is the
+    * batch's WriteRequest, snappy-compressed.
+    */
+  def body(entries: Seq[Array[Byte]]): Array[Byte] = {
+    val out = new Array[Byte](entries.iterator.map(_.length).sum)
+    var pos = 0
+    entries.foreach { e => System.arraycopy(e, 0, out, pos, e.length); pos += e.length }
+    PromKernel.snappyCompress(out)
+  }
+
+  /** The POST body of `samples`, as the reference re-encodes a batch. */
+  def encodeBody(samples: Seq[Sample]): Array[Byte] = body(samples.map(entry))
+
+  /** Process one micro-batch of tenant batches, one POST at a time, so a
+    * tenant's batches land in order. Recoverable errors throw — Spark
+    * retries the micro-batch without committing offsets, which IS the
     * reference's stop-consumption backpressure (write.go:124-133). Fatal
     * errors ack-and-skip. Returns (sentSamples, failedSamples).
     */
@@ -84,7 +106,7 @@ object RemoteWriteSink {
     var sent = 0L
     var failed = 0L
     batches.foreach { b =>
-      client.store(b.tenantId, encodeBody(b.samples)) match {
+      client.store(b.tenantId, body(b.entries)) match {
         case Ok => sent += b.size
         case Recoverable(msg) =>
           // retryable_failed_writes (metrics.go:42-48): count the recoverable

@@ -342,8 +342,7 @@ class E2ESpec extends AnyFunSuite {
       // poison-skip: null decodes are dropped but still acked (offset advances)
       val samples = parsed.filter(col("sample").isNotNull).select("sample.*").as[Sample]
       val batches = samples.groupByKey(_.tenantId).mapGroups { (t, it) =>
-        val buf = it.toSeq
-        TenantBatcher.Batch(t, buf, buf.size, "size")
+        TenantBatcher.Batch(t, it.map(RemoteWriteSink.entry).toSeq, "size")
       }
       val client = new RemoteWriteSink.HttpClient(
         s"http://localhost:${server.getAddress.getPort}/api/v1/write")

@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.StreamOps
+import graft.model.Model.Sample
+import graft.streaming.{RemoteWriteSink, StreamOps, TenantBatcher}
 
 /** Restart RECOVERY of stateful streaming state (the r14 ordered item): a
   * checkpointed query is stopped mid-stream and a fresh query object
@@ -316,6 +317,66 @@ class RestartRecoverySpec extends AnyFunSuite {
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(3), r.getLong(4))).toSet
       assert(got == batch && got.map(_._1) == Set("A", "B"),
         s"restarted release $got must equal the batch replay $batch")
+    }
+  }
+
+  test("TenantBatcher remainders survive stop + resume: sent once, deadline kept (default provider)") {
+    val s = spark
+    import s.implicits._
+    val ckpt = tempDir("graft-batcher-ckpt-")
+    val ms = MemoryStream[Sample](spark)
+    val delayMs = 5000L
+    val sent = new java.util.concurrent.ConcurrentLinkedQueue[(TenantBatcher.Batch, Long)]()
+    def start() =
+      TenantBatcher(ms.toDS(), TenantBatcher.Config(batchSize = 100, batchMaxDelayMs = delayMs))
+        .writeStream
+        .foreachBatch { (ds: org.apache.spark.sql.Dataset[TenantBatcher.Batch], _: Long) =>
+          val at = System.currentTimeMillis()
+          ds.collect().foreach(b => sent.add((b, at)))
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
+        .start()
+    def sample(tenant: String, ts: Long) = Sample(ts, ts.toDouble, Map("__name__" -> "up"), tenant)
+
+    // run 1 buffers a remainder for each tenant, below the batch size and
+    // before the deadline, then stops
+    val t0 = System.currentTimeMillis()
+    val q1 = start()
+    ms.addData(sample("a", 1), sample("a", 2), sample("a", 3), sample("b", 1), sample("b", 2))
+    // the timeouts keep a no-data batch running each trigger, so
+    // processAllAvailable never returns: wait for the committed progress
+    val started = System.currentTimeMillis()
+    while (!q1.recentProgress.exists(_.numInputRows == 5) &&
+      System.currentTimeMillis() - started < 60000L) Thread.sleep(50)
+    q1.stop()
+    assert(q1.recentProgress.exists(_.numInputRows == 5))
+    assert(sent.isEmpty)
+    Thread.sleep(2000L)
+
+    // run 2 resumes from the checkpoint; a new sample for tenant a must join
+    // the recovered remainder, not re-anchor its deadline
+    val q2 = start()
+    val resumed = System.currentTimeMillis()
+    ms.addData(sample("a", 4))
+    try {
+      val deadline = resumed + 30000L
+      while (sent.size < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      Thread.sleep(1000L) // nothing more may follow
+    } finally q2.stop()
+
+    import scala.jdk.CollectionConverters._
+    val got = sent.asScala.toSeq
+    assert(got.map(b => (b._1.tenantId, b._1.reason)).sorted == Seq(("a", "deadline"), ("b", "deadline")),
+      got.map(_._1.tenantId))
+    val byTenant = got.map { case (b, at) => b.tenantId -> ((b.entries.map(_.toSeq), at)) }.toMap
+    assert(byTenant("a")._1 == (1 to 4).map(i => RemoteWriteSink.entry(sample("a", i)).toSeq))
+    assert(byTenant("b")._1 == (1 to 2).map(i => RemoteWriteSink.entry(sample("b", i)).toSeq))
+    // anchored at run 1's arrival: due before a deadline counted from the
+    // resume, and never before the first sample's own deadline
+    byTenant.values.foreach { case (_, at) =>
+      assert(at >= t0 + delayMs, s"flushed ${at - t0} ms after the first arrival")
+      assert(at < resumed + delayMs, s"flushed ${at - resumed} ms after the resume")
     }
   }
 }

@@ -58,7 +58,7 @@ class StreamingSpec extends AnyFunSuite {
       await(collected(name).size == 1)
     }
     assert(got.map(b => (b.tenantId, b.size, b.reason)) == Seq(("", 2, "size")))
-    assert(got.head.samples.size == 2)
+    assert(got.head.entries.size == 2)
   }
 
   test("flush on size per tenant (3 tenants -> 3 requests)") {
@@ -100,11 +100,14 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  private def batch(tenant: String, ts: Long = 0L): Batch =
+    Batch(tenant, Seq(RemoteWriteSink.entry(sample(tenant, ts))), "size")
+
   test("recoverable error replays the batch (throw, no ack)") {
     Metrics.reset()
     val c = new ScriptedClient(RemoteWriteSink.Recoverable("503"))
-    val batch = Batch("t", Seq(sample("t")), 1, "size")
-    val e = intercept[RuntimeException](RemoteWriteSink.deliver(c)(Iterator(batch)))
+    val b = batch("t")
+    val e = intercept[RuntimeException](RemoteWriteSink.deliver(c)(Iterator(b)))
     assert(e.getMessage.contains("retryable"))
     // retryable_failed_writes (metrics.go:42-48) counted before the throw
     assert(Metrics.get("retryable_failed_writes",
@@ -112,15 +115,46 @@ class StreamingSpec extends AnyFunSuite {
     assert(Metrics.render().contains("retryable_failed_writes"))
     // replay (what Spark does after the failed micro-batch) succeeds
     val c2 = new ScriptedClient(RemoteWriteSink.Ok)
-    assert(RemoteWriteSink.deliver(c2)(Iterator(batch)) == ((1L, 0L)))
+    assert(RemoteWriteSink.deliver(c2)(Iterator(b)) == ((1L, 0L)))
   }
 
   test("unrecoverable error drops the batch but keeps going (ack anyway)") {
     val c = new ScriptedClient(RemoteWriteSink.Fatal("400"), RemoteWriteSink.Ok)
-    val b1 = Batch("t", Seq(sample("t")), 1, "size")
-    val b2 = Batch("t", Seq(sample("t", ts = 1)), 1, "size")
+    val b1 = batch("t")
+    val b2 = batch("t", ts = 1)
     assert(RemoteWriteSink.deliver(c)(Iterator(b1, b2)) == ((1L, 1L)))
     assert(c.calls.size == 2)
+  }
+
+  test("a recoverable POST stops the partition: no later batch is sent before the replay") {
+    Metrics.reset()
+    val c = new ScriptedClient(RemoteWriteSink.Ok, RemoteWriteSink.Recoverable("503"),
+      RemoteWriteSink.Ok)
+    val e = intercept[RuntimeException](
+      RemoteWriteSink.deliver(c)(Iterator(batch("t"), batch("t", ts = 1), batch("t", ts = 2))))
+    assert(e.getMessage.contains("retryable"))
+    // sent after the recoverable one, ts = 2 would land before the replay's
+    // re-send of ts = 1, which the receiver rejects as out of order
+    assert(c.calls.size == 2)
+    assert(Metrics.get("retryable_failed_writes",
+      "remote" -> "remote_write", "tenant" -> "t") == 1L)
+  }
+
+  test("HttpClient copies deserialized in tasks share one java.net.http client") {
+    def roundTrip(c: RemoteWriteSink.HttpClient): RemoteWriteSink.HttpClient = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(c); out.close()
+      new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+        .readObject().asInstanceOf[RemoteWriteSink.HttpClient]
+    }
+    val c = new RemoteWriteSink.HttpClient("http://localhost:9/api/v1/write", 1234L)
+    val (a, b) = (roundTrip(c), roundTrip(c))
+    assert(a ne b)
+    assert(a.http eq b.http)
+    assert(a.http eq c.http)
+    assert(new RemoteWriteSink.HttpClient("http://localhost:9/x", 4321L).http ne a.http,
+      "another timeout gets its own client")
   }
 
   test("receiver: max-connection-age stamps Connection: close (handlers.go:42-49)") {
