@@ -164,14 +164,7 @@ object App {
       .option("walDir", walDir)
       .option("handlerThreads", handlerThreads)
       .option("host", host).option("telemetryPath", telemetryPath).load()
-    val samples = PromPipeline.attachTenant(
-      PromPipeline.explodeWriteRequest(
-        PromPipeline.decodeBody(src, col("body")).filter(col("timeseries").isNotNull),
-        col("timeseries")),
-      col("basicAuthUser"), col("orgIdHeader"))
-    val out = Metrics.observeReceived(
-      PromPipeline.serialize(samples, serializer, replicaLabels)
-        .select(col("key"), col("payload").cast("binary").as("payload")))
+    val out = Metrics.observeReceived(PromPipeline.produce(src, serializer, replicaLabels))
 
     // destination precedence: a real Pulsar broker (--pulsar.url, TLS/auth
     // flags per pkg/app/pulsar.go:74-93) > file topic > in-memory topic

@@ -154,14 +154,7 @@ object MicroBench {
       val requests = 100; val seriesPerReq = 500; val samplesPerSeries = 4
       val src = spark.readStream.format("graft.sources.HttpRemoteWriteProvider")
         .option("port", port.toString).load()
-      val samples = PromPipeline.attachTenant(
-        PromPipeline.explodeWriteRequest(
-          PromPipeline.decodeBody(src, col("body"))
-            .filter(col("timeseries").isNotNull),
-          col("timeseries")),
-        col("basicAuthUser"), col("orgIdHeader"))
-      val q = PromPipeline.serialize(samples, "json")
-        .select(col("key"), col("payload").cast("binary").as("payload"))
+      val q = PromPipeline.produce(src, "json")
         .writeStream
         .foreach(graft.streaming.KeyedSink.writer(
           new graft.streaming.InMemoryBroker.Factory(topic)))

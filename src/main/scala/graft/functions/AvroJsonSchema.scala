@@ -7,9 +7,10 @@ import scala.jdk.CollectionConverters._
   * pkg/pulsar/serializers.go:202-222 NewAvroJSONSerializer).
   *
   * The schema is parsed and validated at PLAN time (construction fails like
-  * goavro.NewCodec on an invalid schema); serialization then emits the
-  * record's fields in schema order, applying schema defaults for values the
-  * sample doesn't carry (e.g. tenant_id default "").
+  * goavro.NewCodec on an invalid schema) into a field spec;
+  * [[PromKernel.payloadTemplate]] then emits the record's fields in schema
+  * order, applying schema defaults for values the sample doesn't carry (e.g.
+  * tenant_id default "").
   */
 object AvroJsonSchema {
 
@@ -56,57 +57,30 @@ object AvroJsonSchema {
     Parsed(fields)
   }
 
-  /** Serialize with an explicit field spec (see [[Parsed.spec]]); labels must
-    * be pre-sorted. Fields without a sample value use the schema default;
-    * a missing value with no default is an error (goavro validation parity).
+  /** The spec of the reference's default schema (Model.AvroJsonDefaultSchema),
+    * which the built-in avro-json-compat serializer renders.
     */
-  def serialize(
-      spec: String,
-      timestampMs: Long,
-      value: Double,
-      labelKeys: Array[String],
-      labelValues: Array[String],
-      tenantId: String): String = {
-    val sb = new java.lang.StringBuilder(96)
-    sb.append('{')
-    var first = true
-    spec.split(",", -1).foreach { f =>
-      val eq = f.indexOf('=')
-      val (name, default) = if (eq >= 0) (f.substring(0, eq), Some(f.substring(eq + 1))) else (f, None)
-      if (!first) sb.append(',')
-      first = false
-      PromKernel.appendJsonString(sb, name)
-      sb.append(':')
-      name match {
-        case "timestamp" => PromKernel.appendJsonString(sb, PromKernel.rfc3339Nano(timestampMs))
-        case "value" => PromKernel.appendJsonString(sb, PromKernel.valueString(value))
-        case "name" =>
-          var n = ""
-          var i = 0
-          while (i < labelKeys.length) { if (labelKeys(i) == "__name__") n = labelValues(i); i += 1 }
-          PromKernel.appendJsonString(sb, n)
-        case "labels" =>
-          sb.append('{')
-          var i = 0
-          while (i < labelKeys.length) {
-            if (i > 0) sb.append(',')
-            PromKernel.appendJsonString(sb, labelKeys(i))
-            sb.append(':')
-            PromKernel.appendJsonString(sb, labelValues(i))
-            i += 1
-          }
-          sb.append('}')
-        case "tenant_id" =>
-          val t = if (tenantId == null) "" else tenantId
-          if (t.nonEmpty) PromKernel.appendJsonString(sb, t)
-          else default match {
-            case Some(d) => PromKernel.appendJsonString(sb, d)
-            case None => throw new IllegalStateException(
-              "tenant_id absent and schema has no default (goavro would reject)")
-          }
-      }
-    }
-    sb.append('}')
-    sb.toString
+  val DefaultSpec: String = "timestamp,value,name,labels,tenant_id="
+
+  /** A serializer name as the (format, avro spec) pair of
+    * [[PromKernel.payloadTemplate]]: "json" | "json-compat" |
+    * "avro-json-compat" | "avro-json-compat=&lt;path&gt;". A user schema is
+    * read and validated here, once, the way pkg/app/pulsar.go:174-191 opens
+    * the file at startup and fails fast on an unreadable or invalid schema.
+    */
+  def payloadFormat(serializer: String): (Int, String) = serializer match {
+    case "json" => (PromKernel.JsonFormat, "")
+    case "json-compat" => (PromKernel.CompatFormat, "")
+    case "avro-json-compat" => (PromKernel.AvroFormat, DefaultSpec)
+    case custom if custom.startsWith("avro-json-compat=") =>
+      val path = custom.stripPrefix("avro-json-compat=")
+      val schemaJson =
+        try new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
+        catch {
+          case e: Exception => throw new IllegalArgumentException(
+            s"failed to read avro serializer schema at '$path': ${e.getMessage}", e)
+        }
+      (PromKernel.AvroFormat, parse(schemaJson).spec)
+    case other => throw new IllegalArgumentException(s"unknown serializer: $other")
   }
 }

@@ -14,21 +14,33 @@ import graft.functions.{PromKernel => K}
   */
 object PromCatalyst {
 
-  private def mapToSortedArrays(labels: MapData): (Array[String], Array[String]) = {
-    if (labels == null) return (Array.empty, Array.empty)
-    val n = labels.numElements()
-    val keys = new Array[String](n)
-    val values = new Array[String](n)
-    val ka = labels.keyArray()
-    val va = labels.valueArray()
-    var i = 0
-    while (i < n) {
-      keys(i) = ka.getUTF8String(i).toString
-      values(i) = va.getUTF8String(i).toString
-      i += 1
-    }
-    val idx = Array.range(0, n).sortWith((a, b) => K.compareUtf8(keys(a), keys(b)) < 0)
-    (idx.map(keys), idx.map(values))
+  // --- labels ----------------------------------------------------------------
+
+  private def bytes(s: UTF8String): Array[Byte] = K.utf8Clean(s.getBytes)
+
+  private def labels(n: Int, name: Int => UTF8String, value: Int => UTF8String): K.Labels =
+    K.Labels(Array.tabulate(n)(i => bytes(name(i))), Array.tabulate(n)(i => bytes(value(i))), n)
+
+  /** A labels map as [[PromKernel.Labels]]: sorted by name, last wins. */
+  private def labelsOf(m: MapData): K.Labels =
+    labels(m.numElements(), m.keyArray().getUTF8String, m.valueArray().getUTF8String)
+
+  /** A decoded series' `array<struct<name, value>>` as [[PromKernel.Labels]]. */
+  private def labelsOfEntries(entries: ArrayData): K.Labels =
+    labels(entries.numElements(), entries.getStruct(_, 2).getUTF8String(0),
+      entries.getStruct(_, 2).getUTF8String(1))
+
+  private def replicasOf(replicaLabels: ArrayData): Array[Array[Byte]] =
+    Array.tabulate(replicaLabels.numElements())(i => replicaLabels.getUTF8String(i).getBytes)
+
+  /** A decoded series' label entries as a map, sorted by name, a repeated
+    * name keeping its last value (Go map assignment, produce.go:187-204).
+    */
+  def labelMap(entries: ArrayData): MapData = {
+    val l = labelsOfEntries(entries)
+    def column(a: Array[Array[Byte]]) =
+      new GenericArrayData(Array.tabulate[Any](l.size)(i => UTF8String.fromBytes(a(i))))
+    new ArrayBasedMapData(column(l.names), column(l.values))
   }
 
   // --- formatting -----------------------------------------------------------
@@ -44,28 +56,44 @@ object PromCatalyst {
     try java.lang.Long.valueOf(K.parseRfc3339ToMs(s.toString))
     catch { case _: Exception => null }
 
-  // --- serializers ----------------------------------------------------------
+  // --- serializer: series stage + sample fill -------------------------------
 
-  /** format: 0=json (default), 1=json-compat, 2=avro-json-compat. */
-  def serialize(format: Int, ms: Long, value: Double, labels: MapData, tenant: UTF8String): UTF8String = {
-    val (keys, values) = mapToSortedArrays(labels)
-    val t = if (tenant == null) "" else tenant.toString
-    val out = format match {
-      case 0 => K.promJson(ms, value, keys, values, t)
-      case 1 => K.compatJson(ms, value, keys, values, t, avroMode = false)
-      case 2 => K.compatJson(ms, value, keys, values, t, avroMode = true)
-    }
-    UTF8String.fromString(out)
+  private def series(format: Int, avroSpec: UTF8String, l: K.Labels, tenant: UTF8String,
+      replicaLabels: ArrayData): InternalRow = {
+    val t = bytes(tenant)
+    InternalRow(
+      UTF8String.fromBytes(K.keyOf(l, t, replicasOf(replicaLabels))),
+      K.payloadTemplate(format, avroSpec.toString, l, t))
   }
+
+  /** Series stage over a decoded series' label entries:
+    * struct(key, template) ([[PromKernel.keyOf]],
+    * [[PromKernel.payloadTemplate]]); format as in PromKernel, avroSpec
+    * used by the avro format only.
+    */
+  def seriesOfEntries(format: Int, avroSpec: UTF8String, labels: ArrayData,
+      tenant: UTF8String, replicaLabels: ArrayData): InternalRow =
+    series(format, avroSpec, labelsOfEntries(labels), tenant, replicaLabels)
+
+  /** Series stage over a labels map (a sample-level row). */
+  def seriesOfMap(format: Int, avroSpec: UTF8String, labels: MapData,
+      tenant: UTF8String, replicaLabels: ArrayData): InternalRow =
+    series(format, avroSpec, labelsOf(labels), tenant, replicaLabels)
+
+  /** Sample stage: the payload ([[PromKernel.fillPayload]]). */
+  def fill(template: Array[Byte], ms: Long, value: Double): UTF8String =
+    UTF8String.fromBytes(K.fillPayload(template, ms, value))
+
+  /** One sample through both stages; format 0=json (default),
+    * 1=json-compat, 2=avro-json-compat.
+    */
+  def serialize(format: Int, ms: Long, value: Double, labels: MapData, tenant: UTF8String): UTF8String =
+    fill(K.payloadTemplate(format, AvroJsonSchema.DefaultSpec, labelsOf(labels), bytes(tenant)), ms, value)
 
   /** avro-json-compat with a user schema: spec from AvroJsonSchema.Parsed. */
   def serializeAvroSchema(spec: UTF8String, ms: Long, value: Double,
-      labels: MapData, tenant: UTF8String): UTF8String = {
-    val (keys, values) = mapToSortedArrays(labels)
-    UTF8String.fromString(AvroJsonSchema.serialize(
-      spec.toString, ms, value, keys, values,
-      if (tenant == null) "" else tenant.toString))
-  }
+      labels: MapData, tenant: UTF8String): UTF8String =
+    fill(K.payloadTemplate(K.AvroFormat, spec.toString, labelsOf(labels), bytes(tenant)), ms, value)
 
   private def toSampleRow(p: K.ParsedSample): InternalRow = {
     if (p == null) return null
@@ -94,20 +122,13 @@ object PromCatalyst {
   /** The sample's remote_write entry ([[PromKernel.seriesEntry]]), labels
     * sorted by name: what the consume path buffers and POSTs.
     */
-  def seriesEntry(labels: MapData, ms: Long, value: Double): Array[Byte] = {
-    val (keys, values) = mapToSortedArrays(labels)
-    K.seriesEntry(keys, values, value, ms)
-  }
+  def seriesEntry(labels: MapData, ms: Long, value: Double): Array[Byte] =
+    K.seriesEntry(labelsOf(labels), value, ms)
 
   // --- partition key --------------------------------------------------------
 
-  def seriesKey(labels: MapData, tenant: UTF8String, replicaLabels: ArrayData): UTF8String = {
-    val (keys, values) = mapToSortedArrays(labels)
-    val rl = if (replicaLabels == null) Array.empty[String]
-      else Array.tabulate(replicaLabels.numElements())(i => replicaLabels.getUTF8String(i).toString)
-    val t = if (tenant == null) "" else tenant.toString
-    UTF8String.fromString(K.seriesKey(keys, values, t, rl))
-  }
+  def seriesKey(labels: MapData, tenant: UTF8String, replicaLabels: ArrayData): UTF8String =
+    UTF8String.fromBytes(K.keyOf(labelsOf(labels), bytes(tenant), replicasOf(replicaLabels)))
 
   // --- codecs ---------------------------------------------------------------
 
@@ -436,20 +457,36 @@ object PromCatalyst {
     K.encodeWriteRequest(K.PbWriteRequest(series.toIndexedSeq))
   }
 
-  /** Nullable: malformed proto -> null. Returns the `timeseries` array. */
+  /** Nullable: malformed proto -> null. Returns the `timeseries` array,
+    * built in one walk ([[PromKernel.walkWriteRequest]], the receiver's
+    * validation walk) straight into Catalyst values. Strings decode like
+    * `new String(_, UTF_8)`: invalid UTF-8 becomes U+FFFD.
+    */
   def pbDecode(data: Array[Byte]): ArrayData = {
     if (data == null) return null
-    val req = K.decodeWriteRequest(data)
-    if (req == null) return null
-    val rows: Array[Any] = req.timeseries.map { ts =>
-      val labels = new GenericArrayData(ts.labels.map { l =>
-        InternalRow(UTF8String.fromString(l.name), UTF8String.fromString(l.value)): Any
-      }.toArray)
-      val samples = new GenericArrayData(ts.samples.map { s =>
-        InternalRow(s.value, s.timestamp): Any
-      }.toArray)
-      InternalRow(labels, samples): Any
-    }.toArray
-    new GenericArrayData(rows)
+    val rows = scala.collection.mutable.ArrayBuffer.empty[Any]
+    val labels = scala.collection.mutable.ArrayBuffer.empty[Any]
+    val samples = scala.collection.mutable.ArrayBuffer.empty[Any]
+    val ok = K.walkWriteRequest(data, new K.WriteRequestVisitor {
+      override def label(buf: Array[Byte], ns: Int, ne: Int, vs: Int, ve: Int): Unit =
+        labels += InternalRow(utf8(buf, ns, ne), utf8(buf, vs, ve))
+      override def sample(value: Double, timestampMs: Long): Unit =
+        samples += InternalRow(value, timestampMs)
+      override def endSeries(): Unit = {
+        rows += InternalRow(new GenericArrayData(labels.toArray), new GenericArrayData(samples.toArray))
+        labels.clear(); samples.clear()
+      }
+    })
+    if (ok) new GenericArrayData(rows.toArray) else null
+  }
+
+  /** `buf[start, end)` as a string of its own bytes; ASCII is copied as is,
+    * anything else goes through `new String` for its U+FFFD replacement.
+    */
+  private def utf8(buf: Array[Byte], start: Int, end: Int): UTF8String = {
+    var i = start
+    while (i < end && buf(i) >= 0) i += 1
+    if (i == end) UTF8String.fromBytes(java.util.Arrays.copyOfRange(buf, start, end))
+    else UTF8String.fromString(new String(buf, start, end - start, java.nio.charset.StandardCharsets.UTF_8))
   }
 }

@@ -27,20 +27,41 @@ object PromKernel {
     else if (d == 0.0d) { if (1.0d / d < 0) "-0" else "0" }
     else {
       // Double.toString is the shortest repr that round-trips (possibly with
-      // exponent); BigDecimal re-renders it plain, stripping trailing zeros.
-      val bd = new BigDecimal(java.lang.Double.toString(d)).stripTrailingZeros()
-      bd.toPlainString
+      // exponent). Without one it is already plain and only its trailing
+      // fraction zeros go; with one, BigDecimal re-renders it plain.
+      val s = java.lang.Double.toString(d)
+      if (s.indexOf('E') < 0) {
+        var end = s.length
+        while (s.charAt(end - 1) == '0') end -= 1
+        if (s.charAt(end - 1) == '.') end -= 1
+        s.substring(0, end)
+      } else new BigDecimal(s).stripTrailingZeros().toPlainString
     }
   }
 
   /** prometheus model.Time.String(): milliseconds rendered as fractional
     * seconds, shortest form (`10001` ms -> "10.001", `0` -> "0").
-    * Exact decimal arithmetic — no float round-trip.
+    * Exact integer arithmetic — no float round-trip.
     */
   def secondsString(ms: Long): String = {
-    val bd = BigDecimal.valueOf(ms, 3).stripTrailingZeros()
-    bd.toPlainString
+    if (ms == Long.MinValue) return BigDecimal.valueOf(ms, 3).stripTrailingZeros().toPlainString
+    val abs = math.abs(ms)
+    val sb = new java.lang.StringBuilder(24)
+    if (ms < 0) sb.append('-')
+    sb.append(abs / 1000L)
+    appendMillisFraction(sb, (abs % 1000L).toInt)
+    sb.toString
   }
+
+  /** `.ddd` with trailing zeros trimmed; nothing for 0. */
+  private def appendMillisFraction(sb: java.lang.StringBuilder, millis: Int): Unit =
+    if (millis != 0) {
+      sb.append('.').append((millis / 100 + '0').toChar)
+      if (millis % 100 != 0) {
+        sb.append(((millis / 10) % 10 + '0').toChar)
+        if (millis % 10 != 0) sb.append((millis % 10 + '0').toChar)
+      }
+    }
 
   // ---------------------------------------------------------------------------
   // RFC3339Nano (Go time layout) format / parse
@@ -57,13 +78,7 @@ object PromKernel {
     pad4(sb, odt.getYear); sb.append('-'); pad2(sb, odt.getMonthValue); sb.append('-')
     pad2(sb, odt.getDayOfMonth); sb.append('T'); pad2(sb, odt.getHour); sb.append(':')
     pad2(sb, odt.getMinute); sb.append(':'); pad2(sb, odt.getSecond)
-    val msPart = java.lang.Math.floorMod(ms, 1000L).toInt
-    if (msPart != 0) {
-      sb.append('.')
-      var frac = f"$msPart%03d"
-      while (frac.endsWith("0")) frac = frac.substring(0, frac.length - 1)
-      sb.append(frac)
-    }
+    appendMillisFraction(sb, java.lang.Math.floorMod(ms, 1000L).toInt)
     sb.append('Z')
     sb.toString
   }
@@ -108,88 +123,312 @@ object PromKernel {
   }
 
   // ---------------------------------------------------------------------------
-  // Go encoding/json string escaping
+  // Serializers: one series stage, one sample fill
   // ---------------------------------------------------------------------------
+  // The label-dependent work runs once per series: sort the labels
+  // ([[Labels]]), hash the partition key ([[keyOf]]) and render everything of
+  // the payload but the timestamp and the value ([[payloadTemplate]]). Each
+  // sample then only renders those two into the template ([[fillPayload]]).
+  // Every format (json, json-compat, avro-json-compat with any schema) is one
+  // template shape, so this pair is the only serializer.
 
-  /** Go `encoding/json` string escaping (incl. HTML-safe `<`, `>`, `&` ->
-    * < …) so payloads are byte-identical to the reference's output.
+  /** One series' labels as UTF-8 bytes, sorted by name in byte order (Go
+    * sort.Strings; Go json.Marshal sorts map keys the same way), a repeated
+    * name keeping its last value (the Go map assignment in protoToSamples,
+    * produce.go:187-204). Built by [[Labels.apply]].
     */
-  def appendJsonString(sb: java.lang.StringBuilder, s: String): Unit = {
-    sb.append('"')
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      c match {
-        case '"' => sb.append("\\\"")
-        case '\\' => sb.append("\\\\")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case '\t' => sb.append("\\t")
-        case '<' => sb.append("\\u003c")
-        case '>' => sb.append("\\u003e")
-        case '&' => sb.append("\\u0026")
-        case '\u2028' => sb.append("\\u2028")
-        case '\u2029' => sb.append("\\u2029")
-        case cc if cc < ' ' => sb.append(f"\\u${cc.toInt}%04x")
-        case cc => sb.append(cc)
+  final class Labels private (val names: Array[Array[Byte]],
+      val values: Array[Array[Byte]], val size: Int)
+
+  object Labels {
+    /** The first `n` (name, value) pairs. Input already in strictly
+      * ascending name order, which is what Prometheus sends, costs one
+      * compare pass and is kept as given.
+      */
+    def apply(names: Array[Array[Byte]], values: Array[Array[Byte]], n: Int): Labels = {
+      var i = 1
+      while (i < n && compareBytes(names(i - 1), names(i)) < 0) i += 1
+      if (i >= n) return new Labels(names, values, n)
+      // stable sort, so equal names keep arrival order and the last one wins
+      val idx = Array.tabulate[Integer](n)(Integer.valueOf)
+      java.util.Arrays.sort(idx, new java.util.Comparator[Integer] {
+        def compare(a: Integer, b: Integer): Int = compareBytes(names(a), names(b))
+      })
+      val ns = new Array[Array[Byte]](n)
+      val vs = new Array[Array[Byte]](n)
+      var out = 0
+      i = 0
+      while (i < n) {
+        val k = idx(i).intValue
+        if (out > 0 && java.util.Arrays.equals(ns(out - 1), names(k))) vs(out - 1) = values(k)
+        else { ns(out) = names(k); vs(out) = values(k); out += 1 }
+        i += 1
       }
-      i += 1
+      new Labels(ns, vs, out)
     }
-    sb.append('"')
+
+    def ofStrings(names: Array[String], values: Array[String]): Labels =
+      apply(names.map(utf8), values.map(utf8), names.length)
   }
 
-  // ---------------------------------------------------------------------------
-  // Serializers (labels passed pre-sorted by key — Go map marshal sorts keys)
-  // ---------------------------------------------------------------------------
+  private def utf8(s: String): Array[Byte] =
+    if (s == null) Array.emptyByteArray else s.getBytes(StandardCharsets.UTF_8)
 
-  /** Default `json` serializer (serializers.go:116-131): Go json.Marshal of
-    * Sample — `{"value":[<sec>,"<val>"],"metric":{...},"tenant_id":...}` with
-    * `metric` omitted when empty and `tenant_id` omitted when "".
-    * `labelKeys`/`labelValues` must be parallel arrays sorted by key
-    * (Go marshals maps key-sorted).
+  /** Unsigned byte-order comparison (== Go string compare on UTF-8). */
+  def compareBytes(a: Array[Byte], b: Array[Byte]): Int =
+    java.util.Arrays.compareUnsigned(a, b)
+
+  /** Well-formed UTF-8 (Unicode Table 3-7, which is exactly what
+    * `new String(_, UTF_8)` decodes without replacement).
     */
+  def isUtf8(b: Array[Byte]): Boolean = {
+    val n = b.length
+    var i = 0
+    while (i < n) {
+      val c = b(i) & 0xff
+      if (c < 0x80) i += 1
+      else {
+        var need = 2; var lo = 0x80; var hi = 0xbf
+        if (c >= 0xc2 && c <= 0xdf) need = 1
+        else if (c == 0xe0) lo = 0xa0
+        else if (c == 0xed) hi = 0x9f
+        else if (c >= 0xe1 && c <= 0xef) ()
+        else if (c == 0xf0) { need = 3; lo = 0x90 }
+        else if (c >= 0xf1 && c <= 0xf3) need = 3
+        else if (c == 0xf4) { need = 3; hi = 0x8f }
+        else return false
+        if (i + need >= n) return false
+        val c1 = b(i + 1) & 0xff
+        if (c1 < lo || c1 > hi) return false
+        var k = 2
+        while (k <= need) {
+          val ck = b(i + k) & 0xff
+          if (ck < 0x80 || ck > 0xbf) return false
+          k += 1
+        }
+        i += need + 1
+      }
+    }
+    true
+  }
+
+  /** `b` itself when well-formed UTF-8, else what `new String(b, UTF_8)`
+    * re-encodes to (U+FFFD for each malformed sequence), so byte-level label
+    * work sees what the String-level reference saw.
+    */
+  def utf8Clean(b: Array[Byte]): Array[Byte] =
+    if (isUtf8(b)) b else new String(b, StandardCharsets.UTF_8).getBytes(StandardCharsets.UTF_8)
+
+  /** Produce-path wire formats (serializers.go). [[AvroFormat]] renders the
+    * fields of an [[AvroJsonSchema.Parsed.spec]]; the built-in
+    * avro-json-compat is [[AvroJsonSchema.DefaultSpec]].
+    */
+  final val JsonFormat = 0
+  final val CompatFormat = 1
+  final val AvroFormat = 2
+
+  // hole kinds of a payload template
+  private final val HoleSeconds = 1
+  private final val HoleRfc3339 = 2
+  private final val HoleValue = 3
+
+  /** Payload bytes with holes. [[result]] lays it out as
+    * `[holes][kind, position: int32 BE]*holes literal`, positions ascending
+    * and relative to the literal.
+    */
+  private final class TemplateBuilder {
+    private var buf = new Array[Byte](256)
+    private var len = 0
+    private val holes = new java.io.ByteArrayOutputStream(16)
+    private var nHoles = 0
+
+    private def ensure(extra: Int): Unit =
+      if (len + extra > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, len + extra))
+
+    def byte(b: Int): Unit = { ensure(1); buf(len) = b.toByte; len += 1 }
+
+    def ascii(s: String): Unit = {
+      ensure(s.length)
+      var i = 0
+      while (i < s.length) { buf(len) = s.charAt(i).toByte; len += 1; i += 1 }
+    }
+
+    def hole(kind: Int): Unit = {
+      holes.write(kind)
+      holes.write(len >>> 24); holes.write(len >>> 16); holes.write(len >>> 8); holes.write(len)
+      nHoles += 1
+    }
+
+    /** A quoted hole: every hole renders ASCII that JSON leaves unescaped. */
+    def quotedHole(kind: Int): Unit = { byte('"'); hole(kind); byte('"') }
+
+    /** Go `encoding/json` string escaping over UTF-8 bytes (incl. the
+      * HTML-safe `<`, `>`, `&` and U+2028/U+2029), so payloads are
+      * byte-identical to the reference's output.
+      */
+    def json(b: Array[Byte]): Unit = {
+      ensure(b.length + 2)
+      buf(len) = '"'; len += 1
+      var i = 0
+      while (i < b.length) {
+        val c = b(i) & 0xff
+        c match {
+          case '"' => ascii("\\\"")
+          case '\\' => ascii("\\\\")
+          case '\n' => ascii("\\n")
+          case '\r' => ascii("\\r")
+          case '\t' => ascii("\\t")
+          case '<' => ascii("\\u003c")
+          case '>' => ascii("\\u003e")
+          case '&' => ascii("\\u0026")
+          case 0xe2 if i + 2 < b.length && b(i + 1) == 0x80.toByte &&
+              (b(i + 2) == 0xa8.toByte || b(i + 2) == 0xa9.toByte) =>
+            ascii(if (b(i + 2) == 0xa8.toByte) "\\u2028" else "\\u2029")
+            i += 2
+          case cc if cc < ' ' =>
+            ascii("\\u00"); byte(Character.forDigit(cc >> 4, 16)); byte(Character.forDigit(cc & 0xf, 16))
+          case _ => byte(c)
+        }
+        i += 1
+      }
+      byte('"')
+    }
+
+    def labelObject(l: Labels): Unit = {
+      byte('{')
+      var i = 0
+      while (i < l.size) {
+        if (i > 0) byte(',')
+        json(l.names(i)); byte(':'); json(l.values(i))
+        i += 1
+      }
+      byte('}')
+    }
+
+    def result(): Array[Byte] = {
+      val out = new Array[Byte](1 + 5 * nHoles + len)
+      out(0) = nHoles.toByte
+      System.arraycopy(holes.toByteArray, 0, out, 1, 5 * nHoles)
+      System.arraycopy(buf, 0, out, 1 + 5 * nHoles, len)
+      out
+    }
+  }
+
+  private val MetricName = utf8("__name__")
+
+  /** The `__name__` value, "" when absent (serializers.go:69-80). */
+  private def nameOf(l: Labels): Array[Byte] = {
+    var i = 0
+    while (i < l.size) {
+      if (java.util.Arrays.equals(l.names(i), MetricName)) return l.values(i)
+      i += 1
+    }
+    Array.emptyByteArray
+  }
+
+  /** Series stage of the serializer: the payload of every sample of the
+    * series, with the timestamp and the value left as holes for
+    * [[fillPayload]].
+    *  - json (serializers.go:116-131): Go json.Marshal of Sample —
+    *    `{"value":[<sec>,"<val>"],"metric":{...},"tenant_id":...}`, `metric`
+    *    omitted when empty, `tenant_id` when "".
+    *  - json-compat (serializers.go:69-80,137-147): the key-sorted compat map
+    *    — labels, name, [tenant_id], timestamp, value; tenant_id only when
+    *    non-empty.
+    *  - avro-json-compat (serializers.go:183-222): the spec's fields in
+    *    schema order; tenant_id "" takes the field's default, and a field
+    *    with no default fails like goavro's validation.
+    */
+  def payloadTemplate(format: Int, avroSpec: String, l: Labels, tenant: Array[Byte]): Array[Byte] = {
+    val t = new TemplateBuilder
+    format match {
+      case JsonFormat =>
+        t.ascii("{\"value\":["); t.hole(HoleSeconds); t.byte(','); t.quotedHole(HoleValue); t.byte(']')
+        if (l.size > 0) { t.ascii(",\"metric\":"); t.labelObject(l) }
+        if (tenant.length > 0) { t.ascii(",\"tenant_id\":"); t.json(tenant) }
+      case CompatFormat =>
+        t.ascii("{\"labels\":"); t.labelObject(l)
+        t.ascii(",\"name\":"); t.json(nameOf(l))
+        if (tenant.length > 0) { t.ascii(",\"tenant_id\":"); t.json(tenant) }
+        t.ascii(",\"timestamp\":"); t.quotedHole(HoleRfc3339)
+        t.ascii(",\"value\":"); t.quotedHole(HoleValue)
+      case AvroFormat =>
+        t.byte('{')
+        avroSpec.split(",", -1).iterator.zipWithIndex.foreach { case (f, i) =>
+          val eq = f.indexOf('=')
+          val name = if (eq >= 0) f.substring(0, eq) else f
+          if (i > 0) t.byte(',')
+          t.json(utf8(name)); t.byte(':')
+          name match {
+            case "timestamp" => t.quotedHole(HoleRfc3339)
+            case "value" => t.quotedHole(HoleValue)
+            case "name" => t.json(nameOf(l))
+            case "labels" => t.labelObject(l)
+            case "tenant_id" =>
+              if (tenant.length > 0) t.json(tenant)
+              else if (eq >= 0) t.json(utf8(f.substring(eq + 1)))
+              else throw new IllegalStateException(
+                "tenant_id absent and schema has no default (goavro would reject)")
+          }
+        }
+    }
+    t.byte('}')
+    t.result()
+  }
+
+  /** Sample stage of the serializer: the template of the sample's series
+    * ([[payloadTemplate]]) with the timestamp and the value rendered into
+    * its holes.
+    */
+  def fillPayload(template: Array[Byte], timestampMs: Long, value: Double): Array[Byte] = {
+    val holes = template(0).toInt
+    val lit = 1 + 5 * holes
+    val parts = Array.tabulate(holes) { h =>
+      template(1 + 5 * h) match {
+        case HoleSeconds => secondsString(timestampMs)
+        case HoleRfc3339 => rfc3339Nano(timestampMs)
+        case _ => valueString(value)
+      }
+    }
+    val out = new Array[Byte](template.length - lit + parts.iterator.map(_.length).sum)
+    var src = lit
+    var dst = 0
+    var h = 0
+    while (h < holes) {
+      val p = 2 + 5 * h
+      val at = lit + (((template(p) & 0xff) << 24) | ((template(p + 1) & 0xff) << 16) |
+        ((template(p + 2) & 0xff) << 8) | (template(p + 3) & 0xff))
+      System.arraycopy(template, src, out, dst, at - src)
+      dst += at - src
+      src = at
+      val s = parts(h)
+      var i = 0
+      while (i < s.length) { out(dst) = s.charAt(i).toByte; dst += 1; i += 1 }
+      h += 1
+    }
+    System.arraycopy(template, src, out, dst, template.length - src)
+    out
+  }
+
+  /** One sample through the series stage and the fill. */
+  private def serializeSample(format: Int, avroSpec: String, timestampMs: Long, value: Double,
+      labelKeys: Array[String], labelValues: Array[String], tenantId: String): String =
+    new String(fillPayload(payloadTemplate(format, avroSpec,
+      Labels.ofStrings(labelKeys, labelValues), utf8(tenantId)), timestampMs, value),
+      StandardCharsets.UTF_8)
+
+  /** Default `json` serializer over parallel label arrays. */
   def promJson(
       timestampMs: Long,
       value: Double,
       labelKeys: Array[String],
       labelValues: Array[String],
-      tenantId: String): String = {
-    val sb = new java.lang.StringBuilder(64)
-    sb.append("{\"value\":[").append(secondsString(timestampMs)).append(',')
-    appendJsonString(sb, valueString(value))
-    sb.append(']')
-    if (labelKeys != null && labelKeys.length > 0) {
-      sb.append(",\"metric\":")
-      appendLabelObject(sb, labelKeys, labelValues)
-    }
-    if (tenantId != null && tenantId.nonEmpty) {
-      sb.append(",\"tenant_id\":")
-      appendJsonString(sb, tenantId)
-    }
-    sb.append('}')
-    sb.toString
-  }
+      tenantId: String): String =
+    serializeSample(JsonFormat, null, timestampMs, value, labelKeys, labelValues, tenantId)
 
-  private def appendLabelObject(
-      sb: java.lang.StringBuilder, keys: Array[String], values: Array[String]): Unit = {
-    sb.append('{')
-    var i = 0
-    while (i < keys.length) {
-      if (i > 0) sb.append(',')
-      appendJsonString(sb, keys(i))
-      sb.append(':')
-      appendJsonString(sb, values(i))
-      i += 1
-    }
-    sb.append('}')
-  }
-
-  /** `json-compat` serializer (serializers.go:69-80,137-147): Go json.Marshal of
-    * the compat map — key-sorted object: labels, name, [tenant_id], timestamp,
-    * value; tenant_id key present only when non-empty.
-    * `avroMode=true` reproduces the avro-json-compat codec (serializers.go:183-196):
-    * same fields but schema order (timestamp, value, name, labels, tenant_id)
-    * and tenant_id always present (schema default "").
+  /** `json-compat` serializer; `avroMode=true` is the built-in
+    * avro-json-compat codec (schema field order, tenant_id always present).
     */
   def compatJson(
       timestampMs: Long,
@@ -197,43 +436,9 @@ object PromKernel {
       labelKeys: Array[String],
       labelValues: Array[String],
       tenantId: String,
-      avroMode: Boolean): String = {
-    val sb = new java.lang.StringBuilder(96)
-    val name = {
-      var n = ""
-      var i = 0
-      while (i < labelKeys.length) { if (labelKeys(i) == "__name__") n = labelValues(i); i += 1 }
-      n
-    }
-    val tenant = if (tenantId == null) "" else tenantId
-    if (avroMode) {
-      sb.append("{\"timestamp\":")
-      appendJsonString(sb, rfc3339Nano(timestampMs))
-      sb.append(",\"value\":")
-      appendJsonString(sb, valueString(value))
-      sb.append(",\"name\":")
-      appendJsonString(sb, name)
-      sb.append(",\"labels\":")
-      appendLabelObject(sb, labelKeys, labelValues)
-      sb.append(",\"tenant_id\":")
-      appendJsonString(sb, tenant)
-    } else {
-      sb.append("{\"labels\":")
-      appendLabelObject(sb, labelKeys, labelValues)
-      sb.append(",\"name\":")
-      appendJsonString(sb, name)
-      if (tenant.nonEmpty) {
-        sb.append(",\"tenant_id\":")
-        appendJsonString(sb, tenant)
-      }
-      sb.append(",\"timestamp\":")
-      appendJsonString(sb, rfc3339Nano(timestampMs))
-      sb.append(",\"value\":")
-      appendJsonString(sb, valueString(value))
-    }
-    sb.append('}')
-    sb.toString
-  }
+      avroMode: Boolean): String =
+    serializeSample(if (avroMode) AvroFormat else CompatFormat, AvroJsonSchema.DefaultSpec,
+      timestampMs, value, labelKeys, labelValues, tenantId)
 
   // ---------------------------------------------------------------------------
   // Deserializers (jackson-core ships with Spark)
@@ -329,44 +534,42 @@ object PromKernel {
     h
   }
 
-  /** Byte-compat partition key: FNV-1 64 over (sorted non-replica label key
-    * bytes ++ value bytes)* ++ tenant bytes, rendered `"hex %016x"`.
-    * Sort order is UTF-8 byte order (Go sort.Strings on UTF-8 strings).
+  /** Byte-compat partition key: FNV-1 64 over (sorted non-replica label name
+    * bytes ++ value bytes)* ++ tenant bytes, as the ASCII bytes of
+    * `"hex %016x"`.
     */
+  def keyOf(l: Labels, tenant: Array[Byte], replicaLabels: Array[Array[Byte]]): Array[Byte] = {
+    var h = FnvOffset
+    var i = 0
+    while (i < l.size) {
+      var replica = false
+      var r = 0
+      while (!replica && r < replicaLabels.length) {
+        replica = java.util.Arrays.equals(l.names(i), replicaLabels(r))
+        r += 1
+      }
+      if (!replica) h = fnvMix(fnvMix(h, l.names(i)), l.values(i))
+      i += 1
+    }
+    h = fnvMix(h, tenant)
+    val out = new Array[Byte](20)
+    out(0) = 'h'; out(1) = 'e'; out(2) = 'x'; out(3) = ' '
+    i = 0
+    while (i < 16) {
+      out(4 + i) = Character.forDigit(((h >>> (60 - 4 * i)) & 0xf).toInt, 16).toByte
+      i += 1
+    }
+    out
+  }
+
+  /** [[keyOf]] over parallel String arrays. */
   def seriesKey(
       labelKeys: Array[String],
       labelValues: Array[String],
       tenantId: String,
-      replicaLabels: Array[String]): String = {
-    val n = labelKeys.length
-    val idx = Array.range(0, n).filterNot(i => replicaLabels.contains(labelKeys(i)))
-    val sorted = idx.sortWith { (a, b) =>
-      compareUtf8(labelKeys(a), labelKeys(b)) < 0
-    }
-    var h = FnvOffset
-    var i = 0
-    while (i < sorted.length) {
-      h = fnvMix(h, labelKeys(sorted(i)).getBytes(StandardCharsets.UTF_8))
-      h = fnvMix(h, labelValues(sorted(i)).getBytes(StandardCharsets.UTF_8))
-      i += 1
-    }
-    if (tenantId != null) h = fnvMix(h, tenantId.getBytes(StandardCharsets.UTF_8))
-    String.format("hex %016x", java.lang.Long.valueOf(h))
-  }
-
-  /** Unsigned UTF-8 byte-order comparison (== Go string compare). */
-  def compareUtf8(a: String, b: String): Int = {
-    val ab = a.getBytes(StandardCharsets.UTF_8)
-    val bb = b.getBytes(StandardCharsets.UTF_8)
-    var i = 0
-    val n = math.min(ab.length, bb.length)
-    while (i < n) {
-      val c = (ab(i) & 0xff) - (bb(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    ab.length - bb.length
-  }
+      replicaLabels: Array[String]): String =
+    new String(keyOf(Labels.ofStrings(labelKeys, labelValues), utf8(tenantId),
+      replicaLabels.map(utf8)), StandardCharsets.US_ASCII)
 
   // ---------------------------------------------------------------------------
   // Snappy block codec (Go snappy.Encode/Decode == raw block format)
@@ -418,16 +621,61 @@ object PromKernel {
     w.result()
   }
 
+  private def varintSize(v: Long): Int = {
+    var n = 1
+    var x = v >>> 7
+    while (x != 0) { n += 1; x >>>= 7 }
+    n
+  }
+
   /** One sample as its `WriteRequest.timeseries` entry: tag 1, length, then
-    * a single-sample TimeSeries (remote/write.go:269-284). `names` must be
-    * sorted by [[compareUtf8]], `values` parallel to them. A repeated field
-    * concatenates, so a batch's entries joined ARE its WriteRequest.
+    * a single-sample TimeSeries (remote/write.go:269-284), byte for byte what
+    * [[encodeWriteRequest]] writes for it. A repeated field concatenates, so
+    * a batch's entries joined ARE its WriteRequest.
     */
+  def seriesEntry(l: Labels, value: Double, timestampMs: Long): Array[Byte] = {
+    // proto3 default-omission: "" and 0 (incl. -0.0, Go: m.Value != 0) are not emitted
+    def field(b: Array[Byte]): Int = if (b.length == 0) 0 else 1 + varintSize(b.length) + b.length
+    def label(i: Int): Int = field(l.names(i)) + field(l.values(i))
+    val sampleLen = (if (value != 0.0d) 9 else 0) +
+      (if (timestampMs != 0L) 1 + varintSize(timestampMs) else 0)
+    var seriesLen = 1 + varintSize(sampleLen) + sampleLen
+    var i = 0
+    while (i < l.size) { val n = label(i); seriesLen += 1 + varintSize(n) + n; i += 1 }
+    val out = new Array[Byte](1 + varintSize(seriesLen) + seriesLen)
+    var pos = 0
+    def put(b: Int): Unit = { out(pos) = b.toByte; pos += 1 }
+    def varint(v0: Long): Unit = {
+      var v = v0
+      while ((v & ~0x7fL) != 0) { put(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
+      put(v.toInt)
+    }
+    def bytes(tag: Int, b: Array[Byte]): Unit = if (b.length > 0) {
+      put(tag); varint(b.length)
+      System.arraycopy(b, 0, out, pos, b.length); pos += b.length
+    }
+    put(0x0a); varint(seriesLen)
+    i = 0
+    while (i < l.size) {
+      put(0x0a); varint(label(i))
+      bytes(0x0a, l.names(i)); bytes(0x12, l.values(i))
+      i += 1
+    }
+    put(0x12); varint(sampleLen)
+    if (value != 0.0d) {
+      put(0x09)
+      var x = java.lang.Double.doubleToLongBits(value)
+      var k = 0
+      while (k < 8) { put((x & 0xff).toInt); x >>>= 8; k += 1 }
+    }
+    if (timestampMs != 0L) { put(0x10); varint(timestampMs) }
+    out
+  }
+
+  /** [[seriesEntry]] over parallel String arrays. */
   def seriesEntry(names: Array[String], values: Array[String], value: Double,
       timestampMs: Long): Array[Byte] =
-    encodeWriteRequest(PbWriteRequest(Seq(PbTimeSeries(
-      names.indices.map(i => PbLabel(names(i), values(i))),
-      Seq(PbSample(value, timestampMs))))))
+    seriesEntry(Labels.ofStrings(names, values), value, timestampMs)
 
   private def encodeTimeSeries(ts: PbTimeSeries): Array[Byte] = {
     val w = new ProtoWriter
@@ -446,91 +694,142 @@ object PromKernel {
     w.result()
   }
 
-  private final class ProtoReader(buf: Array[Byte], start: Int, end: Int) {
-    var pos: Int = start
-    def hasMore: Boolean = pos < end
-    def varint(): Long = {
-      var shift = 0; var r = 0L
-      while (true) {
+  /** What a walk over a WriteRequest ([[walkWriteRequest]]) reports, in wire
+    * order: each TimeSeries opens with `series`, then its labels (the byte
+    * ranges of name and value in `buf`; an absent field is an empty range)
+    * and samples as they appear, and closes with `endSeries`.
+    */
+  abstract class WriteRequestVisitor {
+    def series(): Unit = ()
+    def label(buf: Array[Byte], nameStart: Int, nameEnd: Int, valueStart: Int, valueEnd: Int): Unit = ()
+    def sample(value: Double, timestampMs: Long): Unit = ()
+    def endSeries(): Unit = ()
+  }
+
+  private object Malformed extends RuntimeException(null, null, false, false)
+
+  /** One pass over a proto body; every read is bounded by the enclosing
+    * message, so a length that overruns it, a truncated field, a varint
+    * longer than 10 bytes or a group wire type is malformed (Go's
+    * proto.Unmarshal rejects the same).
+    */
+  private final class Walker(buf: Array[Byte], v: WriteRequestVisitor) {
+    private var pos = 0
+
+    private def varint(end: Int): Long = {
+      var shift = 0
+      var r = 0L
+      while (shift < 64) {
+        if (pos >= end) throw Malformed
         val b = buf(pos); pos += 1
         r |= (b & 0x7fL) << shift
         if ((b & 0x80) == 0) return r
         shift += 7
       }
-      r
+      throw Malformed
     }
-    def fixed64(): Long = {
-      var r = 0L; var i = 0
-      while (i < 8) { r |= (buf(pos) & 0xffL) << (8 * i); pos += 1; i += 1 }
-      r
+
+    /** A length-delimited field's length, checked against `end`. */
+    private def length(end: Int): Int = {
+      val n = varint(end)
+      if (n < 0 || n > end - pos) throw Malformed
+      n.toInt
     }
-    def lenDelim(): (Int, Int) = {
-      val len = varint().toInt
-      val s = pos; pos += len
-      (s, s + len)
+
+    private def advance(n: Int, end: Int): Unit = {
+      if (n > end - pos) throw Malformed
+      pos += n
     }
-    def skip(wire: Int): Unit = wire match {
-      case 0 => varint()
-      case 1 => pos += 8
-      case 2 => val len = varint().toInt; pos += len
-      case 5 => pos += 4
-      case other => throw new IllegalArgumentException(s"wire type $other")
+
+    private def skip(wire: Int, end: Int): Unit = wire match {
+      case 0 => varint(end)
+      case 1 => advance(8, end)
+      case 2 => advance(length(end), end)
+      case 5 => advance(4, end)
+      case _ => throw Malformed
+    }
+
+    def writeRequest(): Unit = {
+      val end = buf.length
+      while (pos < end) {
+        val t = varint(end)
+        if (t == 0x0aL) { val n = length(end); timeSeries(pos + n) }
+        else skip((t & 7).toInt, end)
+      }
+    }
+
+    private def timeSeries(end: Int): Unit = {
+      v.series()
+      while (pos < end) {
+        val t = varint(end)
+        if (t == 0x0aL) { val n = length(end); label(pos + n) }
+        else if (t == 0x12L) { val n = length(end); sample(pos + n) }
+        else skip((t & 7).toInt, end)
+      }
+      v.endSeries()
+    }
+
+    private def label(end: Int): Unit = {
+      var ns = 0; var ne = 0; var vs = 0; var ve = 0
+      while (pos < end) {
+        val t = varint(end)
+        if (t == 0x0aL) { val n = length(end); ns = pos; ne = pos + n; pos = ne }
+        else if (t == 0x12L) { val n = length(end); vs = pos; ve = pos + n; pos = ve }
+        else skip((t & 7).toInt, end)
+      }
+      v.label(buf, ns, ne, vs, ve)
+    }
+
+    private def sample(end: Int): Unit = {
+      var value = 0.0d; var ts = 0L
+      while (pos < end) {
+        val t = varint(end)
+        if (t == 0x09L) {
+          if (end - pos < 8) throw Malformed
+          var r = 0L; var i = 0
+          while (i < 8) { r |= (buf(pos) & 0xffL) << (8 * i); pos += 1; i += 1 }
+          value = java.lang.Double.longBitsToDouble(r)
+        } else if (t == 0x10L) ts = varint(end)
+        else skip((t & 7).toInt, end)
+      }
+      v.sample(value, ts)
     }
   }
 
-  /** Returns null on malformed input (produce.go:139-144 -> HTTP 400). */
+  /** Walks a WriteRequest once, reporting it to `v`; false when malformed
+    * (produce.go:139-144 -> HTTP 400). The receiver's validation
+    * ([[validWriteRequest]]), [[decodeWriteRequest]] and the query's
+    * Catalyst decoder all walk through here, so they cannot disagree on
+    * what is malformed.
+    */
+  def walkWriteRequest(data: Array[Byte], v: WriteRequestVisitor): Boolean =
+    try { new Walker(data, v).writeRequest(); true }
+    catch { case Malformed => false }
+
+  /** Whether `data` is a well-formed WriteRequest, building nothing. */
+  def validWriteRequest(data: Array[Byte]): Boolean =
+    walkWriteRequest(data, new WriteRequestVisitor {})
+
+  /** Returns null on malformed input (produce.go:139-144 -> HTTP 400).
+    * Strings decode like Go's: invalid UTF-8 becomes U+FFFD.
+    */
   def decodeWriteRequest(data: Array[Byte]): PbWriteRequest = {
-    try {
-      val r = new ProtoReader(data, 0, data.length)
-      val series = scala.collection.mutable.ArrayBuffer.empty[PbTimeSeries]
-      while (r.hasMore) {
-        val t = r.varint()
-        if ((t >> 3) == 1 && (t & 7) == 2) {
-          val (s, e) = r.lenDelim()
-          series += decodeTimeSeries(data, s, e)
-        } else r.skip((t & 7).toInt)
+    val out = scala.collection.mutable.ArrayBuffer.empty[PbTimeSeries]
+    var labels = scala.collection.mutable.ArrayBuffer.empty[PbLabel]
+    var samples = scala.collection.mutable.ArrayBuffer.empty[PbSample]
+    val ok = walkWriteRequest(data, new WriteRequestVisitor {
+      override def series(): Unit = {
+        labels = scala.collection.mutable.ArrayBuffer.empty
+        samples = scala.collection.mutable.ArrayBuffer.empty
       }
-      PbWriteRequest(series.toSeq)
-    } catch { case _: Exception => null }
-  }
-
-  private def decodeTimeSeries(buf: Array[Byte], start: Int, end: Int): PbTimeSeries = {
-    val r = new ProtoReader(buf, start, end)
-    val labels = scala.collection.mutable.ArrayBuffer.empty[PbLabel]
-    val samples = scala.collection.mutable.ArrayBuffer.empty[PbSample]
-    while (r.hasMore) {
-      val t = r.varint()
-      ((t >> 3).toInt, (t & 7).toInt) match {
-        case (1, 2) =>
-          val (s, e) = r.lenDelim()
-          val lr = new ProtoReader(buf, s, e)
-          var name = ""; var value = ""
-          while (lr.hasMore) {
-            val lt = lr.varint()
-            ((lt >> 3).toInt, (lt & 7).toInt) match {
-              case (1, 2) => val (ls, le) = lr.lenDelim(); name = new String(buf, ls, le - ls, StandardCharsets.UTF_8)
-              case (2, 2) => val (ls, le) = lr.lenDelim(); value = new String(buf, ls, le - ls, StandardCharsets.UTF_8)
-              case (_, w) => lr.skip(w)
-            }
-          }
-          labels += PbLabel(name, value)
-        case (2, 2) =>
-          val (s, e) = r.lenDelim()
-          val sr = new ProtoReader(buf, s, e)
-          var v = 0.0d; var ts = 0L
-          while (sr.hasMore) {
-            val st = sr.varint()
-            ((st >> 3).toInt, (st & 7).toInt) match {
-              case (1, 1) => v = java.lang.Double.longBitsToDouble(sr.fixed64())
-              case (2, 0) => ts = sr.varint()
-              case (_, w) => sr.skip(w)
-            }
-          }
-          samples += PbSample(v, ts)
-        case (_, w) => r.skip(w)
-      }
-    }
-    PbTimeSeries(labels.toSeq, samples.toSeq)
+      override def label(buf: Array[Byte], ns: Int, ne: Int, vs: Int, ve: Int): Unit =
+        labels += PbLabel(new String(buf, ns, ne - ns, StandardCharsets.UTF_8),
+          new String(buf, vs, ve - vs, StandardCharsets.UTF_8))
+      override def sample(value: Double, timestampMs: Long): Unit =
+        samples += PbSample(value, timestampMs)
+      override def endSeries(): Unit = out += PbTimeSeries(labels.toSeq, samples.toSeq)
+    })
+    if (ok) PbWriteRequest(out.toSeq) else null
   }
 
   // ---------------------------------------------------------------------------

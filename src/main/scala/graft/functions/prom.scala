@@ -73,6 +73,44 @@ object prom {
       Seq(Literal(spec), expr(ms), expr(value), expr(normLabels(labels)), expr(normTenant(tenant))))
   }
 
+  // --- the produce path's serializer: series stage + sample fill ------------
+
+  private val seriesType = StructType(Seq(
+    StructField("key", StringType, nullable = false),
+    StructField("template", BinaryType, nullable = false)))
+
+  /** Series stage over a decoded series' `array<struct<name, value>>`
+    * labels: struct(key, template) — the partition key and the payload with
+    * the timestamp and the value left open ([[prom_fill]]). `format` is an
+    * [[AvroJsonSchema.payloadFormat]] pair.
+    */
+  def prom_series(format: (Int, String), labelEntries: Column, tenant: Column,
+      replicaLabels: Seq[String]): Column =
+    seriesCol("seriesOfEntries", format, labelEntries, tenant, replicaLabels)
+
+  /** [[prom_series]] over a labels map (one row per sample). */
+  def prom_series_of_map(format: (Int, String), labels: Column, tenant: Column,
+      replicaLabels: Seq[String]): Column =
+    seriesCol("seriesOfMap", format, normLabels(labels), tenant, replicaLabels)
+
+  private def seriesCol(kernel: String, format: (Int, String), labels: Column, tenant: Column,
+      replicaLabels: Seq[String]): Column =
+    invoke(seriesType, kernel, Seq(Literal(format._1), Literal(format._2), expr(labels),
+      expr(normTenant(tenant)), expr(array(replicaLabels.map(lit): _*))))
+
+  /** Sample stage: a series template with the sample's timestamp and value
+    * rendered in — the payload.
+    */
+  def prom_fill(template: Column, ms: Column, value: Column): Column =
+    invoke(StringType, "fill", Seq(expr(template), expr(ms), expr(value)))
+
+  /** A decoded series' label entries as a map: sorted by name, a repeated
+    * name keeping its last value (produce.go:187-204).
+    */
+  def prom_label_map(labelEntries: Column): Column =
+    invoke(MapType(StringType, StringType, valueContainsNull = false), "labelMap",
+      Seq(expr(labelEntries)))
+
   /** Inverse: payload -> struct(timestampMs, value, labels, tenantId); null on
     * poison input (skip-and-ack, pulsar.go:190-201). format 0=json, 1=compat.
     */

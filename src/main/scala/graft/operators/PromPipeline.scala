@@ -3,15 +3,20 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.AvroJsonSchema
 import graft.functions.prom._
 
 /** The reference's dataflow stages as declarative DataFrame transforms.
   *
   * source -> decode -> flatten -> enrich -> project -> serialize -> keyBy ->
-  * sink (SURVEY §2). Everything here is pure Catalyst — narrow transforms fuse
-  * into one whole-stage-codegen span; the only shuffles in the whole pipeline
-  * are the intentional ones (keyBy for per-series ordering, groupBy(tenant)
-  * for batching).
+  * sink (SURVEY §2). The kernels are codegen'd static calls into
+  * [[graft.functions.PromCatalyst]], so the narrow transforms of the produce
+  * query fuse into one whole-stage-codegen span. Its label work runs once per
+  * series, between the series explode and the sample explode: the labels are
+  * sorted once and the key and the label part of the payload are rendered
+  * there; each sample only renders its timestamp and value into that
+  * template ([[produce]]). The only shuffles in the whole pipeline are the
+  * intentional ones (groupBy(tenant) for batching).
   */
 object PromPipeline {
 
@@ -23,13 +28,14 @@ object PromPipeline {
     df.withColumn("timeseries", pb_decode(snappy_uncompress(body)))
 
   /** Operator #4 (protoToSamples, produce.go:187-204): cross-product explode —
-    * one row per (timeseries x sample), sharing the series' label map.
+    * one row per (timeseries x sample), sharing the series' label map (sorted
+    * by name, a repeated name keeping its last value, like the Go map).
     * Two chained explodes preserve per-partition request order, matching the
     * reference's append order.
     */
   def explodeWriteRequest(df: DataFrame, timeseries: Column): DataFrame =
     df.withColumn("__ts", explode(timeseries))
-      .withColumn("labels", map_from_entries(col("__ts.labels")))
+      .withColumn("labels", prom_label_map(col("__ts.labels")))
       .withColumn("__s", explode(col("__ts.samples")))
       .withColumn("timestampMs", col("__s.timestamp"))
       .withColumn("value", col("__s.value"))
@@ -41,33 +47,42 @@ object PromPipeline {
   def attachTenant(df: DataFrame, basicAuthUser: Column, orgIdHeader: Column): DataFrame =
     df.withColumn("tenantId", coalesce(basicAuthUser, orgIdHeader, lit("")))
 
-  /** Operators #7-9 + #11 (serializers.go): payload in the chosen wire format
-    * plus the replica-invariant FNV-64 partition key.
+  /** Operators #7-9 + #11 (serializers.go) over one row per sample: payload
+    * in the chosen wire format plus the replica-invariant FNV-64 partition
+    * key, through the same series stage and fill as [[produce]].
     * format: "json" | "json-compat" | "avro-json-compat" |
     * "avro-json-compat=&lt;path&gt;" (user Avro schema, read + validated at
-    * plan time — pkg/app/pulsar.go:174-191 opens the file at startup and
-    * fails fast on an unreadable/invalid schema; same here).
+    * plan time — [[graft.functions.AvroJsonSchema.payloadFormat]]).
     */
   def serialize(df: DataFrame, format: String,
+      replicaLabels: Seq[String] = Seq(graft.model.Model.DefaultReplicaLabel)): DataFrame =
+    df.withColumn("__series", prom_series_of_map(AvroJsonSchema.payloadFormat(format),
+        col("labels"), col("tenantId"), replicaLabels))
+      .withColumn("payload", prom_fill(col("__series.template"), col("timestampMs"), col("value")))
+      .withColumn("key", col("__series.key"))
+      .drop("__series")
+
+  /** The produce query (operators #2-#11, produce.go:124-204): receiver rows
+    * (`body`, `basicAuthUser`, `orgIdHeader`) -> one (key, payload bytes)
+    * row per sample, in request order. Decode, explode the series, attach
+    * the tenant; then per series sort the labels, key and render the
+    * payload template ([[prom_series]]); then explode the samples and fill
+    * each one's timestamp and value in ([[prom_fill]]).
+    */
+  def produce(src: DataFrame, format: String,
       replicaLabels: Seq[String] = Seq(graft.model.Model.DefaultReplicaLabel)): DataFrame = {
-    val payload = format match {
-      case "json" => prom_json(col("timestampMs"), col("value"), col("labels"), col("tenantId"))
-      case "json-compat" => prom_json_compat(col("timestampMs"), col("value"), col("labels"), col("tenantId"))
-      case "avro-json-compat" => prom_avro_json(col("timestampMs"), col("value"), col("labels"), col("tenantId"))
-      case custom if custom.startsWith("avro-json-compat=") =>
-        val path = custom.stripPrefix("avro-json-compat=")
-        val schemaJson =
-          try new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
-          catch {
-            case e: Exception => throw new IllegalArgumentException(
-              s"failed to read avro serializer schema at '$path': ${e.getMessage}", e)
-          }
-        prom_avro_json_schema(schemaJson)(
-          col("timestampMs"), col("value"), col("labels"), col("tenantId"))
-      case other => throw new IllegalArgumentException(s"unknown serializer: $other")
-    }
-    df.withColumn("payload", payload)
-      .withColumn("key", series_key(col("labels"), col("tenantId"), replicaLabels))
+    val fmt = AvroJsonSchema.payloadFormat(format)
+    val series = attachTenant(
+      decodeBody(src, col("body")).filter(col("timeseries").isNotNull)
+        .withColumn("__ts", explode(col("timeseries"))),
+      col("basicAuthUser"), col("orgIdHeader"))
+    series
+      .select(prom_series(fmt, col("__ts.labels"), col("tenantId"), replicaLabels).as("__series"),
+        col("__ts.samples").as("__samples"))
+      .withColumn("__s", explode(col("__samples")))
+      .select(col("__series.key").as("key"),
+        prom_fill(col("__series.template"), col("__s.timestamp"), col("__s.value"))
+          .cast("binary").as("payload"))
   }
 
   /** Operator #10 (serializers.go:35-61,120-127): payload -> sample struct with

@@ -721,7 +721,7 @@ object HttpRemoteWriteSource {
 
     private def valid(body: Array[Byte]): Boolean = {
       val raw = PromKernel.snappyUncompress(body)
-      raw != null && PromKernel.decodeWriteRequest(raw) != null
+      raw != null && PromKernel.validWriteRequest(raw)
     }
 
     /** BasicAuth username, null when absent/malformed (handlers.go:29-40). */

@@ -34,9 +34,13 @@ object Metrics {
   private val counters = new ConcurrentHashMap[String, AtomicLong]()
   private val histograms = new ConcurrentHashMap[String, Histogram]()
 
+  /** Label values escaped as the text format requires: `\`, `"`, newline. */
   private def key(name: String, labels: Seq[(String, String)]): String =
     if (labels.isEmpty) name
-    else name + labels.map { case (k, v) => s"""$k="$v"""" }.mkString("{", ",", "}")
+    else name + labels.map { case (k, v) =>
+      val escaped = v.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", "\\n")
+      s"""$k="$escaped""""
+    }.mkString("{", ",", "}")
 
   def inc(name: String, labels: (String, String)*): Unit = add(name, 1L, labels: _*)
 

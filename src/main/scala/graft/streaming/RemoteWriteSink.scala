@@ -79,8 +79,8 @@ object RemoteWriteSink {
     * [[PromKernel.seriesEntry]].
     */
   def entry(s: Sample): Array[Byte] = {
-    val sorted = s.labels.toSeq.sortWith((a, b) => PromKernel.compareUtf8(a._1, b._1) < 0)
-    PromKernel.seriesEntry(sorted.map(_._1).toArray, sorted.map(_._2).toArray, s.value, s.timestampMs)
+    val names = s.labels.keys.toArray
+    PromKernel.seriesEntry(names, names.map(s.labels), s.value, s.timestampMs)
   }
 
   /** The POST body (write.go:186-192): the entries joined, which is the

@@ -94,34 +94,18 @@ object Writers {
     // avro-json-compat=<path> form, which reads + validates the user schema
     // here exactly like the reference does at client build time
     // (app/pulsar.go:174-191); bad format/schema fails fast, not per sample
-    private val serialize: (Long, Double, Array[String], Array[String], String) => String =
-      format match {
-        case "json" => PromKernel.promJson
-        case "json-compat" => PromKernel.compatJson(_, _, _, _, _, avroMode = false)
-        case "avro-json-compat" => PromKernel.compatJson(_, _, _, _, _, avroMode = true)
-        case custom if custom.startsWith("avro-json-compat=") =>
-          val path = custom.stripPrefix("avro-json-compat=")
-          val schemaJson =
-            try new String(java.nio.file.Files.readAllBytes(
-              java.nio.file.Paths.get(path)), "UTF-8")
-            catch {
-              case e: Exception => throw new IllegalArgumentException(
-                s"failed to read avro serializer schema at '$path': ${e.getMessage}", e)
-            }
-          val spec = graft.functions.AvroJsonSchema.parse(schemaJson).spec
-          graft.functions.AvroJsonSchema.serialize(spec, _, _, _, _, _)
-        case other => throw new IllegalArgumentException(s"unknown serializer: $other")
-      }
+    private val (formatId, avroSpec) = graft.functions.AvroJsonSchema.payloadFormat(format)
+    private val replicas = replicaLabels.map(_.getBytes(StandardCharsets.UTF_8)).toArray
 
     override def write(tenantId: String, samples: Seq[WireSample]): Unit = {
+      val tenant = tenantId.getBytes(StandardCharsets.UTF_8)
       samples.foreach { s =>
-        // Go json.Marshal emits map keys sorted (byte order) — match it
-        val keys = s.labels.keys.toArray.sortWith(PromKernel.compareUtf8(_, _) < 0)
-        val values = keys.map(s.labels)
-        val payload = serialize(s.timestampMs, s.value, keys, values, tenantId)
+        val keys = s.labels.keys.toArray
+        val labels = PromKernel.Labels.ofStrings(keys, keys.map(s.labels))
+        val template = PromKernel.payloadTemplate(formatId, avroSpec, labels, tenant)
         producer.sendAsync(
-          PromKernel.seriesKey(keys, values, tenantId, replicaLabels.toArray),
-          payload.getBytes(StandardCharsets.UTF_8))
+          new String(PromKernel.keyOf(labels, tenant, replicas), StandardCharsets.US_ASCII),
+          PromKernel.fillPayload(template, s.timestampMs, s.value))
       }
       producer.flush()
     }

@@ -65,14 +65,7 @@ class E2ESpec extends AnyFunSuite {
     val src = spark.readStream.format("graft.sources.HttpRemoteWriteProvider")
       .option("port", port.toString).load()
 
-    val samples = PromPipeline.attachTenant(
-      PromPipeline.explodeWriteRequest(
-        PromPipeline.decodeBody(src, col("body")).filter(col("timeseries").isNotNull),
-        col("timeseries")),
-      col("basicAuthUser"), col("orgIdHeader"))
-    val out = Metrics.observeReceived(
-      PromPipeline.serialize(samples, "json")
-        .select(col("key"), col("payload").cast("binary").as("payload")))
+    val out = Metrics.observeReceived(PromPipeline.produce(src, "json"))
 
     val q = out.writeStream
       .foreach(KeyedSink.writer(new InMemoryBroker.Factory("t1")))
@@ -128,13 +121,7 @@ class E2ESpec extends AnyFunSuite {
     // produce: HTTP receiver -> pipeline -> broker
     val src = spark.readStream.format("graft.sources.HttpRemoteWriteProvider")
       .option("port", port.toString).load()
-    val produceQ = PromPipeline.serialize(
-      PromPipeline.attachTenant(
-        PromPipeline.explodeWriteRequest(
-          PromPipeline.decodeBody(src, col("body")).filter(col("timeseries").isNotNull),
-          col("timeseries")),
-        col("basicAuthUser"), col("orgIdHeader")), "json")
-      .select(col("key"), col("payload").cast("binary").as("payload"))
+    val produceQ = PromPipeline.produce(src, "json")
       .writeStream.foreach(KeyedSink.writer(new InMemoryBroker.Factory(topic)))
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))

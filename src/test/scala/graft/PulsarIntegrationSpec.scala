@@ -82,13 +82,7 @@ class PulsarIntegrationSpec extends AnyFunSuite {
     val port = 19231
     val src = spark.readStream.format("graft.sources.HttpRemoteWriteProvider")
       .option("port", port.toString).load()
-    val samples = PromPipeline.attachTenant(
-      PromPipeline.explodeWriteRequest(
-        PromPipeline.decodeBody(src, col("body")).filter(col("timeseries").isNotNull),
-        col("timeseries")),
-      col("basicAuthUser"), col("orgIdHeader"))
-    val out = PromPipeline.serialize(samples, "json")
-      .select(col("key"), col("payload").cast("binary").as("payload"))
+    val out = PromPipeline.produce(src, "json")
     val q = out.writeStream
       .foreach(KeyedSink.writer(new PulsarSink.Factory(cfg)))
       .outputMode("append").start()

@@ -53,7 +53,7 @@ class RemoteWriteEntrySpec extends AnyFunSuite {
   /** The sink's body before entries: one WriteRequest built whole. */
   private def wholeRequestBody(samples: Seq[Sample]): Array[Byte] = {
     val series = samples.map { s =>
-      val sorted = s.labels.toSeq.sortWith((a, b) => PromKernel.compareUtf8(a._1, b._1) < 0)
+      val sorted = s.labels.toSeq.sortWith((a, b) => PerSampleReference.compareUtf8(a._1, b._1) < 0)
       PromKernel.PbTimeSeries(
         sorted.map { case (k, v) => PromKernel.PbLabel(k, v) },
         Seq(PromKernel.PbSample(s.value, s.timestampMs)))
