@@ -20,10 +20,13 @@ object AvroJsonSchema {
   final case class Field(name: String, default: Option[String])
 
   final case class Parsed(fields: Seq[Field]) {
-    /** Compact spec passed into the serializer expression: name[=default] csv. */
+    /** Compact spec passed into the serializer expression: field names in
+      * schema order, csv, `tenant_id=<default>` when it has one (the only
+      * default a sample can need).
+      */
     def spec: String = fields.map {
-      case Field(n, Some(d)) => s"$n=$d"
-      case Field(n, None) => n
+      case Field("tenant_id", Some(d)) => s"tenant_id=$d"
+      case Field(n, _) => n
     }.mkString(",")
   }
 
@@ -51,6 +54,8 @@ object AvroJsonSchema {
         s"avro schema field '$n' has unsupported type $t")
       val default =
         if (f.hasDefaultValue) Some(String.valueOf(f.defaultVal())) else None
+      require(n != "tenant_id" || !default.exists(_.contains(',')),
+        s"avro schema field 'tenant_id' has a default holding ',', which the serializer spec cannot carry")
       Field(n, default)
     }.toSeq
     require(fields.nonEmpty, "avro schema has no fields")
@@ -61,6 +66,11 @@ object AvroJsonSchema {
     * which the built-in avro-json-compat serializer renders.
     */
   val DefaultSpec: String = "timestamp,value,name,labels,tenant_id="
+
+  /** A user Avro schema as the (format, avro spec) pair of
+    * [[PromKernel.payloadTemplate]]; throws on an invalid schema.
+    */
+  def schemaFormat(schemaJson: String): (Int, String) = (PromKernel.AvroFormat, parse(schemaJson).spec)
 
   /** A serializer name as the (format, avro spec) pair of
     * [[PromKernel.payloadTemplate]]: "json" | "json-compat" |
@@ -80,7 +90,7 @@ object AvroJsonSchema {
           case e: Exception => throw new IllegalArgumentException(
             s"failed to read avro serializer schema at '$path': ${e.getMessage}", e)
         }
-      (PromKernel.AvroFormat, parse(schemaJson).spec)
+      schemaFormat(schemaJson)
     case other => throw new IllegalArgumentException(s"unknown serializer: $other")
   }
 }

@@ -29,6 +29,18 @@ object GraftFunctions {
   private def normLabels(e: Expression): Expression = Coalesce(Seq(e, emptyLabels))
   private def normTenant(e: Expression): Expression = Coalesce(Seq(e, Literal("")))
 
+  /** The series stage ([[prom.prom_series_of_map]]): struct(key, template). */
+  private def series(serializer: String, labels: Expression, tenant: Expression): Expression = {
+    val (format, spec) = AvroJsonSchema.payloadFormat(serializer)
+    invoke(prom.seriesType, "seriesOfMap", Seq(Literal(format), Literal(spec), normLabels(labels),
+      normTenant(tenant), Literal.create(Seq(Model.DefaultReplicaLabel), ArrayType(StringType))))
+  }
+
+  /** One sample's payload: the series stage, then the fill. */
+  private def payload(serializer: String, ms: Expression, value: Expression, labels: Expression,
+      tenant: Expression): Expression =
+    invoke(StringType, "fill", Seq(GetStructField(series(serializer, labels, tenant), 1), ms, value))
+
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, builder) =>
@@ -48,19 +60,14 @@ object GraftFunctions {
     f("prom_seconds_string") { case Seq(ms) => invoke(StringType, "secondsString", Seq(ms)) }
     f("prom_rfc3339") { case Seq(ms) => invoke(StringType, "rfc3339Nano", Seq(ms)) }
     f("prom_parse_rfc3339") { case Seq(s) => invoke(LongType, "parseRfc3339", Seq(s), nullable = true) }
-    f("prom_json") { case Seq(ms, v, l, t) =>
-      invoke(StringType, "serialize", Seq(Literal(0), ms, v, normLabels(l), normTenant(t))) }
-    f("prom_json_compat") { case Seq(ms, v, l, t) =>
-      invoke(StringType, "serialize", Seq(Literal(1), ms, v, normLabels(l), normTenant(t))) }
-    f("prom_avro_json") { case Seq(ms, v, l, t) =>
-      invoke(StringType, "serialize", Seq(Literal(2), ms, v, normLabels(l), normTenant(t))) }
+    f("prom_json") { case Seq(ms, v, l, t) => payload("json", ms, v, l, t) }
+    f("prom_json_compat") { case Seq(ms, v, l, t) => payload("json-compat", ms, v, l, t) }
+    f("prom_avro_json") { case Seq(ms, v, l, t) => payload("avro-json-compat", ms, v, l, t) }
     f("prom_deserialize") { case Seq(p) =>
       invoke(Model.sampleSchema, "deserialize", Seq(Literal(0), p), nullable = true) }
     f("prom_deserialize_compat") { case Seq(p) =>
       invoke(Model.sampleSchema, "deserialize", Seq(Literal(1), p), nullable = true) }
-    f("prom_series_key") { case Seq(l, t) =>
-      invoke(StringType, "seriesKey", Seq(normLabels(l), normTenant(t),
-        Literal.create(Seq(Model.DefaultReplicaLabel), ArrayType(StringType)))) }
+    f("prom_series_key") { case Seq(l, t) => GetStructField(series("json", l, t), 0) }
     f("snappy_compress") { case Seq(b) => invoke(BinaryType, "snappyCompress", Seq(b)) }
     f("snappy_uncompress") { case Seq(b) => invoke(BinaryType, "snappyUncompress", Seq(b), nullable = true) }
     f("pb_encode_write_request") { case Seq(ts) => invoke(BinaryType, "pbEncode", Seq(ts)) }

@@ -35,11 +35,25 @@ object PromCatalyst {
 
   /** A decoded series' label entries as a map, sorted by name, a repeated
     * name keeping its last value (Go map assignment, produce.go:187-204).
+    * Nulls as `map_from_entries` treats them: a null value stays a null map
+    * value, a null entry makes the map null, a null name is an error.
     */
   def labelMap(entries: ArrayData): MapData = {
-    val l = labelsOfEntries(entries)
+    val n = entries.numElements()
+    val names = new Array[Array[Byte]](n)
+    val values = new Array[Array[Byte]](n)
+    var i = 0
+    while (i < n) {
+      if (entries.isNullAt(i)) return null
+      val e = entries.getStruct(i, 2)
+      if (e.isNullAt(0)) throw new IllegalArgumentException("label name is null")
+      names(i) = e.getUTF8String(0).getBytes
+      values(i) = if (e.isNullAt(1)) null else e.getUTF8String(1).getBytes
+      i += 1
+    }
+    val l = K.Labels(names, values, n)
     def column(a: Array[Array[Byte]]) =
-      new GenericArrayData(Array.tabulate[Any](l.size)(i => UTF8String.fromBytes(a(i))))
+      new GenericArrayData(Array.tabulate[Any](l.size)(i => if (a(i) == null) null else UTF8String.fromBytes(a(i))))
     new ArrayBasedMapData(column(l.names), column(l.values))
   }
 
@@ -84,17 +98,6 @@ object PromCatalyst {
   def fill(template: Array[Byte], ms: Long, value: Double): UTF8String =
     UTF8String.fromBytes(K.fillPayload(template, ms, value))
 
-  /** One sample through both stages; format 0=json (default),
-    * 1=json-compat, 2=avro-json-compat.
-    */
-  def serialize(format: Int, ms: Long, value: Double, labels: MapData, tenant: UTF8String): UTF8String =
-    fill(K.payloadTemplate(format, AvroJsonSchema.DefaultSpec, labelsOf(labels), bytes(tenant)), ms, value)
-
-  /** avro-json-compat with a user schema: spec from AvroJsonSchema.Parsed. */
-  def serializeAvroSchema(spec: UTF8String, ms: Long, value: Double,
-      labels: MapData, tenant: UTF8String): UTF8String =
-    fill(K.payloadTemplate(K.AvroFormat, spec.toString, labelsOf(labels), bytes(tenant)), ms, value)
-
   private def toSampleRow(p: K.ParsedSample): InternalRow = {
     if (p == null) return null
     val keys = new GenericArrayData(p.labelKeys.map(UTF8String.fromString(_)).asInstanceOf[Array[Any]])
@@ -122,13 +125,11 @@ object PromCatalyst {
   /** The sample's remote_write entry ([[PromKernel.seriesEntry]]), labels
     * sorted by name: what the consume path buffers and POSTs.
     */
-  def seriesEntry(labels: MapData, ms: Long, value: Double): Array[Byte] =
-    K.seriesEntry(labelsOf(labels), value, ms)
-
-  // --- partition key --------------------------------------------------------
-
-  def seriesKey(labels: MapData, tenant: UTF8String, replicaLabels: ArrayData): UTF8String =
-    UTF8String.fromBytes(K.keyOf(labelsOf(labels), bytes(tenant), replicasOf(replicaLabels)))
+  def seriesEntry(labels: MapData, ms: Long, value: Double): Array[Byte] = {
+    val (ka, va) = (labels.keyArray(), labels.valueArray())
+    K.seriesEntry(Array.tabulate(labels.numElements())(ka.getUTF8String(_).toString),
+      Array.tabulate(labels.numElements())(va.getUTF8String(_).toString), value, ms)
+  }
 
   // --- codecs ---------------------------------------------------------------
 
@@ -480,13 +481,6 @@ object PromCatalyst {
     if (ok) new GenericArrayData(rows.toArray) else null
   }
 
-  /** `buf[start, end)` as a string of its own bytes; ASCII is copied as is,
-    * anything else goes through `new String` for its U+FFFD replacement.
-    */
-  private def utf8(buf: Array[Byte], start: Int, end: Int): UTF8String = {
-    var i = start
-    while (i < end && buf(i) >= 0) i += 1
-    if (i == end) UTF8String.fromBytes(java.util.Arrays.copyOfRange(buf, start, end))
-    else UTF8String.fromString(new String(buf, start, end - start, java.nio.charset.StandardCharsets.UTF_8))
-  }
+  private def utf8(buf: Array[Byte], start: Int, end: Int): UTF8String =
+    UTF8String.fromBytes(K.utf8Clean(buf, start, end))
 }

@@ -178,46 +178,20 @@ object PromKernel {
   def compareBytes(a: Array[Byte], b: Array[Byte]): Int =
     java.util.Arrays.compareUnsigned(a, b)
 
-  /** Well-formed UTF-8 (Unicode Table 3-7, which is exactly what
-    * `new String(_, UTF_8)` decodes without replacement).
+  /** `b[start, end)` as what `new String(_, UTF_8)` makes of it, re-encoded
+    * (U+FFFD for each malformed sequence), so byte-level label work sees
+    * what the String-level reference saw: ASCII is kept as is (no copy when
+    * the range is all of `b`), anything else goes through `new String`.
     */
-  def isUtf8(b: Array[Byte]): Boolean = {
-    val n = b.length
-    var i = 0
-    while (i < n) {
-      val c = b(i) & 0xff
-      if (c < 0x80) i += 1
-      else {
-        var need = 2; var lo = 0x80; var hi = 0xbf
-        if (c >= 0xc2 && c <= 0xdf) need = 1
-        else if (c == 0xe0) lo = 0xa0
-        else if (c == 0xed) hi = 0x9f
-        else if (c >= 0xe1 && c <= 0xef) ()
-        else if (c == 0xf0) { need = 3; lo = 0x90 }
-        else if (c >= 0xf1 && c <= 0xf3) need = 3
-        else if (c == 0xf4) { need = 3; hi = 0x8f }
-        else return false
-        if (i + need >= n) return false
-        val c1 = b(i + 1) & 0xff
-        if (c1 < lo || c1 > hi) return false
-        var k = 2
-        while (k <= need) {
-          val ck = b(i + k) & 0xff
-          if (ck < 0x80 || ck > 0xbf) return false
-          k += 1
-        }
-        i += need + 1
-      }
-    }
-    true
+  def utf8Clean(b: Array[Byte], start: Int, end: Int): Array[Byte] = {
+    var i = start
+    while (i < end && b(i) >= 0) i += 1
+    if (i < end) new String(b, start, end - start, StandardCharsets.UTF_8).getBytes(StandardCharsets.UTF_8)
+    else if (start == 0 && end == b.length) b
+    else java.util.Arrays.copyOfRange(b, start, end)
   }
 
-  /** `b` itself when well-formed UTF-8, else what `new String(b, UTF_8)`
-    * re-encodes to (U+FFFD for each malformed sequence), so byte-level label
-    * work sees what the String-level reference saw.
-    */
-  def utf8Clean(b: Array[Byte]): Array[Byte] =
-    if (isUtf8(b)) b else new String(b, StandardCharsets.UTF_8).getBytes(StandardCharsets.UTF_8)
+  def utf8Clean(b: Array[Byte]): Array[Byte] = utf8Clean(b, 0, b.length)
 
   /** Produce-path wire formats (serializers.go). [[AvroFormat]] renders the
     * fields of an [[AvroJsonSchema.Parsed.spec]]; the built-in
@@ -621,61 +595,19 @@ object PromKernel {
     w.result()
   }
 
-  private def varintSize(v: Long): Int = {
-    var n = 1
-    var x = v >>> 7
-    while (x != 0) { n += 1; x >>>= 7 }
-    n
-  }
-
   /** One sample as its `WriteRequest.timeseries` entry: tag 1, length, then
-    * a single-sample TimeSeries (remote/write.go:269-284), byte for byte what
-    * [[encodeWriteRequest]] writes for it. A repeated field concatenates, so
-    * a batch's entries joined ARE its WriteRequest.
+    * a single-sample TimeSeries (remote/write.go:269-284), labels sorted by
+    * name in UTF-8 byte order; `values` parallel to `names`. A repeated
+    * field concatenates, so a batch's entries joined ARE its WriteRequest.
     */
-  def seriesEntry(l: Labels, value: Double, timestampMs: Long): Array[Byte] = {
-    // proto3 default-omission: "" and 0 (incl. -0.0, Go: m.Value != 0) are not emitted
-    def field(b: Array[Byte]): Int = if (b.length == 0) 0 else 1 + varintSize(b.length) + b.length
-    def label(i: Int): Int = field(l.names(i)) + field(l.values(i))
-    val sampleLen = (if (value != 0.0d) 9 else 0) +
-      (if (timestampMs != 0L) 1 + varintSize(timestampMs) else 0)
-    var seriesLen = 1 + varintSize(sampleLen) + sampleLen
-    var i = 0
-    while (i < l.size) { val n = label(i); seriesLen += 1 + varintSize(n) + n; i += 1 }
-    val out = new Array[Byte](1 + varintSize(seriesLen) + seriesLen)
-    var pos = 0
-    def put(b: Int): Unit = { out(pos) = b.toByte; pos += 1 }
-    def varint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) { put(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      put(v.toInt)
-    }
-    def bytes(tag: Int, b: Array[Byte]): Unit = if (b.length > 0) {
-      put(tag); varint(b.length)
-      System.arraycopy(b, 0, out, pos, b.length); pos += b.length
-    }
-    put(0x0a); varint(seriesLen)
-    i = 0
-    while (i < l.size) {
-      put(0x0a); varint(label(i))
-      bytes(0x0a, l.names(i)); bytes(0x12, l.values(i))
-      i += 1
-    }
-    put(0x12); varint(sampleLen)
-    if (value != 0.0d) {
-      put(0x09)
-      var x = java.lang.Double.doubleToLongBits(value)
-      var k = 0
-      while (k < 8) { put((x & 0xff).toInt); x >>>= 8; k += 1 }
-    }
-    if (timestampMs != 0L) { put(0x10); varint(timestampMs) }
-    out
-  }
-
-  /** [[seriesEntry]] over parallel String arrays. */
   def seriesEntry(names: Array[String], values: Array[String], value: Double,
-      timestampMs: Long): Array[Byte] =
-    seriesEntry(Labels.ofStrings(names, values), value, timestampMs)
+      timestampMs: Long): Array[Byte] = {
+    val keys = names.map(utf8)
+    val order = names.indices.sortWith((a, b) => compareBytes(keys(a), keys(b)) < 0)
+    encodeWriteRequest(PbWriteRequest(Seq(PbTimeSeries(
+      order.map(i => PbLabel(names(i), values(i))),
+      Seq(PbSample(value, timestampMs))))))
+  }
 
   private def encodeTimeSeries(ts: PbTimeSeries): Array[Byte] = {
     val w = new ProtoWriter

@@ -49,33 +49,13 @@ object prom {
     invoke(LongType, "parseRfc3339", Seq(expr(s)), nullable = true)
 
   // --- serializers (formats: serializers.go json/json-compat/avro-json) -----
+  //
+  // One kernel pair renders every format: a series stage (labels sorted, key
+  // hashed, payload template with the timestamp and the value left open) and
+  // a sample fill. The produce query runs the series stage once per series
+  // ([[prom_series]]); the column functions over one row per sample run both.
 
-  private def serializeCol(format: Int, ms: Column, value: Column, labels: Column, tenant: Column): Column =
-    invoke(StringType, "serialize",
-      Seq(Literal(format), expr(ms), expr(value), expr(normLabels(labels)), expr(normTenant(tenant))))
-
-  def prom_json(ms: Column, value: Column, labels: Column, tenant: Column): Column =
-    serializeCol(0, ms, value, labels, tenant)
-
-  def prom_json_compat(ms: Column, value: Column, labels: Column, tenant: Column): Column =
-    serializeCol(1, ms, value, labels, tenant)
-
-  def prom_avro_json(ms: Column, value: Column, labels: Column, tenant: Column): Column =
-    serializeCol(2, ms, value, labels, tenant)
-
-  /** avro-json-compat against a USER-supplied Avro schema (plan-time
-    * validation; serializers.go:202-222 + app/pulsar.go:174-189).
-    */
-  def prom_avro_json_schema(schemaJson: String)(
-      ms: Column, value: Column, labels: Column, tenant: Column): Column = {
-    val spec = AvroJsonSchema.parse(schemaJson).spec // throws on invalid schema
-    invoke(StringType, "serializeAvroSchema",
-      Seq(Literal(spec), expr(ms), expr(value), expr(normLabels(labels)), expr(normTenant(tenant))))
-  }
-
-  // --- the produce path's serializer: series stage + sample fill ------------
-
-  private val seriesType = StructType(Seq(
+  private[functions] val seriesType = StructType(Seq(
     StructField("key", StringType, nullable = false),
     StructField("template", BinaryType, nullable = false)))
 
@@ -90,7 +70,7 @@ object prom {
 
   /** [[prom_series]] over a labels map (one row per sample). */
   def prom_series_of_map(format: (Int, String), labels: Column, tenant: Column,
-      replicaLabels: Seq[String]): Column =
+      replicaLabels: Seq[String] = Seq(Model.DefaultReplicaLabel)): Column =
     seriesCol("seriesOfMap", format, normLabels(labels), tenant, replicaLabels)
 
   private def seriesCol(kernel: String, format: (Int, String), labels: Column, tenant: Column,
@@ -104,12 +84,33 @@ object prom {
   def prom_fill(template: Column, ms: Column, value: Column): Column =
     invoke(StringType, "fill", Seq(expr(template), expr(ms), expr(value)))
 
+  private def payloadCol(format: (Int, String), ms: Column, value: Column, labels: Column,
+      tenant: Column): Column =
+    prom_fill(prom_series_of_map(format, labels, tenant).getField("template"), ms, value)
+
+  def prom_json(ms: Column, value: Column, labels: Column, tenant: Column): Column =
+    payloadCol(AvroJsonSchema.payloadFormat("json"), ms, value, labels, tenant)
+
+  def prom_json_compat(ms: Column, value: Column, labels: Column, tenant: Column): Column =
+    payloadCol(AvroJsonSchema.payloadFormat("json-compat"), ms, value, labels, tenant)
+
+  def prom_avro_json(ms: Column, value: Column, labels: Column, tenant: Column): Column =
+    payloadCol(AvroJsonSchema.payloadFormat("avro-json-compat"), ms, value, labels, tenant)
+
+  /** avro-json-compat against a USER-supplied Avro schema (plan-time
+    * validation; serializers.go:202-222 + app/pulsar.go:174-189).
+    */
+  def prom_avro_json_schema(schemaJson: String)(
+      ms: Column, value: Column, labels: Column, tenant: Column): Column =
+    payloadCol(AvroJsonSchema.schemaFormat(schemaJson), ms, value, labels, tenant)
+
   /** A decoded series' label entries as a map: sorted by name, a repeated
-    * name keeping its last value (produce.go:187-204).
+    * name keeping its last value (produce.go:187-204); nulls as
+    * `map_from_entries` treats them.
     */
   def prom_label_map(labelEntries: Column): Column =
-    invoke(MapType(StringType, StringType, valueContainsNull = false), "labelMap",
-      Seq(expr(labelEntries)))
+    invoke(MapType(StringType, StringType, valueContainsNull = true), "labelMap",
+      Seq(expr(labelEntries)), nullable = true)
 
   /** Inverse: payload -> struct(timestampMs, value, labels, tenantId); null on
     * poison input (skip-and-ack, pulsar.go:190-201). format 0=json, 1=compat.
@@ -121,9 +122,8 @@ object prom {
   // --- series partition key (serializers.go:91-114) -------------------------
 
   def series_key(labels: Column, tenant: Column, replicaLabels: Seq[String] = Seq(Model.DefaultReplicaLabel)): Column =
-    invoke(StringType, "seriesKey",
-      Seq(expr(normLabels(labels)), expr(normTenant(tenant)),
-        expr(array(replicaLabels.map(lit): _*))))
+    prom_series_of_map(AvroJsonSchema.payloadFormat("json"), labels, tenant, replicaLabels)
+      .getField("key")
 
   // --- codecs ---------------------------------------------------------------
 

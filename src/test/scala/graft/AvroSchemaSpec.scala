@@ -103,4 +103,20 @@ class AvroSchemaSpec extends AnyFunSuite {
       """{"type":"record","name":"M","fields":[{"name":"value","type":"int"}]}"""))
     intercept[IllegalArgumentException](AvroJsonSchema.parse("""{"type":"string"}"""))
   }
+
+  test("a tenant_id default holding ',' is rejected at plan time; other defaults may hold one") {
+    val schema = (tenantDefault: String) =>
+      s"""{"type":"record","name":"M","fields":[
+         |{"name":"name","type":"string","default":"x,y"},
+         |{"name":"tenant_id","type":"string","default":"$tenantDefault"}]}""".stripMargin
+    val e = intercept[IllegalArgumentException](run(schema("a,b")))
+    assert(e.getMessage.contains("tenant_id"))
+    val schemaFile = java.nio.file.Files.createTempFile("avro-comma", ".avsc")
+    try {
+      java.nio.file.Files.write(schemaFile, schema("a,b").getBytes("UTF-8"))
+      intercept[IllegalArgumentException](AvroJsonSchema.payloadFormat(s"avro-json-compat=$schemaFile"))
+    } finally java.nio.file.Files.deleteIfExists(schemaFile)
+    assert(run(schema("anon")) == Seq(
+      """{"name":"foo","tenant_id":"anon"}""", """{"name":"foo","tenant_id":"fake"}"""))
+  }
 }

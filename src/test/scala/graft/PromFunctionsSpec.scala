@@ -93,6 +93,24 @@ class PromFunctionsSpec extends AnyFunSuite {
     assert(vals(2)._1 == 10001L && vals(2)._2.isPosInfinity)
   }
 
+  test("label map: sorted, a repeated name last-wins, nulls as map_from_entries") {
+    def entry(n: String, v: String) =
+      struct(lit(n).cast("string").as("name"), lit(v).cast("string").as("value"))
+    val df = spark.range(1).select(
+      array(entry("b", null), entry("a", "1"), entry("c", "3")).as("unique"),
+      array(entry("b", "1"), entry("a", "2"), entry("b", null)).as("repeated"),
+      array(entry(null, "1")).as("nullName"))
+    val row = df.select(prom_label_map(col("unique")), map_from_entries(col("unique")),
+      prom_label_map(col("repeated"))).head()
+    assert(row.getMap[String, String](0) == row.getMap[String, String](1))
+    assert(row.getMap[String, String](0).keys.toSeq == Seq("a", "b", "c"))
+    assert(row.getMap[String, String](0)("b") == null)
+    assert(row.getMap[String, String](2).toSeq == Seq("a" -> "2", "b" -> null))
+    val e = intercept[Exception](df.select(prom_label_map(col("nullName"))).collect())
+    assert(e.toString.contains("label name is null") ||
+      Option(e.getCause).exists(_.toString.contains("label name is null")), e)
+  }
+
   test("whole-stage codegen keeps custom expressions in the fused span") {
     // On a local relation Catalyst constant-folds the whole plan; use a real
     // parquet scan to observe the executed shape.
