@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.PromPipeline
+import graft.sources.{BrokerSource, HttpRemoteWriteSource}
 import graft.streaming._
 
 /** CLI facade with the reference's two pipelines (README.md:43-51):
@@ -21,39 +22,12 @@ import graft.streaming._
   */
 object App {
 
-  private def flag(args: Array[String], name: String, default: String): String = {
-    val i = args.indexOf(s"--$name")
-    if (i >= 0 && i + 1 < args.length) args(i + 1) else default
-  }
-
-  /** First present flag wins — used where the reference spelling and this
-    * CLI's historical shorthand are both accepted.
-    */
-  private[graft] def firstFlag(args: Array[String], names: Seq[String],
-      default: String): String =
-    names.iterator
-      .map(n => args.indexOf(s"--$n"))
-      .collectFirst { case i if i >= 0 && i + 1 < args.length => args(i + 1) }
-      .getOrElse(default)
-
   /** The reference's serializer flag is `--pulsar.serializer`
     * (pkg/app/pulsar.go:161-167); `--serializer` stays as the alias this
     * CLI historically used.
     */
-  private[graft] def serializerOf(args: Array[String]): String =
-    firstFlag(args, Seq("pulsar.serializer", "serializer"), "json")
-
-  /** app.go:60-62: `--web.listen-address` takes "host:port" (":9201" = all
-    * interfaces). Returns (host, port); throws with the flag name on junk.
-    */
-  private[graft] def parseListenAddress(addr: String): (String, Int) = {
-    val i = addr.lastIndexOf(':')
-    val port =
-      try { require(i >= 0); addr.substring(i + 1).toInt }
-      catch { case _: Exception => throw new IllegalArgumentException(
-        s"--web.listen-address: expected host:port, got '$addr'") }
-    (addr.substring(0, math.max(i, 0)), port)
-  }
+  private[graft] def serializerOf(flags: Flags): String =
+    flags.first(Seq("pulsar.serializer", "serializer"), "json")
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("produce")
@@ -68,12 +42,21 @@ object App {
     spark.sparkContext.setLogLevel("WARN")
     spark.streams.addListener(new Metrics.Listener)
 
-    mode match {
-      case "produce" => produce(spark, args)
-      case "consume" => consume(spark, args)
-      case "query" => query(spark, args)
-      case other =>
-        System.err.println(s"unknown command: $other (expected produce|consume|query)")
+    // each command parses its configs, then rejects any flag none of them
+    // read, before it binds or starts anything
+    try {
+      val flags = Flags.parse(args.toSeq.drop(1))
+      mode match {
+        case "produce" => produce(spark, flags)
+        case "consume" => consume(spark, flags)
+        case "query" => query(spark, flags)
+        case other =>
+          System.err.println(s"unknown command: $other (expected produce|consume|query)")
+          sys.exit(2)
+      }
+    } catch {
+      case e: Flags.UsageError =>
+        System.err.println(s"$mode: ${e.getMessage}")
         sys.exit(2)
     }
   }
@@ -85,11 +68,12 @@ object App {
     * Prints the result (or writes parquet with --out). `--name list` prints
     * the available query names.
     */
-  private def query(spark: SparkSession, args: Array[String]): Unit = {
-    val name = flag(args, "name", "list")
-    val sfDir = flag(args, "sf-dir", "/root/testdata/sf0.001")
-    val out = flag(args, "out", "")
-    val limit = flag(args, "limit", "20").toInt
+  private def query(spark: SparkSession, flags: Flags): Unit = {
+    val name = flags.str("name", "list")
+    val sfDir = flags.str("sf-dir", "/root/testdata/sf0.001")
+    val out = flags.str("out", "")
+    val limit = flags.int("limit", 20)
+    flags.requireAllRead()
     if (name == "list") {
       SparkEntry.queries.keys.toSeq.sorted.foreach(println)
       return
@@ -110,77 +94,49 @@ object App {
   /** HTTP remote_write ingest -> decode -> flatten -> enrich -> serialize ->
     * keyed publish (pkg/app/produce.go).
     */
-  private def produce(spark: SparkSession, args: Array[String]): Unit = {
-    // app.go:60-62: --web.listen-address (host:port) is the reference
-    // spelling; --web.listen-port stays as the port-only shorthand
-    val (host, port) = {
-      val addr = flag(args, "web.listen-address", "")
-      if (addr.nonEmpty) parseListenAddress(addr)
-      else ("", flag(args, "web.listen-port", "9201").toInt)
-    }
-    val path = flag(args, "web.write-path", "/write")
-    // app.go:65-67: --web.telemetry-path relocates the metrics endpoint
-    val telemetryPath = flag(args, "web.telemetry-path", "/metrics")
-    // app.go:66-69: --web.max-connection-age (kingpin duration, 0 = off),
-    // --web.disable-pprof
-    val maxConnAgeMs = PulsarSink.parseDurationMs(
-      flag(args, "web.max-connection-age", "0"), "web.max-connection-age")
-    val pprof = flag(args, "web.disable-pprof", "false") != "true"
-    val serializer = serializerOf(args)
-    val topic = flag(args, "topic", "metrics")
-    val replicaLabels = flag(args, "replica-labels", graft.model.Model.DefaultReplicaLabel)
+  private[graft] def produce(spark: SparkSession, flags: Flags): Unit = {
+    val source = HttpRemoteWriteSource.Config.from(flags)
+    val pulsar = PulsarSink.Config.from(flags)
+    val serializer = serializerOf(flags)
+    val replicaLabels = flags.str("replica-labels", graft.model.Model.DefaultReplicaLabel)
       .split(",").toSeq
-
     // multi-writer mode (produce.go:82-98 buildWriters + :155-181): N comma-
     // separated topic dirs become N concurrent writers; the HTTP response is
     // synchronous — 200 iff all writers took the request, 500 naming failures
-    val topicDirs = flag(args, "topic-dirs", "")
+    val topicDirs = flags.str("topic-dirs", "")
+    // destination precedence: a real Pulsar broker (--pulsar.url, TLS/auth
+    // flags per pkg/app/pulsar.go:74-93) > file topic > in-memory topic
+    val topicDir = flags.str("topic-dir", "")
+    flags.requireAllRead()
+    val listen = s":${source.port}${source.path}"
+
     if (topicDirs.nonEmpty) {
-      val r = graft.sources.HttpRemoteWriteSource.receiver(port, path,
-        validate = true, maxConnectionAgeMs = maxConnAgeMs, pprof = pprof,
-        host = host, telemetryPath = telemetryPath)
+      // no WAL here: the synchronous 200 already means the destination
+      // writes succeeded
+      val r = HttpRemoteWriteSource.receiver(source.copy(walDir = ""))
       val ws = topicDirs.split(",").toSeq.map(d =>
         new Writers.TopicWriter(d, new FileTopic.Factory(d), serializer, replicaLabels))
       // produce.go:45-46: --send-timeout bounds the synchronous fan-out wait
-      r.setWriters(ws, PulsarSink.parseDurationMs(
-        flag(args, "send-timeout", "30s"), "send-timeout"))
-      println(s"[graft] produce (multi-writer): :$port$path -> ${ws.map(_.name).mkString(", ")} ($serializer)")
+      r.setWriters(ws, pulsar.operationTimeoutMs)
+      println(s"[graft] produce (multi-writer): $listen -> ${ws.map(_.name).mkString(", ")} ($serializer)")
       while (true) Thread.sleep(60000L)
     }
 
-    // --wal-dir: WAL-then-200 durability for the async path (the 200 means
-    // fsync'd to the segment log, the durable twin of the reference's
-    // respond-after-pulsar-flush; empty = in-memory buffered, weaker). The
-    // sync multi-writer path above never needs it — its 200 already means
-    // the destination writes succeeded.
-    val walDir = flag(args, "wal-dir", "")
-    // --web.handler-threads: concurrent request handling (and, in WAL mode,
-    // the group-commit batch width — more concurrent appends share a force)
-    val handlerThreads = flag(args, "web.handler-threads", "4")
+    // the source reads its own settings (--wal-dir, --web.*) from the flags
     val src = spark.readStream.format("graft.sources.HttpRemoteWriteProvider")
-      .option("port", port.toString).option("path", path)
-      .option("maxConnectionAgeMs", maxConnAgeMs.toString)
-      .option("pprof", pprof.toString)
-      .option("walDir", walDir)
-      .option("handlerThreads", handlerThreads)
-      .option("host", host).option("telemetryPath", telemetryPath).load()
+      .options(flags.values).load()
     val out = Metrics.observeReceived(PromPipeline.produce(src, serializer, replicaLabels))
-
-    // destination precedence: a real Pulsar broker (--pulsar.url, TLS/auth
-    // flags per pkg/app/pulsar.go:74-93) > file topic > in-memory topic
-    val topicDir = flag(args, "topic-dir", "")
-    val pulsarUrl = flag(args, "pulsar.url", "")
-    val factory: KeyedSink.ProducerFactory =
-      if (pulsarUrl.nonEmpty) new PulsarSink.Factory(PulsarSink.fromArgs(args))
-      else if (topicDir.nonEmpty) new FileTopic.Factory(topicDir)
-      else new InMemoryBroker.Factory(topic)
+    val (factory, destination): (KeyedSink.ProducerFactory, String) =
+      if (pulsar.url.nonEmpty) (new PulsarSink.Factory(pulsar), s"${pulsar.url} topic '${pulsar.topic}'")
+      else if (topicDir.nonEmpty) (new FileTopic.Factory(topicDir), s"topic dir '$topicDir'")
+      else (new InMemoryBroker.Factory(pulsar.topic), s"topic '${pulsar.topic}'")
     val q = out.writeStream
       .foreach(KeyedSink.writer(factory))
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(100.millis))
       .start()
     stopOnShutdown(q)
-    println(s"[graft] produce: listening on :$port$path -> topic '$topic' ($serializer)")
+    println(s"[graft] produce: listening on $listen -> $destination ($serializer)")
     q.awaitTermination()
   }
 
@@ -191,82 +147,34 @@ object App {
     * retryable sink error fails the micro-batch (no offset commit => replay
     * — the reference's stop-consumption backpressure).
     */
-  private def consume(spark: SparkSession, args: Array[String]): Unit = {
+  private[graft] def consume(spark: SparkSession, flags: Flags): Unit = {
     import spark.implicits._
-    val topic = flag(args, "topic", "metrics")
-    val url = flag(args, "remote-write.url", "http://localhost:9090/api/v1/write")
-    val batchSize = flag(args, "batch-size", "100").toInt
-    val maxDelay = flag(args, "batch-max-delay-ms", "5000").toLong
-    // consume.go:40-41: --send-timeout (default 30s) bounds the remote_write
-    // POST (the reference wires it to the remote client's Timeout, :99)
-    val sendTimeoutMs = PulsarSink.parseDurationMs(
-      flag(args, "send-timeout", "30s"), "send-timeout")
-    // consume.go:42-43: the shared subscription name — consumers sharing it
-    // split the topic (each message once across them); a new name replays
-    val subscription = flag(args, "pulsar.subscription", "pulsar-adapter")
-    // --readers N: split each micro-batch into up to N partitions by key
-    // hash (per-key order preserved) so decode and the remote_write entry
-    // encoding parallelize across tasks; default: the Spark default
-    // parallelism. With --pulsar.executor-consumers, N is also the number of
-    // executor-side KeyShared consumers, so there the default stays 1.
-    val executorConsumers = flag(args, "pulsar.executor-consumers", "false")
-    val readers = flag(args, "readers",
-      if (executorConsumers.toBoolean) "1" else spark.sparkContext.defaultParallelism.toString)
+    // the source reads its own settings (topic, --topic-dir, --readers,
+    // --pulsar.*) from the flags; parsed here too to reject unknown flags
+    // before the query starts
+    val source = BrokerSource.Config.from(flags)
+    val url = flags.str("remote-write.url", "http://localhost:9090/api/v1/write")
+    val batcher = TenantBatcher.Config.from(flags)
     // the consume side unmarshals with the configured serializer too
     // (pkg/app/consume.go reuses the pulsar serializer choice): json -> the
     // legacy layout, anything compat/avro -> the compat layout with the
     // __name__ backfill rule
-    val formatId = serializerOf(args) match {
+    val formatId = serializerOf(flags) match {
       case "json" => 0
       case _ => 1
     }
-    val client = new RemoteWriteSink.HttpClient(url, sendTimeoutMs)
+    flags.requireAllRead()
+    // consume.go:40-41: --send-timeout bounds the remote_write POST (the
+    // reference wires it to the remote client's Timeout, :99)
+    val client = new RemoteWriteSink.HttpClient(url, source.pulsar.operationTimeoutMs)
 
-    val topicDir = flag(args, "topic-dir", "")
-    // source precedence mirrors produce: real Pulsar broker (--pulsar.url +
-    // TLS/auth flags -> the reflection-bound KeyShared consumer) > file
-    // topic > in-memory topic
-    val pulsarCfg = PulsarSink.fromArgs(args)
-    val brokerReader = {
-      val r = spark.readStream.format("graft.sources.BrokerSourceProvider")
-        .option("topic", topic).option("subscription", subscription)
-        .option("readers", readers)
-      if (pulsarCfg.url.nonEmpty)
-        r.option("pulsar.url", pulsarCfg.url)
-          // scale-out consume (beyond reference parity): --readers cached
-          // per-executor KeyShared consumers (auto-split; sticky ranges and
-          // ack timeout tunable)
-          .option("pulsar.executor-consumers", executorConsumers)
-          .option("pulsar.sticky-ranges",
-            flag(args, "pulsar.sticky-ranges", "false"))
-          .option("pulsar.ack-timeout-ms",
-            flag(args, "pulsar.ack-timeout-ms", "60000"))
-          // idle suppression: stop ticking empty epochs on an idle
-          // subscription (<= 0 disables); probe every N triggers bounds
-          // cluster-side wake latency (see BrokerStream scaladoc)
-          .option("pulsar.idle-suppress-after",
-            flag(args, "pulsar.idle-suppress-after", "3"))
-          .option("pulsar.idle-probe-every",
-            flag(args, "pulsar.idle-probe-every", "10"))
-          .option("pulsar.connection-timeout-ms", pulsarCfg.connectionTimeoutMs.toString)
-          // no operation-timeout option: the consumer client leaves it unset,
-          // like the reference (send-timeout only bounds the HTTP POST below)
-          .option("pulsar.certificate-authority", pulsarCfg.certificateAuthority)
-          .option("pulsar.client-certificate", pulsarCfg.clientCertificate)
-          .option("pulsar.client-key", pulsarCfg.clientKey)
-          .option("pulsar.insecure-skip-tls-verify", pulsarCfg.insecureSkipTlsVerify.toString)
-          .option("pulsar.insecure-skip-tls-validate-hostname",
-            pulsarCfg.insecureSkipTlsValidateHostname.toString)
-          .option("pulsar.max-connections-per-broker",
-            pulsarCfg.maxConnectionsPerBroker.toString)
-      else r
-    }
-    val broker = (if (topicDir.nonEmpty) brokerReader.option("dir", topicDir) else brokerReader).load()
+    val broker = spark.readStream.format("graft.sources.BrokerSourceProvider")
+      .options(flags.values).load()
     val samples = PromPipeline.deserialize(
         broker.withColumn("payload", col("payload").cast("string")), formatId, col("payload"))
       .filter(col("sample").isNotNull).select("sample.*")
       .as[graft.model.Model.Sample]
-    val q = TenantBatcher(samples, TenantBatcher.Config(batchSize, maxDelay))
+    val q = TenantBatcher(samples, batcher)
       .writeStream
       .foreachBatch { (ds: org.apache.spark.sql.Dataset[TenantBatcher.Batch], _: Long) =>
         // deliver on executors; only the (sent, failed) counts come back
@@ -280,7 +188,7 @@ object App {
       .trigger(Trigger.ProcessingTime(100.millis)) // checkInterval (write.go:69)
       .start()
     stopOnShutdown(q)
-    println(s"[graft] consume: topic '$topic' -> $url (batch=$batchSize, delay=${maxDelay}ms)")
+    println(s"[graft] consume: '${source.where}' -> $url (batch=${batcher.batchSize}, delay=${batcher.batchMaxDelayMs}ms)")
     q.awaitTermination()
   }
 

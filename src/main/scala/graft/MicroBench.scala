@@ -153,7 +153,7 @@ object MicroBench {
       val topic = "mb_bridge"
       val requests = 100; val seriesPerReq = 500; val samplesPerSeries = 4
       val src = spark.readStream.format("graft.sources.HttpRemoteWriteProvider")
-        .option("port", port.toString).load()
+        .option("web.listen-port", port.toString).load()
       val q = PromPipeline.produce(src, "json")
         .writeStream
         .foreach(graft.streaming.KeyedSink.writer(
@@ -249,8 +249,9 @@ object MicroBench {
         val walDir = if (mode == "wal")
           java.nio.file.Files.createTempDirectory("graft-mb-wal").toString else ""
         val r = graft.sources.HttpRemoteWriteSource.receiver(
-          port, "/write", validate = true, walDir = walDir,
-          handlerThreads = handlers)
+          graft.sources.HttpRemoteWriteSource.Config.from(Flags(
+            "web.listen-port" -> port.toString, "wal-dir" -> walDir,
+            "web.handler-threads" -> handlers.toString)))
         try {
           val http = java.net.http.HttpClient.newHttpClient()
           def post(): Int = http.send(
@@ -321,9 +322,10 @@ object MicroBench {
       // number measures MULTI-segment replay — file listing, per-segment
       // open/scan, CRC per record — not one warm sequential read
       sys.props("graft.wal.segMaxBytes") = (256 << 10).toString
+      val walFlags = Flags("web.listen-port" -> port.toString,
+        "wal-dir" -> walDir.toString, "web.handler-threads" -> "16")
       val r1 = graft.sources.HttpRemoteWriteSource.receiver(
-        port, "/write", validate = true, walDir = walDir.toString,
-        handlerThreads = 16)
+        graft.sources.HttpRemoteWriteSource.Config.from(walFlags))
       val http = java.net.http.HttpClient.newHttpClient()
       def post(): Int = http.send(
         java.net.http.HttpRequest.newBuilder(
@@ -360,8 +362,7 @@ object MicroBench {
       graft.sources.HttpRemoteWriteSource.shutdown(port)
       val t0 = System.nanoTime()
       val r2 = graft.sources.HttpRemoteWriteSource.receiver(
-        port, "/write", validate = true, walDir = walDir.toString,
-        handlerThreads = 16)
+        graft.sources.HttpRemoteWriteSource.Config.from(walFlags))
       val tReplay = (System.nanoTime() - t0) / 1e9
       require(post() == 200, "first post after recovery must be accepted")
       val tReady = (System.nanoTime() - t0) / 1e9
@@ -412,9 +413,10 @@ object MicroBench {
       })
       server.start()
       val client = new graft.streaming.RemoteWriteSink.HttpClient(
-        s"http://localhost:${server.getAddress.getPort}/api/v1/write")
+        s"http://localhost:${server.getAddress.getPort}/api/v1/write", 30000L)
       val broker = spark.readStream.format("graft.sources.BrokerSourceProvider")
-        .option("topic", topic).option("maxRecordsPerTrigger", "20000").load()
+        .option("topic", topic).option("maxRecordsPerTrigger", "20000")
+        .option("readers", "1").load()
       val sampleRows = PromPipeline.deserialize(
           broker.withColumn("payload", col("payload").cast("string")), 0,
           col("payload"))

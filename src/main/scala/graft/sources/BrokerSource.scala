@@ -13,6 +13,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.Flags
 import graft.streaming.InMemoryBroker
 
 /** Operator #13: keyed-topic consumer source (the Pulsar KeyShared consumer
@@ -256,8 +257,73 @@ object BrokerSource {
     }
   }
 
-  /** The reference's default subscription name (pkg/app/consume.go:42-43). */
-  val DefaultSubscription = "pulsar-adapter"
+  /** The consume source's settings, one per consume flag, each default
+    * written once in [[Config.from]].
+    *
+    * @param pulsar the topic for every backend (`--pulsar.topic`, alias
+    * `--topic`), and the real broker when its url is set.
+    * @param dir `--topic-dir`: the durable file topic; empty = the
+    * in-memory topic.
+    * @param subscription `--pulsar.subscription` (consume.go:42-43):
+    * consumers sharing the name split the topic, a new name replays it.
+    * @param readers split each batch into up to this many partitions by key
+    * hash — decode parallelizes across tasks, every key stays in one
+    * partition in arrival order. Default: the session's default
+    * parallelism. In executor-pull mode this is the number of cached
+    * executor consumers (and, with sticky ranges, hash-range slices), and
+    * the default is 1.
+    * @param executorPull real-broker scale-out mode: offsets become epoch
+    * counters, partitions become [[ExecutorPullPartition]] pull tokens, and
+    * payloads are received and acked on executors ([[ExecutorPull]]).
+    * @param idleSuppressAfter executor-pull idle suppression: after this many
+    * consecutive triggers with zero records served (and nothing waiting),
+    * stop advancing epochs so an idle subscription stops burning a planning
+    * cycle + empty micro-batch per trigger (<= 0 disables; serving epochs
+    * always get their following ack epoch because a nonzero served count
+    * resets the idle counter). Same-JVM consumers are peeked each suppressed
+    * trigger, so in local mode a new message wakes the query on the next
+    * trigger; cluster executors are unreachable from the driver, so
+    * `idleProbeEvery` bounds their wake latency.
+    * @param idleProbeEvery while suppressed, still plan a probe epoch every
+    * this many triggers — the cluster-side bound on wake latency (probe cost:
+    * one empty micro-batch).
+    * @param maxRecords option `maxRecordsPerTrigger`, not a CLI flag: rate
+    * limit per micro-batch (0 = unbounded) — the `maxOffsetsPerTrigger`
+    * analog. In executor-pull mode the cap applies per reader (the driver
+    * cannot count what it never sees).
+    * @param pollTimeoutMs option `pollTimeoutMs`, not a CLI flag: how long an
+    * executor-pull task waits for its first message.
+    */
+  final case class Config(pulsar: graft.streaming.PulsarSink.Config,
+      dir: String, subscription: String, readers: Int, executorPull: Boolean,
+      stickyRanges: Boolean, ackTimeoutMs: Long, idleSuppressAfter: Int,
+      idleProbeEvery: Int, maxRecords: Long, pollTimeoutMs: Long) {
+    require(!executorPull || realBroker,
+      "pulsar.executor-consumers requires pulsar.url (a real broker to subscribe to)")
+    def topic: String = pulsar.topic
+    def realBroker: Boolean = pulsar.url.nonEmpty
+    /** The topic this config reads: broker url and topic, file dir, or name. */
+    def where: String =
+      if (realBroker) s"pulsar:${pulsar.url}/$topic" else if (dir.isEmpty) topic else dir
+  }
+
+  object Config {
+    def from(f: Flags): Config = {
+      val executorPull = f.bool("pulsar.executor-consumers", false)
+      Config(graft.streaming.PulsarSink.Config.from(f),
+        dir = f.str("topic-dir", ""),
+        subscription = f.str("pulsar.subscription", "pulsar-adapter"),
+        readers = f.int("readers", if (executorPull) 1
+          else org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism),
+        executorPull = executorPull,
+        stickyRanges = f.bool("pulsar.sticky-ranges", false),
+        ackTimeoutMs = f.long("pulsar.ack-timeout-ms", 60000L),
+        idleSuppressAfter = f.int("pulsar.idle-suppress-after", 3),
+        idleProbeEvery = f.int("pulsar.idle-probe-every", 10),
+        maxRecords = f.option("maxRecordsPerTrigger").fold(0L)(_.toLong),
+        pollTimeoutMs = f.option("pollTimeoutMs").fold(100L)(_.toLong))
+    }
+  }
 
   private val cursors = new ConcurrentHashMap[String, Cursor]()
 
@@ -270,20 +336,17 @@ object BrokerSource {
     * consume-once, so independent subscriptions there only split arrivals —
     * use the file topic when more than one subscription must see all data.
     */
-  def cursor(topic: String, dir: String,
-      subscription: String = DefaultSubscription,
-      pulsar: Option[graft.streaming.PulsarSink.Config] = None): Cursor =
+  def cursor(cfg: Config): Cursor = {
+    import cfg._
     cursors.computeIfAbsent(
-      pulsar match {
-        case Some(c) => s"pulsar:${c.url}:${c.topic}:$subscription"
-        case None if dir == null => s"mem:$topic:$subscription"
-        case None => s"file:$dir:$subscription"
-      },
-      _ => pulsar match {
-        case Some(c) => new PulsarCursor(c, subscription)
-        case None if dir == null => new MemCursor(topic)
-        case None => new FileCursor(dir)
-      })
+      if (realBroker) s"pulsar:${pulsar.url}:$topic:$subscription"
+      else if (dir.isEmpty) s"mem:$topic:$subscription"
+      else s"file:$dir:$subscription",
+      _ =>
+        if (realBroker) new PulsarCursor(pulsar, subscription)
+        else if (dir.isEmpty) new MemCursor(topic)
+        else new FileCursor(dir))
+  }
 
   /** Test hook: drop all in-JVM cursor state, simulating a process restart.
     * FileCursor seqnos are deterministic (lexicographic file order), so a
@@ -293,54 +356,16 @@ object BrokerSource {
   private[graft] def resetCursors(): Unit = cursors.clear()
 }
 
+/** DataSource V2 provider; its options are the consume command's flags. */
 class BrokerSourceProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = BrokerSource.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    // a non-empty pulsar.url selects the reflection-bound real-broker
-    // consumer; the remaining pulsar.* options mirror the CLI flag surface
-    def p(k: String, d: String) = properties.getOrDefault(k, d)
-    val pulsar = Option(p("pulsar.url", "")).filter(_.nonEmpty).map { url =>
-      graft.streaming.PulsarSink.Config(
-        url = url,
-        connectionTimeoutMs = p("pulsar.connection-timeout-ms", "30000").toLong,
-        topic = p("topic", "metrics"),
-        certificateAuthority = p("pulsar.certificate-authority", ""),
-        clientCertificate = p("pulsar.client-certificate", ""),
-        clientKey = p("pulsar.client-key", ""),
-        insecureSkipTlsVerify = p("pulsar.insecure-skip-tls-verify", "false").toBoolean,
-        insecureSkipTlsValidateHostname =
-          p("pulsar.insecure-skip-tls-validate-hostname", "false").toBoolean,
-        maxConnectionsPerBroker = p("pulsar.max-connections-per-broker", "1").toInt
-      ).validated
-    }
-    new BrokerTable(p("topic", "metrics"),
-      properties.getOrDefault("dir", null),
-      p("maxRecordsPerTrigger", "0").toLong,
-      p("subscription", BrokerSource.DefaultSubscription),
-      pulsar,
-      p("readers", "1").toInt,
-      p("pulsar.executor-consumers", "false").toBoolean,
-      p("pollTimeoutMs", "100").toLong,
-      p("pulsar.sticky-ranges", "false").toBoolean,
-      p("pulsar.ack-timeout-ms", "60000").toLong,
-      p("pulsar.idle-suppress-after", "3").toInt,
-      p("pulsar.idle-probe-every", "10").toInt)
-  }
+      properties: util.Map[String, String]): Table =
+    new BrokerTable(BrokerSource.Config.from(Flags(properties)))
 }
 
-class BrokerTable(topic: String, dir: String = null, maxRecords: Long = 0L,
-    subscription: String = BrokerSource.DefaultSubscription,
-    pulsar: Option[graft.streaming.PulsarSink.Config] = None,
-    readers: Int = 1, executorPull: Boolean = false, pollTimeoutMs: Long = 100L,
-    stickyRanges: Boolean = false, ackTimeoutMs: Long = 60000L,
-    idleSuppressAfter: Int = 3, idleProbeEvery: Int = 10)
-  extends Table with SupportsRead {
-  require(!executorPull || pulsar.nonEmpty,
-    "pulsar.executor-consumers requires pulsar.url (a real broker to subscribe to)")
-  override def name(): String =
-    s"broker:${pulsar.map(c => s"pulsar:${c.url}/${c.topic}")
-      .getOrElse(if (dir == null) topic else dir)}@$subscription"
+class BrokerTable(cfg: BrokerSource.Config) extends Table with SupportsRead {
+  override def name(): String = s"broker:${cfg.where}@${cfg.subscription}"
   override def schema(): StructType = BrokerSource.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
@@ -349,9 +374,7 @@ class BrokerTable(topic: String, dir: String = null, maxRecords: Long = 0L,
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = BrokerSource.schema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new BrokerStream(topic, dir, maxRecords, subscription, pulsar, readers,
-            executorPull, pollTimeoutMs, stickyRanges, ackTimeoutMs,
-            idleSuppressAfter, idleProbeEvery)
+          new BrokerStream(cfg)
       }
     }
 }
@@ -360,42 +383,14 @@ final case class BrokerOffset(seq: Long) extends Offset {
   override def json(): String = seq.toString
 }
 
-/** @param maxRecords rate limit per micro-batch (0 = unbounded) — the
-  * `maxOffsetsPerTrigger` analog; backpressure knob promised in SURVEY §4.
-  * In executor-pull mode the cap applies per reader (the driver cannot
-  * count what it never sees).
-  * @param readers split each batch into up to this many partitions by key
-  * hash — decode parallelizes across tasks, every key stays in one
-  * partition in arrival order (1 = single partition, the default). In
-  * executor-pull mode this is the number of cached executor consumers
-  * (and, with sticky ranges, hash-range slices).
-  * @param executorPull real-broker scale-out mode: offsets become epoch
-  * counters, partitions become [[ExecutorPullPartition]] pull tokens, and
-  * payloads are received and acked on executors ([[ExecutorPull]]).
-  * @param idleSuppressAfter executor-pull idle suppression: after this many
-  * consecutive triggers with zero records served (and nothing waiting),
-  * stop advancing epochs so an idle subscription stops burning a planning
-  * cycle + empty micro-batch per trigger (<= 0 disables; serving epochs
-  * always get their following ack epoch because a nonzero served count
-  * resets the idle counter). Same-JVM consumers are peeked each suppressed
-  * trigger, so in local mode a new message wakes the query on the next
-  * trigger; cluster executors are unreachable from the driver, so
-  * `idleProbeEvery` bounds their wake latency.
-  * @param idleProbeEvery while suppressed, still plan a probe epoch every
-  * this many triggers — the cluster-side bound on wake latency (probe cost:
-  * one empty micro-batch).
-  */
-class BrokerStream(topic: String, dir: String = null, maxRecords: Long = 0L,
-    subscription: String = BrokerSource.DefaultSubscription,
-    pulsar: Option[graft.streaming.PulsarSink.Config] = None,
-    readers: Int = 1, executorPull: Boolean = false, pollTimeoutMs: Long = 100L,
-    stickyRanges: Boolean = false, ackTimeoutMs: Long = 60000L,
-    idleSuppressAfter: Int = 3, idleProbeEvery: Int = 10)
+/** The consume query's stream over one [[BrokerSource.Config]]. */
+class BrokerStream(cfg: BrokerSource.Config)
   extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
   // fail fast at query start if another RUNNING pull-mode query already owns
   // this (url, topic, subscription) — shared entries would interleave epochs
-  if (executorPull) pulsar.foreach(ExecutorPull.register(_, subscription, this))
-  private lazy val cursor = BrokerSource.cursor(topic, dir, subscription, pulsar)
+  import cfg._
+  if (executorPull) ExecutorPull.register(cfg, this)
+  private lazy val cursor = BrokerSource.cursor(cfg)
   // executor-pull epoch bookkeeping: the last end offset this stream
   // planned or reported (offset values are epochs, not message counts)
   @volatile private var lastEnd = 0L
@@ -458,7 +453,7 @@ class BrokerStream(topic: String, dir: String = null, maxRecords: Long = 0L,
         val served = if (servedAcc == null) 0L else servedAcc.value.longValue
         val progressed = served != lastServedSeen
         lastServedSeen = served
-        val waiting = pulsar.exists(c => ExecutorPull.hasAvailable(c, subscription))
+        val waiting = ExecutorPull.hasAvailable(cfg)
         if (progressed || waiting) drainNoProgress = 0 else drainNoProgress += 1
         if (drainNoProgress >= 3) {
           drainDone = true
@@ -477,7 +472,7 @@ class BrokerStream(topic: String, dir: String = null, maxRecords: Long = 0L,
           lastServedSeen = served; idleTriggers = 0; suppressedTriggers = 0
         } else if (idleTriggers < idleSuppressAfter) {
           idleTriggers += 1
-        } else if (pulsar.exists(c => ExecutorPull.hasAvailable(c, subscription))) {
+        } else if (ExecutorPull.hasAvailable(cfg)) {
           // a same-JVM consumer has a message waiting (staged for the next
           // epoch's fill): wake immediately
           idleTriggers = 0; suppressedTriggers = 0
@@ -520,8 +515,7 @@ class BrokerStream(topic: String, dir: String = null, maxRecords: Long = 0L,
       // entries in THIS JVM (local mode) ack the committed epoch promptly;
       // cluster executors hear about the commit as the next epoch's tasks
       // (batch e+1 plans only after e commits) and ack then
-      pulsar.foreach(ExecutorPull.ackThrough(_, subscription,
-        end.asInstanceOf[BrokerOffset].seq))
+      ExecutorPull.ackThrough(cfg, end.asInstanceOf[BrokerOffset].seq)
     else cursor.commit(end.asInstanceOf[BrokerOffset].seq)
   }
   override def stop(): Unit =
@@ -529,9 +523,9 @@ class BrokerStream(topic: String, dir: String = null, maxRecords: Long = 0L,
     // cluster the executor-side entries close with their JVMs and the ack
     // timeout bounds how long their unacked messages stay undeliverable.
     // Releasing the subscription ownership lets a successor query start.
-    if (executorPull) pulsar.foreach { c =>
-      ExecutorPull.close(c, subscription)
-      ExecutorPull.unregister(c, subscription, this)
+    if (executorPull) {
+      ExecutorPull.close(cfg)
+      ExecutorPull.unregister(cfg, this)
     }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
@@ -550,9 +544,7 @@ class BrokerStream(topic: String, dir: String = null, maxRecords: Long = 0L,
       return Array.tabulate(readers) { i =>
         val loc = if (hosts.isEmpty) Array.empty[String]
                   else Array(hosts(i % hosts.length))
-        ExecutorPullPartition(pulsar.get, subscription, i, readers,
-          maxRecords, pollTimeoutMs, e, stickyRanges, ackTimeoutMs, loc,
-          servedAcc)
+        ExecutorPullPartition(cfg, i, e, loc, servedAcc)
       }
     }
     cursor.ensureBase(s)
@@ -592,9 +584,7 @@ class BrokerStream(topic: String, dir: String = null, maxRecords: Long = 0L,
       // executor-pull: the task pulls from its slot's cached consumer
       case p: ExecutorPullPartition => new PartitionReader[InternalRow] {
         private lazy val msgs = {
-          val m = ExecutorPull.pull(p.cfg, p.subscription,
-            p.slot, p.readers, p.epoch, p.maxRecords, p.pollTimeoutMs,
-            p.stickyRanges, p.ackTimeoutMs)
+          val m = ExecutorPull.pull(p.cfg, p.slot, p.epoch)
           // served-record count rides the accumulator back to the planner —
           // the idle-suppression signal (exactness not required: any change
           // means "not idle")
@@ -628,10 +618,8 @@ final case class FileRangePartition(dir: String, names: Array[String])
   * `locations` is the consumer-cache affinity hint (host-level, best
   * effort).
   */
-final case class ExecutorPullPartition(cfg: graft.streaming.PulsarSink.Config,
-    subscription: String, slot: Int, readers: Int, maxRecords: Long,
-    pollTimeoutMs: Long, epoch: Long, stickyRanges: Boolean = false,
-    ackTimeoutMs: Long = 0L, locations: Array[String] = Array.empty,
+final case class ExecutorPullPartition(cfg: BrokerSource.Config, slot: Int,
+    epoch: Long, locations: Array[String] = Array.empty,
     served: org.apache.spark.util.LongAccumulator = null)
     extends InputPartition {
   override def preferredLocations(): Array[String] = locations

@@ -124,11 +124,10 @@ object ExecutorPull {
   /** Test seam: build the slot's consumer — the shared reflection builder
     * against the public pulsar-client API in production, a fake in specs
     * (local mode keeps driver and executors in one JVM, so specs can
-    * inject and observe). Args: (cfg, subscription, slot, readers,
-    * stickyRanges, ackTimeoutMs).
+    * inject and observe). Args: (cfg, slot).
     */
   @volatile private[graft] var consumerFactory:
-      (PulsarSink.Config, String, Int, Int, Boolean, Long) => AnyRef = buildConsumer
+      (BrokerSource.Config, Int) => AnyRef = buildConsumer
 
   private val entries = new ConcurrentHashMap[(String, Int), Entry]()
 
@@ -140,25 +139,22 @@ object ExecutorPull {
     */
   private val owners = new ConcurrentHashMap[String, AnyRef]()
 
-  private[graft] def register(cfg: PulsarSink.Config, subscription: String,
-      owner: AnyRef): Unit = {
-    val k = keyPrefix(cfg, subscription)
-    val prev = owners.putIfAbsent(k, owner)
+  private[graft] def register(cfg: BrokerSource.Config, owner: AnyRef): Unit = {
+    val prev = owners.putIfAbsent(keyPrefix(cfg), owner)
     if (prev != null && (prev ne owner))
       throw new IllegalStateException(
-        s"executor-pull query already running on ${cfg.url}/${cfg.topic} " +
-        s"subscription '$subscription'; concurrent queries sharing a " +
+        s"executor-pull query already running on ${cfg.pulsar.url}/${cfg.topic} " +
+        s"subscription '${cfg.subscription}'; concurrent queries sharing a " +
         "subscription would interleave epochs on shared consumers — use a " +
         "distinct subscription name per pipeline (the reference's " +
         "one-consumer-group-per-pipeline rule, consume.go:42-43)")
   }
 
-  private[graft] def unregister(cfg: PulsarSink.Config, subscription: String,
-      owner: AnyRef): Unit =
-    owners.remove(keyPrefix(cfg, subscription), owner)
+  private[graft] def unregister(cfg: BrokerSource.Config, owner: AnyRef): Unit =
+    owners.remove(keyPrefix(cfg), owner)
 
-  private def keyPrefix(cfg: PulsarSink.Config, subscription: String): String =
-    s"${cfg.url}:${cfg.topic}:$subscription"
+  private def keyPrefix(cfg: BrokerSource.Config): String =
+    s"${cfg.pulsar.url}:${cfg.topic}:${cfg.subscription}"
 
   /** Driver-side prompt ack: the stream's commit(e) calls this so entries
     * living in the SAME JVM (local mode, tests) ack epoch e's buffer the
@@ -167,9 +163,8 @@ object ExecutorPull {
     * ack-rides-next-epoch path; this also makes one-shot
     * Trigger.AvailableNow runs ack their only batch before stopping.
     */
-  private[graft] def ackThrough(cfg: PulsarSink.Config, subscription: String,
-      epoch: Long): Unit = {
-    val prefix = keyPrefix(cfg, subscription)
+  private[graft] def ackThrough(cfg: BrokerSource.Config, epoch: Long): Unit = {
+    val prefix = keyPrefix(cfg)
     entries.forEach { (k, e) =>
       if (k._1 == prefix) e.synchronized {
         if (e.pendingEpoch >= 0 && e.pendingEpoch <= epoch && e.pending.nonEmpty) {
@@ -189,10 +184,9 @@ object ExecutorPull {
     * executor-side entries are unreachable from the driver — this returns
     * false there and the caller's periodic probe epoch bounds wake latency.
     */
-  private[graft] def hasAvailable(cfg: PulsarSink.Config,
-      subscription: String): Boolean = {
+  private[graft] def hasAvailable(cfg: BrokerSource.Config): Boolean = {
     import PulsarSink.call
-    val prefix = keyPrefix(cfg, subscription)
+    val prefix = keyPrefix(cfg)
     var found = false
     entries.forEach { (k, e) =>
       if (!found && k._1 == prefix) e.synchronized {
@@ -215,8 +209,8 @@ object ExecutorPull {
 
   /** Close and drop every cached entry for this (url, topic, subscription)
     * living in THIS JVM — the local half of query stop. */
-  private[graft] def close(cfg: PulsarSink.Config, subscription: String): Unit = {
-    val prefix = keyPrefix(cfg, subscription)
+  private[graft] def close(cfg: BrokerSource.Config): Unit = {
+    val prefix = keyPrefix(cfg)
     val it = entries.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
@@ -237,25 +231,22 @@ object ExecutorPull {
     owners.clear()
   }
 
-  private def entryFor(cfg: PulsarSink.Config, subscription: String,
-      slot: Int, readers: Int, stickyRanges: Boolean, ackTimeoutMs: Long): Entry =
-    entries.computeIfAbsent(
-      (keyPrefix(cfg, subscription), slot),
-      _ => new Entry(consumerFactory(cfg, subscription, slot, readers,
-        stickyRanges, ackTimeoutMs)))
+  private def entryFor(cfg: BrokerSource.Config, slot: Int): Entry =
+    entries.computeIfAbsent((keyPrefix(cfg), slot),
+      _ => new Entry(consumerFactory(cfg, slot)))
 
   /** KeyShared consumer for slot `slot` of `readers`: auto-split by
     * default, or pinned to slice `slot` of the [0, 65535] key-hash space
     * when sticky ranges are requested.
     */
-  private def buildConsumer(cfg: PulsarSink.Config, subscription: String,
-      slot: Int, readers: Int, stickyRanges: Boolean, ackTimeoutMs: Long): AnyRef = {
+  private def buildConsumer(cfg: BrokerSource.Config, slot: Int): AnyRef = {
     val range =
-      if (!stickyRanges) None
+      if (!cfg.stickyRanges) None
       else Some((
-        (65536L * slot / readers).toInt,
-        (65536L * (slot + 1) / readers - 1).toInt))
-    PulsarSink.buildKeySharedConsumer(cfg, subscription, range, ackTimeoutMs)
+        (65536L * slot / cfg.readers).toInt,
+        (65536L * (slot + 1) / cfg.readers - 1).toInt))
+    PulsarSink.buildKeySharedConsumer(cfg.pulsar, cfg.subscription, range,
+      cfg.ackTimeoutMs)
   }
 
   private def receive(consumer: AnyRef, timeoutMs: Long): AnyRef =
@@ -290,12 +281,11 @@ object ExecutorPull {
     *     buffers whose serving attempt completed successfully ride the
     *     next-epoch (or commit-time) ack.
     */
-  private[graft] def pull(cfg: PulsarSink.Config, subscription: String,
-      slot: Int, readers: Int, epoch: Long, maxRecords: Long,
-      pollTimeoutMs: Long, stickyRanges: Boolean,
-      ackTimeoutMs: Long): Array[InMemoryBroker.Message] = {
+  private[graft] def pull(cfg: BrokerSource.Config, slot: Int,
+      epoch: Long): Array[InMemoryBroker.Message] = {
     import PulsarSink.call
-    val e = entryFor(cfg, subscription, slot, readers, stickyRanges, ackTimeoutMs)
+    import cfg.{maxRecords, pollTimeoutMs}
+    val e = entryFor(cfg, slot)
     e.synchronized {
       e.lastUsedMs = System.currentTimeMillis()
       if (epoch < e.pendingEpoch) {

@@ -13,6 +13,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.Flags
 import graft.functions.PromKernel
 
 /** Operator #1: HTTP remote_write receiver source (reference:
@@ -49,9 +50,10 @@ import graft.functions.PromKernel
   * semantics — downstream consumers must tolerate duplicates (or dedup on
   * (tenant, series key, timestamp) themselves, the standard TSDB rule).
   *
-  * Usage: spark.readStream.format("graft.sources.HttpRemoteWriteProvider")
-  *   .option("port", "9201").option("path", "/write")
-  *   .option("walDir", "/data/wal/9201").load()
+  * Usage (the options are the produce command's flags, see [[Config]]):
+  *   spark.readStream.format("graft.sources.HttpRemoteWriteProvider")
+  *   .option("web.listen-port", "9201").option("web.write-path", "/write")
+  *   .option("wal-dir", "/data/wal/9201").load()
   */
 object HttpRemoteWriteSource {
 
@@ -67,6 +69,44 @@ object HttpRemoteWriteSource {
       basicAuthUser: String,
       orgIdHeader: String,
       receivedAtMs: Long)
+
+  /** The receiver's settings, one per produce flag, each default written
+    * once in [[Config.from]]. `maxConnectionAgeMs` > 0 reproduces
+    * MaxConnectionAgeHandler (pkg/context/handlers.go:42-49): connections
+    * older than the limit get `Connection: close` so load balancers can
+    * re-spread clients. `pprof` serves a JVM profiling facade under
+    * /debug/pprof/ (the reference registers Go pprof there, server.go:84-92;
+    * the JVM analog is a thread dump + heap summary — deep profiling belongs
+    * to the Spark UI). `host` binds a specific interface (empty = all) and
+    * `telemetryPath` relocates the metrics endpoint (app.go:60-67).
+    * `walDir` selects WAL-then-200 durability (see [[Receiver]]), and
+    * `handlerThreads` sizes concurrent request handling — in WAL mode also
+    * the group-commit batch width. `validate` is a source option the CLI
+    * does not take.
+    */
+  final case class Config(port: Int, path: String, validate: Boolean,
+      maxConnectionAgeMs: Long, pprof: Boolean, host: String,
+      telemetryPath: String, walDir: String, handlerThreads: Int)
+
+  object Config {
+    def from(f: Flags): Config = {
+      // app.go:60-62: --web.listen-address (host:port) is the reference
+      // spelling; --web.listen-port stays as the port-only shorthand
+      val port = f.int("web.listen-port", 9201)
+      val (host, boundPort) = f.str("web.listen-address", "") match {
+        case "" => ("", port)
+        case addr => parseListenAddress(addr)
+      }
+      Config(port = boundPort, path = f.str("web.write-path", "/write"),
+        validate = f.option("validate").fold(true)(_.toBoolean),
+        // app.go:66-69: kingpin duration, 0 = off
+        maxConnectionAgeMs = f.durationMs("web.max-connection-age", "0"),
+        pprof = f.str("web.disable-pprof", "false") != "true",
+        host = host, telemetryPath = f.str("web.telemetry-path", "/metrics"),
+        walDir = f.str("wal-dir", ""),
+        handlerThreads = f.int("web.handler-threads", 4))
+    }
+  }
 
   /** Write-ahead log backing the WAL-then-200 durability mode: an
     * append-only directory of CRC-framed segment files. Each accepted POST
@@ -559,17 +599,8 @@ object HttpRemoteWriteSource {
     }
   }
 
-  /** One receiver per (JVM, port): buffered messages with monotonic seqnos.
-    * maxConnectionAgeMs > 0 reproduces MaxConnectionAgeHandler
-    * (pkg/context/handlers.go:42-49): connections older than the limit get
-    * `Connection: close` so load balancers can re-spread clients.
-    * pprof=true serves a JVM profiling facade under /debug/pprof/ (the
-    * reference registers Go pprof there, server.go:84-92; the JVM analog is
-    * a thread dump + heap summary — deep profiling belongs to the Spark UI).
-    * `host` binds a specific interface (the host half of the reference's
-    * `--web.listen-address`, app.go:60-62; empty = all interfaces) and
-    * `telemetryPath` relocates the metrics endpoint
-    * (`--web.telemetry-path`, app.go:65-67).
+  /** One receiver per (JVM, port): buffered messages with monotonic seqnos,
+    * served as [[Config]] says.
     *
     * Durability: with `walDir` set, every accepted payload is appended to
     * the [[Wal]] and fsync'd BEFORE the 200 — the durable equivalent of the
@@ -583,18 +614,13 @@ object HttpRemoteWriteSource {
     * which responds only after the writers themselves succeed) when the
     * 200 must mean durable.
     */
-  final class Receiver(port: Int, path: String, validate: Boolean,
-      maxConnectionAgeMs: Long = 0L, pprof: Boolean = true,
-      host: String = "", telemetryPath: String = "/metrics",
-      walDir: String = "", handlerThreads: Int = 4) {
+  final class Receiver(private[HttpRemoteWriteSource] val config: Config) {
+    import config._
     // validate HERE, before the registry insertion: a throw inside
     // computeIfAbsent leaves no stale entry, so a corrected retry on the
     // same port works without a manual shutdown
     require(handlerThreads > 0,
-      s"handlerThreads (--web.handler-threads) must be positive, got $handlerThreads")
-    private[HttpRemoteWriteSource] val config =
-      (port, path, validate, maxConnectionAgeMs, pprof, host, telemetryPath,
-        walDir, handlerThreads)
+      s"--web.handler-threads must be positive, got $handlerThreads")
     private val buf = new java.util.concurrent.ConcurrentSkipListMap[Long, Received]()
     private val seq = new AtomicLong(0L)
     // Publish floor: seqno assignment and buffer insertion are two steps
@@ -641,9 +667,9 @@ object HttpRemoteWriteSource {
       */
     @volatile private var writers: Seq[graft.streaming.Writers.RequestWriter] = Nil
     // --send-timeout (produce.go:45-46): the shared fan-out deadline
-    @volatile private var writerTimeoutMs: Long = 30000L
+    @volatile private var writerTimeoutMs: Long = _
     def setWriters(ws: Seq[graft.streaming.Writers.RequestWriter],
-        timeoutMs: Long = 30000L): Unit = { writers = ws; writerTimeoutMs = timeoutMs }
+        timeoutMs: Long): Unit = { writerTimeoutMs = timeoutMs; writers = ws }
 
     /** handlers.go:42-49: stamp Connection: close when the (keep-alive)
       * connection — identified by the client socket address — is too old.
@@ -688,7 +714,7 @@ object HttpRemoteWriteSource {
       server.createContext("/ready", (e: com.sun.net.httpserver.HttpExchange) => {
         e.sendResponseHeaders(200, 0); e.getResponseBody.write("ready\n".getBytes); e.close()
       })
-      // telemetry path (default /metrics): prometheus text exposition of the
+      // telemetry path: prometheus text exposition of the
       // engine registry (server.go:71-73 registers the handler on the
       // configurable --web.telemetry-path; instruments in graft.streaming.Metrics)
       server.createContext(telemetryPath, (e: com.sun.net.httpserver.HttpExchange) => {
@@ -833,55 +859,58 @@ object HttpRemoteWriteSource {
     * would misroute a restarted query; fail fast instead (stop the old
     * receiver via [[shutdown]] to rebind with new settings).
     */
-  def receiver(port: Int, path: String, validate: Boolean,
-      maxConnectionAgeMs: Long = 0L, pprof: Boolean = true,
-      host: String = "", telemetryPath: String = "/metrics",
-      walDir: String = "", handlerThreads: Int = 4): Receiver = {
-    val r = receivers.computeIfAbsent(port,
-      _ => new Receiver(port, path, validate, maxConnectionAgeMs, pprof,
-        host, telemetryPath, walDir, handlerThreads))
-    val requested = (port, path, validate, maxConnectionAgeMs, pprof, host,
-      telemetryPath, walDir, handlerThreads)
-    if (r.config != requested)
+  def receiver(cfg: Config): Receiver = {
+    val r = receivers.computeIfAbsent(cfg.port, _ => new Receiver(cfg))
+    if (r.config != cfg)
       throw new IllegalStateException(
-        s"port $port already serves a receiver with different settings " +
-        s"(running: ${r.config}, requested: $requested); " +
-        s"shutdown($port) first to rebind")
+        s"port ${cfg.port} already serves a receiver with different settings " +
+        s"(running: ${r.config}, requested: $cfg); " +
+        s"shutdown(${cfg.port}) first to rebind")
     r.start()
     r
   }
+
+  /** A receiver with the flag defaults but for its port, path, validation
+    * and WAL dir.
+    */
+  def receiver(port: Int, path: String, validate: Boolean,
+      walDir: String = ""): Receiver =
+    receiver(Config.from(Flags()).copy(port = port, path = path,
+      validate = validate, walDir = walDir))
 
   def shutdown(port: Int): Unit = {
     val r = receivers.remove(port)
     if (r != null) r.stop()
   }
+
+  /** app.go:60-62: `--web.listen-address` takes "host:port" (":9201" = all
+    * interfaces). Returns (host, port); throws with the flag name on junk.
+    */
+  private[graft] def parseListenAddress(addr: String): (String, Int) = {
+    val i = addr.lastIndexOf(':')
+    val port =
+      try { require(i >= 0); addr.substring(i + 1).toInt }
+      catch { case _: Exception => throw new IllegalArgumentException(
+        s"--web.listen-address: expected host:port, got '$addr'") }
+    (addr.substring(0, math.max(i, 0)), port)
+  }
 }
 
-/** DataSource V2 provider (format class name). */
+/** DataSource V2 provider (format class name). Its options are the
+  * produce command's flags.
+  */
 class HttpRemoteWriteProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     HttpRemoteWriteSource.schema
   override def getTable(
       schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new HttpRemoteWriteTable(
-      properties.getOrDefault("port", "9201").toInt,
-      properties.getOrDefault("path", "/write"),
-      properties.getOrDefault("validate", "true").toBoolean,
-      properties.getOrDefault("maxConnectionAgeMs", "0").toLong,
-      properties.getOrDefault("pprof", "true").toBoolean,
-      properties.getOrDefault("host", ""),
-      properties.getOrDefault("telemetryPath", "/metrics"),
-      properties.getOrDefault("walDir", ""),
-      properties.getOrDefault("handlerThreads", "4").toInt)
+    new HttpRemoteWriteTable(HttpRemoteWriteSource.Config.from(Flags(properties)))
 }
 
-class HttpRemoteWriteTable(port: Int, path: String, validate: Boolean,
-    maxConnectionAgeMs: Long = 0L, pprof: Boolean = true,
-    host: String = "", telemetryPath: String = "/metrics",
-    walDir: String = "", handlerThreads: Int = 4)
+class HttpRemoteWriteTable(cfg: HttpRemoteWriteSource.Config)
     extends Table with SupportsRead {
-  override def name(): String = s"http-remote-write:$port$path"
+  override def name(): String = s"http-remote-write:${cfg.port}${cfg.path}"
   override def schema(): StructType = HttpRemoteWriteSource.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
@@ -890,8 +919,7 @@ class HttpRemoteWriteTable(port: Int, path: String, validate: Boolean,
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = HttpRemoteWriteSource.schema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new HttpRemoteWriteStream(port, path, validate, maxConnectionAgeMs, pprof,
-            host, telemetryPath, walDir, handlerThreads)
+          new HttpRemoteWriteStream(cfg)
       }
     }
 }
@@ -900,14 +928,9 @@ final case class HttpOffset(seq: Long) extends Offset {
   override def json(): String = seq.toString
 }
 
-class HttpRemoteWriteStream(port: Int, path: String, validate: Boolean,
-    maxConnectionAgeMs: Long = 0L, pprof: Boolean = true,
-    host: String = "", telemetryPath: String = "/metrics",
-    walDir: String = "", handlerThreads: Int = 4)
+class HttpRemoteWriteStream(cfg: HttpRemoteWriteSource.Config)
     extends MicroBatchStream {
-  private val receiver =
-    HttpRemoteWriteSource.receiver(port, path, validate, maxConnectionAgeMs, pprof,
-      host, telemetryPath, walDir, handlerThreads)
+  private val receiver = HttpRemoteWriteSource.receiver(cfg)
 
   override def initialOffset(): Offset = HttpOffset(0L)
   override def latestOffset(): Offset = HttpOffset(receiver.latest)

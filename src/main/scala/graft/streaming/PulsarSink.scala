@@ -16,32 +16,43 @@ import java.util.concurrent.TimeUnit
   */
 object PulsarSink {
 
-  /** pkg/app/pulsar.go:74-93 — one field per reference flag, same defaults.
-    * `operationTimeoutMs` is the command-level `--send-timeout` (produce.go:
-    * 45-46, default 30s, wired to clientOptions.OperationTimeout at :68);
-    * `subscription` is `--pulsar.subscription` (consume.go:42-43, default
-    * "pulsar-adapter" — the shared KeyShared subscription name).
+  /** pkg/app/pulsar.go:74-93 — one field per reference flag, parsed with
+    * its default by [[Config.from]]. `topic` is `--pulsar.topic` with
+    * `--topic` as this CLI's alias: one topic for both commands.
+    * `operationTimeoutMs` is the command-level `--send-timeout`
+    * (produce.go:45-46, wired to clientOptions.OperationTimeout at :68; it
+    * also bounds produce's multi-writer fan-out and consume's remote_write
+    * POST, consume.go:40-41).
     */
   final case class Config(
-      url: String = "",
-      connectionTimeoutMs: Long = 30000L,
-      operationTimeoutMs: Long = 30000L,
-      subscription: String = "pulsar-adapter",
-      topic: String = "metrics",
-      certificateAuthority: String = "",
-      clientCertificate: String = "",
-      clientKey: String = "",
-      insecureSkipTlsVerify: Boolean = false,
-      insecureSkipTlsValidateHostname: Boolean = false,
-      maxConnectionsPerBroker: Int = 1) {
+      url: String,
+      connectionTimeoutMs: Long,
+      operationTimeoutMs: Long,
+      topic: String,
+      certificateAuthority: String,
+      clientCertificate: String,
+      clientKey: String,
+      insecureSkipTlsVerify: Boolean,
+      insecureSkipTlsValidateHostname: Boolean,
+      maxConnectionsPerBroker: Int) {
+    // pulsar.go:97-103: TLS auth needs BOTH halves of the keypair
+    require(clientKey.isEmpty == clientCertificate.isEmpty,
+      "both pulsar.client-key and pulsar.client-certificate need to be specified")
+  }
 
-    /** pulsar.go:97-103: TLS auth needs BOTH halves of the keypair. */
-    def validated: Config = {
-      if ((clientKey.isEmpty) != (clientCertificate.isEmpty))
-        throw new IllegalArgumentException(
-          "both pulsar.client-key and pulsar.client-certificate need to be specified")
-      this
-    }
+  object Config {
+    def from(f: graft.Flags): Config = Config(
+      url = f.str("pulsar.url", ""),
+      connectionTimeoutMs = f.durationMs("pulsar.connection-timeout", "30s"),
+      operationTimeoutMs = f.durationMs("send-timeout", "30s"),
+      topic = f.first(Seq("pulsar.topic", "topic"), "metrics"),
+      certificateAuthority = f.str("pulsar.certificate-authority", ""),
+      clientCertificate = f.str("pulsar.client-certificate", ""),
+      clientKey = f.str("pulsar.client-key", ""),
+      insecureSkipTlsVerify = f.bool("pulsar.insecure-skip-tls-verify", false),
+      insecureSkipTlsValidateHostname =
+        f.bool("pulsar.insecure-skip-tls-validate-hostname", false),
+      maxConnectionsPerBroker = f.int("pulsar.max-connections-per-broker", 1))
   }
 
   private val DurationTerm = "([0-9]*\\.?[0-9]+)(ns|us|µs|ms|s|m|h)".r
@@ -76,31 +87,6 @@ object PulsarSink {
     }.sum
     val r = math.rint(ms).toLong
     if (neg) -r else r
-  }
-
-  /** Build a [[Config]] from `--pulsar.*` CLI args (the reference's flag
-    * names, pkg/app/pulsar.go:74-93; values are `--name value` pairs).
-    */
-  def fromArgs(args: Array[String]): Config = {
-    def flag(name: String, default: String): String = {
-      val i = args.indexOf(s"--$name")
-      if (i >= 0 && i + 1 < args.length) args(i + 1) else default
-    }
-    Config(
-      url = flag("pulsar.url", ""),
-      connectionTimeoutMs = parseDurationMs(
-        flag("pulsar.connection-timeout", "30s"), "pulsar.connection-timeout"),
-      operationTimeoutMs = parseDurationMs(flag("send-timeout", "30s"), "send-timeout"),
-      subscription = flag("pulsar.subscription", "pulsar-adapter"),
-      topic = flag("pulsar.topic", "metrics"),
-      certificateAuthority = flag("pulsar.certificate-authority", ""),
-      clientCertificate = flag("pulsar.client-certificate", ""),
-      clientKey = flag("pulsar.client-key", ""),
-      insecureSkipTlsVerify = flag("pulsar.insecure-skip-tls-verify", "false").toBoolean,
-      insecureSkipTlsValidateHostname =
-        flag("pulsar.insecure-skip-tls-validate-hostname", "false").toBoolean,
-      maxConnectionsPerBroker = flag("pulsar.max-connections-per-broker", "1").toInt
-    ).validated
   }
 
   /** Invoke `name` on `obj`: exact signature first, then name + arity
@@ -270,8 +256,6 @@ object PulsarSink {
     * (see [[buildClient]] for the flag mapping).
     */
   final class Factory(cfg: Config) extends KeyedSink.ProducerFactory {
-    cfg.validated
-
     override def create(partitionId: Long): KeyedSink.Producer = {
       val client = buildClient(cfg, "produce to")
       val producerBuilder = call(client, "newProducer")

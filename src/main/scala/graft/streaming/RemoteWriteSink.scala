@@ -30,10 +30,10 @@ object RemoteWriteSink {
 
   /** Production transport: POST to a remote_write endpoint with the tenant
     * header and UA the reference sends (write.go:83-94, version.go:7-16).
-    * `timeoutMs` is the CLI's `--send-timeout` (consume.go:40-41, default
-    * 30s), applied to both connect and request.
+    * `timeoutMs` is the CLI's `--send-timeout` (consume.go:40-41), applied
+    * to both connect and request.
     */
-  final class HttpClient(endpoint: String, val timeoutMs: Long = 30000L) extends Client {
+  final class HttpClient(endpoint: String, val timeoutMs: Long) extends Client {
     override def remoteName: String = endpoint
     // looked up, not held: the client is captured in the query's closures and
     // deserialized by every task, and a client of its own per copy would cost

@@ -46,7 +46,15 @@ import graft.operators.PromPipeline
   */
 object TenantBatcher {
 
-  final case class Config(batchSize: Int = 100, batchMaxDelayMs: Long = 5000L)
+  /** write.go:67-69: flush a tenant at `--batch-size` samples, or
+    * `--batch-max-delay-ms` after its first buffered sample.
+    */
+  final case class Config(batchSize: Int, batchMaxDelayMs: Long)
+
+  object Config {
+    def from(f: graft.Flags): Config =
+      Config(f.int("batch-size", 100), f.long("batch-max-delay-ms", 5000L))
+  }
 
   /** One sample's remote_write entry, keyed by tenant. */
   final case class Entry(tenantId: String, entry: Array[Byte])
@@ -64,7 +72,7 @@ object TenantBatcher {
   /** Buffered state per tenant. */
   final case class BatchState(entries: Seq[Array[Byte]], firstArrivalMs: Long)
 
-  def apply(ds: Dataset[Sample], cfg: Config = Config()): Dataset[Batch] = {
+  def apply(ds: Dataset[Sample], cfg: Config): Dataset[Batch] = {
     implicit val batchEnc = Encoders.product[Batch]
     implicit val stateEnc = Encoders.product[BatchState]
     PromPipeline.remoteWriteEntries(ds.toDF())

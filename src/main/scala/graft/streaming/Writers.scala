@@ -46,7 +46,7 @@ object Writers {
     * abandoned goroutines.
     */
   def fanOut(writers: Seq[RequestWriter], tenantId: String,
-      samples: Seq[WireSample], timeoutMs: Long = 30000L): Seq[String] = {
+      samples: Seq[WireSample], timeoutMs: Long): Seq[String] = {
     val deadline = System.nanoTime() + timeoutMs * 1000000L
     val ok = new Array[Boolean](writers.length)
     val threads = writers.zipWithIndex.map { case (w, i) =>

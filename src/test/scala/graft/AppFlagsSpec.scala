@@ -10,29 +10,31 @@ import graft.sources.HttpRemoteWriteSource
   */
 class AppFlagsSpec extends AnyFunSuite {
 
+  private def flags(args: String*): Flags = Flags.parse(args)
+
   test("--pulsar.serializer is the reference spelling; --serializer the alias") {
-    assert(App.serializerOf(Array("--pulsar.serializer", "avro-json-compat")) ==
+    assert(App.serializerOf(flags("--pulsar.serializer", "avro-json-compat")) ==
       "avro-json-compat")
-    assert(App.serializerOf(Array("--serializer", "json-compat")) == "json-compat")
+    assert(App.serializerOf(flags("--serializer", "json-compat")) == "json-compat")
     // reference spelling wins when both appear
-    assert(App.serializerOf(Array(
+    assert(App.serializerOf(flags(
       "--serializer", "json", "--pulsar.serializer", "json-compat")) == "json-compat")
-    assert(App.serializerOf(Array.empty) == "json")
+    assert(App.serializerOf(flags()) == "json")
   }
 
   test("--web.listen-address parses host:port; :port binds all interfaces") {
-    assert(App.parseListenAddress("127.0.0.1:9201") == ("127.0.0.1", 9201))
-    assert(App.parseListenAddress(":9201") == ("", 9201))
-    val e = intercept[IllegalArgumentException](App.parseListenAddress("9201"))
+    assert(HttpRemoteWriteSource.parseListenAddress("127.0.0.1:9201") == ("127.0.0.1", 9201))
+    assert(HttpRemoteWriteSource.parseListenAddress(":9201") == ("", 9201))
+    val e = intercept[IllegalArgumentException](HttpRemoteWriteSource.parseListenAddress("9201"))
     assert(e.getMessage.contains("web.listen-address"))
     assert(intercept[IllegalArgumentException](
-      App.parseListenAddress("host:")).getMessage.contains("host:"))
+      HttpRemoteWriteSource.parseListenAddress("host:")).getMessage.contains("host:"))
   }
 
   test("--web.telemetry-path relocates the metrics endpoint; host binding works") {
     val port = 19321
-    val r = HttpRemoteWriteSource.receiver(port, "/write", validate = true,
-      host = "127.0.0.1", telemetryPath = "/tele/metrics")
+    val r = HttpRemoteWriteSource.receiver(HttpRemoteWriteSource.Config.from(flags(
+      s"--web.listen-address=127.0.0.1:$port", "--web.telemetry-path", "/tele/metrics")))
     try {
       def get(path: String): Int = {
         val c = new java.net.URL(s"http://127.0.0.1:$port$path")
@@ -44,5 +46,42 @@ class AppFlagsSpec extends AnyFunSuite {
       // the default path is NOT registered when relocated
       assert(get("/metrics") == 404)
     } finally HttpRemoteWriteSource.shutdown(port)
+  }
+
+  test("--name=value reads like --name value; the value may hold '='") {
+    // the README's reference column spells flags with '='
+    val eq = HttpRemoteWriteSource.Config.from(flags(
+      "--web.listen-address=:9301", "--web.write-path=/w", "--web.handler-threads=8"))
+    val sp = HttpRemoteWriteSource.Config.from(flags(
+      "--web.listen-address", ":9301", "--web.write-path", "/w", "--web.handler-threads", "8"))
+    assert(eq == sp)
+    assert(eq.port == 9301 && eq.host == "" && eq.path == "/w" && eq.handlerThreads == 8)
+    assert(App.serializerOf(flags("--pulsar.serializer=avro-json-compat=/s.json")) ==
+      "avro-json-compat=/s.json")
+    // the first of a repeated flag wins, as it did before the '=' form
+    assert(flags("--topic", "a", "--topic=b").str("topic", "metrics") == "a")
+    // a flag without a value, or a bare word, is a usage error
+    assert(intercept[Flags.UsageError](flags("--topic")).getMessage.contains("--topic"))
+    assert(intercept[Flags.UsageError](flags("metrics")).getMessage.contains("metrics"))
+  }
+
+  test("a flag no config reads is rejected, naming it, before anything starts") {
+    // spark is never touched: the commands reject before they bind or start
+    val p = intercept[Flags.UsageError](App.produce(null,
+      flags("--web.listen-port", "19322", "--web.listn-port", "19323")))
+    assert(p.getMessage.contains("--web.listn-port") && !p.getMessage.contains("--web.listen-port"),
+      p.getMessage)
+    val c = intercept[Flags.UsageError](App.consume(null,
+      flags("--readers", "1", "--topic", "t", "--batch-sise", "10")))
+    assert(c.getMessage.contains("--batch-sise"), c.getMessage)
+    // a source option is not a CLI flag
+    assert(intercept[Flags.UsageError](App.produce(null, flags("--validate", "false")))
+      .getMessage.contains("--validate"))
+    assert(intercept[Flags.UsageError](App.consume(null,
+      flags("--readers", "1", "--maxRecordsPerTrigger", "5")))
+      .getMessage.contains("--maxRecordsPerTrigger"))
+    // consume-only flags are unknown to produce, as in the reference
+    assert(intercept[Flags.UsageError](App.produce(null, flags("--batch-size", "5")))
+      .getMessage.contains("--batch-size"))
   }
 }

@@ -29,6 +29,11 @@ class BrokerCursorSpec extends AnyFunSuite {
     p.flush(); p.close()
   }
 
+  /** A file-topic stream; one partition per batch unless `readers` says more. */
+  private def fileStream(dir: String, subscription: String, readers: Int = 1): BrokerStream =
+    new BrokerStream(BrokerSource.Config.from(Flags("topic" -> "t", "topic-dir" -> dir,
+      "pulsar.subscription" -> subscription, "readers" -> readers.toString)))
+
   private def readAll(r: PartitionReader[InternalRow]): Seq[(String, String)] = {
     val out = mutable.Buffer.empty[(String, String)]
     while (r.next()) {
@@ -42,7 +47,7 @@ class BrokerCursorSpec extends AnyFunSuite {
   test("file topic: driver plans name ranges; executors read the payload bytes") {
     val dir = tmpDir()
     produce(dir, 5)
-    val stream = new BrokerStream(topic = "t", dir = dir, subscription = "cursor-spec-1")
+    val stream = fileStream(dir, "cursor-spec-1")
     val end = stream.latestOffset().asInstanceOf[BrokerOffset].seq
     assert(end == 5)
     val parts = stream.planInputPartitions(BrokerOffset(0), BrokerOffset(end))
@@ -70,8 +75,7 @@ class BrokerCursorSpec extends AnyFunSuite {
     val p = new FileTopic.Factory(dir).create(0L)
     (0 until 20).foreach(i => p.sendAsync(s"k${i % 5}", s"m-$i".getBytes("UTF-8")))
     p.flush(); p.close()
-    val stream = new BrokerStream(topic = "t", dir = dir,
-      subscription = "cursor-spec-readers", readers = 3)
+    val stream = fileStream(dir, "cursor-spec-readers", readers = 3)
     val end = stream.latestOffset().asInstanceOf[BrokerOffset].seq
     val parts = stream.planInputPartitions(BrokerOffset(0), BrokerOffset(end))
     assert(parts.length > 1 && parts.length <= 3, s"${parts.length} partitions")
@@ -104,8 +108,7 @@ class BrokerCursorSpec extends AnyFunSuite {
     java.nio.file.Files.move(
       java.nio.file.Paths.get(dir).resolve(legacy),
       java.nio.file.Paths.get(dir).resolve(legacyName))
-    val stream = new BrokerStream(topic = "t", dir = dir,
-      subscription = "cursor-spec-legacy", readers = 3)
+    val stream = fileStream(dir, "cursor-spec-legacy", readers = 3)
     val end = stream.latestOffset().asInstanceOf[BrokerOffset].seq
     val parts = stream.planInputPartitions(BrokerOffset(0), BrokerOffset(end))
     // splitting would have to guess the legacy message's key and could
@@ -125,7 +128,7 @@ class BrokerCursorSpec extends AnyFunSuite {
     val dir = tmpDir()
     produce(dir, 12) // 12 distinct keys
     val df = spark.readStream.format("graft.sources.BrokerSourceProvider")
-      .option("dir", dir).option("subscription", "cursor-spec-stream")
+      .option("topic-dir", dir).option("pulsar.subscription", "cursor-spec-stream")
       .option("readers", "3").load()
       .select(org.apache.spark.sql.functions.col("key"),
         org.apache.spark.sql.functions.spark_partition_id().as("pid"))
@@ -161,7 +164,7 @@ class BrokerCursorSpec extends AnyFunSuite {
 
   private def cursorOver(fake: FakeConsumer): BrokerSource.PulsarCursor =
     new BrokerSource.PulsarCursor(
-      PulsarSink.Config(url = "pulsar://fake:6650"), "sub") {
+      PulsarSink.Config.from(Flags("pulsar.url" -> "pulsar://fake:6650")), "sub") {
       override protected def newConsumer(): AnyRef = fake
     }
 
@@ -248,8 +251,7 @@ class BrokerCursorSpec extends AnyFunSuite {
     // incarnation 1 committed [0,3) and crashed with [3,5) in the WAL;
     // incarnation 2's first call is the replay's planInputPartitions —
     // before any latestOffset/poll
-    val stream = new BrokerStream(topic = "t", dir = dir,
-      subscription = "cursor-spec-replay")
+    val stream = fileStream(dir, "cursor-spec-replay")
     val parts = stream.planInputPartitions(BrokerOffset(3), BrokerOffset(5))
     assert(parts.length == 1)
     val rows = readAll(stream.createReaderFactory().createReader(parts.head))

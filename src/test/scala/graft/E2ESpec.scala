@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.Poll.await
 import graft.functions.PromKernel
 import graft.model.Model.Sample
 import graft.operators.PromPipeline
@@ -25,12 +26,6 @@ class E2ESpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
-
-  private def await(cond: => Boolean, timeoutMs: Long = 30000L): Unit = {
-    val t0 = System.currentTimeMillis()
-    while (!cond && System.currentTimeMillis() - t0 < timeoutMs) Thread.sleep(50)
-    assert(cond, s"condition not met within ${timeoutMs}ms")
-  }
 
   private def writeRequestBody(series: (Map[String, String], Seq[(Double, Long)])*): Array[Byte] = {
     val req = PromKernel.PbWriteRequest(series.map { case (labels, samples) =>
@@ -63,7 +58,7 @@ class E2ESpec extends AnyFunSuite {
     val port = 19201
     InMemoryBroker.clear("t1")
     val src = spark.readStream.format("graft.sources.HttpRemoteWriteProvider")
-      .option("port", port.toString).load()
+      .option("web.listen-port", port.toString).load()
 
     val out = Metrics.observeReceived(PromPipeline.produce(src, "json"))
 
@@ -71,8 +66,8 @@ class E2ESpec extends AnyFunSuite {
       .foreach(KeyedSink.writer(new InMemoryBroker.Factory("t1")))
       .outputMode("append").start()
     try {
-      // wait for the receiver to come up (posts may repeat until the bind
-      // succeeds, so downstream assertions tolerate duplicates)
+      // wait for the receiver to come up: failed posts repeat until the
+      // bind succeeds, the accepted one is sent once
       await({ try post(s"http://localhost:$port/write",
         writeRequestBody((Map("__name__" -> "node_cpu_seconds_total",
           "instance" -> "instance0", "__replica__" -> "a"), Seq((0.5, 10001L)))),
@@ -89,6 +84,7 @@ class E2ESpec extends AnyFunSuite {
       await(InMemoryBroker.topic("t1").size >= 2)
       Thread.sleep(500) // allow any in-flight micro-batch to land
       val msgs = InMemoryBroker.drain("t1")
+      assert(msgs.size == 2, msgs.map(m => new String(m.payload, "UTF-8")))
       assert(msgs.map(_.key).distinct.size == 1, "replica labels must not split the key")
       val payloads = msgs.map(m => new String(m.payload, "UTF-8"))
       assert(payloads.forall(_.contains("\"tenant_id\":\"my-org-id\"")), payloads.head)
@@ -120,7 +116,7 @@ class E2ESpec extends AnyFunSuite {
 
     // produce: HTTP receiver -> pipeline -> broker
     val src = spark.readStream.format("graft.sources.HttpRemoteWriteProvider")
-      .option("port", port.toString).load()
+      .option("web.listen-port", port.toString).load()
     val produceQ = PromPipeline.produce(src, "json")
       .writeStream.foreach(KeyedSink.writer(new InMemoryBroker.Factory(topic)))
       .outputMode("append")
@@ -129,7 +125,7 @@ class E2ESpec extends AnyFunSuite {
 
     // consume: broker source -> deserialize (poison-skip) -> batcher -> HTTP sink
     val client = new RemoteWriteSink.HttpClient(
-      s"http://localhost:${server.getAddress.getPort}/api/v1/write")
+      s"http://localhost:${server.getAddress.getPort}/api/v1/write", 30000L)
     val broker = spark.readStream.format("graft.sources.BrokerSourceProvider")
       .option("topic", topic).load()
     val samples = PromPipeline.deserialize(
@@ -212,7 +208,7 @@ class E2ESpec extends AnyFunSuite {
         throw new RuntimeException("broker down")
     }
     r.setWriters(Seq(
-      new Writers.TopicWriter("pulsar-a", new InMemoryBroker.Factory("mw-ok")), failing))
+      new Writers.TopicWriter("pulsar-a", new InMemoryBroker.Factory("mw-ok")), failing), 30000L)
     try {
       val body = writeRequestBody(
         (Map("__name__" -> "up", "instance" -> "i0"), Seq((1.0, 10001L))))
@@ -231,7 +227,7 @@ class E2ESpec extends AnyFunSuite {
       assert(post(s"http://localhost:$port/write", "junk".getBytes) == 400)
       // all writers healthy -> 200
       r.setWriters(Seq(
-        new Writers.TopicWriter("pulsar-a", new InMemoryBroker.Factory("mw-ok"))))
+        new Writers.TopicWriter("pulsar-a", new InMemoryBroker.Factory("mw-ok"))), 30000L)
       assert(post(s"http://localhost:$port/write", body) == 200)
       assert(InMemoryBroker.drain("mw-ok").size == 1)
     } finally {
@@ -265,7 +261,7 @@ class E2ESpec extends AnyFunSuite {
     def runOnce(sub: String): Seq[String] = {
       val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val q = spark.readStream.format("graft.sources.BrokerSourceProvider")
-        .option("topic", "subtest").option("dir", dir).option("subscription", sub).load()
+        .option("topic", "subtest").option("topic-dir", dir).option("pulsar.subscription", sub).load()
         .writeStream
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
           df.collect().foreach(r => got.add(new String(r.getAs[Array[Byte]]("payload"), "UTF-8")))
@@ -286,7 +282,7 @@ class E2ESpec extends AnyFunSuite {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val received = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     def startQuery() = spark.readStream.format("graft.sources.BrokerSourceProvider")
-      .option("topic", "ckpt").option("dir", dir).load()
+      .option("topic", "ckpt").option("topic-dir", dir).load()
       .writeStream.option("checkpointLocation", ckpt)
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         df.collect().foreach(r => received.add(new String(r.getAs[Array[Byte]]("payload"), "UTF-8")))
@@ -332,7 +328,7 @@ class E2ESpec extends AnyFunSuite {
         TenantBatcher.Batch(t, it.map(RemoteWriteSink.entry).toSeq, "size")
       }
       val client = new RemoteWriteSink.HttpClient(
-        s"http://localhost:${server.getAddress.getPort}/api/v1/write")
+        s"http://localhost:${server.getAddress.getPort}/api/v1/write", 30000L)
       val (sent, failed) = batches.collect().toIterator
         .foldLeft((0L, 0L)) { case ((s0, f0), b) =>
           val (s1, f1) = RemoteWriteSink.deliver(client)(Iterator(b)); (s0 + s1, f0 + f1)

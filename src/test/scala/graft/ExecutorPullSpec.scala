@@ -8,8 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{BrokerOffset, BrokerStream, ExecutorPull, ExecutorPullPartition}
-import graft.streaming.PulsarSink
+import graft.sources.{BrokerOffset, BrokerSource, BrokerStream, ExecutorPull, ExecutorPullPartition}
 
 /** Executor-pull consume mode: per-executor KeyShared consumers over sticky
   * hash ranges, epoch offsets, ack-on-next-epoch. The consumer seam injects
@@ -36,14 +35,33 @@ class ExecutorPullSpec extends AnyFunSuite {
     def close(): Unit = closed = true
   }
 
-  private val cfg = PulsarSink.Config(url = "pulsar://fake:6650", topic = "t")
+  /** An executor-pull config over the fake broker, built from the consume
+    * flags: subscription "ep-spec", one reader, 5 ms polls unless `flags`
+    * say otherwise.
+    */
+  private def conf(flags: (String, String)*): BrokerSource.Config =
+    BrokerSource.Config.from(Flags((Seq("pulsar.url" -> "pulsar://fake:6650",
+      "topic" -> "t", "pulsar.subscription" -> "ep-spec",
+      "pulsar.executor-consumers" -> "true", "readers" -> "1",
+      "pollTimeoutMs" -> "5") ++ flags): _*))
 
-  /** Install fakes (one per slot) and reset the registry. */
+  private val cfg = conf()
+
+  /** Install fakes (one per slot) and reset the registry. A task of an
+    * earlier test's stopped query can still be running (stop() does not
+    * wait for the tasks it kills); pulling after the install, it would build
+    * its own entry from these fakes and drain them, so wait for it first.
+    */
   private def withFakes[A](n: Int)(body: IndexedSeq[FakeConsumer] => A): A = {
+    org.apache.spark.sql.SparkSession.getDefaultSession.foreach { s =>
+      val deadline = System.currentTimeMillis() + 10000L // bounded: never fails
+      while (s.sparkContext.statusTracker.getExecutorInfos.exists(_.numRunningTasks > 0) &&
+             System.currentTimeMillis() < deadline) Thread.sleep(20)
+    }
     val fakes = IndexedSeq.fill(n)(new FakeConsumer)
     ExecutorPull.reset()
     val old = ExecutorPull.consumerFactory
-    ExecutorPull.consumerFactory = (_, _, slot, _, _, _) => fakes(slot)
+    ExecutorPull.consumerFactory = (_, slot) => fakes(slot)
     try body(fakes)
     finally { ExecutorPull.consumerFactory = old; ExecutorPull.reset() }
   }
@@ -59,9 +77,8 @@ class ExecutorPullSpec extends AnyFunSuite {
   }
 
   private def stream(readers: Int, maxRecords: Long = 0L) =
-    new BrokerStream(topic = "t", maxRecords = maxRecords,
-      subscription = "ep-spec", pulsar = Some(cfg), readers = readers,
-      executorPull = true, pollTimeoutMs = 5L)
+    new BrokerStream(conf("readers" -> readers.toString,
+      "maxRecordsPerTrigger" -> maxRecords.toString))
 
   test("epoch batches pull per range; acks ride the next epoch") {
     withFakes(2) { fakes =>
@@ -101,7 +118,7 @@ class ExecutorPullSpec extends AnyFunSuite {
     withFakes(1) { fakes =>
       fakes(0).pending += msg(0)
       fakes(0).pending += msg(1)
-      val p = ExecutorPullPartition(cfg, "ep-spec", 0, 1, 0L, 5L, epoch = 1L)
+      val p = ExecutorPullPartition(cfg, 0, epoch = 1L)
       val st = stream(readers = 1)
       val factory = st.createReaderFactory()
       assert(readAll(factory.createReader(p)) == Seq("k0", "k1"))
@@ -128,7 +145,7 @@ class ExecutorPullSpec extends AnyFunSuite {
       (0 until 5).foreach(i => fakes(0).pending += msg(i))
       val st = stream(readers = 1, maxRecords = 2L)
       val factory = st.createReaderFactory()
-      val p1 = ExecutorPullPartition(cfg, "ep-spec", 0, 1, 2L, 5L, epoch = 1L)
+      val p1 = ExecutorPullPartition(conf("maxRecordsPerTrigger" -> "2"), 0, epoch = 1L)
       assert(readAll(factory.createReader(p1)) == Seq("k0", "k1"))
       val p2 = p1.copy(epoch = 2L)
       assert(readAll(factory.createReader(p2)) == Seq("k2", "k3"))
@@ -140,7 +157,7 @@ class ExecutorPullSpec extends AnyFunSuite {
     withFakes(1) { fakes =>
       (0 until 3).foreach(i => fakes(0).pending += msg(i))
       val factory = stream(readers = 1, maxRecords = 2L).createReaderFactory()
-      val p1 = ExecutorPullPartition(cfg, "ep-spec", 0, 1, 2L, 5L, epoch = 1L)
+      val p1 = ExecutorPullPartition(conf("maxRecordsPerTrigger" -> "2"), 0, epoch = 1L)
       assert(readAll(factory.createReader(p1)) == Seq("k0", "k1"))
       // same-epoch rerun with the buffer already at the cap: receiving
       // would dequeue k2 past the budget — never served, never acked, and
@@ -162,7 +179,7 @@ class ExecutorPullSpec extends AnyFunSuite {
       fakes(0).pending += msg(0)
       fakes(0).pending += msg(1)
       val factory = stream(readers = 1).createReaderFactory()
-      val p5 = ExecutorPullPartition(cfg, "ep-spec", 0, 1, 0L, 5L, epoch = 5L)
+      val p5 = ExecutorPullPartition(cfg, 0, epoch = 5L)
       // the replayed batch serves the redeliveries (at-least-once: content
       // equivalence, not byte-identical batch replay — see ExecutorPull doc)
       assert(readAll(factory.createReader(p5)) == Seq("k0", "k1"))
@@ -193,13 +210,13 @@ class ExecutorPullSpec extends AnyFunSuite {
     ExecutorPull.reset()
     val old = ExecutorPull.consumerFactory
     val seen = mutable.Buffer.empty[(Int, Int, Boolean, Long)]
-    ExecutorPull.consumerFactory = (_, _, slot, readers, sticky, ackMs) => {
-      seen += ((slot, readers, sticky, ackMs)); new FakeConsumer
+    ExecutorPull.consumerFactory = (c, slot) => {
+      seen += ((slot, c.readers, c.stickyRanges, c.ackTimeoutMs)); new FakeConsumer
     }
     try {
-      val st = new BrokerStream(topic = "t", subscription = "ep-spec-opts",
-        pulsar = Some(cfg), readers = 2, executorPull = true,
-        pollTimeoutMs = 5L, stickyRanges = true, ackTimeoutMs = 30000L)
+      val st = new BrokerStream(conf("pulsar.subscription" -> "ep-spec-opts",
+        "readers" -> "2", "pulsar.sticky-ranges" -> "true",
+        "pulsar.ack-timeout-ms" -> "30000"))
       val factory = st.createReaderFactory()
       st.planInputPartitions(BrokerOffset(0), BrokerOffset(1))
         .foreach(p => readAll(factory.createReader(p)))
@@ -220,8 +237,8 @@ class ExecutorPullSpec extends AnyFunSuite {
       (0 until 6).foreach(i => fakes(0).pending += msg(i))
       def runOnce(): Long = {
         val df = spark.readStream.format("graft.sources.BrokerSourceProvider")
-          .option("topic", "t").option("subscription", "ep-spec-restart")
-          .option("pulsar.url", cfg.url)
+          .option("topic", "t").option("pulsar.subscription", "ep-spec-restart")
+          .option("pulsar.url", cfg.pulsar.url)
           .option("pulsar.executor-consumers", "true")
           .option("readers", "1").option("pollTimeoutMs", "5").load()
         // the memory sink cannot recover from a checkpoint; the file sink can
@@ -249,7 +266,7 @@ class ExecutorPullSpec extends AnyFunSuite {
     withFakes(1) { fakes =>
       fakes(0).pending += msg(0)
       val factory = stream(readers = 1).createReaderFactory()
-      val p2 = ExecutorPullPartition(cfg, "ep-spec", 0, 1, 0L, 5L, epoch = 2L)
+      val p2 = ExecutorPullPartition(cfg, 0, epoch = 2L)
       assert(readAll(factory.createReader(p2)) == Seq("k0"))
       // a zombie retry of epoch 1 (its sibling already succeeded) arrives
       // AFTER epoch 2's task froze its buffer. Spark discards its output —
@@ -272,15 +289,14 @@ class ExecutorPullSpec extends AnyFunSuite {
         .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
       fakes(0).pending += msg(0)
       fakes(0).pending += msg(1)
-      val c = cfg
+      val c = conf("pulsar.ack-timeout-ms" -> "0")
       // the pulling attempt fails AFTER filling epoch 1's buffer; its retry
       // may land on another executor (here: maxFailures=1, the job just
       // fails), so the buffer may never reach a committed batch. The
       // task-failure listener must drop it unacked + negative-ack.
       intercept[org.apache.spark.SparkException] {
         spark.sparkContext.parallelize(Seq(0), 1).foreach { _ =>
-          ExecutorPull.pull(c, "ep-spec", 0, 1, epoch = 1L, maxRecords = 0L,
-            pollTimeoutMs = 5L, stickyRanges = false, ackTimeoutMs = 0L)
+          ExecutorPull.pull(c, 0, epoch = 1L)
           throw new RuntimeException("downstream failure after pull")
         }
       }
@@ -289,7 +305,7 @@ class ExecutorPullSpec extends AnyFunSuite {
       // the next epoch's task finds nothing to ack — the dropped messages
       // are the broker's to redeliver (simulated), arriving as a fresh pull
       val factory = stream(readers = 1).createReaderFactory()
-      val p2 = ExecutorPullPartition(cfg, "ep-spec", 0, 1, 0L, 5L, epoch = 2L)
+      val p2 = ExecutorPullPartition(cfg, 0, epoch = 2L)
       assert(readAll(factory.createReader(p2)).isEmpty)
       assert(fakes(0).acked.isEmpty)
       fakes(0).pending += msg(0)
@@ -305,9 +321,8 @@ class ExecutorPullSpec extends AnyFunSuite {
       // the served-count accumulator needs an active session
       org.apache.spark.sql.SparkSession.builder()
         .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
-      val st = new BrokerStream(topic = "t", subscription = "ep-idle",
-        pulsar = Some(cfg), readers = 1, executorPull = true, pollTimeoutMs = 5L,
-        idleSuppressAfter = 2, idleProbeEvery = 1000)
+      val st = new BrokerStream(conf("pulsar.subscription" -> "ep-idle",
+        "pulsar.idle-suppress-after" -> "2", "pulsar.idle-probe-every" -> "1000"))
       val factory = st.createReaderFactory()
       val limit = org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable()
       var cur = BrokerOffset(0L)
@@ -343,9 +358,8 @@ class ExecutorPullSpec extends AnyFunSuite {
 
   test("idle suppression disabled (<= 0): every trigger advances an epoch") {
     withFakes(1) { _ =>
-      val st = new BrokerStream(topic = "t", subscription = "ep-idle-off",
-        pulsar = Some(cfg), readers = 1, executorPull = true, pollTimeoutMs = 5L,
-        idleSuppressAfter = 0)
+      val st = new BrokerStream(conf("pulsar.subscription" -> "ep-idle-off",
+        "pulsar.idle-suppress-after" -> "0"))
       val limit = org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable()
       var cur = 0L
       (1 to 6).foreach { i =>
@@ -366,8 +380,8 @@ class ExecutorPullSpec extends AnyFunSuite {
       // planning epochs (no-data triggers), yet a message arriving later
       // must still be served and acked by the RUNNING query
       val df = spark.readStream.format("graft.sources.BrokerSourceProvider")
-        .option("topic", "t").option("subscription", "ep-idle-live")
-        .option("pulsar.url", cfg.url)
+        .option("topic", "t").option("pulsar.subscription", "ep-idle-live")
+        .option("pulsar.url", cfg.pulsar.url)
         .option("pulsar.executor-consumers", "true")
         .option("readers", "1").option("pollTimeoutMs", "5")
         .option("pulsar.idle-suppress-after", "2")
@@ -421,8 +435,8 @@ class ExecutorPullSpec extends AnyFunSuite {
       val out = java.nio.file.Files.createTempDirectory("ep-drain-out").toString
       val ckpt = java.nio.file.Files.createTempDirectory("ep-drain-ckpt").toString
       val df = spark.readStream.format("graft.sources.BrokerSourceProvider")
-        .option("topic", "t").option("subscription", "ep-drain")
-        .option("pulsar.url", cfg.url)
+        .option("topic", "t").option("pulsar.subscription", "ep-drain")
+        .option("pulsar.url", cfg.pulsar.url)
         .option("pulsar.executor-consumers", "true")
         .option("readers", "1").option("pollTimeoutMs", "5")
         .option("maxRecordsPerTrigger", "2")
@@ -449,8 +463,7 @@ class ExecutorPullSpec extends AnyFunSuite {
       val ex = intercept[IllegalStateException](stream(readers = 1))
       assert(ex.getMessage.contains("subscription 'ep-spec'"))
       // a DIFFERENT subscription is an independent pipeline — allowed
-      val other = new BrokerStream(topic = "t", subscription = "ep-spec-2",
-        pulsar = Some(cfg), readers = 1, executorPull = true, pollTimeoutMs = 5L)
+      val other = new BrokerStream(conf("pulsar.subscription" -> "ep-spec-2"))
       other.stop()
       // once the first stops, a successor query may take the subscription
       first.stop()
@@ -467,8 +480,8 @@ class ExecutorPullSpec extends AnyFunSuite {
         .getOrCreate()
       (0 until 6).foreach(i => fakes(i % 2).pending += msg(i))
       val df = spark.readStream.format("graft.sources.BrokerSourceProvider")
-        .option("topic", "t").option("subscription", "ep-spec-live")
-        .option("pulsar.url", cfg.url)
+        .option("topic", "t").option("pulsar.subscription", "ep-spec-live")
+        .option("pulsar.url", cfg.pulsar.url)
         .option("pulsar.executor-consumers", "true")
         .option("readers", "2").option("pollTimeoutMs", "5").load()
       val q = df.writeStream.format("memory").queryName("ep_out")

@@ -26,7 +26,7 @@ class MetricsExpositionSpec extends AnyFunSuite {
     r.setWriters(Seq(new Writers.RequestWriter {
       override def name: String = "sink"
       override def write(t: String, s: Seq[Writers.WireSample]): Unit = ()
-    }))
+    }), 30000L)
     val tenant = "a\\b\"c\nd"
     val http = java.net.http.HttpClient.newHttpClient()
     try {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.Poll.await
 import graft.functions.PromKernel
 import graft.functions.PromKernel._
 import graft.operators.PromPipeline
@@ -20,12 +21,6 @@ class ProduceQuerySpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def await(cond: => Boolean, timeoutMs: Long = 30000L): Unit = {
-    val t0 = System.currentTimeMillis()
-    while (!cond && System.currentTimeMillis() - t0 < timeoutMs) Thread.sleep(50)
-    assert(cond, s"condition not met within ${timeoutMs}ms")
-  }
-
   private def freePort(): Int = { val s = new java.net.ServerSocket(0); try s.getLocalPort finally s.close() }
 
   private def body(series: (Seq[(String, String)], Seq[(Double, Long)])*): Array[Byte] =
@@ -36,7 +31,7 @@ class ProduceQuerySpec extends AnyFunSuite {
   private def start(port: Int, topic: String) = {
     InMemoryBroker.clear(topic)
     PromPipeline.produce(spark.readStream.format("graft.sources.HttpRemoteWriteProvider")
-        .option("port", port.toString).load(), "json")
+        .option("web.listen-port", port.toString).load(), "json")
       .writeStream.foreach(KeyedSink.writer(new InMemoryBroker.Factory(topic)))
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))

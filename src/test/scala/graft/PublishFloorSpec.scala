@@ -20,7 +20,8 @@ import graft.sources.HttpRemoteWriteSource.Received
 class PublishFloorSpec extends AnyFunSuite {
 
   private def rcv(walDir: String = "") =
-    new HttpRemoteWriteSource.Receiver(0, "/write", true, walDir = walDir)
+    new HttpRemoteWriteSource.Receiver(HttpRemoteWriteSource.Config.from(
+      Flags("web.listen-port" -> "0", "wal-dir" -> walDir)))
 
   test("latest holds at the smallest in-flight seqno, not the assign counter") {
     val r = rcv()

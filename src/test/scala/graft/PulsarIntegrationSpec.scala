@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.Poll.await
 import graft.functions.PromKernel
 import graft.operators.PromPipeline
 import graft.streaming._
@@ -38,12 +39,6 @@ class PulsarIntegrationSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def await(cond: => Boolean, timeoutMs: Long = 30000L): Unit = {
-    val t0 = System.currentTimeMillis()
-    while (!cond && System.currentTimeMillis() - t0 < timeoutMs) Thread.sleep(100)
-    assert(cond, s"condition not met within ${timeoutMs}ms")
-  }
-
   /** Random per-run topic like the reference's metrics-test-<rand>. */
   private def randTopic(): String =
     "metrics-test-" + java.lang.Long.toHexString(System.nanoTime())
@@ -73,7 +68,7 @@ class PulsarIntegrationSpec extends AnyFunSuite {
   test("real broker: produce path publishes keyed messages (TEST_PULSAR_URL)") {
     skipWithoutPulsar()
     val topic = randTopic()
-    val cfg = PulsarSink.Config(url = pulsarUrl, topic = topic)
+    val cfg = PulsarSink.Config.from(Flags("pulsar.url" -> pulsarUrl, "topic" -> topic))
     // subscribe BEFORE producing (the reference's consumer-first ordering):
     // without a subscription the broker retains nothing to verify against
     val cursor = new graft.sources.BrokerSource.PulsarCursor(cfg, s"it-$topic")
@@ -81,7 +76,7 @@ class PulsarIntegrationSpec extends AnyFunSuite {
 
     val port = 19231
     val src = spark.readStream.format("graft.sources.HttpRemoteWriteProvider")
-      .option("port", port.toString).load()
+      .option("web.listen-port", port.toString).load()
     val out = PromPipeline.produce(src, "json")
     val q = out.writeStream
       .foreach(KeyedSink.writer(new PulsarSink.Factory(cfg)))
@@ -119,7 +114,7 @@ class PulsarIntegrationSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val topic = randTopic()
-    val cfg = PulsarSink.Config(url = pulsarUrl, topic = topic)
+    val cfg = PulsarSink.Config.from(Flags("pulsar.url" -> pulsarUrl, "topic" -> topic))
 
     val received = new java.util.concurrent.ConcurrentLinkedQueue[(String, Array[Byte])]()
     val server = com.sun.net.httpserver.HttpServer.create(
@@ -134,7 +129,7 @@ class PulsarIntegrationSpec extends AnyFunSuite {
     // the executor-pull real-broker source (App consume's --pulsar.url +
     // --pulsar.executor-consumers=true surface)
     val broker = spark.readStream.format("graft.sources.BrokerSourceProvider")
-      .option("topic", topic).option("subscription", s"it-$topic")
+      .option("topic", topic).option("pulsar.subscription", s"it-$topic")
       .option("readers", "2")
       .option("pulsar.url", pulsarUrl)
       .option("pulsar.executor-consumers", "true")
@@ -144,7 +139,7 @@ class PulsarIntegrationSpec extends AnyFunSuite {
       .filter(col("sample").isNotNull).select("sample.*")
       .as[graft.model.Model.Sample]
     val client = new RemoteWriteSink.HttpClient(
-      s"http://localhost:${server.getAddress.getPort}/api/v1/write")
+      s"http://localhost:${server.getAddress.getPort}/api/v1/write", 30000L)
     val q = TenantBatcher(samples, TenantBatcher.Config(2, 500L))
       .writeStream
       .foreachBatch { (ds: org.apache.spark.sql.Dataset[TenantBatcher.Batch], _: Long) =>

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.BrokerSource
 import graft.streaming.PulsarSink
 
 /** Pulsar adapter config plumbing (pkg/app/pulsar.go:74-115) — parse,
@@ -10,7 +11,7 @@ import graft.streaming.PulsarSink
 class PulsarSinkSpec extends AnyFunSuite {
 
   test("flags parse with the reference's names and defaults") {
-    val cfg = PulsarSink.fromArgs(Array(
+    val flags = Flags.parse(Seq(
       "--pulsar.url", "pulsar+ssl://pulsar-proxy:6651",
       "--pulsar.topic", "metrics-tls",
       "--pulsar.connection-timeout", "5s",
@@ -20,7 +21,9 @@ class PulsarSinkSpec extends AnyFunSuite {
       "--pulsar.insecure-skip-tls-verify", "true",
       "--pulsar.max-connections-per-broker", "4",
       "--send-timeout", "12s",
-      "--pulsar.subscription", "my-shared-sub"))
+      "--pulsar.subscription", "my-shared-sub",
+      "--readers", "1"))
+    val cfg = PulsarSink.Config.from(flags)
     assert(cfg.url == "pulsar+ssl://pulsar-proxy:6651")
     assert(cfg.topic == "metrics-tls")
     assert(cfg.connectionTimeoutMs == 5000L)
@@ -31,14 +34,32 @@ class PulsarSinkSpec extends AnyFunSuite {
     assert(!cfg.insecureSkipTlsValidateHostname)
     assert(cfg.maxConnectionsPerBroker == 4)
     // --send-timeout -> OperationTimeout (produce.go:45-46,68);
-    // --pulsar.subscription -> shared subscription name (consume.go:42-43)
+    // --pulsar.subscription -> the consume source's shared subscription
+    // name (consume.go:42-43)
     assert(cfg.operationTimeoutMs == 12000L)
-    assert(cfg.subscription == "my-shared-sub")
+    assert(BrokerSource.Config.from(flags).subscription == "my-shared-sub")
     // defaults (pulsar.go:74-93, produce.go:46, consume.go:43)
-    val d = PulsarSink.fromArgs(Array.empty)
+    val d = PulsarSink.Config.from(Flags())
     assert(d.url == "" && d.topic == "metrics" && d.connectionTimeoutMs == 30000L
       && d.maxConnectionsPerBroker == 1 && !d.insecureSkipTlsVerify)
-    assert(d.operationTimeoutMs == 30000L && d.subscription == "pulsar-adapter")
+    assert(d.operationTimeoutMs == 30000L &&
+      BrokerSource.Config.from(Flags("readers" -> "1")).subscription == "pulsar-adapter")
+  }
+
+  test("--pulsar.topic and its alias --topic name one topic for produce and consume") {
+    // produce publishes to PulsarSink.Config.from(flags).topic (real broker
+    // or in-memory); consume subscribes to BrokerSource.Config.from(flags)'s
+    for ((args, topic) <- Seq(
+        Seq("--pulsar.topic", "pt") -> "pt",
+        Seq("--topic", "t") -> "t",
+        Seq("--topic", "t", "--pulsar.topic", "pt") -> "pt", // reference spelling wins
+        Seq("--pulsar.topic=pt", "--topic=t") -> "pt",
+        Seq.empty[String] -> "metrics")) {
+      val flags = Flags.parse(Seq("--pulsar.url", "pulsar://broker:6650", "--readers", "1") ++ args)
+      val produce = PulsarSink.Config.from(flags)
+      val consume = BrokerSource.Config.from(flags)
+      assert(produce.topic == topic && consume.topic == topic && consume.pulsar == produce, args)
+    }
   }
 
   test("duration literals: kingpin formats incl. compound and fractional") {
@@ -75,24 +96,25 @@ class PulsarSinkSpec extends AnyFunSuite {
 
   test("TLS auth requires both key and certificate (pulsar.go:97-103)") {
     val e = intercept[IllegalArgumentException] {
-      PulsarSink.fromArgs(Array("--pulsar.client-key", "/etc/key.pem"))
+      PulsarSink.Config.from(Flags.parse(Seq("--pulsar.client-key", "/etc/key.pem")))
     }
     assert(e.getMessage.contains("both pulsar.client-key and pulsar.client-certificate"))
     intercept[IllegalArgumentException] {
-      PulsarSink.Config(clientCertificate = "/etc/crt.pem").validated
+      PulsarSink.Config.from(Flags("pulsar.client-certificate" -> "/etc/crt.pem"))
     }
   }
 
   test("factory fails fast without pulsar-client on the classpath") {
-    val f = new PulsarSink.Factory(PulsarSink.Config(url = "pulsar://localhost:6650"))
+    val f = new PulsarSink.Factory(PulsarSink.Config.from(Flags("pulsar.url" -> "pulsar://localhost:6650")))
     val e = intercept[IllegalStateException](f.create(0L))
     assert(e.getMessage.contains("pulsar-client is not on the classpath"))
     assert(e.getCause.isInstanceOf[ClassNotFoundException])
   }
 
   test("consumer cursor fails fast without pulsar-client on the classpath") {
-    val c = graft.sources.BrokerSource.cursor("t-consumer-ff", null, "sub-ff",
-      Some(PulsarSink.Config(url = "pulsar://localhost:6650", topic = "t-consumer-ff")))
+    val c = BrokerSource.cursor(BrokerSource.Config.from(Flags(
+      "pulsar.url" -> "pulsar://localhost:6650", "topic" -> "t-consumer-ff",
+      "pulsar.subscription" -> "sub-ff", "readers" -> "1")))
     val e = intercept[IllegalStateException](c.poll())
     assert(e.getMessage.contains("pulsar-client is not on the classpath"), e.getMessage)
     assert(e.getMessage.contains("consume from"), e.getMessage)
@@ -101,7 +123,8 @@ class PulsarSinkSpec extends AnyFunSuite {
   test("broker source provider selects the pulsar consumer for pulsar.url") {
     val props = new java.util.HashMap[String, String]()
     props.put("topic", "pt")
-    props.put("subscription", "my-sub")
+    props.put("pulsar.subscription", "my-sub")
+    props.put("readers", "1")
     props.put("pulsar.url", "pulsar+ssl://proxy:6651")
     val t = new graft.sources.BrokerSourceProvider().getTable(null, Array.empty, props)
     assert(t.name() == "broker:pulsar:pulsar+ssl://proxy:6651/pt@my-sub", t.name())

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.Poll.await
 import graft.model.Model.Sample
 import graft.streaming.{Metrics, RemoteWriteSink, TenantBatcher}
 import graft.streaming.TenantBatcher.{Batch, Config}
@@ -26,15 +27,6 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     spark.table(name).as[Batch].collect().toSeq
-  }
-
-  /** Poll until `cond` holds (processing-time timeouts keep scheduling
-    * micro-batches, so processAllAvailable-style barriers don't apply).
-    */
-  private def await(cond: => Boolean, timeoutMs: Long = 30000L): Unit = {
-    val t0 = System.currentTimeMillis()
-    while (!cond && System.currentTimeMillis() - t0 < timeoutMs) Thread.sleep(50)
-    assert(cond, s"condition not met within ${timeoutMs}ms")
   }
 
   private def runScenario(name: String, cfg: Config)(
@@ -158,8 +150,9 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("receiver: max-connection-age stamps Connection: close (handlers.go:42-49)") {
-    val r = graft.sources.HttpRemoteWriteSource.receiver(19460, "/write", validate = false,
-      maxConnectionAgeMs = 50L)
+    val r = graft.sources.HttpRemoteWriteSource.receiver(
+      graft.sources.HttpRemoteWriteSource.Config.from(Flags("web.listen-port" -> "19460",
+        "validate" -> "false", "web.max-connection-age" -> "50ms")))
     try {
       val http = java.net.http.HttpClient.newHttpClient() // keep-alive reuse
       def send(): java.net.http.HttpResponse[Void] =
@@ -190,7 +183,9 @@ class StreamingSpec extends AnyFunSuite {
       assert(resp.body().contains("# heap used="), resp.body().take(200))
       assert(resp.body().contains("thread "), resp.body().take(200))
     } finally graft.sources.HttpRemoteWriteSource.shutdown(19461)
-    graft.sources.HttpRemoteWriteSource.receiver(19462, "/write", validate = false, pprof = false)
+    graft.sources.HttpRemoteWriteSource.receiver(
+      graft.sources.HttpRemoteWriteSource.Config.from(Flags("web.listen-port" -> "19462",
+        "validate" -> "false", "web.disable-pprof" -> "true")))
     try assert(get(19462).statusCode() == 404)
     finally graft.sources.HttpRemoteWriteSource.shutdown(19462)
   }
@@ -211,7 +206,7 @@ class StreamingSpec extends AnyFunSuite {
     server.start()
     try {
       val url = s"http://localhost:${server.getAddress.getPort}/write"
-      val client = new RemoteWriteSink.HttpClient(url)
+      val client = new RemoteWriteSink.HttpClient(url, 30000L)
       val body = RemoteWriteSink.encodeBody(Seq(sample("my-org-id")))
       assert(client.store("my-org-id", body) == RemoteWriteSink.Ok)
       assert(client.store("my-org-id", body).isInstanceOf[RemoteWriteSink.Recoverable])

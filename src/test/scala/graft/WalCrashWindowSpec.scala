@@ -172,7 +172,7 @@ class WalCrashWindowSpec extends AnyFunSuite {
       else new String(java.nio.file.Files.readAllBytes(floorFile), "UTF-8").trim
     withFailpoint("commit-after-floor") {
       val src = spark.readStream.format("graft.sources.HttpRemoteWriteProvider")
-        .option("port", port.toString).option("walDir", wal).load()
+        .option("web.listen-port", port.toString).option("wal-dir", wal).load()
       val q = src.writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", ckpt)
         .outputMode("append").start()
@@ -196,7 +196,7 @@ class WalCrashWindowSpec extends AnyFunSuite {
     HttpRemoteWriteSource.shutdown(port)
     HttpRemoteWriteSource.receiver(port, "/write", validate = true, walDir = wal)
     val q2 = spark.readStream.format("graft.sources.HttpRemoteWriteProvider")
-      .option("port", port.toString).option("walDir", wal).load()
+      .option("web.listen-port", port.toString).option("wal-dir", wal).load()
       .writeStream.format("parquet")
       .option("path", out).option("checkpointLocation", ckpt)
       .outputMode("append").start()
@@ -302,8 +302,9 @@ class WalCrashWindowSpec extends AnyFunSuite {
     sys.props("graft.wal.segMaxBytes") = "2048" // many rolls
     val threads = 8; val perThread = 40
     try {
-      val r = HttpRemoteWriteSource.receiver(port, "/write", validate = true,
-        walDir = wal, handlerThreads = threads)
+      val r = HttpRemoteWriteSource.receiver(HttpRemoteWriteSource.Config.from(Flags(
+        "web.listen-port" -> port.toString, "wal-dir" -> wal,
+        "web.handler-threads" -> threads.toString)))
       val acked = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
       val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
       val futs = (0 until threads).map { t =>
@@ -320,8 +321,9 @@ class WalCrashWindowSpec extends AnyFunSuite {
       pool.shutdown()
       assert(acked.size == threads * perThread, "every accept should 200")
       HttpRemoteWriteSource.shutdown(port) // crash before any commit
-      val r2 = HttpRemoteWriteSource.receiver(port, "/write", validate = true,
-        walDir = wal, handlerThreads = threads)
+      val r2 = HttpRemoteWriteSource.receiver(HttpRemoteWriteSource.Config.from(Flags(
+        "web.listen-port" -> port.toString, "wal-dir" -> wal,
+        "web.handler-threads" -> threads.toString)))
       try {
         val replayed = r2.range(0L, r2.latest).map(m => new String(m.body, "UTF-8"))
         assert(replayed.length == acked.size,

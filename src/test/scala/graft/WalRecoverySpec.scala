@@ -123,7 +123,7 @@ class WalRecoverySpec extends AnyFunSuite {
     HttpRemoteWriteSource.shutdown(port)
     // phase 2: a fresh query on the same walDir must deliver both payloads
     val src = spark.readStream.format("graft.sources.HttpRemoteWriteProvider")
-      .option("port", port.toString).option("walDir", wal).load()
+      .option("web.listen-port", port.toString).option("wal-dir", wal).load()
     val q = src.writeStream.format("memory").queryName("wal_deliver")
       .outputMode("append").start()
     try {
