@@ -390,6 +390,7 @@ class BrokerStream(cfg: BrokerSource.Config)
   // this (url, topic, subscription) — shared entries would interleave epochs
   import cfg._
   if (executorPull) ExecutorPull.register(cfg, this)
+  private lazy val run = ExecutorPull.newRun() // stop() closes it: later pulls serve nothing
   private lazy val cursor = BrokerSource.cursor(cfg)
   // executor-pull epoch bookkeeping: the last end offset this stream
   // planned or reported (offset values are epochs, not message counts)
@@ -524,7 +525,7 @@ class BrokerStream(cfg: BrokerSource.Config)
     // timeout bounds how long their unacked messages stay undeliverable.
     // Releasing the subscription ownership lets a successor query start.
     if (executorPull) {
-      ExecutorPull.close(cfg)
+      ExecutorPull.close(cfg, run)
       ExecutorPull.unregister(cfg, this)
     }
 
@@ -544,7 +545,7 @@ class BrokerStream(cfg: BrokerSource.Config)
       return Array.tabulate(readers) { i =>
         val loc = if (hosts.isEmpty) Array.empty[String]
                   else Array(hosts(i % hosts.length))
-        ExecutorPullPartition(cfg, i, e, loc, servedAcc)
+        ExecutorPullPartition(cfg, run, i, e, loc, servedAcc)
       }
     }
     cursor.ensureBase(s)
@@ -584,7 +585,7 @@ class BrokerStream(cfg: BrokerSource.Config)
       // executor-pull: the task pulls from its slot's cached consumer
       case p: ExecutorPullPartition => new PartitionReader[InternalRow] {
         private lazy val msgs = {
-          val m = ExecutorPull.pull(p.cfg, p.slot, p.epoch)
+          val m = ExecutorPull.pull(p.cfg, p.run, p.slot, p.epoch)
           // served-record count rides the accumulator back to the planner —
           // the idle-suppression signal (exactness not required: any change
           // means "not idle")
@@ -613,13 +614,13 @@ final case class BrokerInputPartition(msgs: Array[InMemoryBroker.Message])
 final case class FileRangePartition(dir: String, names: Array[String])
     extends InputPartition
 
-/** Executor-pull token: no payloads, no names — just which consumer slot
-  * to pull, under which epoch ([[ExecutorPull]] holds the consumers).
-  * `locations` is the consumer-cache affinity hint (host-level, best
-  * effort).
+/** Executor-pull token: no payloads, no names — just which run's stream
+  * planned it, which consumer slot to pull, under which epoch
+  * ([[ExecutorPull]] holds the consumers). `locations` is the
+  * consumer-cache affinity hint (host-level, best effort).
   */
-final case class ExecutorPullPartition(cfg: BrokerSource.Config, slot: Int,
-    epoch: Long, locations: Array[String] = Array.empty,
+final case class ExecutorPullPartition(cfg: BrokerSource.Config, run: Long,
+    slot: Int, epoch: Long, locations: Array[String] = Array.empty,
     served: org.apache.spark.util.LongAccumulator = null)
     extends InputPartition {
   override def preferredLocations(): Array[String] = locations

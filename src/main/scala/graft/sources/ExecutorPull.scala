@@ -131,6 +131,18 @@ object ExecutorPull {
 
   private val entries = new ConcurrentHashMap[(String, Int), Entry]()
 
+  /** Run tokens, one per [[BrokerStream]]: a task of a stopped query may pull
+    * after [[close]] (stop does not wait for the tasks it kills); its closed
+    * run serves nothing and builds no consumer. Runs of a subscription are
+    * sequential ([[register]]) and tokens grow, so one closed-through token
+    * per subscription marks them all; [[reset]] keeps it. Its lock orders
+    * close and entry creation. */
+  private val runs = new java.util.concurrent.atomic.AtomicLong()
+  private[graft] def newRun(): Long = runs.incrementAndGet()
+  private val closedThrough = new ConcurrentHashMap[String, java.lang.Long]()
+  private def stopped(prefix: String, run: Long): Boolean =
+    closedThrough.getOrDefault(prefix, 0L) >= run
+
   /** The one-RUNNING-query-per-(url, topic, subscription) rule, enforced:
     * concurrent queries sharing a subscription would interleave epochs on
     * shared entries (each stream's epoch counter would ack the other's
@@ -207,20 +219,22 @@ object ExecutorPull {
     found
   }
 
-  /** Close and drop every cached entry for this (url, topic, subscription)
-    * living in THIS JVM — the local half of query stop. */
-  private[graft] def close(cfg: BrokerSource.Config): Unit = {
-    val prefix = keyPrefix(cfg)
-    val it = entries.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == prefix) {
-        try PulsarSink.call(e.getValue.consumer, "close")
-        catch { case _: Exception => () }
-        it.remove()
+  /** Stop `run` in THIS JVM, then close and drop the subscription's cached
+    * entries living here — the local half of query stop. */
+  private[graft] def close(cfg: BrokerSource.Config, run: Long): Unit =
+    closedThrough.synchronized {
+      val prefix = keyPrefix(cfg)
+      closedThrough.put(prefix, run)
+      val it = entries.entrySet().iterator()
+      while (it.hasNext) {
+        val en = it.next()
+        if (en.getKey._1 == prefix) en.getValue.synchronized {
+          try PulsarSink.call(en.getValue.consumer, "close")
+          catch { case _: Exception => () }
+          it.remove()
+        }
       }
     }
-  }
 
   private[graft] def reset(): Unit = {
     entries.values.forEach { e =>
@@ -231,9 +245,13 @@ object ExecutorPull {
     owners.clear()
   }
 
-  private def entryFor(cfg: BrokerSource.Config, slot: Int): Entry =
-    entries.computeIfAbsent((keyPrefix(cfg), slot),
-      _ => new Entry(consumerFactory(cfg, slot)))
+  /** The slot's entry, built on first use; null, building nothing, once `run` is closed. */
+  private def entryFor(cfg: BrokerSource.Config, run: Long, slot: Int): Entry =
+    closedThrough.synchronized {
+      if (stopped(keyPrefix(cfg), run)) null
+      else entries.computeIfAbsent((keyPrefix(cfg), slot),
+        _ => new Entry(consumerFactory(cfg, slot)))
+    }
 
   /** KeyShared consumer for slot `slot` of `readers`: auto-split by
     * default, or pinned to slice `slot` of the [0, 65535] key-hash space
@@ -281,15 +299,16 @@ object ExecutorPull {
     *     buffers whose serving attempt completed successfully ride the
     *     next-epoch (or commit-time) ack.
     */
-  private[graft] def pull(cfg: BrokerSource.Config, slot: Int,
+  private[graft] def pull(cfg: BrokerSource.Config, run: Long, slot: Int,
       epoch: Long): Array[InMemoryBroker.Message] = {
     import PulsarSink.call
     import cfg.{maxRecords, pollTimeoutMs}
-    val e = entryFor(cfg, slot)
+    val e = entryFor(cfg, run, slot)
+    if (e == null) return Array.empty
     e.synchronized {
       e.lastUsedMs = System.currentTimeMillis()
-      if (epoch < e.pendingEpoch) {
-        // stale lower-epoch straggler: serve nothing, touch nothing
+      if (stopped(keyPrefix(cfg), run) || epoch < e.pendingEpoch) {
+        // a closed run's straggler, or a stale lower-epoch one: serve nothing, touch nothing
         Array.empty[InMemoryBroker.Message]
       } else {
         if (e.pendingEpoch >= 0 && e.pendingEpoch < epoch && e.pending.nonEmpty) {

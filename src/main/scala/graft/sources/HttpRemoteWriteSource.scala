@@ -317,7 +317,7 @@ object HttpRemoteWriteSource {
     // unchanged (append only returns once `synced` covers its record); the
     // fsync count drops from one-per-request to one-per-group, which is
     // what keeps WAL mode's ingest within a small factor of the in-memory
-    // mode under concurrent clients (tools/microbench.md "wal_ingest").
+    // mode under concurrent clients.
     private val synced = new java.util.concurrent.atomic.AtomicLong(-1L)
     private val syncLeader = new Object
 

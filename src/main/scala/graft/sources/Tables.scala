@@ -36,16 +36,16 @@ object Tables {
     * parse on the driver). Keyed by path so differing SF dirs (or
     * regenerated testdata under a NEW path) can never cross-talk; the
     * nanos-vs-NTZ encoding variance across generations is part of the
-    * schema itself, so both encodings memo correctly.
+    * schema itself, so both encodings memo correctly; one entry per path.
     */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), org.apache.spark.sql.types.StructType]
+  private[graft] val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    String, ((Long, Long), org.apache.spark.sql.types.StructType)]
 
   /** Cheap freshness token (ADVICE r21): parquet rewritten IN PLACE with a
     * different schema inside one long-lived JVM (regenerated testdata,
-    * test fixtures) must not read through a stale pinned schema — key the
-    * memo on (mtime, direct-child count) beside the path. One stat + one
-    * list per load call, still no footer parse.
+    * test fixtures) must not read through a stale pinned schema — the
+    * memo re-reads the footer when (mtime, direct-child count) changes.
+    * One stat + one list per load call, still no footer parse.
     */
   private def freshness(path: String): (Long, Long) = {
     val f = new java.io.File(path)
@@ -56,9 +56,9 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
     configure(spark)
     val path = s"$sfDir/$table.parquet"
-    val (mt, nf) = freshness(path)
-    val schema = schemaMemo.computeIfAbsent((path, mt, nf),
-      k => spark.read.parquet(k._1).schema)
+    val token = freshness(path)
+    val (_, schema) = schemaMemo.compute(path, (p, old) =>
+      if (old != null && old._1 == token) old else (token, spark.read.parquet(p).schema))
     val df = spark.read.schema(schema).parquet(path)
     nanoTsColumns.getOrElse(table, Nil).foldLeft(df) { (d, c) =>
       d.schema(c).dataType match {

@@ -35,8 +35,6 @@ object FileTopic {
     case _ => None
   }
 
-  final case class Stored(name: String, key: String, payload: Array[Byte])
-
   def encode(key: String, payload: Array[Byte]): Array[Byte] = {
     val kb = key.getBytes("UTF-8")
     val out = java.nio.ByteBuffer.allocate(4 + kb.length + payload.length)
@@ -72,14 +70,6 @@ object FileTopic {
       override def close(): Unit = ()
     }
   }
-
-  /** List messages with names strictly greater than `after` (exclusive),
-    * in name order. */
-  def listAfter(dir: String, after: String): Seq[Stored] =
-    listNamesAfter(dir, after).map { name =>
-      val (k, payload) = read(dir, name)
-      Stored(name, k, payload)
-    }
 
   /** Names only — no payload reads. This is what the driver-side cursor
     * buffers; executors call [[read]] per name to materialize payloads.

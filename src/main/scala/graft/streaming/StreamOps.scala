@@ -185,13 +185,6 @@ object StreamOps {
           t => coalesce(element_at(vmap, t), lit(0L))).as("ids"))
   }
 
-  /** Streaming language router (the streaming twin of d05): the shared
-    * TextQuality.withLangId narrow map — no state, no shuffle; a live
-    * ingest splits by `pred` exactly as the batch query would.
-    */
-  def langidRoute(df: DataFrame, textCol: String): DataFrame =
-    graft.operators.TextQuality.withLangId(df, textCol)
-
   /** Live language-ID confusion counts (the streaming twin of d120):
     * per event-time window, (true label, predicted) counts — the drift
     * monitor on the classifier a 100 TB pipeline routes by. Watermarked

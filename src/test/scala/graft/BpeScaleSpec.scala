@@ -112,6 +112,15 @@ class BpeScaleSpec extends AnyFunSuite {
         batchK = 8192, batchM = batchM, maxRounds = 200, targetMerges = target)
       val wall = (System.nanoTime() - t0) / 1e9
       val rounds = merges.map(_._1).max
+      // report before asserting, so a run that stops at the maxRounds cap
+      // (the 16k sf0.1 run in tools/bpe-scale.md) still prints its curve
+      info(f"target $target%5d: ${merges.size}%5d merges, $rounds%3d rounds, " +
+        f"batchM=$batchM%3d, ceil=${(target + batchM - 1) / batchM}%3d, " +
+        f"$wall%6.1f s, corpus ${totals.head._2} -> ${totals.last._2}")
+      // per-round acceptance profile (round:merges accepted): whether rounds
+      // track target/batchM or the corpus's disjoint-merge width
+      info(s"BPE_ACCEPT target=$target " + merges.groupBy(_._1).toSeq.sortBy(_._1)
+        .map { case (r, ms) => s"$r:${ms.size}" }.mkString(","))
       assert(merges.size >= target,
         s"target $target: only ${merges.size} merges before exhaustion")
       // near-full acceptance per round on the DEFAULT sf0.01 corpus: the
@@ -124,13 +133,11 @@ class BpeScaleSpec extends AnyFunSuite {
         assert(rounds <= (target + batchM - 1) / batchM + 8,
           s"target $target: $rounds rounds at batchM=$batchM — acceptance degraded")
       totals.map(_._2).sliding(2).foreach { case Seq(a, b) => assert(b < a) }
-      info(f"target $target%5d: ${merges.size}%5d merges, $rounds%3d rounds, " +
-        f"batchM=$batchM%3d, $wall%6.1f s, corpus ${totals.head._2} -> ${totals.last._2}")
-      (target, merges, totals, rounds, wall)
+      (target, merges, totals)
     }
     // encode parity at the LARGEST trained vocab: the d137 kernel over the
     // full merge list must reproduce the final trained symbol total
-    val (bigT, bigMerges, bigTotals, _, _) = curve.last
+    val (bigT, bigMerges, bigTotals) = curve.last
     val mergeArr = array(bigMerges.map(m => lit(m._3)): _*)
     val t0 = System.nanoTime()
     val total = graft.sources.Tables.load(spark, dir, "documents")
@@ -138,9 +145,10 @@ class BpeScaleSpec extends AnyFunSuite {
         .cast("long").as("n"))
       .agg(sum(col("n"))).collect()(0).getLong(0)
     val encWall = (System.nanoTime() - t0) / 1e9
+    info(f"$bigT-merge corpus encode: $encWall%.2f s, total $total, " +
+      s"trained ${bigTotals.last._2}")
     assert(total == bigTotals.last._2,
       s"kernel encode total $total != trained final total ${bigTotals.last._2}")
-    info(f"$bigT-merge corpus encode: $encWall%.2f s")
   }
 
   test("wordpiece lexicon prunes at 1k+ pieces and the kernel encodes losslessly against it") {

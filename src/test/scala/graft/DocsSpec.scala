@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     non-green row of the round);
   *   - SURVEY.md §8 and README.md state the inventory size (the judge
   *     audits SURVEY as the blueprint; both said "126" for two rounds
-  *     after the count hit 133).
+  *     after the count hit 133);
+  *   - every class the run recipes name still exists (deleted mains kept
+  *     their `runMain` recipes in four docs).
   */
 class DocsSpec extends AnyFunSuite {
 
@@ -29,5 +31,21 @@ class DocsSpec extends AnyFunSuite {
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("README.md")), "UTF-8")
     assert(readme.contains(s"($n queries"),
       s"README.md must say '($n queries, all matching ...'")
+  }
+
+  test("every graft class named in README, SURVEY, tools/*.md and the verify skill exists") {
+    val tools = new java.io.File("tools").listFiles().map(_.getPath).filter(_.endsWith(".md"))
+    val docs = Seq("README.md", "SURVEY.md", ".claude/skills/verify/SKILL.md") ++ tools
+    val Name = """\bgraft(?:\.[a-z]\w*)*\.[A-Z]\w*""".r
+    val cited = docs.flatMap { d =>
+      val text = new String(
+        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(d)), "UTF-8")
+      Name.findAllIn(text).map(_ -> d)
+    }.distinct
+    assert(cited.map(_._1).contains("graft.App"), s"no class citations found in $docs")
+    val missing = cited.filter { case (n, _) =>
+      scala.util.Try(Class.forName(n, false, getClass.getClassLoader)).isFailure
+    }
+    assert(missing.isEmpty, s"docs name classes that do not exist: ${missing.mkString(", ")}")
   }
 }

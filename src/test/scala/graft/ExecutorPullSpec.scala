@@ -49,15 +49,10 @@ class ExecutorPullSpec extends AnyFunSuite {
 
   /** Install fakes (one per slot) and reset the registry. A task of an
     * earlier test's stopped query can still be running (stop() does not
-    * wait for the tasks it kills); pulling after the install, it would build
-    * its own entry from these fakes and drain them, so wait for it first.
+    * wait for the tasks it kills); its run is stopped, so it pulls nothing
+    * from these fakes.
     */
   private def withFakes[A](n: Int)(body: IndexedSeq[FakeConsumer] => A): A = {
-    org.apache.spark.sql.SparkSession.getDefaultSession.foreach { s =>
-      val deadline = System.currentTimeMillis() + 10000L // bounded: never fails
-      while (s.sparkContext.statusTracker.getExecutorInfos.exists(_.numRunningTasks > 0) &&
-             System.currentTimeMillis() < deadline) Thread.sleep(20)
-    }
     val fakes = IndexedSeq.fill(n)(new FakeConsumer)
     ExecutorPull.reset()
     val old = ExecutorPull.consumerFactory
@@ -65,6 +60,10 @@ class ExecutorPullSpec extends AnyFunSuite {
     try body(fakes)
     finally { ExecutorPull.consumerFactory = old; ExecutorPull.reset() }
   }
+
+  /** Slot 0's pull token at `epoch`, under a fresh (live) run. */
+  private def part(c: BrokerSource.Config, epoch: Long) =
+    ExecutorPullPartition(c, ExecutorPull.newRun(), 0, epoch)
 
   private def msg(n: Int, key: String = null) =
     new FakeMsg(if (key == null) s"k$n" else key, Array[Byte](n.toByte), new FakeMessageId(n))
@@ -118,7 +117,7 @@ class ExecutorPullSpec extends AnyFunSuite {
     withFakes(1) { fakes =>
       fakes(0).pending += msg(0)
       fakes(0).pending += msg(1)
-      val p = ExecutorPullPartition(cfg, 0, epoch = 1L)
+      val p = part(cfg, epoch = 1L)
       val st = stream(readers = 1)
       val factory = st.createReaderFactory()
       assert(readAll(factory.createReader(p)) == Seq("k0", "k1"))
@@ -145,7 +144,7 @@ class ExecutorPullSpec extends AnyFunSuite {
       (0 until 5).foreach(i => fakes(0).pending += msg(i))
       val st = stream(readers = 1, maxRecords = 2L)
       val factory = st.createReaderFactory()
-      val p1 = ExecutorPullPartition(conf("maxRecordsPerTrigger" -> "2"), 0, epoch = 1L)
+      val p1 = part(conf("maxRecordsPerTrigger" -> "2"), epoch = 1L)
       assert(readAll(factory.createReader(p1)) == Seq("k0", "k1"))
       val p2 = p1.copy(epoch = 2L)
       assert(readAll(factory.createReader(p2)) == Seq("k2", "k3"))
@@ -157,7 +156,7 @@ class ExecutorPullSpec extends AnyFunSuite {
     withFakes(1) { fakes =>
       (0 until 3).foreach(i => fakes(0).pending += msg(i))
       val factory = stream(readers = 1, maxRecords = 2L).createReaderFactory()
-      val p1 = ExecutorPullPartition(conf("maxRecordsPerTrigger" -> "2"), 0, epoch = 1L)
+      val p1 = part(conf("maxRecordsPerTrigger" -> "2"), epoch = 1L)
       assert(readAll(factory.createReader(p1)) == Seq("k0", "k1"))
       // same-epoch rerun with the buffer already at the cap: receiving
       // would dequeue k2 past the budget — never served, never acked, and
@@ -179,7 +178,7 @@ class ExecutorPullSpec extends AnyFunSuite {
       fakes(0).pending += msg(0)
       fakes(0).pending += msg(1)
       val factory = stream(readers = 1).createReaderFactory()
-      val p5 = ExecutorPullPartition(cfg, 0, epoch = 5L)
+      val p5 = part(cfg, epoch = 5L)
       // the replayed batch serves the redeliveries (at-least-once: content
       // equivalence, not byte-identical batch replay — see ExecutorPull doc)
       assert(readAll(factory.createReader(p5)) == Seq("k0", "k1"))
@@ -203,6 +202,42 @@ class ExecutorPullSpec extends AnyFunSuite {
       assert(readAll(st.createReaderFactory().createReader(parts.head)) == Seq("k0"))
       st.stop()
       assert(fakes(0).closed, "stop() must close the cached consumer in this JVM")
+    }
+  }
+
+  test("a pull after stop() builds no consumer and takes nothing; a successor run still pulls") {
+    withFakes(2) { fakes =>
+      val built = mutable.Buffer.empty[Int]
+      val fake = ExecutorPull.consumerFactory
+      ExecutorPull.consumerFactory = (c, slot) => { built += slot; fake(c, slot) }
+      fakes(0).pending += msg(0)
+      fakes(1).pending += msg(1)
+      val st = stream(readers = 2)
+      val factory = st.createReaderFactory()
+      val parts = st.planInputPartitions(BrokerOffset(0), BrokerOffset(1))
+      // slot 0 pulled before the stop; slot 1's task had not started
+      assert(readAll(factory.createReader(parts(0))) == Seq("k0"))
+      st.stop()
+      fakes(0).pending += msg(2)
+      // tasks of the stopped query still running (stop() does not wait for
+      // the tasks it kills): slot 0 at the next epoch, slot 1 at this one
+      val late = st.planInputPartitions(BrokerOffset(1), BrokerOffset(2))
+      assert(readAll(factory.createReader(late(0))).isEmpty)
+      assert(readAll(factory.createReader(parts(1))).isEmpty)
+      assert(built.toSeq == Seq(0), s"a consumer was built after stop: slots $built")
+      assert(fakes(0).pending.map(_.id.n).toSeq == Seq(2), "k2 must remain queued")
+      assert(fakes(1).pending.map(_.id.n).toSeq == Seq(1), "k1 must remain queued")
+      // a successor query on the subscription is a new run: it pulls what
+      // the stopped run left queued...
+      val next = stream(readers = 2)
+      val nextFactory = next.createReaderFactory()
+      assert(next.planInputPartitions(BrokerOffset(0), BrokerOffset(1)).toSeq
+        .map(p => readAll(nextFactory.createReader(p))) == Seq(Seq("k2"), Seq("k1")))
+      // ...and a straggler of the stopped run cannot drain the successor's entry
+      fakes(0).pending += msg(3)
+      assert(readAll(factory.createReader(late(0))).isEmpty)
+      assert(fakes(0).pending.map(_.id.n).toSeq == Seq(3), "k3 must remain queued")
+      next.stop()
     }
   }
 
@@ -266,7 +301,7 @@ class ExecutorPullSpec extends AnyFunSuite {
     withFakes(1) { fakes =>
       fakes(0).pending += msg(0)
       val factory = stream(readers = 1).createReaderFactory()
-      val p2 = ExecutorPullPartition(cfg, 0, epoch = 2L)
+      val p2 = part(cfg, epoch = 2L)
       assert(readAll(factory.createReader(p2)) == Seq("k0"))
       // a zombie retry of epoch 1 (its sibling already succeeded) arrives
       // AFTER epoch 2's task froze its buffer. Spark discards its output —
@@ -294,9 +329,10 @@ class ExecutorPullSpec extends AnyFunSuite {
       // may land on another executor (here: maxFailures=1, the job just
       // fails), so the buffer may never reach a committed batch. The
       // task-failure listener must drop it unacked + negative-ack.
+      val run = ExecutorPull.newRun()
       intercept[org.apache.spark.SparkException] {
         spark.sparkContext.parallelize(Seq(0), 1).foreach { _ =>
-          ExecutorPull.pull(c, 0, epoch = 1L)
+          ExecutorPull.pull(c, run, 0, epoch = 1L)
           throw new RuntimeException("downstream failure after pull")
         }
       }
@@ -305,7 +341,7 @@ class ExecutorPullSpec extends AnyFunSuite {
       // the next epoch's task finds nothing to ack — the dropped messages
       // are the broker's to redeliver (simulated), arriving as a fresh pull
       val factory = stream(readers = 1).createReaderFactory()
-      val p2 = ExecutorPullPartition(cfg, 0, epoch = 2L)
+      val p2 = part(cfg, epoch = 2L)
       assert(readAll(factory.createReader(p2)).isEmpty)
       assert(fakes(0).acked.isEmpty)
       fakes(0).pending += msg(0)

@@ -66,6 +66,21 @@ class StorageSpec extends AnyFunSuite {
     }
   }
 
+  test("a table rewritten in place reads its new schema and keeps one memo entry") {
+    val sf = Files.createTempDirectory("graft-memo").toString
+    val path = s"$sf/t.parquet"
+    // each rewrite changes the schema and the file count, so the freshness
+    // token moves even where the directory mtime has coarse resolution
+    val before = Tables.schemaMemo.size
+    for (n <- 1 to 3) {
+      spark.range(0, n, 1, n).selectExpr((1 to n).map(i => s"id AS c$i"): _*)
+        .write.mode("overwrite").parquet(path)
+      assert(Tables.load(spark, sf, "t").columns.toSeq == (1 to n).map(i => s"c$i"))
+      assert(Tables.schemaMemo.size == before + 1,
+        s"rewrite $n left ${Tables.schemaMemo.size - before} memo entries")
+    }
+  }
+
   test("bucketed tables co-partition the join: no Exchange in the plan") {
     // the session (and so the warehouse dir) may be inherited from an
     // earlier suite: clear both catalog entries and orphan table dirs
