@@ -100,27 +100,14 @@ object App {
     val serializer = serializerOf(flags)
     val replicaLabels = flags.str("replica-labels", graft.model.Model.DefaultReplicaLabel)
       .split(",").toSeq
-    // multi-writer mode (produce.go:82-98 buildWriters + :155-181): N comma-
-    // separated topic dirs become N concurrent writers; the HTTP response is
-    // synchronous — 200 iff all writers took the request, 500 naming failures
-    val topicDirs = flags.str("topic-dirs", "")
     // destination precedence: a real Pulsar broker (--pulsar.url, TLS/auth
-    // flags per pkg/app/pulsar.go:74-93) > file topic > in-memory topic
+    // flags per pkg/app/pulsar.go:74-93) > file topics > file topic >
+    // in-memory topic. --topic-dirs a,b fans every message out to each dir
+    // (produce.go:82-98 buildWriters + :155-181) from the same query.
+    val topicDirs = flags.str("topic-dirs", "").split(",").toSeq.filter(_.nonEmpty)
     val topicDir = flags.str("topic-dir", "")
     flags.requireAllRead()
     val listen = s":${source.port}${source.path}"
-
-    if (topicDirs.nonEmpty) {
-      // no WAL here: the synchronous 200 already means the destination
-      // writes succeeded
-      val r = HttpRemoteWriteSource.receiver(source.copy(walDir = ""))
-      val ws = topicDirs.split(",").toSeq.map(d =>
-        new Writers.TopicWriter(d, new FileTopic.Factory(d), serializer, replicaLabels))
-      // produce.go:45-46: --send-timeout bounds the synchronous fan-out wait
-      r.setWriters(ws, pulsar.operationTimeoutMs)
-      println(s"[graft] produce (multi-writer): $listen -> ${ws.map(_.name).mkString(", ")} ($serializer)")
-      while (true) Thread.sleep(60000L)
-    }
 
     // the source reads its own settings (--wal-dir, --web.*) from the flags
     val src = spark.readStream.format("graft.sources.HttpRemoteWriteProvider")
@@ -128,6 +115,8 @@ object App {
     val out = Metrics.observeReceived(PromPipeline.produce(src, serializer, replicaLabels))
     val (factory, destination): (KeyedSink.ProducerFactory, String) =
       if (pulsar.url.nonEmpty) (new PulsarSink.Factory(pulsar), s"${pulsar.url} topic '${pulsar.topic}'")
+      else if (topicDirs.nonEmpty)
+        (KeyedSink.fanOut(topicDirs.map(new FileTopic.Factory(_))), s"topic dirs '${topicDirs.mkString("', '")}'")
       else if (topicDir.nonEmpty) (new FileTopic.Factory(topicDir), s"topic dir '$topicDir'")
       else (new InMemoryBroker.Factory(pulsar.topic), s"topic '${pulsar.topic}'")
     val q = out.writeStream

@@ -552,10 +552,19 @@ object PromKernel {
   def snappyCompress(data: Array[Byte]): Array[Byte] =
     org.xerial.snappy.Snappy.compress(data)
 
-  /** Returns null on corrupt input (produce.go:132-137 -> HTTP 400). */
+  /** The largest decompressed body taken: the block header declares its
+    * own length, and a 7-byte body can declare 2 GiB.
+    */
+  val MaxUncompressedBytes: Int = 64 << 20
+
+  /** Returns null on corrupt input (produce.go:132-137 -> HTTP 400), and on
+    * a declared length past [[MaxUncompressedBytes]], before allocating it.
+    */
   def snappyUncompress(data: Array[Byte]): Array[Byte] =
-    try org.xerial.snappy.Snappy.uncompress(data)
-    catch { case _: Exception => null }
+    try {
+      if (org.xerial.snappy.Snappy.uncompressedLength(data) > MaxUncompressedBytes) null
+      else org.xerial.snappy.Snappy.uncompress(data)
+    } catch { case _: Exception => null }
 
   // ---------------------------------------------------------------------------
   // prompb wire codec (hand-rolled proto3: WriteRequest/TimeSeries/Label/Sample)

@@ -20,9 +20,6 @@ object Model {
       labels: Map[String, String],
       tenantId: String)
 
-  /** The magic metric-name label (serializers.go:73). */
-  val MetricNameLabel = "__name__"
-
   /** Default replica label excluded from the series partition key
     * (pkg/app/produce.go:49-50).
     */

@@ -38,9 +38,7 @@ import graft.functions.PromKernel
   * buffered in JVM memory — a receiver crash between the 200 and the
   * micro-batch commit loses acknowledged payloads. Set `walDir` to get
   * WAL-then-200 (fsync'd segment log, replayed on restart — see [[Wal]] and
-  * WalRecoverySpec's kill-between-200-and-commit proof), or use the
-  * synchronous writer mode ([[Receiver.setWriters]]) where the 200 reflects
-  * the destination writes themselves.
+  * WalRecoverySpec's kill-between-200-and-commit proof).
   *
   * Delivery contract under WAL mode is AT-LEAST-ONCE (ADVICE r21): a
   * refused ack (e.g. transient directory-fsync failure) leaves the already-
@@ -69,6 +67,12 @@ object HttpRemoteWriteSource {
       basicAuthUser: String,
       orgIdHeader: String,
       receivedAtMs: Long)
+
+  /** The largest request body the receiver takes (413 past it), and so the
+    * largest field a [[Wal]] record replays: an acknowledged body must
+    * never be one that replay skips.
+    */
+  val MaxBodyBytes: Int = 64 << 20
 
   /** The receiver's settings, one per produce flag, each default written
     * once in [[Config.from]]. `maxConnectionAgeMs` > 0 reproduces
@@ -287,7 +291,7 @@ object HttpRemoteWriteSource {
           val len = in.readInt()
           if (len < 0) null
           else {
-            require(len <= (64 << 20), s"implausible field length $len")
+            require(len <= MaxBodyBytes, s"implausible field length $len")
             val b = new Array[Byte](len); in.readFully(b); b
           }
         }
@@ -610,9 +614,7 @@ object HttpRemoteWriteSource {
     * the two and proves delivery). With `walDir` EMPTY (the default), the
     * 200 only means buffered in JVM memory — a crash in that window loses
     * acknowledged payloads, a strictly weaker contract than the
-    * reference's; use the WAL (or the synchronous [[setWriters]] mode,
-    * which responds only after the writers themselves succeed) when the
-    * 200 must mean durable.
+    * reference's; use the WAL when the 200 must mean durable.
     */
   final class Receiver(private[HttpRemoteWriteSource] val config: Config) {
     import config._
@@ -657,20 +659,6 @@ object HttpRemoteWriteSource {
       seq.set(math.max(maxSeq + 1L, wal.committedFloor))
     }
 
-    /** Synchronous multi-writer mode (produce.go:155-181): when writers are
-      * configured, each request is decoded, fanned out to every writer
-      * concurrently, and the response reflects the outcome — 200 only when
-      * all writers succeeded, else 500 listing the failed writer names. The
-      * async enqueue path (streaming pipeline) is bypassed; the writers ARE
-      * the destinations, exactly the reference's architecture (it responds
-      * only after its pulsar flush too).
-      */
-    @volatile private var writers: Seq[graft.streaming.Writers.RequestWriter] = Nil
-    // --send-timeout (produce.go:45-46): the shared fan-out deadline
-    @volatile private var writerTimeoutMs: Long = _
-    def setWriters(ws: Seq[graft.streaming.Writers.RequestWriter],
-        timeoutMs: Long): Unit = { writerTimeoutMs = timeoutMs; writers = ws }
-
     /** handlers.go:42-49: stamp Connection: close when the (keep-alive)
       * connection — identified by the client socket address — is too old.
       */
@@ -697,12 +685,12 @@ object HttpRemoteWriteSource {
       server.createContext(path, (exchange: com.sun.net.httpserver.HttpExchange) => {
         try {
           ageGate(exchange)
+          // one byte past the bound is enough to refuse the body
           val body =
-            try exchange.getRequestBody.readAllBytes()
+            try exchange.getRequestBody.readNBytes(MaxBodyBytes + 1)
             catch { case _: Exception => respond(exchange, 500); null }
           if (body != null) {
-            val ws = writers
-            if (ws.nonEmpty) handleSync(exchange, body, ws)
+            if (body.length > MaxBodyBytes) respond(exchange, 413)
             else if (validate && !valid(body)) respond(exchange, 400)
             else respond(exchange,
               accept(Received(body, authUser(exchange), orgHeader(exchange),
@@ -739,9 +727,15 @@ object HttpRemoteWriteSource {
         })
       // handlerThreads sizes concurrent request handling — in WAL mode it
       // also bounds the group-commit batch (more concurrent appends share
-      // one force), so it is the single-ingress throughput knob
-      server.setExecutor(
-        java.util.concurrent.Executors.newFixedThreadPool(handlerThreads))
+      // one force), so it is the single-ingress throughput knob. Named by
+      // port, so a thread dump (or a spec) can tell which receiver they serve.
+      val prefix = s"graft-receiver-$boundPort-"
+      val handlers = new AtomicLong(0L)
+      server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(handlerThreads,
+        (task: Runnable) => {
+          val t = new Thread(task, prefix + handlers.incrementAndGet())
+          t.setDaemon(false); t
+        }))
       server.start()
     }
 
@@ -764,39 +758,8 @@ object HttpRemoteWriteSource {
     private def orgHeader(e: com.sun.net.httpserver.HttpExchange): String =
       e.getRequestHeaders.getFirst(graft.model.Model.TenantHeader)
 
-    /** produce.go:124-181 synchronous handler: decode (400 on bad body),
-      * count received per tenant, fan out to all writers concurrently, 200
-      * iff every writer succeeded, else 500 whose body names the failures
-      * ("Error sending samples to remote storages: a, b" — errSendingSamples
-      * produce.go:23 + the %ss formatting at :175).
-      */
-    private def handleSync(exchange: com.sun.net.httpserver.HttpExchange,
-        body: Array[Byte], ws: Seq[graft.streaming.Writers.RequestWriter]): Unit = {
-      val raw = PromKernel.snappyUncompress(body)
-      val req = if (raw == null) null else PromKernel.decodeWriteRequest(raw)
-      if (req == null) { respond(exchange, 400); return }
-      val tenant = {
-        val a = authUser(exchange)
-        if (a != null) a else { val o = orgHeader(exchange); if (o != null) o else "" }
-      }
-      val samples = graft.streaming.Writers.samplesOf(req)
-      graft.streaming.Metrics.add("received_samples_total", samples.size.toLong,
-        "tenant" -> tenant)
-      val failed = graft.streaming.Writers.fanOut(ws, tenant, samples, writerTimeoutMs)
-      if (failed.isEmpty) respond(exchange, 200)
-      else respondBody(exchange, 500,
-        s"Error sending samples to remote storages: ${failed.mkString(", ")}\n")
-    }
-
     private def respond(e: com.sun.net.httpserver.HttpExchange, code: Int): Unit =
       e.sendResponseHeaders(code, -1)
-
-    private def respondBody(e: com.sun.net.httpserver.HttpExchange,
-        code: Int, msg: String): Unit = {
-      val b = msg.getBytes("UTF-8")
-      e.sendResponseHeaders(code, b.length)
-      e.getResponseBody.write(b)
-    }
 
     /** The async accept path shared by the HTTP handler and direct-driving
       * specs: assign a seqno under the publish floor, make the record

@@ -28,6 +28,20 @@ object KeyedSink {
     def create(partitionId: Long): Producer
   }
 
+  /** Every message to every destination: the writer fan-out of
+    * produce.go:155-181 as the sink of the one produce query. A destination
+    * that throws fails the micro-batch, whose replay sends to all of them
+    * again (at-least-once, duplicates on the healthy ones).
+    */
+  def fanOut(factories: Seq[ProducerFactory]): ProducerFactory = new ProducerFactory {
+    override def create(partitionId: Long): Producer = new Producer {
+      private val ps = factories.map(_.create(partitionId))
+      override def sendAsync(key: String, payload: Array[Byte]): Unit = ps.foreach(_.sendAsync(key, payload))
+      override def flush(): Unit = ps.foreach(_.flush())
+      override def close(): Unit = ps.foreach(_.close())
+    }
+  }
+
   /** Rows: (key: String, payload: Binary). */
   def writer(factory: ProducerFactory): ForeachWriter[Row] = new ForeachWriter[Row] {
     @transient private var producer: Producer = _

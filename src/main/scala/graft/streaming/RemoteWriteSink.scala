@@ -106,7 +106,13 @@ object RemoteWriteSink {
     var sent = 0L
     var failed = 0L
     batches.foreach { b =>
-      client.store(b.tenantId, body(b.entries)) match {
+      val payload = body(b.entries)
+      val t0 = System.nanoTime()
+      val result = client.store(b.tenantId, payload)
+      // sent_batch_duration_seconds (metrics.go, observed at write.go:186-192)
+      Metrics.observeDuration("sent_batch_duration_seconds", (System.nanoTime() - t0) / 1e9,
+        "remote" -> client.remoteName, "tenant" -> b.tenantId)
+      result match {
         case Ok => sent += b.size
         case Recoverable(msg) =>
           // retryable_failed_writes (metrics.go:42-48): count the recoverable

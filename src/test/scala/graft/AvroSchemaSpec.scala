@@ -75,26 +75,6 @@ class AvroSchemaSpec extends AnyFunSuite {
     } finally java.nio.file.Files.deleteIfExists(schemaFile)
   }
 
-  test("sync TopicWriter honors avro-json-compat=<path> too") {
-    val schemaFile = java.nio.file.Files.createTempFile("graft-avro-w", ".avsc")
-    java.nio.file.Files.write(schemaFile,
-      """{"type":"record","name":"M","fields":[
-        |{"name":"name","type":"string"},
-        |{"name":"tenant_id","type":"string","default":"anon"}]}""".stripMargin.getBytes("UTF-8"))
-    try {
-      graft.streaming.InMemoryBroker.clear("avro-w")
-      val w = new graft.streaming.Writers.TopicWriter("w1",
-        new graft.streaming.InMemoryBroker.Factory("avro-w"), s"avro-json-compat=$schemaFile")
-      w.write("", Seq(graft.streaming.Writers.WireSample(
-        Map("__name__" -> "foo", "labelfoo" -> "bar"), 456.0, 0L)))
-      val msgs = graft.streaming.InMemoryBroker.drain("avro-w")
-      assert(msgs.size == 1)
-      assert(new String(msgs.head.payload, "UTF-8") == """{"name":"foo","tenant_id":"anon"}""")
-      intercept[IllegalArgumentException](new graft.streaming.Writers.TopicWriter("w2",
-        new graft.streaming.InMemoryBroker.Factory("avro-w"), "avro-json-compat=/nope.avsc"))
-    } finally java.nio.file.Files.deleteIfExists(schemaFile)
-  }
-
   test("invalid schemas rejected at plan time (goavro NewCodec parity)") {
     intercept[IllegalArgumentException](AvroJsonSchema.parse("""{"not json"""))
     intercept[IllegalArgumentException](AvroJsonSchema.parse(

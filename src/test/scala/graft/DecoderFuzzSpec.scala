@@ -126,6 +126,32 @@ class DecoderFuzzSpec extends AnyFunSuite {
     assert(!validWriteRequest(Array(0x0a, 0x04, 0x12, 0x02, 0x09, 0x00).map(_.toByte)))
   }
 
+  test("a body declaring 2 GiB decompressed gets 400 without the handler allocating it") {
+    // a 7-byte snappy block whose header declares 2,147,483,632 bytes
+    val bomb = Array(0xF0, 0xFF, 0xFF, 0xFF, 0x07, 0x00, 0x41).map(_.toByte)
+    assert(snappyUncompress(bomb) == null)
+    val port = { val s = new java.net.ServerSocket(0); try s.getLocalPort finally s.close() }
+    graft.sources.HttpRemoteWriteSource.receiver(graft.sources.HttpRemoteWriteSource.Config
+      .from(Flags()).copy(port = port, handlerThreads = 1))
+    val http = java.net.http.HttpClient.newHttpClient()
+    def post(b: Array[Byte]): Int =
+      http.send(java.net.http.HttpRequest.newBuilder(java.net.URI.create(s"http://127.0.0.1:$port/write"))
+        .timeout(java.time.Duration.ofSeconds(30))
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofByteArray(b)).build(),
+        java.net.http.HttpResponse.BodyHandlers.discarding()).statusCode()
+    try {
+      assert(post("junk".getBytes) == 400) // starts the one handler thread
+      val handler = Thread.getAllStackTraces.keySet.asScala
+        .find(_.getName.startsWith(s"graft-receiver-$port-")).get
+      val mx = java.lang.management.ManagementFactory.getThreadMXBean
+        .asInstanceOf[com.sun.management.ThreadMXBean]
+      val before = mx.getThreadAllocatedBytes(handler.getId)
+      assert(post(bomb) == 400)
+      val allocated = mx.getThreadAllocatedBytes(handler.getId) - before
+      assert(allocated < (1L << 20), s"the handler allocated $allocated bytes")
+    } finally graft.sources.HttpRemoteWriteSource.shutdown(port)
+  }
+
   test("what the receiver answers 200 to, the produce query decodes to the sync path's series") {
     val port = { val s = new java.net.ServerSocket(0); try s.getLocalPort finally s.close() }
     val r = graft.sources.HttpRemoteWriteSource.receiver(port, "/write", validate = true)

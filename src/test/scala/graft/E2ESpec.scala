@@ -36,11 +36,7 @@ class E2ESpec extends AnyFunSuite {
     PromKernel.snappyCompress(PromKernel.encodeWriteRequest(req))
   }
 
-  private def post(url: String, body: Array[Byte], basicUser: Option[String] = None): Int =
-    postFull(url, body, basicUser)._1
-
-  private def postFull(url: String, body: Array[Byte],
-      basicUser: Option[String] = None): (Int, String) = {
+  private def post(url: String, body: Array[Byte], basicUser: Option[String] = None): Int = {
     val http = java.net.http.HttpClient.newHttpClient()
     val b = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
       .POST(java.net.http.HttpRequest.BodyPublishers.ofByteArray(body))
@@ -48,8 +44,7 @@ class E2ESpec extends AnyFunSuite {
       b.header("Authorization", "Basic " +
         java.util.Base64.getEncoder.encodeToString(s"$u:pass".getBytes))
     }
-    val resp = http.send(b.build(), java.net.http.HttpResponse.BodyHandlers.ofString())
-    (resp.statusCode(), resp.body())
+    http.send(b.build(), java.net.http.HttpResponse.BodyHandlers.discarding()).statusCode()
   }
 
   test("produce path: remote_write POST -> pipeline -> keyed broker messages") {
@@ -194,61 +189,80 @@ class E2ESpec extends AnyFunSuite {
     finally graft.sources.HttpRemoteWriteSource.shutdown(port)
   }
 
-  test("multi-writer fan-out: failing writer -> 500 naming it, healthy writer still written") {
-    // produce.go:155-181: concurrent fan-out, per-writer error aggregation,
-    // 500 listing failed writer names; partial success still writes the
-    // healthy destinations
+  test("--topic-dirs: every sample lands in each dir; a throwing destination commits nothing") {
+    // produce.go:155-181's writer fan-out, served by the one produce query
     Metrics.reset()
-    val port = 19207
-    InMemoryBroker.clear("mw-ok")
-    val r = graft.sources.HttpRemoteWriteSource.receiver(port, "/write", validate = true)
-    val failing = new Writers.RequestWriter {
-      override def name: String = "pulsar-b"
-      override def write(t: String, s: Seq[Writers.WireSample]): Unit =
-        throw new RuntimeException("broker down")
+    val listener = new Metrics.Listener
+    spark.streams.addListener(listener)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-fanout")
+    val Seq(a, b, wal, ckpt) = Seq("a", "b", "wal", "ckpt").map(d => tmp.resolve(d).toString)
+    def freePort(): Int = { val ss = new java.net.ServerSocket(0); try ss.getLocalPort finally ss.close() }
+    val port = freePort()
+    val endpoint = com.sun.net.httpserver.HttpServer.create(new java.net.InetSocketAddress(0), 0)
+    val delivered = new java.util.concurrent.atomic.AtomicInteger()
+    endpoint.createContext("/api/v1/write", { ex =>
+      ex.getRequestBody.readAllBytes(); delivered.incrementAndGet()
+      ex.sendResponseHeaders(200, -1); ex.close()
+    })
+    endpoint.start()
+    val before = spark.streams.active.map(_.id).toSet
+    def run(cmd: (SparkSession, Flags) => Unit, args: String*): Thread = {
+      val t = new Thread(() => cmd(spark, Flags.parse(args)))
+      t.start(); t
     }
-    r.setWriters(Seq(
-      new Writers.TopicWriter("pulsar-a", new InMemoryBroker.Factory("mw-ok")), failing), 30000L)
+    val threads = Seq(
+      run(App.produce, "--web.listen-port", port.toString, "--topic-dirs", s"$a,$b", "--wal-dir", wal),
+      run(App.consume, "--topic", "fanout", "--topic-dir", a, "--batch-size", "1",
+        "--remote-write.url", s"http://127.0.0.1:${endpoint.getAddress.getPort}/api/v1/write"))
+    def messages(dir: String): Seq[(String, String)] =
+      FileTopic.listNamesAfter(dir, "").map { n =>
+        val (k, v) = FileTopic.read(dir, n); (k, new String(v, "UTF-8"))
+      }.sorted
     try {
       val body = writeRequestBody(
-        (Map("__name__" -> "up", "instance" -> "i0"), Seq((1.0, 10001L))))
-      val (code, respBody) = postFull(s"http://localhost:$port/write", body,
-        basicUser = Some("team-mw"))
-      assert(code == 500)
-      assert(respBody.contains("Error sending samples to remote storages: pulsar-b"), respBody)
-      // the healthy writer still took the request's samples
-      val msgs = InMemoryBroker.drain("mw-ok")
-      assert(msgs.size == 1)
-      assert(new String(msgs.head.payload, "UTF-8").contains("\"tenant_id\":\"team-mw\""))
-      assert(Metrics.get("sent_samples_total", "remote" -> "pulsar-a", "tenant" -> "team-mw") == 1L)
-      assert(Metrics.get("failed_samples_total", "remote" -> "pulsar-b", "tenant" -> "team-mw") == 1L)
-      assert(Metrics.get("received_samples_total", "tenant" -> "team-mw") == 1L)
-      // corrupt body still 400s in sync mode
-      assert(post(s"http://localhost:$port/write", "junk".getBytes) == 400)
-      // all writers healthy -> 200
-      r.setWriters(Seq(
-        new Writers.TopicWriter("pulsar-a", new InMemoryBroker.Factory("mw-ok"))), 30000L)
-      assert(post(s"http://localhost:$port/write", body) == 200)
-      assert(InMemoryBroker.drain("mw-ok").size == 1)
+        (Map("__name__" -> "up", "instance" -> "i0"), Seq((1.0, 10001L), (2.0, 10002L))),
+        (Map("__name__" -> "up", "instance" -> "i1"), Seq((3.0, 10003L))))
+      await({ try post(s"http://localhost:$port/write", body, basicUser = Some("team-mw")) == 200
+        catch { case _: java.io.IOException => false } }, 30000L)
+      await(messages(a).size == 3 && messages(b).size == 3)
+      assert(messages(a) == messages(b))
+      assert(messages(a).forall(_._2.contains("\"tenant_id\":\"team-mw\"")), messages(a))
+      await(delivered.get() == 3 && Metrics.get("received_samples_total") >= 3L)
+      // one produce and one consume trigger: each family renders in one label shape
+      val lines = Metrics.render().split("\n").toSeq
+      Seq("received_samples_total", "sent_samples_total", "failed_samples_total").foreach { f =>
+        val shapes = lines.filter(l => l.startsWith(f + "{") || l.startsWith(f + " "))
+          .map(l => "([a-zA-Z_]+)=\"".r.findAllMatchIn(l).map(_.group(1)).toList).distinct
+        assert(shapes.size == 1, s"$f renders as $shapes")
+      }
     } finally {
+      spark.streams.active.filterNot(q => before(q.id)).foreach(_.stop())
+      threads.foreach(_.join(30000L))
+      spark.streams.removeListener(listener)
+      endpoint.stop(0)
       graft.sources.HttpRemoteWriteSource.shutdown(port)
     }
-  }
 
-  test("fan-out waits one shared deadline, not one timeout per stuck writer") {
-    // Writers.scala fanOut: N stuck writers must cost the caller at most ONE
-    // timeout (shared deadline), not N sequential join timeouts
-    def slow(n: String) = new Writers.RequestWriter {
-      override def name: String = n
-      override def write(t: String, s: Seq[Writers.WireSample]): Unit =
-        Thread.sleep(5000L)
+    // a destination that throws fails the micro-batch: no offset commits,
+    // and the receiver keeps the request for a restarted query to replay
+    val port2 = freePort()
+    val r = graft.sources.HttpRemoteWriteSource.receiver(port2, "/write", validate = true)
+    r.accept(graft.sources.HttpRemoteWriteSource.Received(
+      writeRequestBody((Map("__name__" -> "up"), Seq((4.0, 10004L)))), null, "team-mw", 0L))
+    val q = PromPipeline.produce(spark.readStream.format("graft.sources.HttpRemoteWriteProvider")
+        .option("web.listen-port", port2.toString).load(), "json")
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreach(KeyedSink.writer(KeyedSink.fanOut(Seq(new FileTopic.Factory(a), new E2ESpec.Down))))
+      .outputMode("append").start()
+    try {
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination(30000L))
+      val commits = Option(new java.io.File(ckpt, "commits").list()).toSeq.flatten
+      assert(commits.isEmpty, commits)
+      assert(r.range(0L, r.latest).length == 1)
+    } finally {
+      q.stop()
+      graft.sources.HttpRemoteWriteSource.shutdown(port2)
     }
-    val t0 = System.nanoTime()
-    val failed = Writers.fanOut(Seq(slow("w1"), slow("w2"), slow("w3")), "t",
-      Seq(Writers.WireSample(Map("__name__" -> "up"), 1.0, 1L)), timeoutMs = 400L)
-    val elapsedMs = (System.nanoTime() - t0) / 1000000L
-    assert(failed == Seq("w1", "w2", "w3"), failed)
-    assert(elapsedMs < 1200L, s"three stuck writers must share one 400ms deadline, took ${elapsedMs}ms")
   }
 
   test("two subscriptions on one file topic each see every message once") {
@@ -343,5 +357,17 @@ class E2ESpec extends AnyFunSuite {
       assert(req.timeseries.forall(_.samples.size == 1), "one single-sample series per sample")
       assert(req.timeseries.forall(ts => ts.labels.map(_.name) == ts.labels.map(_.name).sorted))
     } finally server.stop(0)
+  }
+}
+
+object E2ESpec {
+  /** A destination whose every send throws. */
+  final class Down extends KeyedSink.ProducerFactory {
+    override def create(partitionId: Long): KeyedSink.Producer = new KeyedSink.Producer {
+      override def sendAsync(key: String, payload: Array[Byte]): Unit =
+        throw new java.io.IOException("destination down")
+      override def flush(): Unit = ()
+      override def close(): Unit = ()
+    }
   }
 }

@@ -8,7 +8,7 @@ import graft.functions.PromKernel
 import graft.functions.PromKernel._
 import graft.operators.PromPipeline
 import graft.sources.HttpRemoteWriteSource
-import graft.streaming.{InMemoryBroker, KeyedSink, Writers}
+import graft.streaming.{InMemoryBroker, KeyedSink}
 
 /** The produce query as `App.produce` runs it ([[PromPipeline.produce]]):
   * receiver -> streaming query -> keyed topic.
@@ -65,8 +65,8 @@ class ProduceQuerySpec extends AnyFunSuite {
       val first = msgs.find(m => new String(m.payload, "UTF-8").contains("\"value\":[1,")).get
       assert(new String(first.payload, "UTF-8") ==
         """{"value":[1,"1"],"metric":{"__name__":"up","job":"b"},"tenant_id":"team-d"}""")
-      // the sync writer path (Writers.samplesOf: `.toMap`) keys it the same
-      val m = Writers.samplesOf(decodeWriteRequest(snappyUncompress(body((dup, Seq((1.0, 1000L))))))).head.labels
+      // the key is the last-wins label map's series key
+      val m = Map("__name__" -> "up", "job" -> "b")
       assert(first.key == PromKernel.seriesKey(m.keys.toArray, m.keys.toArray.map(m), "team-d",
         Array("__replica__")))
       assert(msgs.exists(m => new String(m.payload, "UTF-8").contains("\"job\":\"c\"")))

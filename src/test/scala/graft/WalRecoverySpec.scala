@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -64,6 +66,27 @@ class WalRecoverySpec extends AnyFunSuite {
         "replayed payloads must match the acknowledged ones byte-for-byte")
       assert(after.map(_._1).toSeq == Seq("tenant-a", "tenant-b", null))
     } finally HttpRemoteWriteSource.shutdown(port)
+  }
+
+  test("a body past the bound gets 413 and no record; one at the bound replays whole") {
+    val port = { val s = new java.net.ServerSocket(0); try s.getLocalPort finally s.close() }
+    val wal = tmpDir("cap")
+    def segments = {
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(wal))
+      try s.iterator().asScala.count(_.getFileName.toString.endsWith(".wal")) finally s.close()
+    }
+    val r1 = HttpRemoteWriteSource.receiver(port, "/write", validate = false, walDir = wal)
+    try {
+      assert(post(port, new Array[Byte](HttpRemoteWriteSource.MaxBodyBytes + 1)) == 413)
+      assert(r1.latest == 0L && segments == 0)
+      assert(post(port, new Array[Byte](HttpRemoteWriteSource.MaxBodyBytes)) == 200)
+    } finally HttpRemoteWriteSource.shutdown(port)
+    val r2 = HttpRemoteWriteSource.receiver(port, "/write", validate = false, walDir = wal)
+    try assert(r2.range(0L, r2.latest).map(_.body.length).toSeq == Seq(HttpRemoteWriteSource.MaxBodyBytes))
+    finally {
+      HttpRemoteWriteSource.shutdown(port)
+      new java.io.File(wal).listFiles().foreach(_.delete()) // a 64 MiB segment
+    }
   }
 
   test("commit truncates segments; the committed floor keeps seqnos monotonic") {
