@@ -38,6 +38,12 @@ object App {
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // offset, commit and state files without forking readlink/chmod
+      .config(Map(LocalCheckpointFileManager.Setting))
+      // every micro-batch job broadcasts its task binary in chunks of this
+      // size, each allocated whole: the 4m default makes each a humongous
+      // G1 object, so more triggers a second raised peak RSS
+      .config("spark.broadcast.blockSize", "512k")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.streams.addListener(new Metrics.Listener)

@@ -87,15 +87,22 @@ object PromKernel {
     if (v < 10) sb.append('0')
     sb.append(v)
   }
+  /** Go's long year: a year before 0 gets a sign, then at least 4 digits. */
   private def pad4(sb: java.lang.StringBuilder, v: Int): Unit = {
-    if (v < 1000) sb.append(("000" + v).takeRight(4)) else sb.append(v)
+    if (v < 0) sb.append('-')
+    val a = math.abs(v)
+    if (a < 1000) sb.append(("000" + a).takeRight(4)) else sb.append(a)
   }
 
   /** Go `time.Parse(RFC3339)` then `model.TimeFromUnixNano` (serializers.go:55):
     * returns epoch ms, truncating sub-ms. Throws on malformed input (callers
-    * that need poison-skip catch and null out).
+    * that need poison-skip catch and null out), which includes a year that
+    * is not four unsigned digits: Go rejects it, though java.time reads
+    * `-0005` and `+10000`.
     */
   def parseRfc3339ToMs(s: String): Long = {
+    require(s.length > 4 && s.charAt(4) == '-' && s.take(4).forall(c => c >= '0' && c <= '9'),
+      s"not a four-digit year: $s")
     val odt = java.time.OffsetDateTime.parse(s)
     val inst = odt.toInstant
     inst.getEpochSecond * 1000L + inst.getNano / 1000000L
@@ -454,6 +461,8 @@ object PromKernel {
           case _ => p.nextToken(); p.skipChildren()
         }
       }
+      // Go's json.Unmarshal rejects anything after the value
+      require(p.nextToken() == null)
       p.close()
       ParsedSample(ms, v, keys.toArray, vals.toArray, tenant)
     } catch { case _: Exception => null }
@@ -484,6 +493,8 @@ object PromKernel {
           case _ => p.nextToken(); p.skipChildren()
         }
       }
+      // Go's json.Unmarshal rejects anything after the value
+      require(p.nextToken() == null)
       p.close()
       if (!keys.contains("__name__") && name.nonEmpty) { keys += "__name__"; vals += name }
       ParsedSample(ms, v, keys.toArray, vals.toArray, tenant)

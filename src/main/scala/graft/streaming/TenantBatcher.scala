@@ -33,12 +33,12 @@ import graft.operators.PromPipeline
   * MB and state update 862 -> about 620 ms per trigger with POSTs still
   * serial; the update time counts the sink's pull of each batch).
   *
-  * State commit: a trigger's commit (0.4-0.5 s there, with either state
-  * shape) mostly waits on creating and closing the delta and checksum files
-  * (35% of the batcher stage's wall time in a stack sample), a cost per
-  * file, not per byte. So another provider (RocksDB changelog,
-  * `transformWithState` list state) is not the lever, and the checkpoint
-  * file checksum stays on: it is a corruption check.
+  * State commit: each trigger writes a delta file (and Spark's checksum of
+  * it) per state partition, a cost per file, not per byte. On a local disk
+  * without libhadoop that cost was Hadoop forking `chmod` for each file it
+  * created and `readlink` for each rename. App checkpoints through
+  * [[LocalCheckpointFileManager]], which does neither (traced roundtrip_wal:
+  * state commit 388 -> 15 ms a trigger).
   *
   * Scale: state is O(active tenants x batchSize) entries, hash-partitioned
   * by tenant across executors by the shuffle — the same keying the
@@ -107,8 +107,9 @@ object TenantBatcher {
     } else if (buf.isEmpty) {
       state.remove()
     } else {
-      // deadline anchored at the FIRST sample of the pending batch
-      val anchor = if (prior.isEmpty) now else firstArrival
+      // deadline anchored at the FIRST sample of the pending batch: the
+      // prior anchor holds only while a prior entry is still buffered
+      val anchor = if (out.size * cfg.batchSize < prior.size) firstArrival else now
       state.update(BatchState(buf, anchor))
       val remaining = math.max(anchor + cfg.batchMaxDelayMs - now, 1L)
       state.setTimeoutDuration(remaining)

@@ -28,7 +28,7 @@ object PerSampleReference {
     val sb = new java.lang.StringBuilder(30)
     def pad2(v: Int): Unit = { if (v < 10) sb.append('0'); sb.append(v) }
     val y = odt.getYear
-    if (y < 1000) sb.append(("000" + y).takeRight(4)) else sb.append(y)
+    sb.append(if (y < 0) f"-${-y}%04d" else f"$y%04d") // Go: a sign before year 0
     sb.append('-'); pad2(odt.getMonthValue); sb.append('-'); pad2(odt.getDayOfMonth)
     sb.append('T'); pad2(odt.getHour); sb.append(':'); pad2(odt.getMinute)
     sb.append(':'); pad2(odt.getSecond)

@@ -82,6 +82,41 @@ class StreamingSpec extends AnyFunSuite {
     assert(t.count(_.reason == "deadline") == 1)
   }
 
+  test("a remainder left after size flushes takes its deadline from its own arrival") {
+    val delayMs = 3000L
+    val sent = new java.util.concurrent.ConcurrentLinkedQueue[(Batch, Long)]()
+    implicit val sampleEnc: org.apache.spark.sql.Encoder[Sample] =
+      org.apache.spark.sql.Encoders.product[Sample]
+    val ms = MemoryStream[Sample](spark)
+    val q = TenantBatcher(ms.toDS(), Config(batchSize = 2, batchMaxDelayMs = delayMs))
+      .writeStream
+      .foreachBatch { (ds: org.apache.spark.sql.Dataset[Batch], _: Long) =>
+        val at = System.currentTimeMillis()
+        ds.collect().foreach(b => sent.add((b, at)))
+      }
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
+      .start()
+    val secondAdd = try {
+      ms.addData(sample("t", ts = 1))
+      await(q.recentProgress.exists(_.numInputRows == 1))
+      Thread.sleep(delayMs / 2)
+      // the size flush takes sample 1 and sample 2: sample 3 is all that is
+      // left, so its deadline counts from now, not from sample 1
+      val at = System.currentTimeMillis()
+      ms.addData(sample("t", ts = 2), sample("t", ts = 3))
+      await(sent.size == 2, timeoutMs = 4 * delayMs)
+      at
+    } finally q.stop()
+    import scala.jdk.CollectionConverters._
+    val got = sent.asScala.toSeq
+    assert(got.map(b => (b._1.reason, b._1.entries.map(_.toSeq))) == Seq(
+      ("size", Seq(1L, 2L).map(ts => RemoteWriteSink.entry(sample("t", ts)).toSeq)),
+      ("deadline", Seq(RemoteWriteSink.entry(sample("t", 3L)).toSeq))), got.map(_._1.reason))
+    val flushedAt = got(1)._2
+    assert(flushedAt >= secondAdd + delayMs,
+      s"the remainder flushed ${flushedAt - secondAdd} ms after it arrived, under the $delayMs ms delay")
+  }
+
   // --- sink semantics (write.go:194-236) -----------------------------------
 
   private class ScriptedClient(results: RemoteWriteSink.StoreResult*) extends RemoteWriteSink.Client {
