@@ -38,11 +38,11 @@ object App {
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // offset, commit and state files without forking readlink/chmod
-      .config(Map(LocalCheckpointFileManager.Setting))
       // every micro-batch job broadcasts its task binary in chunks of this
       // size, each allocated whole: the 4m default makes each a humongous
-      // G1 object, so more triggers a second raised peak RSS
+      // G1 object, so more triggers a second raised peak RSS. A core
+      // setting of the SparkContext's conf, which `spark.conf.set`
+      // rejects, so it is made here, not by the commands
       .config("spark.broadcast.blockSize", "512k")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -113,6 +113,7 @@ object App {
     val topicDirs = flags.str("topic-dirs", "").split(",").toSeq.filter(_.nonEmpty)
     val topicDir = flags.str("topic-dir", "")
     flags.requireAllRead()
+    useLocalCheckpoints(spark)
     val listen = s":${source.port}${source.path}"
 
     // the source reads its own settings (--wal-dir, --web.*) from the flags
@@ -159,6 +160,7 @@ object App {
       case _ => 1
     }
     flags.requireAllRead()
+    useLocalCheckpoints(spark)
     // consume.go:40-41: --send-timeout bounds the remote_write POST (the
     // reference wires it to the remote client's Timeout, :99)
     val client = new RemoteWriteSink.HttpClient(url, source.pulsar.operationTimeoutMs)
@@ -185,6 +187,14 @@ object App {
     stopOnShutdown(q)
     println(s"[graft] consume: '${source.where}' -> $url (batch=${batcher.batchSize}, delay=${batcher.batchMaxDelayMs}ms)")
     q.awaitTermination()
+  }
+
+  /** Offset, commit and state files without forking readlink/chmod: a
+    * session setting, made by each command on the session it is given.
+    */
+  private def useLocalCheckpoints(spark: SparkSession): Unit = {
+    val (key, value) = LocalCheckpointFileManager.Setting
+    spark.conf.set(key, value)
   }
 
   /** SIGTERM/SIGINT: stop the streaming query FIRST, then begin normal JVM

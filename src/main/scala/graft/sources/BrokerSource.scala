@@ -42,12 +42,7 @@ import graft.streaming.InMemoryBroker
   * is same-JVM by construction (local test stand-in), and the real-broker
   * cursor receives on the driver because the pulsar-client consumer lives
   * there (parity with the reference's single-process consume loop,
-  * consume.go:80-94) — its documented ceiling is the driver NIC. Past that
-  * ceiling, `pulsar.executor-consumers=true` switches the real-broker path
-  * to [[ExecutorPull]]: per-executor cached KeyShared consumers (broker
-  * auto-split by default, sticky key-hash ranges opt-in), payloads never
-  * touching the driver (see that object's design notes for the
-  * at-least-once/replay trade).
+  * consume.go:80-94).
   */
 object BrokerSource {
   val schema: StructType = StructType(Seq(
@@ -163,11 +158,16 @@ object BrokerSource {
     * reference pkg/pulsar/pulsar.go:98-121 subscribe + :170-224 Receiver).
     * Offsets map to received messages in arrival order; `commit`
     * individually acknowledges the consumed messages (KeyShared forbids
-    * cumulative acks), so an uncommitted micro-batch leaves them unacked
-    * and the broker redelivers after the ack timeout — the reference's
+    * cumulative acks), so an uncommitted micro-batch leaves them unacked:
+    * the replay serves them from this cursor's buffer, and after a restart
+    * the broker redelivers them to the new consumer — the reference's
     * Nack/redelivery path. The cursor lives on the driver (offset
     * management polls there; readers receive materialized message ranges).
     * Fails fast with a clear error when the pulsar-client jar is absent.
+    * This is the only real-broker consume path: an executor-side consumer
+    * mode was removed on 2026-10-19 (it was never run against a broker, and
+    * consume is bounded by the per-tenant batcher, not by the bytes the
+    * driver receives).
     *
     * Restart safety: in-memory seqnos start at 0 per incarnation, but a
     * restored checkpoint carries the PREVIOUS incarnation's numbering.
@@ -269,37 +269,13 @@ object BrokerSource {
     * @param readers split each batch into up to this many partitions by key
     * hash — decode parallelizes across tasks, every key stays in one
     * partition in arrival order. Default: the session's default
-    * parallelism. In executor-pull mode this is the number of cached
-    * executor consumers (and, with sticky ranges, hash-range slices), and
-    * the default is 1.
-    * @param executorPull real-broker scale-out mode: offsets become epoch
-    * counters, partitions become [[ExecutorPullPartition]] pull tokens, and
-    * payloads are received and acked on executors ([[ExecutorPull]]).
-    * @param idleSuppressAfter executor-pull idle suppression: after this many
-    * consecutive triggers with zero records served (and nothing waiting),
-    * stop advancing epochs so an idle subscription stops burning a planning
-    * cycle + empty micro-batch per trigger (<= 0 disables; serving epochs
-    * always get their following ack epoch because a nonzero served count
-    * resets the idle counter). Same-JVM consumers are peeked each suppressed
-    * trigger, so in local mode a new message wakes the query on the next
-    * trigger; cluster executors are unreachable from the driver, so
-    * `idleProbeEvery` bounds their wake latency.
-    * @param idleProbeEvery while suppressed, still plan a probe epoch every
-    * this many triggers — the cluster-side bound on wake latency (probe cost:
-    * one empty micro-batch).
+    * parallelism.
     * @param maxRecords option `maxRecordsPerTrigger`, not a CLI flag: rate
     * limit per micro-batch (0 = unbounded) — the `maxOffsetsPerTrigger`
-    * analog. In executor-pull mode the cap applies per reader (the driver
-    * cannot count what it never sees).
-    * @param pollTimeoutMs option `pollTimeoutMs`, not a CLI flag: how long an
-    * executor-pull task waits for its first message.
+    * analog.
     */
   final case class Config(pulsar: graft.streaming.PulsarSink.Config,
-      dir: String, subscription: String, readers: Int, executorPull: Boolean,
-      stickyRanges: Boolean, ackTimeoutMs: Long, idleSuppressAfter: Int,
-      idleProbeEvery: Int, maxRecords: Long, pollTimeoutMs: Long) {
-    require(!executorPull || realBroker,
-      "pulsar.executor-consumers requires pulsar.url (a real broker to subscribe to)")
+      dir: String, subscription: String, readers: Int, maxRecords: Long) {
     def topic: String = pulsar.topic
     def realBroker: Boolean = pulsar.url.nonEmpty
     /** The topic this config reads: broker url and topic, file dir, or name. */
@@ -308,21 +284,13 @@ object BrokerSource {
   }
 
   object Config {
-    def from(f: Flags): Config = {
-      val executorPull = f.bool("pulsar.executor-consumers", false)
+    def from(f: Flags): Config =
       Config(graft.streaming.PulsarSink.Config.from(f),
         dir = f.str("topic-dir", ""),
         subscription = f.str("pulsar.subscription", "pulsar-adapter"),
-        readers = f.int("readers", if (executorPull) 1
-          else org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism),
-        executorPull = executorPull,
-        stickyRanges = f.bool("pulsar.sticky-ranges", false),
-        ackTimeoutMs = f.long("pulsar.ack-timeout-ms", 60000L),
-        idleSuppressAfter = f.int("pulsar.idle-suppress-after", 3),
-        idleProbeEvery = f.int("pulsar.idle-probe-every", 10),
-        maxRecords = f.option("maxRecordsPerTrigger").fold(0L)(_.toLong),
-        pollTimeoutMs = f.option("pollTimeoutMs").fold(100L)(_.toLong))
-    }
+        readers = f.int("readers",
+          org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism),
+        maxRecords = f.option("maxRecordsPerTrigger").fold(0L)(_.toLong))
   }
 
   private val cursors = new ConcurrentHashMap[String, Cursor]()
@@ -386,15 +354,8 @@ final case class BrokerOffset(seq: Long) extends Offset {
 /** The consume query's stream over one [[BrokerSource.Config]]. */
 class BrokerStream(cfg: BrokerSource.Config)
   extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
-  // fail fast at query start if another RUNNING pull-mode query already owns
-  // this (url, topic, subscription) — shared entries would interleave epochs
   import cfg._
-  if (executorPull) ExecutorPull.register(cfg, this)
-  private lazy val run = ExecutorPull.newRun() // stop() closes it: later pulls serve nothing
   private lazy val cursor = BrokerSource.cursor(cfg)
-  // executor-pull epoch bookkeeping: the last end offset this stream
-  // planned or reported (offset values are epochs, not message counts)
-  @volatile private var lastEnd = 0L
   // Trigger.AvailableNow pins the end offset at the first planned batch;
   // batches then step toward it under the read limit and the query stops
   // there. The pin happens INSIDE latestOffset(start, _) — after
@@ -402,28 +363,9 @@ class BrokerStream(cfg: BrokerSource.Config)
   // target in pre-rebase numbering.
   @volatile private var availableNowRequested = false
   @volatile private var availableNowTarget: java.lang.Long = null
-  // idle-suppression state (driver-side, executor-pull mode only): records
-  // served are counted by the pull tasks through an accumulator (the only
-  // channel from executor-side consumers back to the planner); epochs stop
-  // advancing after idleSuppressAfter consecutive no-data triggers
-  private lazy val servedAcc: org.apache.spark.util.LongAccumulator =
-    try org.apache.spark.sql.SparkSession.active.sparkContext
-      .longAccumulator(s"graft.executor-pull.served.$subscription")
-    catch { case _: Exception => null }
-  private var lastServedSeen = 0L
-  private var idleTriggers = 0
-  private var suppressedTriggers = 0
-  // AvailableNow drain state (see latestOffset): consecutive planning
-  // calls with neither a served-count change nor a waiting message, and
-  // whether the drain concluded — while draining, reportLatestOffset
-  // advertises one epoch beyond lastEnd so the engine keeps constructing
-  // batches
-  private var drainNoProgress = 0
-  @volatile private var drainDone = false
 
   override def initialOffset(): Offset = BrokerOffset(0L)
-  override def latestOffset(): Offset =
-    if (executorPull) BrokerOffset(lastEnd) else BrokerOffset(cursor.poll())
+  override def latestOffset(): Offset = BrokerOffset(cursor.poll())
 
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowRequested = true
@@ -433,59 +375,6 @@ class BrokerStream(cfg: BrokerSource.Config)
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[BrokerOffset].seq
-    if (executorPull) {
-      // epochs, not counts: every trigger advances one epoch so the next
-      // batch's tasks pull fresh data AND ack the previous epoch's —
-      // the trigger interval is therefore also the ack-latency bound.
-      // Trigger.AvailableNow is drain-until-empty: KeyShared push has no
-      // offset to pin "available now" against, so the faithful one-shot
-      // semantic is to keep planning epochs while records flow and stop
-      // only once the backlog is provably gone — a backlog larger than one
-      // epoch's pull (e.g. under maxRecords) still drains completely.
-      // "Flow" is two signals: a same-JVM consumer peek (exact in local
-      // mode; stages what it finds for the next epoch's fill) and the
-      // served-count accumulator (the cluster signal). The engine
-      // constructs epoch e+1's offsets while epoch e still executes
-      // (pipelined planning), so accumulator progress can surface one call
-      // late — the drain therefore stops only after THREE consecutive
-      // planning calls with neither signal, leaving a couple of empty
-      // trailing epochs that double as the ack epochs for the tail.
-      if (availableNowRequested) {
-        val served = if (servedAcc == null) 0L else servedAcc.value.longValue
-        val progressed = served != lastServedSeen
-        lastServedSeen = served
-        val waiting = ExecutorPull.hasAvailable(cfg)
-        if (progressed || waiting) drainNoProgress = 0 else drainNoProgress += 1
-        if (drainNoProgress >= 3) {
-          drainDone = true
-          return BrokerOffset(s)
-        }
-        lastEnd = math.max(lastEnd, s + 1)
-        return BrokerOffset(s + 1)
-      }
-      // idle suppression: a long-idle subscription stops ticking epochs
-      // (empty planning cycles) until data shows up. A served record resets
-      // the counter — which also guarantees every serving epoch gets its
-      // following ack epoch before suppression can engage.
-      if (idleSuppressAfter > 0) {
-        val served = if (servedAcc == null) 0L else servedAcc.value.longValue
-        if (served != lastServedSeen) {
-          lastServedSeen = served; idleTriggers = 0; suppressedTriggers = 0
-        } else if (idleTriggers < idleSuppressAfter) {
-          idleTriggers += 1
-        } else if (ExecutorPull.hasAvailable(cfg)) {
-          // a same-JVM consumer has a message waiting (staged for the next
-          // epoch's fill): wake immediately
-          idleTriggers = 0; suppressedTriggers = 0
-        } else {
-          suppressedTriggers += 1
-          if (suppressedTriggers >= idleProbeEvery) suppressedTriggers = 0
-          else return BrokerOffset(s) // suppressed: no epoch this trigger
-        }
-      }
-      lastEnd = math.max(lastEnd, s + 1)
-      return BrokerOffset(s + 1)
-    }
     cursor.ensureBase(s)
     val polled = cursor.poll()
     if (availableNowRequested && availableNowTarget == null)
@@ -498,56 +387,14 @@ class BrokerStream(cfg: BrokerSource.Config)
     }
   }
 
-  override def reportLatestOffset(): Offset =
-    if (executorPull)
-      // during an AvailableNow drain the engine needs to see "more data"
-      // until the first empty epoch proves the backlog is gone
-      BrokerOffset(if (availableNowRequested && !drainDone) lastEnd + 1 else lastEnd)
-    else BrokerOffset(cursor.poll())
-  override def deserializeOffset(json: String): Offset = {
-    val seq = json.toLong
-    // restored checkpoint offsets seed the epoch watermark, so progress
-    // reporting never shows an apparent offset regression after a restart
-    if (executorPull) lastEnd = math.max(lastEnd, seq)
-    BrokerOffset(seq)
-  }
-  override def commit(end: Offset): Unit = {
-    if (executorPull)
-      // entries in THIS JVM (local mode) ack the committed epoch promptly;
-      // cluster executors hear about the commit as the next epoch's tasks
-      // (batch e+1 plans only after e commits) and ack then
-      ExecutorPull.ackThrough(cfg, end.asInstanceOf[BrokerOffset].seq)
-    else cursor.commit(end.asInstanceOf[BrokerOffset].seq)
-  }
-  override def stop(): Unit =
-    // close the pull entries living in THIS JVM (local mode, tests); on a
-    // cluster the executor-side entries close with their JVMs and the ack
-    // timeout bounds how long their unacked messages stay undeliverable.
-    // Releasing the subscription ownership lets a successor query start.
-    if (executorPull) {
-      ExecutorPull.close(cfg, run)
-      ExecutorPull.unregister(cfg, this)
-    }
+  override def reportLatestOffset(): Offset = BrokerOffset(cursor.poll())
+  override def deserializeOffset(json: String): Offset = BrokerOffset(json.toLong)
+  override def commit(end: Offset): Unit = cursor.commit(end.asInstanceOf[BrokerOffset].seq)
+  override def stop(): Unit = ()
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[BrokerOffset].seq
     val e = end.asInstanceOf[BrokerOffset].seq
-    if (executorPull) {
-      lastEnd = math.max(lastEnd, e)
-      // consumer-cache affinity: slot i prefers a stable host so its task
-      // keeps landing where its consumer lives (best effort — a miss is
-      // safe: auto-split rebalances, sticky mode fails fast, and the ack
-      // timeout redelivers anything stranded)
-      val hosts =
-        try org.apache.spark.sql.SparkSession.active.sparkContext
-          .statusTracker.getExecutorInfos.map(_.host()).distinct.sorted
-        catch { case _: Exception => Array.empty[String] }
-      return Array.tabulate(readers) { i =>
-        val loc = if (hosts.isEmpty) Array.empty[String]
-                  else Array(hosts(i % hosts.length))
-        ExecutorPullPartition(cfg, run, i, e, loc, servedAcc)
-      }
-    }
     cursor.ensureBase(s)
     if (e <= s) Array.empty else cursor.planPartitions(s, e, readers)
   }
@@ -582,26 +429,6 @@ class BrokerStream(cfg: BrokerSource.Config)
         override def get(): InternalRow = row
         override def close(): Unit = ()
       }
-      // executor-pull: the task pulls from its slot's cached consumer
-      case p: ExecutorPullPartition => new PartitionReader[InternalRow] {
-        private lazy val msgs = {
-          val m = ExecutorPull.pull(p.cfg, p.run, p.slot, p.epoch)
-          // served-record count rides the accumulator back to the planner —
-          // the idle-suppression signal (exactness not required: any change
-          // means "not idle")
-          if (p.served != null) p.served.add(m.length)
-          m
-        }
-        private var i = -1
-        override def next(): Boolean = { i += 1; i < msgs.length }
-        override def get(): InternalRow = {
-          val m = msgs(i)
-          InternalRow(
-            if (m.key == null) null else UTF8String.fromString(m.key),
-            m.payload)
-        }
-        override def close(): Unit = ()
-      }
       case other => throw new IllegalArgumentException(
         s"unexpected partition type ${other.getClass.getName}")
     }
@@ -613,15 +440,3 @@ final case class BrokerInputPartition(msgs: Array[InMemoryBroker.Message])
 /** File-topic partition: the driver ships names; executors read payloads. */
 final case class FileRangePartition(dir: String, names: Array[String])
     extends InputPartition
-
-/** Executor-pull token: no payloads, no names — just which run's stream
-  * planned it, which consumer slot to pull, under which epoch
-  * ([[ExecutorPull]] holds the consumers). `locations` is the
-  * consumer-cache affinity hint (host-level, best effort).
-  */
-final case class ExecutorPullPartition(cfg: BrokerSource.Config, run: Long,
-    slot: Int, epoch: Long, locations: Array[String] = Array.empty,
-    served: org.apache.spark.util.LongAccumulator = null)
-    extends InputPartition {
-  override def preferredLocations(): Array[String] = locations
-}

@@ -51,24 +51,43 @@ object FileTopic {
     (new String(kb, "UTF-8"), payload)
   }
 
-  /** Producer writing one durable file per message (tmp + atomic move). */
+  /** Producer writing one file per message (tmp + atomic move). `flush`
+    * makes the files written since the last flush durable: it forces each
+    * one, then the directory that holds their names. The sink flushes
+    * before its micro-batch commits, so a message behind a committed offset
+    * (and a deleted WAL segment, under `--wal-dir`) survives power loss.
+    */
   final class Factory(dir: String) extends KeyedSink.ProducerFactory {
     override def create(partitionId: Long): KeyedSink.Producer = new KeyedSink.Producer {
       private val base = Paths.get(dir)
       Files.createDirectories(base)
       private val producerId = java.util.UUID.randomUUID().toString.take(8)
       private val n = new AtomicLong(0L)
+      private val unsynced = scala.collection.mutable.ArrayBuffer.empty[Path]
 
       override def sendAsync(key: String, payload: Array[Byte]): Unit = {
         val name = f"${System.currentTimeMillis()}%013d-${System.nanoTime()}%019d-$producerId-${n.getAndIncrement()}%06d-kh${keyHash(key)}%08x.msg"
         val tmp = base.resolve(s".$name.tmp")
         Files.write(tmp, encode(key, payload), StandardOpenOption.CREATE_NEW)
-        Files.move(tmp, base.resolve(name),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        val file = base.resolve(name)
+        Files.move(tmp, file, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        unsynced += file
       }
-      override def flush(): Unit = ()
+      override def flush(): Unit = if (unsynced.nonEmpty) {
+        unsynced.foreach(force)
+        force(base)
+        unsynced.clear()
+      }
       override def close(): Unit = ()
     }
+  }
+
+  /** fsync a file, or a directory's entries (POSIX lets both be opened for
+    * reading and forced).
+    */
+  private def force(p: Path): Unit = {
+    val ch = java.nio.channels.FileChannel.open(p, StandardOpenOption.READ)
+    try ch.force(true) finally ch.close()
   }
 
   /** Names only — no payload reads. This is what the driver-side cursor

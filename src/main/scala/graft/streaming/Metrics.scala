@@ -3,6 +3,8 @@ package graft.streaming
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicLong, DoubleAdder, LongAdder}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -57,21 +59,32 @@ object Metrics {
 
   def reset(): Unit = { counters.clear(); histograms.clear() }
 
-  /** Prometheus text exposition of the registry. */
+  /** Prometheus text exposition of the registry: each family's samples
+    * together, after the family's one `# TYPE` line.
+    */
   def render(): String = {
     val sb = new StringBuilder
-    counters.forEach { (k, v) => sb.append(s"$k ${v.get()}\n") }
-    histograms.forEach { (k, h) =>
-      val (base, labels) = if (k.contains('{')) k.splitAt(k.indexOf('{')) else (k, "")
-      val inner = if (labels.isEmpty) "" else labels.stripPrefix("{").stripSuffix("}") + ","
-      var cum = 0L
-      h.bucketBounds.zip(h.buckets).foreach { case (b, c) =>
-        cum += c.sum()
-        sb.append(s"""${base}_bucket{${inner}le="$b"} $cum""").append('\n')
+    def families[V](m: ConcurrentHashMap[String, V]): Seq[(String, Seq[(String, V)])] =
+      m.asScala.toSeq.groupBy { case (k, _) => k.takeWhile(_ != '{') }
+        .toSeq.sortBy(_._1).map { case (family, series) => family -> series.sortBy(_._1) }
+    families(counters).foreach { case (family, series) =>
+      sb.append(s"# TYPE $family counter\n")
+      series.foreach { case (k, v) => sb.append(s"$k ${v.get()}\n") }
+    }
+    families(histograms).foreach { case (family, series) =>
+      sb.append(s"# TYPE $family histogram\n")
+      series.foreach { case (k, h) =>
+        val labels = k.drop(family.length)
+        val inner = if (labels.isEmpty) "" else labels.stripPrefix("{").stripSuffix("}") + ","
+        var cum = 0L
+        h.bucketBounds.zip(h.buckets).foreach { case (b, c) =>
+          cum += c.sum()
+          sb.append(s"""${family}_bucket{${inner}le="$b"} $cum""").append('\n')
+        }
+        sb.append(s"""${family}_bucket{${inner}le="+Inf"} ${h.count.sum()}""").append('\n')
+        sb.append(s"${family}_sum$labels ${h.sum.sum()}\n")
+        sb.append(s"${family}_count$labels ${h.count.sum()}\n")
       }
-      sb.append(s"""${base}_bucket{${inner}le="+Inf"} ${h.count.sum()}""").append('\n')
-      sb.append(s"${base}_sum${if (labels.isEmpty) "" else labels} ${h.sum.sum()}\n")
-      sb.append(s"${base}_count${if (labels.isEmpty) "" else labels} ${h.count.sum()}\n")
     }
     sb.toString
   }

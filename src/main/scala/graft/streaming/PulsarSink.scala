@@ -116,23 +116,12 @@ object PulsarSink {
     m.invoke(obj, actual: _*)
   }
 
-  /** KeyShared consumer through the public pulsar-client builder API —
-    * shared by the driver-side cursor ([[graft.sources.BrokerSource.PulsarCursor]],
-    * auto-split, no ack timeout: reference parity) and the executor-pull
-    * readers ([[graft.sources.ExecutorPull]], optionally sticky-ranged and
-    * ack-timed). One construction sequence so a consume-path config fix
-    * cannot silently miss one of the two.
-    *
-    * @param stickyRange Some((lo, hi)) pins the consumer to that slice of
-    *   the [0, 65535] key-hash space (KeySharedPolicy.stickyHashRange);
-    *   None = the broker's auto-split assignment.
-    * @param ackTimeoutMs > 0 sets the redelivery timeout for
-    *   received-but-unacked messages — the self-heal for buffers stranded
-    *   by an executor that never gets another task. 0 = never (reference
-    *   behavior).
+  /** KeyShared consumer through the public pulsar-client builder API, for
+    * the driver-side cursor ([[graft.sources.BrokerSource.PulsarCursor]]):
+    * the broker's auto-split key-hash assignment and no ack timeout, as in
+    * the reference (pkg/pulsar/pulsar.go:98-121).
     */
-  private[graft] def buildKeySharedConsumer(cfg: Config, subscription: String,
-      stickyRange: Option[(Int, Int)] = None, ackTimeoutMs: Long = 0L): AnyRef = {
+  private[graft] def buildKeySharedConsumer(cfg: Config, subscription: String): AnyRef = {
     val client = buildClient(cfg, "consume from", setOperationTimeout = false)
     val cb = call(client, "newConsumer")
     call(cb, "topic", classOf[String] -> cfg.topic)
@@ -141,27 +130,13 @@ object PulsarSink {
     call(cb, "subscriptionType",
       subType -> subType.getMethod("valueOf", classOf[String])
         .invoke(null, "Key_Shared"))
-    stickyRange.foreach { case (lo, hi) =>
-      val rangeCls = Class.forName("org.apache.pulsar.client.api.Range")
-      val range = rangeCls.getMethod("of", classOf[Int], classOf[Int])
-        .invoke(null, Int.box(lo), Int.box(hi))
-      val kspCls = Class.forName("org.apache.pulsar.client.api.KeySharedPolicy")
-      val sticky = kspCls.getMethod("stickyHashRange").invoke(null)
-      call(sticky, "ranges", rangeCls -> range)
-      call(cb, "keySharedPolicy", kspCls -> sticky)
-    }
-    if (ackTimeoutMs > 0L)
-      call(cb, "ackTimeout",
-        classOf[Long] -> Long.box(ackTimeoutMs),
-        classOf[TimeUnit] -> TimeUnit.MILLISECONDS)
     call(cb, "subscribe")
   }
 
   /** Individually acknowledge MessageIds on a consumer (KeyShared forbids
     * cumulative acks). acknowledge(Message) and acknowledge(MessageId)
     * share an arity, so the MessageId overload is resolved by parameter
-    * type name. Shared by the driver-side cursor and the executor-pull
-    * readers.
+    * type name.
     */
   private[graft] def ackMessageIds(consumer: AnyRef,
       ids: Iterable[AnyRef]): Unit = {
@@ -173,26 +148,6 @@ object PulsarSink {
           s"${consumer.getClass.getName}.acknowledge(MessageId)"))
       ack.setAccessible(true)
       ids.foreach(id => ack.invoke(consumer, id))
-    }
-  }
-
-  /** Negatively acknowledge MessageIds — ask the broker to redeliver soon
-    * (Consumer.negativeAcknowledge(MessageId)), used when a failed task
-    * attempt drops a buffer that was never served to a committed batch:
-    * redelivery makes that duplicates, never loss. Resolved like
-    * [[ackMessageIds]]; a consumer without the method (test fakes that
-    * don't track redelivery) is a no-op — the ack timeout still redelivers.
-    */
-  private[graft] def nackMessageIds(consumer: AnyRef,
-      ids: Iterable[AnyRef]): Unit = {
-    if (ids.nonEmpty) {
-      consumer.getClass.getMethods
-        .find(m => m.getName == "negativeAcknowledge" && m.getParameterCount == 1 &&
-          m.getParameterTypes()(0).getSimpleName.endsWith("MessageId"))
-        .foreach { nack =>
-          nack.setAccessible(true)
-          ids.foreach(id => nack.invoke(consumer, id))
-        }
     }
   }
 

@@ -83,5 +83,13 @@ class AppFlagsSpec extends AnyFunSuite {
     // consume-only flags are unknown to produce, as in the reference
     assert(intercept[Flags.UsageError](App.produce(null, flags("--batch-size", "5")))
       .getMessage.contains("--batch-size"))
+    // the removed executor-pull consume mode's flags
+    Seq("pulsar.executor-consumers" -> "true", "pulsar.sticky-ranges" -> "true",
+      "pulsar.ack-timeout-ms" -> "30000", "pulsar.idle-suppress-after" -> "3",
+      "pulsar.idle-probe-every" -> "10").foreach { case (name, value) =>
+      val e = intercept[Flags.UsageError](App.consume(null,
+        flags("--readers", "1", s"--$name", value)))
+      assert(e.getMessage.contains(s"--$name"), e.getMessage)
+    }
   }
 }

@@ -265,6 +265,35 @@ class E2ESpec extends AnyFunSuite {
     }
   }
 
+  test("App.consume checkpoints through LocalCheckpointFileManager on the session it is given") {
+    // the CLI's checkpoint setting is made by the command, not only by
+    // App.main's session builder, so a caller's own session gets it too
+    val (key, _) = LocalCheckpointFileManager.Setting
+    val prev = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-manager").toString
+    val before = spark.streams.active.map(_.id).toSet
+    val t = new Thread(() => App.consume(spark, Flags.parse(Seq("--topic", "ckpt-manager",
+      "--topic-dir", dir, "--remote-write.url", "http://127.0.0.1:9/api/v1/write"))))
+    t.start()
+    try {
+      await(spark.streams.active.exists(q => !before(q.id)))
+      val q = spark.streams.active.filterNot(q => before(q.id)).head
+      val log = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.offsetLog
+      // HDFSMetadataLog.fileManager is protected
+      val manager = log.getClass.getMethod("fileManager").invoke(log)
+      assert(manager.isInstanceOf[LocalCheckpointFileManager], manager.getClass.getName)
+    } finally {
+      spark.streams.active.filterNot(q => before(q.id)).foreach(_.stop())
+      t.join(30000L)
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
+
   test("two subscriptions on one file topic each see every message once") {
     // consume.go:42-43: consumers SHARING a subscription split the stream;
     // a DIFFERENT subscription name is an independent cursor over the same

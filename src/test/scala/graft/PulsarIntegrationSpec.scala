@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Poll.await
@@ -12,11 +11,10 @@ import graft.streaming._
 /** Real-broker integration tests, gated exactly like the reference's
   * (integration/integration_test.go:52-58 `TEST_PULSAR_URL` +
   * `skipWithoutPulsar`): without the env var every test CANCELS cleanly;
-  * with it, the reflection-bound pulsar-client paths — producer Factory,
-  * driver KeyShared PulsarCursor, and the executor-pull consume chain —
-  * run against the real broker. This is the spec the sandbox cannot
-  * execute (no broker, no pulsar-client jar) but any environment with a
-  * broker can, making the real-Pulsar claim testable the day one exists:
+  * with it, the reflection-bound pulsar-client paths — producer Factory
+  * and driver KeyShared PulsarCursor — run against the real broker. A
+  * build without a broker or the pulsar-client jar cannot execute it; any
+  * environment with a broker can, making the real-Pulsar claim testable:
   *
   *   TEST_PULSAR_URL=pulsar://localhost:6650 sbt "testOnly graft.PulsarIntegrationSpec"
   *
@@ -107,76 +105,5 @@ class PulsarIntegrationSpec extends AnyFunSuite {
       q.stop()
       graft.sources.HttpRemoteWriteSource.shutdown(port)
     }
-  }
-
-  test("real broker: executor-pull consume chain delivers tenant batches (TEST_PULSAR_URL)") {
-    skipWithoutPulsar()
-    val s = spark
-    import s.implicits._
-    val topic = randTopic()
-    val cfg = PulsarSink.Config.from(Flags("pulsar.url" -> pulsarUrl, "topic" -> topic))
-
-    val received = new java.util.concurrent.ConcurrentLinkedQueue[(String, Array[Byte])]()
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress(0), 0)
-    server.createContext("/api/v1/write", { ex =>
-      received.add((ex.getRequestHeaders.getFirst("X-Scope-OrgID"),
-        ex.getRequestBody.readAllBytes()))
-      ex.sendResponseHeaders(200, -1); ex.close()
-    })
-    server.start()
-
-    // the executor-pull real-broker source (App consume's --pulsar.url +
-    // --pulsar.executor-consumers=true surface)
-    val broker = spark.readStream.format("graft.sources.BrokerSourceProvider")
-      .option("topic", topic).option("pulsar.subscription", s"it-$topic")
-      .option("readers", "2")
-      .option("pulsar.url", pulsarUrl)
-      .option("pulsar.executor-consumers", "true")
-      .load()
-    val samples = PromPipeline.deserialize(
-        broker.withColumn("payload", col("payload").cast("string")), 0, col("payload"))
-      .filter(col("sample").isNotNull).select("sample.*")
-      .as[graft.model.Model.Sample]
-    val client = new RemoteWriteSink.HttpClient(
-      s"http://localhost:${server.getAddress.getPort}/api/v1/write", 30000L)
-    val q = TenantBatcher(samples, TenantBatcher.Config(2, 500L))
-      .writeStream
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[TenantBatcher.Batch], _: Long) =>
-        ds.mapPartitions { it =>
-          Iterator.single(RemoteWriteSink.deliver(client)(it))
-        }(org.apache.spark.sql.Encoders.product[(Long, Long)]).collect()
-        ()
-      }.start()
-    try {
-      // produce directly through the reflection-bound Factory (the
-      // reference's pulsarClient.CreateProducer + produceBatch)
-      val producer = new PulsarSink.Factory(cfg).create(0L)
-      try {
-        Seq(
-          ("k0", PromKernel.promJson(10001L, 0.5, Array("__name__", "instance"), Array("up", "i0"), "team-a")),
-          ("k1", PromKernel.promJson(10002L, 0.6, Array("__name__", "instance"), Array("up", "i1"), "team-a")),
-          ("k2", PromKernel.promJson(10003L, 0.7, Array("__name__", "instance"), Array("up", "i2"), "team-b"))
-        ).foreach { case (k, p) => producer.sendAsync(k, p.getBytes("UTF-8")) }
-        producer.flush()
-      } finally producer.close()
-
-      await(received.asScala.map(_._1).toSet == Set("team-a", "team-b"), 90000L)
-      val reqs = received.asScala.toSeq.map { case (tenant, body) =>
-        tenant -> PromKernel.decodeWriteRequest(PromKernel.snappyUncompress(body))
-      }
-      assert(reqs.flatMap(_._2.timeseries).forall(_.samples.size == 1),
-        "one single-sample series per sample")
-      assert(reqs.flatMap(_._2.timeseries).map(_.samples.head.value).toSet
-        .subsetOf(Set(0.5, 0.6, 0.7)))
-    } finally {
-      q.stop()
-      server.stop(0)
-    }
-  }
-
-  private implicit class QueueOps[A](q: java.util.concurrent.ConcurrentLinkedQueue[A]) {
-    def asScala: Iterable[A] =
-      scala.jdk.CollectionConverters.CollectionHasAsScala(q).asScala
   }
 }
