@@ -139,9 +139,10 @@ object App {
   /** Keyed topic -> deserialize (poison-skip) -> stateful per-tenant batch ->
     * remote_write POST (pkg/app/consume.go + pkg/remote/write.go), as one
     * Structured Streaming query: BrokerSource offsets ack poison, the
-    * flatMapGroupsWithState batcher holds size/deadline semantics, and a
-    * retryable sink error fails the micro-batch (no offset commit => replay
-    * — the reference's stop-consumption backpressure).
+    * flatMapGroupsWithState batcher holds size/deadline semantics, the
+    * micro-batch's own tasks POST its batches ([[RemoteWriteSink.writer]]),
+    * and a retryable sink error fails the micro-batch (no offset commit =>
+    * replay — the reference's stop-consumption backpressure).
     */
   private[graft] def consume(spark: SparkSession, flags: Flags): Unit = {
     import spark.implicits._
@@ -173,14 +174,7 @@ object App {
       .as[graft.model.Model.Sample]
     val q = TenantBatcher(samples, batcher)
       .writeStream
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[TenantBatcher.Batch], _: Long) =>
-        // deliver on executors; only the (sent, failed) counts come back
-        val counts = ds.mapPartitions { it =>
-          Iterator.single(RemoteWriteSink.deliver(client)(it))
-        }(org.apache.spark.sql.Encoders.product[(Long, Long)]).collect()
-        Metrics.add("sent_samples_total", counts.map(_._1).sum)
-        Metrics.add("failed_samples_total", counts.map(_._2).sum)
-      }
+      .foreach(RemoteWriteSink.writer(client))
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(100.millis)) // checkInterval (write.go:69)
       .start()

@@ -14,8 +14,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * The reference's five instruments, re-expressed for Spark's execution model:
   * distributed counts flow through `Dataset.observe` (aggregated by Spark per
   * micro-batch, surfaced via StreamingQueryListener on the driver); sink-side
-  * counters are aggregated in foreachBatch on the driver. The registry
-  * renders Prometheus text format for a /metrics endpoint.
+  * counters (sent/failed samples, retryable failures, POST durations) are
+  * counted by the remote_write writer's tasks in the JVM that runs them,
+  * one registry per process as in the reference. The registry renders
+  * Prometheus text format for a /metrics endpoint.
   */
 object Metrics {
 

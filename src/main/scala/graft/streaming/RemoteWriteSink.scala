@@ -2,13 +2,15 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.spark.sql.ForeachWriter
+
 import graft.functions.PromKernel
 import graft.model.Model.Sample
 
 /** remote_write egress (operator #16, remote/write.go:79-236): each batch is
-  * already prompb entries (one single-sample TimeSeries per sample, labels
-  * sorted by name — write.go:251-284, encoded before the batcher); join them,
-  * snappy-compress, POST with tenant header; error classes drive
+  * already its prompb entries joined (one single-sample TimeSeries per
+  * sample, labels sorted by name — write.go:251-284, encoded before the
+  * batcher); snappy-compress, POST with tenant header; error classes drive
   * ack-vs-retry.
   */
 object RemoteWriteSink {
@@ -96,17 +98,17 @@ object RemoteWriteSink {
   /** The POST body of `samples`, as the reference re-encodes a batch. */
   def encodeBody(samples: Seq[Sample]): Array[Byte] = body(samples.map(entry))
 
-  /** Process one micro-batch of tenant batches, one POST at a time, so a
-    * tenant's batches land in order. Recoverable errors throw — Spark
-    * retries the micro-batch without committing offsets, which IS the
-    * reference's stop-consumption backpressure (write.go:124-133). Fatal
-    * errors ack-and-skip. Returns (sentSamples, failedSamples).
+  /** Deliver tenant batches one POST at a time, so a tenant's batches land
+    * in order. Recoverable errors throw — Spark fails the micro-batch
+    * without committing offsets, and it replays: the reference's
+    * stop-consumption backpressure (write.go:124-133). Fatal errors
+    * ack-and-skip. Returns (sentSamples, failedSamples).
     */
   def deliver(client: Client)(batches: Iterator[TenantBatcher.Batch]): (Long, Long) = {
     var sent = 0L
     var failed = 0L
     batches.foreach { b =>
-      val payload = body(b.entries)
+      val payload = PromKernel.snappyCompress(b.body)
       val t0 = System.nanoTime()
       val result = client.store(b.tenantId, payload)
       // sent_batch_duration_seconds (metrics.go, observed at write.go:186-192)
@@ -130,5 +132,25 @@ object RemoteWriteSink {
       }
     }
     (sent, failed)
+  }
+
+  /** The consume query's sink, run by the micro-batch's own tasks (no
+    * second execution, nothing collected to the driver): each task
+    * [[deliver]]s its partition's batches serially, in order, like the
+    * reference's one send loop, and counts sent_samples_total and
+    * failed_samples_total in its JVM's registry, next to
+    * retryable_failed_writes. A retryable failure throws from `process`,
+    * which fails the micro-batch before its offsets commit.
+    */
+  def writer(client: Client): ForeachWriter[TenantBatcher.Batch] = new ForeachWriter[TenantBatcher.Batch] {
+    override def open(partitionId: Long, epochId: Long): Boolean = true
+
+    override def process(b: TenantBatcher.Batch): Unit = {
+      val (sent, failed) = deliver(client)(Iterator.single(b))
+      Metrics.add("sent_samples_total", sent)
+      Metrics.add("failed_samples_total", failed)
+    }
+
+    override def close(errorOrNull: Throwable): Unit = ()
   }
 }

@@ -23,15 +23,27 @@ import graft.operators.PromPipeline
   *     => no offset commit => replay).
   *
   * Each sample is encoded once, before the tenant shuffle, into its final
-  * remote_write entry ([[PromPipeline.remoteWriteEntries]]), so the state
-  * per tenant is the buffered entry bytes plus the first-sample anchor, and
-  * a batch's entries concatenated are its POST body before snappy. Encoding
-  * in the source's tasks spreads it over `--readers`; carrying label maps
+  * remote_write entry ([[PromPipeline.remoteWriteEntries]]). Encoding in
+  * the source's tasks spreads it over `--readers`; carrying label maps
   * through the state instead cost more in row conversion than the encoding
   * itself (bridge benchmark consume_drain: 50 tenants x batch 100, 5,000
   * samples a trigger, local[4] on 4 cores, traced runs: state 2.75 -> 1.44
   * MB and state update 862 -> about 620 ms per trigger with POSTs still
   * serial; the update time counts the sink's pull of each batch).
+  *
+  * State layout: an entry is tag 1, a varint length, then a single-sample
+  * TimeSeries, and a repeated field concatenates, so entries joined are a
+  * WriteRequest. A tenant's state is one flat byte buffer, its pending
+  * entries joined, with their count and the first-sample anchor; an
+  * emitted batch is the same, and its `body` snappy-compressed is the POST
+  * body. A size flush cuts the buffer at the `batchSize`-th entry
+  * boundary, found by walking the framing. Flat on purpose: a state or
+  * batch with a collection field (`Seq[Array[Byte]]`) deserializes through
+  * `MapObjects`, whose variables are renamed each time the encoder is
+  * resolved, so every trigger generated new code and its tasks waited on a
+  * Janino compile (JFR over consume_drain: about 3 such waits a trigger,
+  * 0 once flat). Byte arrays, ints and strings generate the same code
+  * every trigger and hit the codegen cache.
   *
   * State commit: each trigger writes a delta file (and Spark's checksum of
   * it) per state partition, a cost per file, not per byte. On a local disk
@@ -40,7 +52,7 @@ import graft.operators.PromPipeline
   * [[LocalCheckpointFileManager]], which does neither (traced roundtrip_wal:
   * state commit 388 -> 15 ms a trigger).
   *
-  * Scale: state is O(active tenants x batchSize) entries, hash-partitioned
+  * Scale: state is O(active tenants x batchSize) entry bytes, hash-partitioned
   * by tenant across executors by the shuffle — the same keying the
   * reference gets from its per-tenant map, but distributed.
   */
@@ -59,18 +71,73 @@ object TenantBatcher {
   /** One sample's remote_write entry, keyed by tenant. */
   final case class Entry(tenantId: String, entry: Array[Byte])
 
-  /** One emitted remote_write batch: `entries` concatenated and
-    * snappy-compressed is the POST body ([[RemoteWriteSink.body]]).
+  /** One emitted remote_write batch of `count` entries: `body` is their
+    * WriteRequest, and snappy-compressed the POST body.
     */
   final case class Batch(
       tenantId: String,
-      entries: Seq[Array[Byte]],
+      body: Array[Byte],
+      count: Int,
       reason: String) { // "size" | "deadline"
-    def size: Int = entries.size
+    def size: Int = count
+    /** The entries of `body`, each a copy. */
+    def entries: Seq[Array[Byte]] = TenantBatcher.entries(body)
   }
 
-  /** Buffered state per tenant. */
-  final case class BatchState(entries: Seq[Array[Byte]], firstArrivalMs: Long)
+  /** Buffered state per tenant: `count` pending entries joined in `body`. */
+  final case class BatchState(body: Array[Byte], count: Int, firstArrivalMs: Long)
+
+  /** The end of the `n` entries that start at `from` in `body`: each is the
+    * tag byte of field 1, a varint length, then that many bytes.
+    */
+  private[graft] def skipEntries(body: Array[Byte], from: Int, n: Int): Int = {
+    var pos = from
+    var left = n
+    while (left > 0) {
+      pos += 1 // tag 0x0a
+      var len = 0
+      var shift = 0
+      var b = 0x80
+      while ((b & 0x80) != 0) {
+        b = body(pos); pos += 1
+        len |= (b & 0x7f) << shift
+        shift += 7
+      }
+      pos += len
+      left -= 1
+    }
+    pos
+  }
+
+  /** The entries joined in `body`, split apart. */
+  private[graft] def entries(body: Array[Byte]): Seq[Array[Byte]] = {
+    val out = Seq.newBuilder[Array[Byte]]
+    var pos = 0
+    while (pos < body.length) {
+      val end = skipEntries(body, pos, 1)
+      out += java.util.Arrays.copyOfRange(body, pos, end)
+      pos = end
+    }
+    out.result()
+  }
+
+  /** `pending`, holding `count` entries, cut at every `batchSize`-th entry
+    * boundary (write.go:174-177): the full batches' bodies, then the rest.
+    */
+  private[graft] def cut(pending: Array[Byte], count: Int, batchSize: Int): (Seq[Array[Byte]], Array[Byte]) = {
+    def slice(from: Int, to: Int) =
+      if (from == 0 && to == pending.length) pending else java.util.Arrays.copyOfRange(pending, from, to)
+    val full = Seq.newBuilder[Array[Byte]]
+    var pos = 0
+    var left = count
+    while (left >= batchSize) {
+      val end = skipEntries(pending, pos, batchSize)
+      full += slice(pos, end)
+      pos = end
+      left -= batchSize
+    }
+    (full.result(), slice(pos, pending.length))
+  }
 
   def apply(ds: Dataset[Sample], cfg: Config): Dataset[Batch] = {
     implicit val batchEnc = Encoders.product[Batch]
@@ -87,33 +154,33 @@ object TenantBatcher {
       incoming: Iterator[Entry],
       state: GroupState[BatchState]): Iterator[Batch] = {
     val now = state.getCurrentProcessingTimeMs()
-    val prior = state.getOption.map(_.entries).getOrElse(Seq.empty)
-    val firstArrival = state.getOption.map(_.firstArrivalMs).getOrElse(now)
-    val all = prior ++ incoming.map(_.entry)
+    val prior = state.getOption
+    val priorCount = prior.fold(0)(_.count)
+    val firstArrival = prior.fold(now)(_.firstArrivalMs)
+    val pending = new java.io.ByteArrayOutputStream(4096)
+    prior.foreach(p => pending.write(p.body))
+    var count = priorCount
+    incoming.foreach { e => pending.write(e.entry); count += 1 }
 
-    val out = scala.collection.mutable.ArrayBuffer.empty[Batch]
-    var buf = all
     // size-triggered flushes (write.go:174-177)
-    while (buf.size >= cfg.batchSize) {
-      val (b, rest) = buf.splitAt(cfg.batchSize)
-      out += Batch(tenant, b, "size")
-      buf = rest
-    }
+    val (full, rest) = cut(pending.toByteArray, count, cfg.batchSize)
+    val out = full.map(Batch(tenant, _, cfg.batchSize, "size"))
+    val left = count - full.size * cfg.batchSize
 
     if (state.hasTimedOut) {
       // deadline passed (write.go:178-181): flush remainder, clear state
-      if (buf.nonEmpty) out += Batch(tenant, buf, "deadline")
       state.remove()
-    } else if (buf.isEmpty) {
-      state.remove()
+      (if (left > 0) out :+ Batch(tenant, rest, left, "deadline") else out).iterator
     } else {
-      // deadline anchored at the FIRST sample of the pending batch: the
-      // prior anchor holds only while a prior entry is still buffered
-      val anchor = if (out.size * cfg.batchSize < prior.size) firstArrival else now
-      state.update(BatchState(buf, anchor))
-      val remaining = math.max(anchor + cfg.batchMaxDelayMs - now, 1L)
-      state.setTimeoutDuration(remaining)
+      if (left == 0) state.remove()
+      else {
+        // deadline anchored at the FIRST sample of the pending batch: the
+        // prior anchor holds only while a prior entry is still buffered
+        val anchor = if (full.size * cfg.batchSize < priorCount) firstArrival else now
+        state.update(BatchState(rest, left, anchor))
+        state.setTimeoutDuration(math.max(anchor + cfg.batchMaxDelayMs - now, 1L))
+      }
+      out.iterator
     }
-    out.iterator
   }
 }

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -68,15 +68,12 @@ class CheckpointForkSpec extends AnyFunSuite {
   private def entries(ts: Seq[Long]): Seq[Seq[Byte]] = ts.map(t => RemoteWriteSink.entry(sample(t)).toSeq)
 
   /** The batcher at batch size 2, never a deadline flush, checkpointed in
-    * `ckpt`, each batch it sends added to `sent`.
+    * `ckpt`, each batch it sends POSTed to `client`.
     */
-  private def start(ms: MemoryStream[Sample], ckpt: java.nio.file.Path,
-      sent: java.util.Queue[TenantBatcher.Batch]) =
+  private def start(ms: MemoryStream[Sample], ckpt: java.nio.file.Path, client: RecordingClient) =
     TenantBatcher(ms.toDS(), TenantBatcher.Config(batchSize = 2, batchMaxDelayMs = 600000L))
       .writeStream
-      .foreachBatch { (ds: Dataset[TenantBatcher.Batch], _: Long) =>
-        ds.collect().foreach(sent.add)
-      }
+      .foreach(RemoteWriteSink.writer(client))
       .option("checkpointLocation", ckpt.toString)
       .trigger(Trigger.ProcessingTime("100 milliseconds"))
       .start()
@@ -88,11 +85,11 @@ class CheckpointForkSpec extends AnyFunSuite {
   test("batcher checkpoints start no process after the first trigger; a restart sends the remainder once") {
     val ckpt = Files.createTempDirectory("graft-fork-ckpt-")
     val ms = MemoryStream[Sample](spark)
-    val sent = new java.util.concurrent.ConcurrentLinkedQueue[TenantBatcher.Batch]()
-    def sentSamples = sent.asScala.toSeq.map(_.size).sum
+    val client = RecordingClient.fresh()
+    def sentSamples = client.posts.map(_.size).sum
 
     withAppCheckpoints(on = true) {
-      val q1 = start(ms, ckpt, sent)
+      val q1 = start(ms, ckpt, client)
       try {
         // the first trigger creates the checkpoint directories: mkdirs may fork
         ms.addData(sample(1))
@@ -119,27 +116,28 @@ class CheckpointForkSpec extends AnyFunSuite {
       assert(hiddenCrcs(ckpt).isEmpty, hiddenCrcs(ckpt))
 
       // sample 7 waits in the recovered state; sample 8 fills its batch
-      val q2 = start(ms, ckpt, sent)
+      val q2 = start(ms, ckpt, client)
       try {
         ms.addData(sample(8))
         await(sentSamples == 8)
         Thread.sleep(1000L) // nothing more may follow
       } finally q2.stop()
     }
-    val got = sent.asScala.toSeq
-    assert(got.map(_.reason).distinct == Seq("size"))
-    assert(got.flatMap(_.entries.map(_.toSeq)) == entries(1L to 8L))
+    val got = client.posts
+    // every POST a size flush of 2
+    assert(got.map(_.size).distinct == Seq(2))
+    assert(got.flatMap(_.entries) == entries(1L to 8L))
   }
 
   test("a checkpoint resumes across the setting, either way") {
     val ckpt = Files.createTempDirectory("graft-fork-compat-ckpt-")
     val ms = MemoryStream[Sample](spark)
-    val sent = new java.util.concurrent.ConcurrentLinkedQueue[TenantBatcher.Batch]()
+    val client = RecordingClient.fresh()
     def run(ts: Long, sentAfter: Int, app: Boolean): Unit = withAppCheckpoints(app) {
-      val q = start(ms, ckpt, sent)
+      val q = start(ms, ckpt, client)
       try {
         ms.addData(sample(ts))
-        await(sent.size == sentAfter && q.recentProgress.exists(_.numInputRows == 1))
+        await(client.posts.size == sentAfter && q.recentProgress.exists(_.numInputRows == 1))
       } finally q.stop()
     }
     run(1, sentAfter = 0, app = false) // Hadoop writes a hidden .crc per file
@@ -149,6 +147,6 @@ class CheckpointForkSpec extends AnyFunSuite {
     assert(hiddenCrcs(ckpt).toSet == before, "new files get no hidden checksum")
     run(3, sentAfter = 1, app = false)
     run(4, sentAfter = 2, app = true)
-    assert(sent.asScala.toSeq.flatMap(_.entries.map(_.toSeq)) == entries(1L to 4L))
+    assert(client.posts.flatMap(_.entries) == entries(1L to 4L))
   }
 }

@@ -128,11 +128,7 @@ class E2ESpec extends AnyFunSuite {
       .filter(col("sample").isNotNull).select("sample.*").as[Sample]
     val consumeQ = TenantBatcher(samples, TenantBatcher.Config(batchSize = 2, batchMaxDelayMs = 500L))
       .writeStream
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[TenantBatcher.Batch], _: Long) =>
-        ds.foreachPartition { it: Iterator[TenantBatcher.Batch] =>
-          RemoteWriteSink.deliver(client)(it); ()
-        }
-      }
+      .foreach(RemoteWriteSink.writer(client))
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
       .start()
@@ -368,7 +364,8 @@ class E2ESpec extends AnyFunSuite {
       // poison-skip: null decodes are dropped but still acked (offset advances)
       val samples = parsed.filter(col("sample").isNotNull).select("sample.*").as[Sample]
       val batches = samples.groupByKey(_.tenantId).mapGroups { (t, it) =>
-        TenantBatcher.Batch(t, it.map(RemoteWriteSink.entry).toSeq, "size")
+        val entries = it.map(RemoteWriteSink.entry).toSeq
+        TenantBatcher.Batch(t, Array.concat(entries: _*), entries.size, "size")
       }
       val client = new RemoteWriteSink.HttpClient(
         s"http://localhost:${server.getAddress.getPort}/api/v1/write", 30000L)

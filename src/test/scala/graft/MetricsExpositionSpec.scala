@@ -57,7 +57,7 @@ class MetricsExpositionSpec extends AnyFunSuite {
     // the tenant comes from the basic-auth user, which unlike a header may hold a newline
     val tenant = "a\\b\"c\nd"
     val batch = TenantBatcher.Batch(tenant,
-      Seq(RemoteWriteSink.entry(graft.model.Model.Sample(1000L, 1.0, Map("__name__" -> "up"), tenant))), "size")
+      RemoteWriteSink.entry(graft.model.Model.Sample(1000L, 1.0, Map("__name__" -> "up"), tenant)), 1, "size")
     assert(RemoteWriteSink.deliver(client(RemoteWriteSink.Ok))(Iterator(batch)) == ((1L, 0L)))
     intercept[RuntimeException](
       RemoteWriteSink.deliver(client(RemoteWriteSink.Recoverable("HTTP 503")))(Iterator(batch)))
@@ -84,7 +84,7 @@ class MetricsExpositionSpec extends AnyFunSuite {
     // each, which the registry holds under separate keys
     Seq("team-a", "team-b").foreach { tenant =>
       val batch = TenantBatcher.Batch(tenant,
-        Seq(RemoteWriteSink.entry(graft.model.Model.Sample(1000L, 1.0, Map("__name__" -> "up"), tenant))), "size")
+        RemoteWriteSink.entry(graft.model.Model.Sample(1000L, 1.0, Map("__name__" -> "up"), tenant)), 1, "size")
       RemoteWriteSink.deliver(client(RemoteWriteSink.Ok))(Iterator(batch))
       intercept[RuntimeException](
         RemoteWriteSink.deliver(client(RemoteWriteSink.Recoverable("HTTP 503")))(Iterator(batch)))

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{PromCatalyst, PromKernel}
 import graft.model.Model.Sample
 import graft.operators.PromPipeline
-import graft.streaming.RemoteWriteSink
+import graft.streaming.{RemoteWriteSink, TenantBatcher}
 
 /** The consume path encodes each sample into its remote_write entry before
   * the batcher; a batch's POST body is its entries joined and
@@ -66,6 +66,31 @@ class RemoteWriteEntrySpec extends AnyFunSuite {
       val expected = wholeRequestBody(samples)
       RemoteWriteSink.body(samples.map(RemoteWriteSink.entry)).sameElements(expected) &&
         RemoteWriteSink.encodeBody(samples).sameElements(expected)
+    })
+  }
+
+  // entries of 1-, 2- and 3-byte varint lengths: a padding label puts the
+  // series at under 128, at least 128, or at least 16,384 bytes
+  private val sizedEntry: Gen[Array[Byte]] = for {
+    s <- sample
+    pad <- Gen.frequency(3 -> Gen.choose(0, 60), 2 -> Gen.choose(130, 400), 1 -> Gen.choose(16400, 17000))
+  } yield RemoteWriteSink.entry(s.copy(labels = s.labels + ("pad" -> "x" * pad)))
+
+  test("the flat batcher's bodies are the grouped entries' bodies byte for byte") {
+    check(Prop.forAll(Gen.listOf(sizedEntry), Gen.choose(1, 7), Gen.choose(0, 6)) { (entries, batchSize, held) =>
+      // `held` entries pending from earlier triggers, the rest arriving now:
+      // the batcher appends them to one buffer and cuts it
+      val prior = math.min(held, entries.size)
+      val pending = Array.concat(Array.concat(entries.take(prior): _*) +: entries.drop(prior): _*)
+      val (full, rest) = TenantBatcher.cut(pending, entries.size, batchSize)
+      val groups = entries.grouped(batchSize).toSeq
+      val (fullGroups, restGroup) = groups.partition(_.size == batchSize)
+      full.map(PromKernel.snappyCompress).map(_.toSeq) == fullGroups.map(g => RemoteWriteSink.body(g).toSeq) &&
+        rest.toSeq == Array.concat(restGroup.flatten: _*).toSeq &&
+        full.zip(fullGroups).forall { case (body, g) =>
+          TenantBatcher.Batch("t", body, batchSize, "size").entries.map(_.toSeq) == g.map(_.toSeq)
+        } &&
+        entries.forall(e => TenantBatcher.entries(e).map(_.toSeq) == Seq(e.toSeq))
     })
   }
 

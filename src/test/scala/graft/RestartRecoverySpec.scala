@@ -326,14 +326,11 @@ class RestartRecoverySpec extends AnyFunSuite {
     val ckpt = tempDir("graft-batcher-ckpt-")
     val ms = MemoryStream[Sample](spark)
     val delayMs = 5000L
-    val sent = new java.util.concurrent.ConcurrentLinkedQueue[(TenantBatcher.Batch, Long)]()
+    val client = RecordingClient.fresh()
     def start() =
       TenantBatcher(ms.toDS(), TenantBatcher.Config(batchSize = 100, batchMaxDelayMs = delayMs))
         .writeStream
-        .foreachBatch { (ds: org.apache.spark.sql.Dataset[TenantBatcher.Batch], _: Long) =>
-          val at = System.currentTimeMillis()
-          ds.collect().foreach(b => sent.add((b, at)))
-        }
+        .foreach(RemoteWriteSink.writer(client))
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
         .start()
@@ -351,7 +348,7 @@ class RestartRecoverySpec extends AnyFunSuite {
       System.currentTimeMillis() - started < 60000L) Thread.sleep(50)
     q1.stop()
     assert(q1.recentProgress.exists(_.numInputRows == 5))
-    assert(sent.isEmpty)
+    assert(client.posts.isEmpty)
     Thread.sleep(2000L)
 
     // run 2 resumes from the checkpoint; a new sample for tenant a must join
@@ -361,15 +358,14 @@ class RestartRecoverySpec extends AnyFunSuite {
     ms.addData(sample("a", 4))
     try {
       val deadline = resumed + 30000L
-      while (sent.size < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      while (client.posts.size < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)
       Thread.sleep(1000L) // nothing more may follow
     } finally q2.stop()
 
-    import scala.jdk.CollectionConverters._
-    val got = sent.asScala.toSeq
-    assert(got.map(b => (b._1.tenantId, b._1.reason)).sorted == Seq(("a", "deadline"), ("b", "deadline")),
-      got.map(_._1.tenantId))
-    val byTenant = got.map { case (b, at) => b.tenantId -> ((b.entries.map(_.toSeq), at)) }.toMap
+    val got = client.posts
+    // under batch size 100 both are deadline flushes
+    assert(got.map(p => (p.tenantId, p.size)).sorted == Seq(("a", 4), ("b", 2)), got.map(_.tenantId))
+    val byTenant = got.map(p => p.tenantId -> ((p.entries, p.atMs))).toMap
     assert(byTenant("a")._1 == (1 to 4).map(i => RemoteWriteSink.entry(sample("a", i)).toSeq))
     assert(byTenant("b")._1 == (1 to 2).map(i => RemoteWriteSink.entry(sample("b", i)).toSeq))
     // anchored at run 1's arrival: due before a deadline counted from the

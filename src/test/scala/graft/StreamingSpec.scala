@@ -84,16 +84,13 @@ class StreamingSpec extends AnyFunSuite {
 
   test("a remainder left after size flushes takes its deadline from its own arrival") {
     val delayMs = 3000L
-    val sent = new java.util.concurrent.ConcurrentLinkedQueue[(Batch, Long)]()
+    val client = RecordingClient.fresh()
     implicit val sampleEnc: org.apache.spark.sql.Encoder[Sample] =
       org.apache.spark.sql.Encoders.product[Sample]
     val ms = MemoryStream[Sample](spark)
     val q = TenantBatcher(ms.toDS(), Config(batchSize = 2, batchMaxDelayMs = delayMs))
       .writeStream
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[Batch], _: Long) =>
-        val at = System.currentTimeMillis()
-        ds.collect().foreach(b => sent.add((b, at)))
-      }
+      .foreach(RemoteWriteSink.writer(client))
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
       .start()
     val secondAdd = try {
@@ -104,17 +101,48 @@ class StreamingSpec extends AnyFunSuite {
       // left, so its deadline counts from now, not from sample 1
       val at = System.currentTimeMillis()
       ms.addData(sample("t", ts = 2), sample("t", ts = 3))
-      await(sent.size == 2, timeoutMs = 4 * delayMs)
+      await(client.posts.size == 2, timeoutMs = 4 * delayMs)
       at
     } finally q.stop()
-    import scala.jdk.CollectionConverters._
-    val got = sent.asScala.toSeq
-    assert(got.map(b => (b._1.reason, b._1.entries.map(_.toSeq))) == Seq(
-      ("size", Seq(1L, 2L).map(ts => RemoteWriteSink.entry(sample("t", ts)).toSeq)),
-      ("deadline", Seq(RemoteWriteSink.entry(sample("t", 3L)).toSeq))), got.map(_._1.reason))
-    val flushedAt = got(1)._2
+    val got = client.posts
+    // at batch size 2 the pair is the size flush, the lone sample the
+    // deadline flush
+    assert(got.map(_.entries) == Seq(
+      Seq(1L, 2L).map(ts => RemoteWriteSink.entry(sample("t", ts)).toSeq),
+      Seq(RemoteWriteSink.entry(sample("t", 3L)).toSeq)), got.map(_.size))
+    val flushedAt = got(1).atMs
     assert(flushedAt >= secondAdd + delayMs,
       s"the remainder flushed ${flushedAt - secondAdd} ms after it arrived, under the $delayMs ms delay")
+  }
+
+  test("the writer POSTs each batch's entries joined, for 1-, 2- and 3-byte entry lengths") {
+    // padding labels put the series at under 128, at least 128, and at
+    // least 16,384 bytes, so the batcher walks all three varint lengths
+    val pads = Seq(10, 200, 17000, 50, 16500, 300, 5)
+    val samples = pads.zipWithIndex.map { case (pad, i) =>
+      Sample(i.toLong, 1.0, Map("__name__" -> "foo", "pad" -> "x" * pad), "t")
+    }
+    val client = RecordingClient.fresh()
+    implicit val sampleEnc: org.apache.spark.sql.Encoder[Sample] =
+      org.apache.spark.sql.Encoders.product[Sample]
+    val ms = MemoryStream[Sample](spark)
+    val q = TenantBatcher(ms.toDS(), Config(batchSize = 3, batchMaxDelayMs = 2000L))
+      .writeStream
+      .foreach(RemoteWriteSink.writer(client))
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
+      .start()
+    try {
+      // a remainder from an earlier trigger joins the next one's arrivals;
+      // the last sample leaves on the deadline
+      ms.addData(samples.take(2): _*)
+      await(q.recentProgress.exists(_.numInputRows == 2))
+      ms.addData(samples.drop(2): _*)
+      await(client.posts.map(_.size).sum == samples.size)
+    } finally q.stop()
+    val bodies = client.posts.map(_.body.toSeq)
+    assert(bodies.size == 3, client.posts.map(_.size))
+    assert(bodies.take(2) == samples.take(6).grouped(3).map(g => RemoteWriteSink.encodeBody(g).toSeq).toSeq)
+    assert(bodies(2) == RemoteWriteSink.encodeBody(samples.drop(6)).toSeq)
   }
 
   // --- sink semantics (write.go:194-236) -----------------------------------
@@ -128,7 +156,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   private def batch(tenant: String, ts: Long = 0L): Batch =
-    Batch(tenant, Seq(RemoteWriteSink.entry(sample(tenant, ts))), "size")
+    Batch(tenant, RemoteWriteSink.entry(sample(tenant, ts)), 1, "size")
 
   test("recoverable error replays the batch (throw, no ack)") {
     Metrics.reset()
