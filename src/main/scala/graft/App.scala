@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.functions.{AvroJsonSchema, PromKernel}
 import graft.operators.PromPipeline
 import graft.sources.{BrokerSource, HttpRemoteWriteSource}
 import graft.streaming._
@@ -146,20 +147,19 @@ object App {
     */
   private[graft] def consume(spark: SparkSession, flags: Flags): Unit = {
     import spark.implicits._
-    // the source reads its own settings (topic, --topic-dir, --readers,
-    // --pulsar.*) from the flags; parsed here too to reject unknown flags
-    // before the query starts
+    // the source reads its own settings (topic, --topic-dir, --pulsar.*)
+    // from the flags; parsed here too to reject unknown flags before the
+    // query starts
     val source = BrokerSource.Config.from(flags)
     val url = flags.str("remote-write.url", "http://localhost:9090/api/v1/write")
     val batcher = TenantBatcher.Config.from(flags)
     // the consume side unmarshals with the configured serializer too
     // (pkg/app/consume.go reuses the pulsar serializer choice): json -> the
-    // legacy layout, anything compat/avro -> the compat layout with the
-    // __name__ backfill rule
-    val formatId = serializerOf(flags) match {
-      case "json" => 0
-      case _ => 1
-    }
+    // legacy layout, compat/avro -> the compat layout with the __name__
+    // backfill rule. Resolved as produce resolves it, so an unknown name or
+    // an unreadable or invalid schema fails here, before any query starts
+    val formatId =
+      if (AvroJsonSchema.payloadFormat(serializerOf(flags))._1 == PromKernel.JsonFormat) 0 else 1
     flags.requireAllRead()
     useLocalCheckpoints(spark)
     // consume.go:40-41: --send-timeout bounds the remote_write POST (the

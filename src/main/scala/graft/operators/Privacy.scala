@@ -65,7 +65,7 @@ object Privacy {
     * row always lands in the same class regardless of which dump carries
     * it), and because every step is a stateless broadcast join the SAME
     * call generalizes a live STREAM against a static reference
-    * (StreamOps.generalizeRoute; a class absent from the reference counts
+    * (PrivacySpec runs it on one; a class absent from the reference counts
     * as size 0 — maximally identifying — and falls through the ladder).
     * Broadcast-guarded at [[DefaultMaxClassRows]].
     */

@@ -225,8 +225,8 @@ object DataQueries18 {
     // d39 gates in order + the Gopher repetition gate): every doc
     // attributed to exactly ONE rule, so kill counts sum to the corpus
     // and the cumulative-survivor column is the published funnel. The
-    // attribution is a pure TextQuality narrow map (shared verbatim with
-    // the streaming twin StreamOps.filterWaterfall); the only exchange
+    // attribution is a pure TextQuality narrow map (withFilterWaterfall,
+    // which runs unchanged on a stream, Wave9Spec); the only exchange
     // at any corpus size is the ≤5-row rollup, and the dense 5-row rule
     // table left-joins the counts so rules that kill nothing still
     // report 0. d112 answers "what does each rule remove that no other

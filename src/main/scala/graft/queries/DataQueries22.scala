@@ -31,7 +31,7 @@ object DataQueries22 {
     // chain of 4 left_anti equi-joins on 16-bit band keys with the
     // codegen xor+popcount as a residual — stateless, so the SAME operator
     // call dedupes a live media stream against the parquet-loaded index
-    // (StreamOps.mediaDedupAgainstIndex; MediaDedupSpec pins
+    // (MediaDedup.dedupAgainstIndex on a stream; MediaDedupSpec pins
     // batch-identity).
     "m15_media_index_dedup" -> { (s, dir) =>
       val d = docs(s, dir)

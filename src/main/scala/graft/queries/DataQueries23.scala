@@ -77,8 +77,8 @@ object DataQueries23 {
     // regardless of which dump carries it, and a class absent from the
     // reference counts as size 0 (maximally identifying, falls through
     // the ladder). Thin binding of Privacy.generalizeLadderWith; the same
-    // call is the streaming router (StreamOps.generalizeRoute — stateless
-    // broadcast joins, so stream == batch row-for-row, PrivacySpec-pinned).
+    // call is the streaming router (stateless broadcast joins on a stream
+    // too, so stream == batch row-for-row, PrivacySpec-pinned).
     "d183_kanon_reference" -> { (s, dir) =>
       val all = customer(s, dir)
         .withColumn("band1k", floor(col("c_acctbal") / 1000.0))

@@ -4,11 +4,12 @@ import java.util
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -17,7 +18,8 @@ import graft.Flags
 import graft.streaming.InMemoryBroker
 
 /** Operator #13: keyed-topic consumer source (the Pulsar KeyShared consumer
-  * shape, reference pkg/pulsar/pulsar.go:98-224) as a DSv2 MicroBatchStream.
+  * shape, reference pkg/pulsar/pulsar.go:98-224), served through
+  * [[SeqStream]] like the receiver.
   *
   * Semantics preserved:
   *   - messages surface as (key, payload) rows in arrival order; per-key
@@ -51,24 +53,26 @@ object BrokerSource {
   ))
 
   /** Consumed-but-uncommitted view addressed by dense seqno offsets. */
-  sealed abstract class Cursor {
+  sealed abstract class Cursor extends SeqCursor {
     protected val seq = new AtomicLong(0L)
     /** Pull everything currently available into the offset-addressed buffer. */
     def poll(): Long
-    /** Drop (and where the broker needs it, acknowledge) offsets below `until`. */
-    def commit(until: Long): Unit
-    /** Plan the executor-side partitions for [from, until). `readers > 1`
-      * splits the batch into up to that many partitions BY KEY HASH, so
-      * decode/transform work parallelizes across tasks while every key
-      * stays in one partition in arrival order — the KeyShared contract
-      * carried into the task layout.
-      */
-    def planPartitions(from: Long, until: Long, readers: Int): Array[InputPartition]
-    /** Rebase a fresh cursor so new deliveries number from the checkpointed
-      * start (no-op unless a backend's seqnos are not stable across
-      * restarts — see [[PulsarCursor]]).
-      */
-    def ensureBase(start: Long): Unit = ()
+    override def latest: Long = poll()
+  }
+
+  /** Splits a batch into at most `width` groups by key hash, so decode and
+    * transform work parallelizes across tasks while every key stays in one
+    * group in arrival order — the KeyShared contract carried into the task
+    * layout. A batch holding any record whose hash is unknown stays one
+    * group: guessing that record's group could separate it from other
+    * records of its key.
+    */
+  private[sources] def splitByKey[T: ClassTag](batch: Array[T], width: Int)(
+      hash: T => Option[Int]): Array[Array[T]] = {
+    val hashes = batch.map(hash)
+    if (width <= 1 || batch.length <= 1 || hashes.exists(_.isEmpty)) Array(batch)
+    else batch.indices.toArray.groupBy(i => hashes(i).get % width)
+      .toArray.sortBy(_._1).map(_._2.map(batch(_)))
   }
 
   /** Cursor whose buffer holds materialized messages on the driver (the
@@ -80,8 +84,7 @@ object BrokerSource {
     def range(from: Long, until: Long): Array[InMemoryBroker.Message] =
       buf.subMap(from, until).values.toArray(Array.empty[InMemoryBroker.Message])
     override def commit(until: Long): Unit = buf.headMap(until).clear()
-    override def planPartitions(from: Long, until: Long,
-        readers: Int): Array[InputPartition] = synchronized {
+    override def plan(from: Long, until: Long, width: Int): Array[SeqPartition] = synchronized {
       // A restored in-flight batch is planned BEFORE this incarnation's
       // first scheduled poll: pull whatever the broker has already
       // redelivered so the replay serves it...
@@ -93,11 +96,8 @@ object BrokerSource {
       // inside [from, until), never served to any batch, yet acked by
       // commit(until): silent data loss under at-least-once.
       seq.getAndUpdate(s => math.max(s, until))
-      if (readers <= 1 || msgs.length <= 1) Array(BrokerInputPartition(msgs))
-      else msgs.groupBy(m => graft.streaming.FileTopic.keyHash(m.key) % readers)
-        .toSeq.sortBy(_._1)
-        .map { case (_, ms) => BrokerInputPartition(ms): InputPartition }
-        .toArray
+      splitByKey(msgs, width)(m => Some(graft.streaming.FileTopic.keyHash(m.key)))
+        .map(BrokerInputPartition(_))
     }
   }
 
@@ -128,8 +128,7 @@ object BrokerSource {
       seq.get()
     }
     override def commit(until: Long): Unit = names.headMap(until).clear()
-    override def planPartitions(from: Long, until: Long,
-        readers: Int): Array[InputPartition] = {
+    override def plan(from: Long, until: Long, width: Int): Array[SeqPartition] = {
       // A restored in-flight batch is planned before any poll() of this
       // incarnation; seqnos are deterministic (lexicographic file order),
       // so listing here re-fills the replayed window with the same names
@@ -137,18 +136,10 @@ object BrokerSource {
       // derives from the durable listing, not arrival time.)
       poll()
       val ns = names.subMap(from, until).values.toArray(Array.empty[String])
-      // split by key hash only when EVERY name carries the -kh suffix: a
-      // legacy name's key is known only inside the file, and guessing a
-      // partition for it (e.g. from the name) could separate it from other
-      // messages of the same key — the batch stays one partition instead,
-      // trading parallelism for the per-key ordering contract
-      val hashes = ns.map(graft.streaming.FileTopic.keyHashOf)
-      if (readers <= 1 || ns.length <= 1 || hashes.exists(_.isEmpty))
-        Array(FileRangePartition(dir, ns))
-      else ns.zip(hashes).groupBy { case (_, h) => h.get % readers }
-        .toSeq.sortBy(_._1)
-        .map { case (_, group) => FileRangePartition(dir, group.map(_._1)): InputPartition }
-        .toArray
+      // a legacy name (no -kh suffix) has no hash: its key is known only
+      // inside the file, so the batch stays one partition
+      splitByKey(ns, width)(graft.streaming.FileTopic.keyHashOf)
+        .map(FileRangePartition(dir, _))
     }
   }
 
@@ -175,7 +166,7 @@ object BrokerSource {
     * number from the checkpointed start — without it, `commit` would
     * acknowledge seqnos below the start that were never served to any
     * batch in this run (silent data loss under at-least-once). The second
-    * half of that guarantee lives in [[MaterializedCursor.planPartitions]]:
+    * half of that guarantee lives in [[MaterializedCursor.plan]]:
     * a replayed in-flight batch polls at planning time (serving anything
     * already redelivered) and then fences the seqno clock past its window,
     * so a redelivery arriving later is numbered AFTER the window, served by
@@ -208,9 +199,9 @@ object BrokerSource {
       // one-shot rebase on the FIRST restored offset: the checkpointed
       // start becomes this incarnation's zero, so redelivered unacked
       // messages line up with the restored numbering. Entries polled
-      // before the start was known (Trigger.AvailableNow polls during
-      // query initialization) are shifted up — they were numbered from 0
-      // and nothing was served or committed yet.
+      // before the start was known (any poll made before the stream
+      // handed the cursor its start) are shifted up — they were numbered
+      // from 0 and nothing was served or committed yet.
       if (!rebased) {
         rebased = true
         if (start > 0 && !served) {
@@ -266,16 +257,12 @@ object BrokerSource {
     * in-memory topic.
     * @param subscription `--pulsar.subscription` (consume.go:42-43):
     * consumers sharing the name split the topic, a new name replays it.
-    * @param readers split each batch into up to this many partitions by key
-    * hash — decode parallelizes across tasks, every key stays in one
-    * partition in arrival order. Default: the session's default
-    * parallelism.
     * @param maxRecords option `maxRecordsPerTrigger`, not a CLI flag: rate
     * limit per micro-batch (0 = unbounded) — the `maxOffsetsPerTrigger`
     * analog.
     */
   final case class Config(pulsar: graft.streaming.PulsarSink.Config,
-      dir: String, subscription: String, readers: Int, maxRecords: Long) {
+      dir: String, subscription: String, maxRecords: Long) {
     def topic: String = pulsar.topic
     def realBroker: Boolean = pulsar.url.nonEmpty
     /** The topic this config reads: broker url and topic, file dir, or name. */
@@ -288,8 +275,6 @@ object BrokerSource {
       Config(graft.streaming.PulsarSink.Config.from(f),
         dir = f.str("topic-dir", ""),
         subscription = f.str("pulsar.subscription", "pulsar-adapter"),
-        readers = f.int("readers",
-          org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism),
         maxRecords = f.option("maxRecordsPerTrigger").fold(0L)(_.toLong))
   }
 
@@ -328,115 +313,42 @@ object BrokerSource {
 class BrokerSourceProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = BrokerSource.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new BrokerTable(BrokerSource.Config.from(Flags(properties)))
-}
-
-class BrokerTable(cfg: BrokerSource.Config) extends Table with SupportsRead {
-  override def name(): String = s"broker:${cfg.where}@${cfg.subscription}"
-  override def schema(): StructType = BrokerSource.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = BrokerSource.schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new BrokerStream(cfg)
-      }
-    }
-}
-
-final case class BrokerOffset(seq: Long) extends Offset {
-  override def json(): String = seq.toString
-}
-
-/** The consume query's stream over one [[BrokerSource.Config]]. */
-class BrokerStream(cfg: BrokerSource.Config)
-  extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
-  import cfg._
-  private lazy val cursor = BrokerSource.cursor(cfg)
-  // Trigger.AvailableNow pins the end offset at the first planned batch;
-  // batches then step toward it under the read limit and the query stops
-  // there. The pin happens INSIDE latestOffset(start, _) — after
-  // ensureBase — so a restored PulsarCursor's rebase can't strand the
-  // target in pre-rebase numbering.
-  @volatile private var availableNowRequested = false
-  @volatile private var availableNowTarget: java.lang.Long = null
-
-  override def initialOffset(): Offset = BrokerOffset(0L)
-  override def latestOffset(): Offset = BrokerOffset(cursor.poll())
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowRequested = true
-
-  override def getDefaultReadLimit: ReadLimit =
-    if (maxRecords > 0) ReadLimit.maxRows(maxRecords) else ReadLimit.allAvailable()
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val s = start.asInstanceOf[BrokerOffset].seq
-    cursor.ensureBase(s)
-    val polled = cursor.poll()
-    if (availableNowRequested && availableNowTarget == null)
-      availableNowTarget = polled
-    val avail = if (availableNowTarget != null) math.min(availableNowTarget, polled) else polled
-    limit match {
-      // seqnos are dense, so an offset cap IS a row cap
-      case r: ReadMaxRows => BrokerOffset(math.min(avail, s + r.maxRows()))
-      case _ => BrokerOffset(avail)
-    }
+      properties: util.Map[String, String]): Table = {
+    val cfg = BrokerSource.Config.from(Flags(properties))
+    new SeqTable(s"broker:${cfg.where}@${cfg.subscription}", BrokerSource.schema,
+      cfg.maxRecords, () => BrokerSource.cursor(cfg))
   }
-
-  override def reportLatestOffset(): Offset = BrokerOffset(cursor.poll())
-  override def deserializeOffset(json: String): Offset = BrokerOffset(json.toLong)
-  override def commit(end: Offset): Unit = cursor.commit(end.asInstanceOf[BrokerOffset].seq)
-  override def stop(): Unit = ()
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[BrokerOffset].seq
-    val e = end.asInstanceOf[BrokerOffset].seq
-    cursor.ensureBase(s)
-    if (e <= s) Array.empty else cursor.planPartitions(s, e, readers)
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    (partition: InputPartition) => partition match {
-      case BrokerInputPartition(msgs) => new PartitionReader[InternalRow] {
-        private var i = -1
-        override def next(): Boolean = { i += 1; i < msgs.length }
-        override def get(): InternalRow = {
-          val m = msgs(i)
-          InternalRow(
-            if (m.key == null) null else UTF8String.fromString(m.key),
-            m.payload)
-        }
-        override def close(): Unit = ()
-      }
-      // executor-side segment reads: only file names crossed the driver
-      case FileRangePartition(d, names) => new PartitionReader[InternalRow] {
-        private var i = -1
-        private var row: InternalRow = _
-        override def next(): Boolean = {
-          i += 1
-          if (i >= names.length) false
-          else {
-            val (k, payload) = graft.streaming.FileTopic.read(d, names(i))
-            row = InternalRow(
-              if (k == null) null else UTF8String.fromString(k), payload)
-            true
-          }
-        }
-        override def get(): InternalRow = row
-        override def close(): Unit = ()
-      }
-      case other => throw new IllegalArgumentException(
-        s"unexpected partition type ${other.getClass.getName}")
-    }
 }
 
 final case class BrokerInputPartition(msgs: Array[InMemoryBroker.Message])
-    extends InputPartition
+    extends SeqPartition {
+  override def reader(): PartitionReader[InternalRow] = new PartitionReader[InternalRow] {
+    private var i = -1
+    override def next(): Boolean = { i += 1; i < msgs.length }
+    override def get(): InternalRow = {
+      val m = msgs(i)
+      InternalRow(if (m.key == null) null else UTF8String.fromString(m.key), m.payload)
+    }
+    override def close(): Unit = ()
+  }
+}
 
 /** File-topic partition: the driver ships names; executors read payloads. */
 final case class FileRangePartition(dir: String, names: Array[String])
-    extends InputPartition
+    extends SeqPartition {
+  override def reader(): PartitionReader[InternalRow] = new PartitionReader[InternalRow] {
+    private var i = -1
+    private var row: InternalRow = _
+    override def next(): Boolean = {
+      i += 1
+      if (i >= names.length) false
+      else {
+        val (k, payload) = graft.streaming.FileTopic.read(dir, names(i))
+        row = InternalRow(if (k == null) null else UTF8String.fromString(k), payload)
+        true
+      }
+    }
+    override def get(): InternalRow = row
+    override def close(): Unit = ()
+  }
+}

@@ -5,10 +5,9 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -19,7 +18,7 @@ import graft.functions.PromKernel
 /** Operator #1: HTTP remote_write receiver source (reference:
   * pkg/app/produce.go:124-152, pkg/app/server.go, pkg/context/handlers.go).
   *
-  * A DataSource V2 `MicroBatchStream`: an embedded HTTP server accepts
+  * A [[SeqCursor]] served through [[SeqStream]]: an embedded HTTP server accepts
   * remote_write POSTs, validates them exactly like the reference's handler
   * (read failure => 500, snappy/proto failure => 400, else 200), extracts
   * the tenant inputs (BasicAuth user + X-Scope-OrgID header,
@@ -616,7 +615,7 @@ object HttpRemoteWriteSource {
     * acknowledged payloads, a strictly weaker contract than the
     * reference's; use the WAL when the 200 must mean durable.
     */
-  final class Receiver(private[HttpRemoteWriteSource] val config: Config) {
+  final class Receiver(private[HttpRemoteWriteSource] val config: Config) extends SeqCursor {
     import config._
     // validate HERE, before the registry insertion: a throw inside
     // computeIfAbsent leaves no stale entry, so a corrected retry on the
@@ -645,6 +644,9 @@ object HttpRemoteWriteSource {
     private[graft] def endPublish(s: Long): Unit =
       seqLock.synchronized { inFlight.remove(s) }
     private val connBirth = new ConcurrentHashMap[String, java.lang.Long]()
+    private val lastSweepMs = new AtomicLong(0L)
+    /** Test seam: the connections whose age is tracked. */
+    private[graft] def trackedConnections: Int = connBirth.size
     @volatile private var server: com.sun.net.httpserver.HttpServer = _
     private val wal: Wal =
       if (walDir.isEmpty) null else new Wal(java.nio.file.Paths.get(walDir))
@@ -661,6 +663,10 @@ object HttpRemoteWriteSource {
 
     /** handlers.go:42-49: stamp Connection: close when the (keep-alive)
       * connection — identified by the client socket address — is too old.
+      * A connection that closes younger never comes back to be removed, so
+      * at most once per age interval every entry past the age is swept. A
+      * live connection that was swept starts a new age on its next
+      * request: none lives past twice the age.
       */
     private def ageGate(e: com.sun.net.httpserver.HttpExchange): Unit = {
       if (maxConnectionAgeMs > 0L) {
@@ -671,6 +677,9 @@ object HttpRemoteWriteSource {
           e.getResponseHeaders.set("Connection", "close")
           connBirth.remove(id)
         }
+        val last = lastSweepMs.get()
+        if (now - last >= maxConnectionAgeMs && lastSweepMs.compareAndSet(last, now))
+          connBirth.values.removeIf((b: java.lang.Long) => now - b >= maxConnectionAgeMs)
       }
     }
 
@@ -796,12 +805,15 @@ object HttpRemoteWriteSource {
       } finally if (assigned >= 0) endPublish(assigned)
     }
 
-    def latest: Long = seqLock.synchronized {
+    override def latest: Long = seqLock.synchronized {
       if (inFlight.isEmpty) seq.get() else inFlight.first()
     }
     def range(from: Long, until: Long): Array[Received] =
       buf.subMap(from, until).values.toArray(Array.empty[Received])
-    def commit(until: Long): Unit = {
+    /** One partition per trigger, whatever the width: it keeps request order. */
+    override def plan(from: Long, until: Long, width: Int): Array[SeqPartition] =
+      Array(HttpInputPartition(range(from, until)))
+    override def commit(until: Long): Unit = {
       buf.headMap(until).clear()
       if (wal != null) wal.commit(until)
     }
@@ -867,64 +879,26 @@ class HttpRemoteWriteProvider extends TableProvider {
     HttpRemoteWriteSource.schema
   override def getTable(
       schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new HttpRemoteWriteTable(HttpRemoteWriteSource.Config.from(Flags(properties)))
-}
-
-class HttpRemoteWriteTable(cfg: HttpRemoteWriteSource.Config)
-    extends Table with SupportsRead {
-  override def name(): String = s"http-remote-write:${cfg.port}${cfg.path}"
-  override def schema(): StructType = HttpRemoteWriteSource.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = HttpRemoteWriteSource.schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new HttpRemoteWriteStream(cfg)
-      }
-    }
-}
-
-final case class HttpOffset(seq: Long) extends Offset {
-  override def json(): String = seq.toString
-}
-
-class HttpRemoteWriteStream(cfg: HttpRemoteWriteSource.Config)
-    extends MicroBatchStream {
-  private val receiver = HttpRemoteWriteSource.receiver(cfg)
-
-  override def initialOffset(): Offset = HttpOffset(0L)
-  override def latestOffset(): Offset = HttpOffset(receiver.latest)
-  override def deserializeOffset(json: String): Offset = HttpOffset(json.toLong)
-  override def commit(end: Offset): Unit =
-    receiver.commit(end.asInstanceOf[HttpOffset].seq)
-  override def stop(): Unit = ()
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[HttpOffset].seq
-    val e = end.asInstanceOf[HttpOffset].seq
-    if (e <= s) Array.empty
-    else Array(HttpInputPartition(receiver.range(s, e)))
+      properties: util.Map[String, String]): Table = {
+    val cfg = HttpRemoteWriteSource.Config.from(Flags(properties))
+    new SeqTable(s"http-remote-write:${cfg.port}${cfg.path}", HttpRemoteWriteSource.schema,
+      0L, () => HttpRemoteWriteSource.receiver(cfg))
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    (partition: InputPartition) => new PartitionReader[InternalRow] {
-      private val msgs = partition.asInstanceOf[HttpInputPartition].msgs
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < msgs.length }
-      override def get(): InternalRow = {
-        val m = msgs(i)
-        InternalRow(
-          m.body,
-          if (m.basicAuthUser == null) null else UTF8String.fromString(m.basicAuthUser),
-          if (m.orgIdHeader == null) null else UTF8String.fromString(m.orgIdHeader),
-          m.receivedAtMs)
-      }
-      override def close(): Unit = ()
-    }
 }
 
 final case class HttpInputPartition(msgs: Array[HttpRemoteWriteSource.Received])
-    extends InputPartition
+    extends SeqPartition {
+  override def reader(): PartitionReader[InternalRow] = new PartitionReader[InternalRow] {
+    private var i = -1
+    override def next(): Boolean = { i += 1; i < msgs.length }
+    override def get(): InternalRow = {
+      val m = msgs(i)
+      InternalRow(
+        m.body,
+        if (m.basicAuthUser == null) null else UTF8String.fromString(m.basicAuthUser),
+        if (m.orgIdHeader == null) null else UTF8String.fromString(m.orgIdHeader),
+        m.receivedAtMs)
+    }
+    override def close(): Unit = ()
+  }
+}

@@ -73,29 +73,6 @@ object StreamOps {
       .filter(col("hm") * col("c") < col("m") * 1048576L)
       .drop("hm", "c", "m")
 
-  /** Streaming context-window chunking (the streaming twin of d45): the
-    * shared [[graft.operators.TextChunking]] narrow map + per-row explode —
-    * stateless, so documents arriving on a stream chunk identically to the
-    * batch path with no watermark and no shuffle.
-    */
-  def chunkFixed(df: DataFrame, idCol: String, textCol: String,
-      width: Int, stride: Int): DataFrame =
-    graft.operators.TextChunking.chunkFixed(df, idCol, textCol, width, stride)
-
-  /** Streaming cross-shard dedup (the streaming twin of d41): dedupe a
-    * stream of newly ingested documents against a STATIC reference corpus —
-    * drop on an exact content-hash match or any shared LSH band bucket, as
-    * stateless stream-static left-anti joins (no watermark, no stream
-    * state; replays keep identical rows). The reference buckets use the
-    * batch signature shape, so a corpus indexed offline dedupes a live dump
-    * stream with the same decisions the batch pipeline would make.
-    */
-  def dedupAgainstStatic(stream: DataFrame, reference: DataFrame,
-      idCol: String, textCol: String, shingleN: Int = 3,
-      bands: Int = 4): DataFrame =
-    graft.operators.TextDedup.dedupAgainstStream(
-      stream, reference, idCol, textCol, shingleN, bands)
-
   /** Streaming quality-rule filter (the streaming twin of d39): the
     * Gopher-style keep predicate via the shared TextQuality narrow map —
     * no state, no shuffle; replay gives identical keeps.
@@ -105,21 +82,6 @@ object StreamOps {
     graft.operators.TextQuality
       .withQualityRules(df, textCol, minWords, maxWords)
       .filter(col("keep")).drop("keep")
-
-  /** Streaming repetition stats (the streaming twin of d38): per-row
-    * duplicate-word/bigram fractions via the shared TextQuality narrow map.
-    */
-  def repetitionStats(df: DataFrame, textCol: String): DataFrame =
-    graft.operators.TextQuality.withRepetitionStats(df, textCol)
-
-  /** Streaming filter-waterfall attribution (d160's twin): each live doc
-    * tagged with the FIRST cascade rule it fails (or `pass`) via the
-    * shared TextQuality narrow map — the per-doc decision is stateless, so
-    * the stream twin is a delegation and a live kill-rate monitor is just
-    * a windowed count over `first_fail`. Batch-identical labels.
-    */
-  def filterWaterfall(df: DataFrame, textCol: String): DataFrame =
-    graft.operators.TextQuality.withFilterWaterfall(df, textCol)
 
   /** Streaming embedding-drift sums (d158's twin): per-shard per-dim
     * integer component sums — the quantize-before-sum discipline makes the
@@ -139,17 +101,6 @@ object StreamOps {
       .groupBy(col("shard"), col("d"))
       .agg(sum(col("xq")).as("sv"))
 
-  /** Streaming BPE encode (the streaming twin of d137): the trained merge
-    * list applied by the same codegen'd kernel pass as the batch
-    * [[graft.operators.BpeTokenizer.encode]], token ids resolved through a
-    * LITERAL vocabulary map (vocab-bounded — the
-    * `BpeTokenizer.vocabularyMap` collect the trainer already pays) so the
-    * whole operator is one stateless narrow projection: no joins, no
-    * aggregation state, identical ids on a batch corpus and a live stream.
-    * Unknown tokens map to 0 (the batch path's reserved unk id).
-    * Output: `(idCol, n_tok, ids)` — the exact [[withTokenIds]] shape a
-    * downstream packing stage consumes.
-    */
   /** Streaming rendezvous router (d148's twin): per-row highest-random-
     * weight shard assignment over `shards` buckets — the elastic stream
     * router whose defining property (adding a shard moves keys ONLY to
@@ -163,15 +114,17 @@ object StreamOps {
          |  CAST(conv(substring(md5(concat(CAST($idCol AS STRING), ':', CAST(s AS STRING))), 1, 15), 16, 10) AS BIGINT) AS h,
          |  CAST(s AS BIGINT) AS s))).s""".stripMargin))
 
-  /** Streaming WordPiece encode (d145's twin): the batch
-    * [[graft.operators.BpeTokenizer.wordpieceEncode]] IS already a
-    * stateless narrow kernel projection, so the stream twin delegates to
-    * it verbatim — same trained literal lexicon, batch-identical tokens.
+  /** Streaming BPE encode (the streaming twin of d137): the trained merge
+    * list applied by the same codegen'd kernel pass as the batch
+    * [[graft.operators.BpeTokenizer.encode]], token ids resolved through a
+    * LITERAL vocabulary map (vocab-bounded — the
+    * `BpeTokenizer.vocabularyMap` collect the trainer already pays) so the
+    * whole operator is one stateless narrow projection: no joins, no
+    * aggregation state, identical ids on a batch corpus and a live stream.
+    * Unknown tokens map to 0 (the batch path's reserved unk id).
+    * Output: `(idCol, n_tok, ids)` — the exact [[withTokenIds]] shape a
+    * downstream packing stage consumes.
     */
-  def encodeWordpiece(df: DataFrame, idCol: String, textCol: String,
-      lexicon: Seq[String]): DataFrame =
-    graft.operators.BpeTokenizer.wordpieceEncode(df, idCol, textCol, lexicon)
-
   def encodeBpe(df: DataFrame, idCol: String, textCol: String,
       merges: Seq[String], vocab: Map[String, Long]): DataFrame = {
     val m = array(merges.map(lit): _*)
@@ -308,19 +261,6 @@ object StreamOps {
           .as("bin"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("w_start"), col("bin"), col("n"))
-
-  /** Live generalization routing (the streaming twin of d183 /
-    * Privacy.generalizeLadderWith): each arriving row settles at the
-    * smallest generalization level whose equivalence class — sized on the
-    * STATIC reference corpus — reaches k, gaining `settle_level` and
-    * `class_key`. Every step is a stateless broadcast join against the
-    * tiny per-level class tables, so stream and batch run the identical
-    * plan (no stream state; PrivacySpec pins batch/stream row identity)
-    * and the router scales like any stream-static enrichment.
-    */
-  def generalizeRoute(stream: DataFrame, levels: Seq[Seq[String]], k: Int,
-      reference: DataFrame): DataFrame =
-    graft.operators.Privacy.generalizeLadderWith(stream, levels, k, reference)
 
   /** Per-window count-min sketch (the streaming twin of q47): the 4 x 32
     * counter cells of [[graft.functions.CountMin]] per event-time tumbling
@@ -472,7 +412,7 @@ object StreamOps {
   /** Live token-yield ledger (d166's streaming sibling, composed from the
     * deployed twins): each arriving doc runs the filter-waterfall narrow
     * map, is tagged duplicate-vs-new against a STATIC reference corpus by
-    * exact content hash (the d41/dedupAgainstStatic stream-static shape —
+    * exact content hash (the d41/TextDedup.dedupAgainstStream stream-static shape —
     * no stream state for the dedup decision), and a watermarked
     * event-time window rolls up the funnel a pipeline dashboard shows
     * live: docs seen, docs passing the cascade, genuinely-new survivors,
@@ -499,21 +439,4 @@ object StreamOps {
       .select(col("w.start").as("w_start"), col("n_docs"), col("n_pass"),
         col("n_new"), col("raw_tokens"), col("kept_tokens"))
   }
-
-  /** Streaming MEDIA near-dup against a persisted frame-hash index (the
-    * media twin of TextDedup.dedupAgainstIndexStream, binding m15's batch
-    * shape): drop incoming frame-hash rows within `maxHamming` bits of any
-    * hash in an offline-built [[graft.operators.MediaDedup.buildIndex]]
-    * table (parquet-loaded; the reference media is decoded once EVER).
-    * The plan is a chain of stateless stream-static left_anti equi-joins
-    * on 16-bit band keys with a codegen xor+popcount residual — no
-    * watermark, no stream state, and decisions are BATCH-IDENTICAL
-    * (MediaDedupSpec pins stream-vs-batch row identity). Feed it
-    * Multimodal.videoFrameDHash output (poison rows filtered) or any
-    * (id, 64-bit hash) stream.
-    */
-  def mediaDedupAgainstIndex(frames: DataFrame, index: DataFrame,
-      hashCol: String, bands: Int = 4, maxHamming: Int = 8): DataFrame =
-    graft.operators.MediaDedup.dedupAgainstIndex(
-      frames, index, hashCol, bands, maxHamming)
 }

@@ -24,7 +24,8 @@ import graft.operators.PromPipeline
   *
   * Each sample is encoded once, before the tenant shuffle, into its final
   * remote_write entry ([[PromPipeline.remoteWriteEntries]]). Encoding in
-  * the source's tasks spreads it over `--readers`; carrying label maps
+  * the source's tasks spreads it over the source's key-hash split, as
+  * wide as the session's default parallelism; carrying label maps
   * through the state instead cost more in row conversion than the encoding
   * itself (bridge benchmark consume_drain: 50 tenants x batch 100, 5,000
   * samples a trigger, local[4] on 4 cores, traced runs: state 2.75 -> 1.44

@@ -72,24 +72,41 @@ class AppFlagsSpec extends AnyFunSuite {
     assert(p.getMessage.contains("--web.listn-port") && !p.getMessage.contains("--web.listen-port"),
       p.getMessage)
     val c = intercept[Flags.UsageError](App.consume(null,
-      flags("--readers", "1", "--topic", "t", "--batch-sise", "10")))
+      flags("--topic", "t", "--batch-sise", "10")))
     assert(c.getMessage.contains("--batch-sise"), c.getMessage)
     // a source option is not a CLI flag
     assert(intercept[Flags.UsageError](App.produce(null, flags("--validate", "false")))
       .getMessage.contains("--validate"))
     assert(intercept[Flags.UsageError](App.consume(null,
-      flags("--readers", "1", "--maxRecordsPerTrigger", "5")))
+      flags("--maxRecordsPerTrigger", "5")))
       .getMessage.contains("--maxRecordsPerTrigger"))
     // consume-only flags are unknown to produce, as in the reference
     assert(intercept[Flags.UsageError](App.produce(null, flags("--batch-size", "5")))
       .getMessage.contains("--batch-size"))
-    // the removed executor-pull consume mode's flags
-    Seq("pulsar.executor-consumers" -> "true", "pulsar.sticky-ranges" -> "true",
+    // the removed executor-pull consume mode's flags, and --readers (the
+    // split width is the session's default parallelism)
+    Seq("readers" -> "1", "pulsar.executor-consumers" -> "true", "pulsar.sticky-ranges" -> "true",
       "pulsar.ack-timeout-ms" -> "30000", "pulsar.idle-suppress-after" -> "3",
       "pulsar.idle-probe-every" -> "10").foreach { case (name, value) =>
       val e = intercept[Flags.UsageError](App.consume(null,
-        flags("--readers", "1", s"--$name", value)))
+        flags(s"--$name", value)))
       assert(e.getMessage.contains(s"--$name"), e.getMessage)
     }
+  }
+
+  test("consume resolves its serializer as produce does, before any query starts") {
+    // spark is never touched: the name is resolved before the query is built
+    val bogus = intercept[IllegalArgumentException](App.consume(null,
+      flags("--topic", "t", "--serializer", "bogus")))
+    assert(bogus.getMessage.contains("unknown serializer: bogus"), bogus.getMessage)
+    val missing = intercept[IllegalArgumentException](App.consume(null,
+      flags("--pulsar.serializer", "avro-json-compat=/nonexistent/schema.avsc")))
+    assert(missing.getMessage.contains("/nonexistent/schema.avsc"), missing.getMessage)
+    val invalid = java.nio.file.Files.createTempFile("graft-schema", ".avsc")
+    try {
+      java.nio.file.Files.write(invalid, "{\"type\": \"record\"".getBytes("UTF-8"))
+      intercept[IllegalArgumentException](App.consume(null,
+        flags("--pulsar.serializer", s"avro-json-compat=$invalid")))
+    } finally java.nio.file.Files.delete(invalid)
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.catalyst.InternalRow
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{BrokerInputPartition, BrokerOffset, BrokerSource, BrokerStream, FileRangePartition}
+import graft.sources.{BrokerSource, FileRangePartition, SeqOffset, SeqStream}
 import graft.streaming.{FileTopic, PulsarSink}
 
 /** Cursor-level guarantees of the consume source:
@@ -29,10 +29,10 @@ class BrokerCursorSpec extends AnyFunSuite {
     p.flush(); p.close()
   }
 
-  /** A file-topic stream; one partition per batch unless `readers` says more. */
-  private def fileStream(dir: String, subscription: String, readers: Int = 1): BrokerStream =
-    new BrokerStream(BrokerSource.Config.from(Flags("topic" -> "t", "topic-dir" -> dir,
-      "pulsar.subscription" -> subscription, "readers" -> readers.toString)))
+  /** A file-topic stream; one partition per batch unless `width` says more. */
+  private def fileStream(dir: String, subscription: String, width: Int = 1): SeqStream =
+    new SeqStream(BrokerSource.cursor(BrokerSource.Config.from(Flags("topic" -> "t",
+      "topic-dir" -> dir, "pulsar.subscription" -> subscription))), width)
 
   private def readAll(r: PartitionReader[InternalRow]): Seq[(String, String)] = {
     val out = mutable.Buffer.empty[(String, String)]
@@ -48,9 +48,9 @@ class BrokerCursorSpec extends AnyFunSuite {
     val dir = tmpDir()
     produce(dir, 5)
     val stream = fileStream(dir, "cursor-spec-1")
-    val end = stream.latestOffset().asInstanceOf[BrokerOffset].seq
+    val end = stream.latestOffset().asInstanceOf[SeqOffset].seq
     assert(end == 5)
-    val parts = stream.planInputPartitions(BrokerOffset(0), BrokerOffset(end))
+    val parts = stream.planInputPartitions(SeqOffset(0), SeqOffset(end))
     assert(parts.length == 1)
     // the partition the driver ships carries NO payload bytes — names only
     val fp = parts.head match {
@@ -63,8 +63,8 @@ class BrokerCursorSpec extends AnyFunSuite {
     assert(rows.map(_._1) == (0 until 5).map(i => s"k$i") &&
       rows.map(_._2) == (0 until 5).map(i => s"payload-$i"))
     // commit drops the committed prefix; later offsets still plan
-    stream.commit(BrokerOffset(3))
-    val rest = stream.planInputPartitions(BrokerOffset(3), BrokerOffset(5))
+    stream.commit(SeqOffset(3))
+    val rest = stream.planInputPartitions(SeqOffset(3), SeqOffset(5))
     val restRows = readAll(stream.createReaderFactory().createReader(rest.head))
     assert(restRows.map(_._2) == Seq("payload-3", "payload-4"))
   }
@@ -75,9 +75,9 @@ class BrokerCursorSpec extends AnyFunSuite {
     val p = new FileTopic.Factory(dir).create(0L)
     (0 until 20).foreach(i => p.sendAsync(s"k${i % 5}", s"m-$i".getBytes("UTF-8")))
     p.flush(); p.close()
-    val stream = fileStream(dir, "cursor-spec-readers", readers = 3)
-    val end = stream.latestOffset().asInstanceOf[BrokerOffset].seq
-    val parts = stream.planInputPartitions(BrokerOffset(0), BrokerOffset(end))
+    val stream = fileStream(dir, "cursor-spec-readers", width = 3)
+    val end = stream.latestOffset().asInstanceOf[SeqOffset].seq
+    val parts = stream.planInputPartitions(SeqOffset(0), SeqOffset(end))
     assert(parts.length > 1 && parts.length <= 3, s"${parts.length} partitions")
     val factory = stream.createReaderFactory()
     val byPart = parts.map(pt => readAll(factory.createReader(pt)))
@@ -100,7 +100,7 @@ class BrokerCursorSpec extends AnyFunSuite {
 
   test("a legacy name without the key-hash suffix forces a single partition") {
     val dir = tmpDir()
-    produce(dir, 6) // 6 distinct keys -> would split across 3 readers
+    produce(dir, 6) // 6 distinct keys -> would split 3 ways
     // simulate a message from a pre-suffix producer: same payload layout,
     // name without -kh — its key is only knowable by opening the file
     val legacy = FileTopic.listNamesAfter(dir, "").head
@@ -108,9 +108,9 @@ class BrokerCursorSpec extends AnyFunSuite {
     java.nio.file.Files.move(
       java.nio.file.Paths.get(dir).resolve(legacy),
       java.nio.file.Paths.get(dir).resolve(legacyName))
-    val stream = fileStream(dir, "cursor-spec-legacy", readers = 3)
-    val end = stream.latestOffset().asInstanceOf[BrokerOffset].seq
-    val parts = stream.planInputPartitions(BrokerOffset(0), BrokerOffset(end))
+    val stream = fileStream(dir, "cursor-spec-legacy", width = 3)
+    val end = stream.latestOffset().asInstanceOf[SeqOffset].seq
+    val parts = stream.planInputPartitions(SeqOffset(0), SeqOffset(end))
     // splitting would have to guess the legacy message's key and could
     // separate it from its siblings: the whole batch stays one partition
     assert(parts.length == 1)
@@ -119,31 +119,44 @@ class BrokerCursorSpec extends AnyFunSuite {
       (0 until 6).map(i => s"payload-$i"))
   }
 
-  test("streaming query with readers>1 executes multi-partition micro-batches") {
+  test("a consume stream splits across the session's default parallelism") {
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    val width = spark.sparkContext.defaultParallelism
     val dir = tmpDir()
     produce(dir, 12) // 12 distinct keys
     val df = spark.readStream.format("graft.sources.BrokerSourceProvider")
-      .option("topic-dir", dir).option("pulsar.subscription", "cursor-spec-stream")
-      .option("readers", "3").load()
+      .option("topic-dir", dir).option("pulsar.subscription", "cursor-spec-stream").load()
       .select(org.apache.spark.sql.functions.col("key"),
         org.apache.spark.sql.functions.spark_partition_id().as("pid"))
-    val q = df.writeStream.format("memory").queryName("readers_out")
+    val q = df.writeStream.format("memory").queryName("split_out")
       .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(100L))
       .start()
     try {
       q.processAllAvailable()
-      val rows = spark.table("readers_out").collect()
+      val rows = spark.table("split_out").collect()
         .map(r => r.getString(0) -> r.getInt(1))
       assert(rows.length == 12, s"${rows.length} rows")
-      // the batch actually spread across more than one source partition
-      assert(rows.map(_._2).distinct.length > 1, rows.mkString(","))
+      // the batch spread across more than one source partition, and no
+      // wider than the session's default parallelism
+      val pids = rows.map(_._2).distinct
+      assert(pids.length > 1 && pids.length <= width, s"width $width: ${rows.mkString(",")}")
+      // progress names the source by its cursor; listeners tell produce
+      // from consume by it
+      assert(q.lastProgress.sources.head.description.contains("BrokerSource$FileCursor"),
+        q.lastProgress.sources.head.description)
     } finally q.stop()
+  }
+
+  test("the stream's description names the receiver as its source") {
+    val r = new graft.sources.HttpRemoteWriteSource.Receiver(
+      graft.sources.HttpRemoteWriteSource.Config.from(Flags()))
+    try assert(new SeqStream(r, 1).toString.contains("HttpRemoteWriteSource$Receiver"))
+    finally r.stop()
   }
 
   // --- fake pulsar-client consumer (duck-typed for the reflection seam) ----
@@ -191,7 +204,7 @@ class BrokerCursorSpec extends AnyFunSuite {
     fake.pending += new FakeMsg("k5", Array[Byte](5), new FakeMessageId(5))
     fake.pending += new FakeMsg("k6", Array[Byte](6), new FakeMessageId(6))
     val c = cursorOver(fake)
-    c.ensureBase(5) // BrokerStream calls this with the restored start offset
+    c.ensureBase(5) // SeqStream calls this with the restored start offset
     assert(c.poll() == 7)
     // the redelivered messages are SERVED to the [5,7) batch...
     assert(c.range(5, 7).map(_.key).toSeq == Seq("k5", "k6"))
@@ -212,7 +225,7 @@ class BrokerCursorSpec extends AnyFunSuite {
     val fake = new FakeConsumer
     val c = cursorOver(fake)
     c.ensureBase(5)
-    val parts = c.planPartitions(5, 7, 1)
+    val parts = c.plan(5, 7, 1)
     assert(parts.map { case graft.sources.BrokerInputPartition(ms) => ms.length }.sum == 0)
     // redeliveries arrive AFTER the window was planned; progress reporting
     // polls before the batch commits
@@ -238,7 +251,7 @@ class BrokerCursorSpec extends AnyFunSuite {
     fake.pending += new FakeMsg("k6", Array[Byte](6), new FakeMessageId(6))
     val c = cursorOver(fake)
     c.ensureBase(5)
-    val parts = c.planPartitions(5, 7, 1)
+    val parts = c.plan(5, 7, 1)
     val served = parts.flatMap { case graft.sources.BrokerInputPartition(ms) => ms }
     assert(served.map(_.key).toSeq == Seq("k5", "k6"))
     c.commit(7)
@@ -252,17 +265,17 @@ class BrokerCursorSpec extends AnyFunSuite {
     // incarnation 2's first call is the replay's planInputPartitions —
     // before any latestOffset/poll
     val stream = fileStream(dir, "cursor-spec-replay")
-    val parts = stream.planInputPartitions(BrokerOffset(3), BrokerOffset(5))
+    val parts = stream.planInputPartitions(SeqOffset(3), SeqOffset(5))
     assert(parts.length == 1)
     val rows = readAll(stream.createReaderFactory().createReader(parts.head))
     assert(rows.map(_._2) == Seq("payload-3", "payload-4"), rows.toString)
   }
 
   test("rebase shifts entries polled before the restored start was known") {
-    // Trigger.AvailableNow polls during query initialization, BEFORE the
-    // restored start offset reaches the cursor: the redelivery lands at
-    // seqno 0; the later ensureBase(5) must shift it so the restored batch
-    // [5, 6) serves it and the ack covers the right message
+    // a poll made BEFORE the restored start offset reaches the cursor:
+    // the redelivery lands at seqno 0; the later ensureBase(5) must shift
+    // it so the restored batch [5, 6) serves it and the ack covers the
+    // right message
     val fake = new FakeConsumer
     fake.pending += new FakeMsg("k5", Array[Byte](5), new FakeMessageId(5))
     val c = cursorOver(fake)

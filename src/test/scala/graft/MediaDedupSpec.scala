@@ -130,7 +130,7 @@ class MediaDedupSpec extends AnyFunSuite {
       rows.toDF("doc_id", "dhash"), idx, "dhash", bands = 4, maxHamming = 3)
       .as[(Long, Long)].collect().sorted
     val ms = MemoryStream[(Long, Long)](spark)
-    val q = graft.streaming.StreamOps.mediaDedupAgainstIndex(
+    val q = MediaDedup.dedupAgainstIndex(
         ms.toDF().toDF("doc_id", "dhash"), idx, "dhash",
         bands = 4, maxHamming = 3)
       .writeStream.format("memory").queryName("media_dedup_out")

@@ -87,7 +87,7 @@ class PrivacySpec extends AnyFunSuite {
     val rows = Seq(("B", "x"), ("A", "x"), ("D", "z"), ("C", "y"))
     val levels = Seq(Seq("g", "sub"), Seq("g"), Seq("all"))
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, String)](spark)
-    val q = graft.streaming.StreamOps.generalizeRoute(
+    val q = Privacy.generalizeLadderWith(
         ms.toDF().toDF("g", "sub").withColumn("all", lit("*")), levels, 5, df)
       .select("g", "sub", "settle_level", "class_key")
       .writeStream.format("memory").queryName("gen_route_out")

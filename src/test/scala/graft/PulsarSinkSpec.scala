@@ -21,8 +21,7 @@ class PulsarSinkSpec extends AnyFunSuite {
       "--pulsar.insecure-skip-tls-verify", "true",
       "--pulsar.max-connections-per-broker", "4",
       "--send-timeout", "12s",
-      "--pulsar.subscription", "my-shared-sub",
-      "--readers", "1"))
+      "--pulsar.subscription", "my-shared-sub"))
     val cfg = PulsarSink.Config.from(flags)
     assert(cfg.url == "pulsar+ssl://pulsar-proxy:6651")
     assert(cfg.topic == "metrics-tls")
@@ -43,7 +42,7 @@ class PulsarSinkSpec extends AnyFunSuite {
     assert(d.url == "" && d.topic == "metrics" && d.connectionTimeoutMs == 30000L
       && d.maxConnectionsPerBroker == 1 && !d.insecureSkipTlsVerify)
     assert(d.operationTimeoutMs == 30000L &&
-      BrokerSource.Config.from(Flags("readers" -> "1")).subscription == "pulsar-adapter")
+      BrokerSource.Config.from(Flags()).subscription == "pulsar-adapter")
   }
 
   test("--pulsar.topic and its alias --topic name one topic for produce and consume") {
@@ -55,7 +54,7 @@ class PulsarSinkSpec extends AnyFunSuite {
         Seq("--topic", "t", "--pulsar.topic", "pt") -> "pt", // reference spelling wins
         Seq("--pulsar.topic=pt", "--topic=t") -> "pt",
         Seq.empty[String] -> "metrics")) {
-      val flags = Flags.parse(Seq("--pulsar.url", "pulsar://broker:6650", "--readers", "1") ++ args)
+      val flags = Flags.parse(Seq("--pulsar.url", "pulsar://broker:6650") ++ args)
       val produce = PulsarSink.Config.from(flags)
       val consume = BrokerSource.Config.from(flags)
       assert(produce.topic == topic && consume.topic == topic && consume.pulsar == produce, args)
@@ -114,7 +113,7 @@ class PulsarSinkSpec extends AnyFunSuite {
   test("consumer cursor fails fast without pulsar-client on the classpath") {
     val c = BrokerSource.cursor(BrokerSource.Config.from(Flags(
       "pulsar.url" -> "pulsar://localhost:6650", "topic" -> "t-consumer-ff",
-      "pulsar.subscription" -> "sub-ff", "readers" -> "1")))
+      "pulsar.subscription" -> "sub-ff")))
     val e = intercept[IllegalStateException](c.poll())
     assert(e.getMessage.contains("pulsar-client is not on the classpath"), e.getMessage)
     assert(e.getMessage.contains("consume from"), e.getMessage)
@@ -124,7 +123,6 @@ class PulsarSinkSpec extends AnyFunSuite {
     val props = new java.util.HashMap[String, String]()
     props.put("topic", "pt")
     props.put("pulsar.subscription", "my-sub")
-    props.put("readers", "1")
     props.put("pulsar.url", "pulsar+ssl://proxy:6651")
     val t = new graft.sources.BrokerSourceProvider().getTable(null, Array.empty, props)
     assert(t.name() == "broker:pulsar:pulsar+ssl://proxy:6651/pt@my-sub", t.name())

@@ -155,14 +155,14 @@ class StreamOpsSpec extends AnyFunSuite {
     import s.implicits._
     val rows = Seq((1L, "a" * 30), (2L, "b" * 500), (3L, ""))
     val ms = MemoryStream[(Long, String)](spark)
-    val q = StreamOps.chunkFixed(ms.toDF().toDF("doc_id", "text"), "doc_id", "text", 64, 48)
+    val q = graft.operators.TextChunking.chunkFixed(ms.toDF().toDF("doc_id", "text"), "doc_id", "text", 64, 48)
       .writeStream.format("memory").queryName("chunk_out").outputMode("append").start()
     try {
       ms.addData(rows: _*)
       q.processAllAvailable()
       val got = spark.table("chunk_out").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(4))).toSet
-      val expect = StreamOps.chunkFixed(rows.toDF("doc_id", "text"), "doc_id", "text", 64, 48)
+      val expect = graft.operators.TextChunking.chunkFixed(rows.toDF("doc_id", "text"), "doc_id", "text", 64, 48)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(4))).toSet
       assert(got == expect && got.nonEmpty)
     } finally q.stop()
@@ -202,10 +202,10 @@ class StreamOpsSpec extends AnyFunSuite {
       .option("topic", topic).option("maxRecordsPerTrigger", "3").load()
     val q = src.writeStream.format("memory").queryName("rate_out")
       .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(100L))
       .start()
     try {
-      q.awaitTermination(30000)
+      q.processAllAvailable()
       assert(spark.table("rate_out").count() == 10)
       val sizes = q.recentProgress.map(_.numInputRows).filter(_ > 0)
       assert(sizes.nonEmpty && sizes.forall(_ <= 3), sizes.mkString(","))
@@ -243,7 +243,7 @@ class StreamOpsSpec extends AnyFunSuite {
       (12L, "a genuinely new document mentioning parquet files and columns")
     )
     val ms = MemoryStream[(Long, String)](spark)
-    val out = graft.streaming.StreamOps.dedupAgainstStatic(
+    val out = graft.operators.TextDedup.dedupAgainstStream(
       ms.toDF().toDF("id", "text"), reference, "id", "text")
     val q = out.writeStream.format("memory").queryName("xdedup_out")
       .outputMode("append").start()
@@ -267,7 +267,7 @@ class StreamOpsSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val ms = MemoryStream[(Long, String)](spark)
-    val out = StreamOps.repetitionStats(ms.toDF().toDF("id", "text"), "text")
+    val out = graft.operators.TextQuality.withRepetitionStats(ms.toDF().toDF("id", "text"), "text")
     val q = out.writeStream.format("memory").queryName("rep_out")
       .outputMode("append").start()
     try {

@@ -233,6 +233,32 @@ class StreamingSpec extends AnyFunSuite {
     } finally graft.sources.HttpRemoteWriteSource.shutdown(19460)
   }
 
+  test("receiver: max-connection-age forgets connections that closed young") {
+    val port = 19463
+    val r = graft.sources.HttpRemoteWriteSource.receiver(
+      graft.sources.HttpRemoteWriteSource.Config.from(Flags("web.listen-port" -> port.toString,
+        "validate" -> "false", "web.max-connection-age" -> "1s")))
+    // one request on its own connection, closed after the response
+    def oneShot(): Int = {
+      val s = new java.net.Socket("127.0.0.1", port)
+      try {
+        s.getOutputStream.write(("POST /write HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+          "Content-Length: 1\r\nConnection: close\r\n\r\nx").getBytes("US-ASCII"))
+        s.getOutputStream.flush()
+        new java.io.BufferedReader(new java.io.InputStreamReader(s.getInputStream, "US-ASCII"))
+          .readLine().split(" ")(1).toInt
+      } finally s.close()
+    }
+    try {
+      (0 until 40).foreach(_ => assert(oneShot() == 200))
+      assert(r.trackedConnections > 1, "each client address is tracked")
+      Thread.sleep(1100)
+      // past the age, the next request sweeps every entry older than it
+      assert(oneShot() == 200)
+      assert(r.trackedConnections == 1, s"${r.trackedConnections} connections tracked")
+    } finally graft.sources.HttpRemoteWriteSource.shutdown(port)
+  }
+
   test("receiver: /debug/pprof JVM facade (server.go:84-92), disabled when asked") {
     def get(port: Int): java.net.http.HttpResponse[String] =
       java.net.http.HttpClient.newHttpClient().send(

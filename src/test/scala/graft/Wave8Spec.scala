@@ -299,7 +299,7 @@ class Wave8Spec extends AnyFunSuite {
       .wordpieceEncode(docs, "doc_id", "text", lex)
       .select(col("doc_id"), col("n_tok"), col("tokens"))
     val ms = MemoryStream[(Long, String)](spark)
-    val out = graft.streaming.StreamOps.encodeWordpiece(
+    val out = graft.operators.BpeTokenizer.wordpieceEncode(
       ms.toDF().toDF("doc_id", "text"), "doc_id", "text", lex)
     val query = out.writeStream.format("memory").queryName("wp_stream_out")
       .outputMode("append").start()

@@ -119,8 +119,8 @@ class Wave9Spec extends AnyFunSuite {
     val batch = graft.operators.TextQuality.withFilterWaterfall(docs, "text")
       .select(col("doc_id"), col("first_fail").as("bf"))
     val ms = MemoryStream[(Long, String)](spark)
-    val out = graft.streaming.StreamOps
-      .filterWaterfall(ms.toDF().toDF("doc_id", "text"), "text")
+    val out = graft.operators.TextQuality
+      .withFilterWaterfall(ms.toDF().toDF("doc_id", "text"), "text")
       .select(col("doc_id"), col("first_fail"))
     val query = out.writeStream.format("memory").queryName("wf_stream_out")
       .outputMode("append").start()
