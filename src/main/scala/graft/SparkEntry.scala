@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.PromPipeline
-import graft.queries.{DataQueries, DataQueries2, DataQueries3, DataQueries4, DataQueries5, DataQueries6, DataQueries7, DataQueries8, DataQueries9, DataQueries10, DataQueries11, DataQueries12, DataQueries13, DataQueries14, DataQueries15, DataQueries16, DataQueries17, DataQueries18, DataQueries19, DataQueries20, DataQueries21, DataQueries22, DataQueries23, DataQueries24, DataQueries25, EventSamples, PipelineQueries, RelationalQueries, RelationalQueries2, RelationalQueries3}
+import graft.queries._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -18,21 +18,19 @@ object SparkEntry {
       .select("event_id", "payload", "key")
   }
 
+  /** The inventory's modules, each named once. A query name in a later
+    * module replaces the same name in an earlier one.
+    */
+  private val modules: Seq[QueryModule] = Seq(
+    PipelineQueries, RelationalQueries, DataQueries, DataQueries2, DataQueries3, DataQueries4,
+    DataQueries5, DataQueries6, DataQueries7, DataQueries8, DataQueries9, DataQueries10,
+    DataQueries11, DataQueries12, DataQueries13, DataQueries14, DataQueries15, DataQueries16,
+    DataQueries17, DataQueries18, DataQueries19, DataQueries20, DataQueries21, DataQueries22,
+    DataQueries23, DataQueries24, DataQueries25, RelationalQueries2, RelationalQueries3)
+
   /** One entry per implemented operator from SURVEY.md §2 (+ north-star). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    PipelineQueries.queries ++ RelationalQueries.queries ++ DataQueries.queries ++
-      DataQueries2.queries ++ DataQueries3.queries ++ DataQueries4.queries ++
-      DataQueries5.queries ++ DataQueries6.queries ++ DataQueries7.queries ++
-      DataQueries8.queries ++ DataQueries9.queries ++ DataQueries10.queries ++
-      DataQueries11.queries ++ DataQueries12.queries ++ DataQueries13.queries ++ DataQueries14.queries ++ DataQueries15.queries ++ DataQueries16.queries ++ DataQueries17.queries ++ DataQueries18.queries ++ DataQueries19.queries ++ DataQueries20.queries ++ DataQueries21.queries ++ DataQueries22.queries ++ DataQueries23.queries ++ DataQueries24.queries ++ DataQueries25.queries ++
-      RelationalQueries2.queries ++ RelationalQueries3.queries
+  lazy val queries: Map[String, Q] = modules.map(_.queries).reduce(_ ++ _)
 
   /** DuckDB-runnable oracle per query (same parquet tables). */
-  def oracleSql: Map[String, String] =
-    PipelineQueries.oracles ++ RelationalQueries.oracles ++ DataQueries.oracles ++
-      DataQueries2.oracles ++ DataQueries3.oracles ++ DataQueries4.oracles ++
-      DataQueries5.oracles ++ DataQueries6.oracles ++ DataQueries7.oracles ++
-      DataQueries8.oracles ++ DataQueries9.oracles ++ DataQueries10.oracles ++
-      DataQueries11.oracles ++ DataQueries12.oracles ++ DataQueries13.oracles ++ DataQueries14.oracles ++ DataQueries15.oracles ++ DataQueries16.oracles ++ DataQueries17.oracles ++ DataQueries18.oracles ++ DataQueries19.oracles ++ DataQueries20.oracles ++ DataQueries21.oracles ++ DataQueries22.oracles ++ DataQueries23.oracles ++ DataQueries24.oracles ++ DataQueries25.oracles ++
-      RelationalQueries2.oracles ++ RelationalQueries3.oracles
+  lazy val oracleSql: Map[String, String] = modules.map(_.oracles).reduce(_ ++ _)
 }

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -11,19 +10,13 @@ import graft.model.Model
 
 /** Public column-function surface of the engine.
   *
-  * All scalars bind through `StaticInvoke` — Catalyst generates a direct
-  * static call into [[PromCatalyst]], so these stay inside whole-stage
-  * codegen (no UDF serialization, no Row boxing).
+  * Every function calls a [[Kernel]] binding. The SQL surface
+  * ([[GraftFunctions]]) calls these functions, so the two spellings of a
+  * kernel build one expression.
   */
 object prom {
 
-  private val C = classOf[PromCatalyst.type]
-
-  private def expr(c: Column): Expression = ColumnBridge.expression(c)
-
-  private def invoke(dt: DataType, name: String, args: Seq[Expression], nullable: Boolean = false): Column =
-    ColumnBridge.column(StaticInvoke(C, dt, name, args.toIndexedSeq, Nil,
-      true, nullable, true, None))
+  private def literal(v: Any): Column = ColumnBridge.column(Literal(v))
 
   /** Labels map coalesced to empty, tenant to "" (omitempty semantics). */
   private def normLabels(labels: Column): Column =
@@ -34,19 +27,19 @@ object prom {
 
   /** Shortest-round-trip float string: `456` not `456.0`, `+Inf`, `NaN`. */
   def prom_value_string(value: Column): Column =
-    invoke(StringType, "valueString", Seq(expr(value)))
+    Kernel.valueString(value)
 
   /** Epoch-ms -> fractional seconds string (`10001` -> `"10.001"`). */
   def prom_seconds_string(ms: Column): Column =
-    invoke(StringType, "secondsString", Seq(expr(ms)))
+    Kernel.secondsString(ms)
 
   /** Epoch-ms -> RFC3339Nano UTC with trimmed fractional zeros. */
   def rfc3339_nano(ms: Column): Column =
-    invoke(StringType, "rfc3339Nano", Seq(expr(ms)))
+    Kernel.rfc3339Nano(ms)
 
   /** RFC3339 string -> epoch ms; null on malformed input. */
   def parse_rfc3339(s: Column): Column =
-    invoke(LongType, "parseRfc3339", Seq(expr(s)), nullable = true)
+    Kernel.parseRfc3339(s)
 
   // --- serializers (formats: serializers.go json/json-compat/avro-json) -----
   //
@@ -55,10 +48,6 @@ object prom {
   // a sample fill. The produce query runs the series stage once per series
   // ([[prom_series]]); the column functions over one row per sample run both.
 
-  private[functions] val seriesType = StructType(Seq(
-    StructField("key", StringType, nullable = false),
-    StructField("template", BinaryType, nullable = false)))
-
   /** Series stage over a decoded series' `array<struct<name, value>>`
     * labels: struct(key, template) — the partition key and the payload with
     * the timestamp and the value left open ([[prom_fill]]). `format` is an
@@ -66,23 +55,23 @@ object prom {
     */
   def prom_series(format: (Int, String), labelEntries: Column, tenant: Column,
       replicaLabels: Seq[String]): Column =
-    seriesCol("seriesOfEntries", format, labelEntries, tenant, replicaLabels)
+    seriesCol(Kernel.seriesOfEntries, format, labelEntries, tenant, replicaLabels)
 
   /** [[prom_series]] over a labels map (one row per sample). */
   def prom_series_of_map(format: (Int, String), labels: Column, tenant: Column,
       replicaLabels: Seq[String] = Seq(Model.DefaultReplicaLabel)): Column =
-    seriesCol("seriesOfMap", format, normLabels(labels), tenant, replicaLabels)
+    seriesCol(Kernel.seriesOfMap, format, normLabels(labels), tenant, replicaLabels)
 
-  private def seriesCol(kernel: String, format: (Int, String), labels: Column, tenant: Column,
+  private def seriesCol(kernel: Kernel, format: (Int, String), labels: Column, tenant: Column,
       replicaLabels: Seq[String]): Column =
-    invoke(seriesType, kernel, Seq(Literal(format._1), Literal(format._2), expr(labels),
-      expr(normTenant(tenant)), expr(array(replicaLabels.map(lit): _*))))
+    kernel(literal(format._1), literal(format._2), labels, normTenant(tenant),
+      array(replicaLabels.map(lit): _*))
 
   /** Sample stage: a series template with the sample's timestamp and value
     * rendered in — the payload.
     */
   def prom_fill(template: Column, ms: Column, value: Column): Column =
-    invoke(StringType, "fill", Seq(expr(template), expr(ms), expr(value)))
+    Kernel.fill(template, ms, value)
 
   private def payloadCol(format: (Int, String), ms: Column, value: Column, labels: Column,
       tenant: Column): Column =
@@ -109,15 +98,13 @@ object prom {
     * `map_from_entries` treats them.
     */
   def prom_label_map(labelEntries: Column): Column =
-    invoke(MapType(StringType, StringType, valueContainsNull = true), "labelMap",
-      Seq(expr(labelEntries)), nullable = true)
+    Kernel.labelMap(labelEntries)
 
   /** Inverse: payload -> struct(timestampMs, value, labels, tenantId); null on
     * poison input (skip-and-ack, pulsar.go:190-201). format 0=json, 1=compat.
     */
   def prom_deserialize(format: Int, payload: Column): Column =
-    invoke(Model.sampleSchema, "deserialize",
-      Seq(Literal(format), expr(payload)), nullable = true)
+    Kernel.deserialize(literal(format), payload)
 
   // --- series partition key (serializers.go:91-114) -------------------------
 
@@ -128,45 +115,44 @@ object prom {
   // --- codecs ---------------------------------------------------------------
 
   def snappy_compress(data: Column): Column =
-    invoke(BinaryType, "snappyCompress", Seq(expr(data)))
+    Kernel.snappyCompress(data)
 
   /** null on corrupt input (HTTP 400 semantics, produce.go:132-137). */
   def snappy_uncompress(data: Column): Column =
-    invoke(BinaryType, "snappyUncompress", Seq(expr(data)), nullable = true)
+    Kernel.snappyUncompress(data)
 
   /** prompb WriteRequest encode: timeseries array column -> proto bytes. */
   def pb_encode(timeseries: Column): Column =
-    invoke(BinaryType, "pbEncode", Seq(expr(timeseries)))
+    Kernel.pbEncode(timeseries)
 
   /** One sample -> its `WriteRequest.timeseries` entry bytes (single-sample
     * series, labels sorted by name); a batch's entries concatenate into its
     * WriteRequest.
     */
   def pb_series_entry(labels: Column, ms: Column, value: Column): Column =
-    invoke(BinaryType, "seriesEntry", Seq(expr(normLabels(labels)), expr(ms), expr(value)))
+    Kernel.seriesEntry(normLabels(labels), ms, value)
 
   /** proto bytes -> timeseries array (null on malformed input). */
   def pb_decode(data: Column): Column =
-    invoke(ArrayType(Model.timeseriesSchema, containsNull = false), "pbDecode",
-      Seq(expr(data)), nullable = true)
+    Kernel.pbDecode(data)
 
   /** 64-bit polynomial rolling fingerprint (h = h*31 + byte mod 2^64). */
   def fingerprint64(s: Column): Column =
-    invoke(LongType, "fingerprint64", Seq(expr(s)))
+    Kernel.fingerprint64(s)
 
   /** 64-bit frequency-weighted SimHash bitstring over whitespace tokens. */
   def simhash64(text: Column): Column =
-    invoke(StringType, "simhash64", Seq(expr(text)))
+    Kernel.simhash64(text)
 
   /** Hamming distance between two bitstring signatures (codegen'd single
     * pass; positions beyond the shorter string count as differing).
     */
   def hamming64(a: Column, b: Column): Column =
-    invoke(LongType, "hamming64", Seq(expr(a), expr(b)))
+    Kernel.hamming64(a, b)
 
   /** Wrapping g*a+b mod 2^64 (minhash family; ANSI-safe). */
   def mix64(g: Column, a: Long, b: Long): Column =
-    invoke(LongType, "mix64", Seq(expr(g), Literal(a), Literal(b)))
+    Kernel.mix64(g, literal(a), literal(b))
 
   /** Distinct word n-gram shingles as 60-bit md5-prefix values — value-equal
     * to `conv(substring(md5(shingle),1,15),16,10)` over
@@ -174,15 +160,13 @@ object prom {
     * (no per-shingle string columns; downstream explodes move 8-byte longs).
     */
   def shingle_g(text: Column, n: Int): Column =
-    invoke(ArrayType(LongType, containsNull = false), "shingleG",
-      Seq(expr(text), Literal(n)))
+    Kernel.shingleG(text, literal(n))
 
   /** All word n-grams (with repeats, document order) as 60-bit md5-prefix
     * values — the frequency-carrying sibling of [[shingle_g]].
     */
   def ngram_g(text: Column, n: Int): Column =
-    invoke(ArrayType(LongType, containsNull = false), "ngramG",
-      Seq(expr(text), Literal(n)))
+    Kernel.ngramG(text, literal(n))
 
   /** Apply a trained BPE merge list (array of `"a b"` entries, training
     * order) to whitespace-tokenized text; returns the post-merge token
@@ -190,32 +174,29 @@ object prom {
     * merge — see [[graft.operators.BpeTokenizer]]).
     */
   def apply_merges(text: Column, merges: Column): Column =
-    invoke(ArrayType(StringType, containsNull = false), "applyMerges",
-      Seq(expr(text), expr(merges)))
+    Kernel.applyMerges(text, merges)
 
   /** [[apply_merges]] with whitespace WORDS as the starting symbols
     * (SentencePiece-style phrase merging over the whole text — see
     * [[graft.functions.PromCatalyst.applyMergesWords]]).
     */
   def apply_merges_words(text: Column, merges: Column): Column =
-    invoke(ArrayType(StringType, containsNull = false), "applyMergesWords",
-      Seq(expr(text), expr(merges)))
+    Kernel.applyMergesWords(text, merges)
 
   /** Greedy longest-match-first (WordPiece-style) subword tokenize against
     * a literal lexicon array; unmatched positions pass through as single
     * characters (see [[graft.functions.PromCatalyst.wordpiece]]).
     */
   def wordpiece(text: Column, pieces: Column): Column =
-    invoke(ArrayType(StringType, containsNull = false), "wordpiece",
-      Seq(expr(text), expr(pieces)))
+    Kernel.wordpiece(text, pieces)
 
   /** Codegen'd left-fold dot product over two array<double> columns. */
   def vec_dot(a: Column, b: Column): Column =
-    invoke(DoubleType, "vecDot", Seq(expr(a), expr(b)))
+    Kernel.vecDot(a, b)
 
   /** Codegen'd exact integer squared distance over two array<long> columns. */
   def vec_sqdist_q(a: Column, b: Column): Column =
-    invoke(LongType, "vecSqDistQ", Seq(expr(a), expr(b)))
+    Kernel.vecSqDistQ(a, b)
 
   /** Greedy next-fit bin ids for an array<long> of token counts — the O(n)
     * mutable-builder kernel behind `SequencePacking.packGreedy` (a Catalyst
@@ -223,6 +204,5 @@ object prom {
     * `maxDocsPerSeq <= 0` = unbounded.
     */
   def next_fit_bins(toks: Column, seqLen: Int, maxDocsPerSeq: Int = 0): Column =
-    invoke(ArrayType(LongType, containsNull = false), "nextFitBins",
-      Seq(expr(toks), Literal(seqLen.toLong), Literal(maxDocsPerSeq.toLong)))
+    Kernel.nextFitBins(toks, literal(seqLen.toLong), literal(maxDocsPerSeq.toLong))
 }

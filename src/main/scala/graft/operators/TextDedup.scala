@@ -459,12 +459,10 @@ object TextDedup {
           .as(Seq("__p", "__h")))
     val ga = gr.select(col("__id").as("a"), col("__p").as("__pa"), col("__h"))
     val gb = gr.select(col("__id").as("b"), col("__p").as("__pb"), col("__h"))
-    // the pair list is candidate-priced (the same bound that lets `ids`
-    // broadcast above) — broadcast it into the first match join so the
-    // a-side gram stream is never exchanged on `a` (r22, guide §3.1: the
-    // big side is not shuffled at all; before, both the pair list and the
-    // full positional gram stream paid an exchange + sort for an SMJ)
-    val m = broadcast(p.select(col("a"), col("b")))
+    // no broadcast hint on the pair list: d190 slowed down when one was
+    // forced here, and without it d190 measured no slower (cold, sf0.1, 4
+    // cores); the planner's size threshold decides
+    val m = p.select(col("a"), col("b"))
       .join(ga, Seq("a"))
       .join(gb, Seq("b", "__h"))
       .select(col("a"), col("b"), col("__pa"), col("__pb"))
@@ -929,7 +927,9 @@ object TextDedup {
     // side at 32 cores (VERDICT r21 item 2's width concern)
     val candIds = cand.select(col("a").as("__id"))
       .union(cand.select(col("b").as("__id"))).distinct()
-    val docGrams = g.join(broadcast(candIds), Seq("__id"), "left_semi")
+    // no broadcast hint: the candidate set has no bound by construction,
+    // so the planner's size threshold decides
+    val docGrams = g.join(candIds, Seq("__id"), "left_semi")
       .groupBy(col("__id"))
       .agg(collect_list(col("g")).as("__gs"))
       .transform(graft.sources.Caches.ephemeral)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.prom.vec_dot
+
 /** Public table-agnostic embedding-similarity API — the verified d04/d24/d37
   * shapes for ANY DataFrame with an id and an `Array[Float/Double]` vector
   * column. The scale path is SRP banding (candidates from a bucket-shuffle
@@ -12,7 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object VectorSearch {
 
-  private def dot(a: Column, b: Column): Column = graft.functions.prom.vec_dot(a, b)
   private def toDouble(a: Column): Column = transform(a, x => x.cast("double"))
 
   private def pairExpand(ids: Column): Column =
@@ -22,7 +23,7 @@ object VectorSearch {
   /** `(id, v: array<double>, nrm)` — the normalized working set. */
   def normalized(df: DataFrame, idCol: String, vecCol: String): DataFrame =
     df.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+      .withColumn("nrm", sqrt(vec_dot(col("v"), col("v"))))
 
   /** Signed-random-projection signatures: `planes` hyperplanes over `dims`
     * dimensions with ±1 weights derived from md5(plane, dim); components
@@ -90,7 +91,7 @@ object VectorSearch {
       .join(n.select(col("id").as("a"), col("v").as("va"), col("nrm").as("na")), "a")
       .join(n.select(col("id").as("b"), col("v").as("vb"), col("nrm").as("nb")), "b")
       .select(col("a"), col("b"),
-        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos"))
+        (vec_dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos"))
   }
 
   /** IVF coarse assignment — the 100 TB blocking path: every vector joins
@@ -107,7 +108,7 @@ object VectorSearch {
       .select(col("id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))
     val scored = e.join(broadcast(c))
       .select(col("id"), col("v"), col("nrm"), col("cid"),
-        (dot(col("v"), col("cv")) / (col("nrm") * col("cn"))).as("ccos"))
+        (vec_dot(col("v"), col("cv")) / (col("nrm") * col("cn"))).as("ccos"))
     val w = Window.partitionBy(col("id")).orderBy(col("ccos").desc, col("cid"))
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("id"), col("v"), col("nrm"), col("cid").as("cell"))
@@ -126,7 +127,7 @@ object VectorSearch {
   def semanticDedup(assigned: DataFrame, tau: Double): DataFrame = {
     val dropped = assigned.as("x").join(assigned.as("y"),
         col("x.cell") === col("y.cell") && col("x.id") < col("y.id"))
-      .filter(dot(col("x.v"), col("y.v")) / (col("x.nrm") * col("y.nrm")) >= tau)
+      .filter(vec_dot(col("x.v"), col("y.v")) / (col("x.nrm") * col("y.nrm")) >= tau)
       .select(col("y.id").as("id")).distinct()
     assigned.join(dropped.withColumn("dup", lit(true)), Seq("id"), "left")
       .select(col("id"), col("cell"),
@@ -148,7 +149,7 @@ object VectorSearch {
       .select(col("id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
     val scored = q.join(broadcast(n), col("id") =!= col("qid"))
       .select(col("qid"), col("id"),
-        (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos"))
+        (vec_dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos"))
     val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)

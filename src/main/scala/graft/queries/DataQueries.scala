@@ -1,11 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.prom.fingerprint64
-import graft.sources.Tables
 
 /** Training-data pipeline operators over `documents` / `embeddings`
   * (north-star extensions, BASELINE.md): deduplication (exact, MinHash-LSH,
@@ -17,12 +16,7 @@ import graft.sources.Tables
   * lang+source blocks) so the join is a bucket-equijoin, never a cross join
   * of the corpus; signatures are computed in one aggregation pass.
   */
-object DataQueries {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
-  private def embs(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
+object DataQueries extends QueryModule {
 
   // --- shared shingling ----------------------------------------------------
   // Word n-gram shingling is the codegen'd kernel `prom.shingle_g(text, n)`:
@@ -31,15 +25,6 @@ object DataQueries {
   // (split once -> transform/slice/concat_ws -> array_distinct -> md5 ->
   // conv) produced identical values but materialized every shingle as a
   // string column; the oracles still mirror the md5-prefix definition.
-
-  /** element-wise double ops with identical left-fold order on both engines
-    * => bit-identical cosine, no rounding needed for oracle parity.
-    */
-  // codegen'd kernel expression; same left-fold order as
-  // aggregate(zip_with(...)) => bit-identical to the DuckDB fold oracle
-  private def dot(a: Column, b: Column): Column = graft.functions.prom.vec_dot(a, b)
-
-  private def toDouble(a: Column): Column = transform(a, x => x.cast("double"))
 
   /** MinHash-LSH near-duplicate candidate pairs (a < b), shared by d02 and
     * the d15 dedup-cluster query. One md5 per distinct shingle, 16 minhashes

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
-
 /** Tenth wave: the curation-planning reads a 100 TB pipeline runs BEFORE
   * committing compute — a full k-means training loop (the d76 driver-loop
   * pattern applied to embeddings), per-source distribution divergence (the
@@ -20,11 +18,7 @@ import graft.sources.Tables
   * order-fixed, and let ln() appear only per-row behind a floor-quantize
   * (the d57/d60 precedent).
   */
-object DataQueries10 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
+object DataQueries10 extends QueryModule {
 
   /** Lloyd iterations for d89. Small and fixed so the unrolled DuckDB
     * oracle stays readable; each round is O(1) jobs of corpus-wide narrow
@@ -38,7 +32,7 @@ object DataQueries10 {
     * are sums of (xq-cq)^2 <= 64 * (2e7)^2 ~ 2.6e16 per vector — Long-safe.
     */
   private[queries] def kmQuant(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "embeddings").select(col("vec_id"),
+    embs(s, dir).select(col("vec_id"),
       expr("transform(embedding, x -> cast(floor(cast(x as double) * 1000000.0) as bigint))")
         .as("xq"))
 

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
-
 /** Eleventh wave — the closing audit-and-allocation set: a second,
   * exact-complete candidate-generation algorithm (prefix filtering) to
   * stand beside LSH, hybrid retrieval fusion, cluster-quality and
@@ -21,12 +19,7 @@ import graft.sources.Tables
   * precedent); divisions only where both sides are exact integers and both
   * engines run the identical op sequence.
   */
-object DataQueries11 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
-  private def embs(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
+object DataQueries11 extends QueryModule {
 
   /** Embeddings with q6-quantized components (d89's load shape). */
   private def quantized(s: SparkSession, dir: String): DataFrame =

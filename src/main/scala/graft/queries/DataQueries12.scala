@@ -1,21 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.sources.Tables
 
 /** Wave 12 tail: retrieval diversification (MMR), leakage-free
   * cross-validated LM familiarity, and the dedup threshold sensitivity
   * curve — three reads that close loops opened by d102 (serving), d28/d33
   * (model-based filtering) and d03 (near-dup thresholds).
   */
-object DataQueries12 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
-  private def embs(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
+object DataQueries12 extends QueryModule {
 
   /** MMR parameters: lambda = 0.7 scaled by 10 to integers, shortlist 8,
     * select 4.

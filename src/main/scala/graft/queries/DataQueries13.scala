@@ -1,9 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.sources.Tables
 
 /** Wave 12 coda — three small closing audits: chunk-level dedup savings
   * (the RAG-index read over the d45 chunker), the language-ID confusion
@@ -11,11 +8,7 @@ import graft.sources.Tables
   * type-level val-set bigram coverage (the distinct-coverage complement
   * of d117's token-level familiarity).
   */
-object DataQueries13 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
+object DataQueries13 extends QueryModule {
 
   val queries: Map[String, Q] = Map[String, Q](
     // chunk-level dedup savings: d45's fixed-window chunks hashed, the

@@ -1,10 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.functions.prom.vec_dot
 
 /** Wave 12 final set — evaluation audits that close the loop between
   * operators and the GROUND TRUTH the synthetic tables carry: the
@@ -13,15 +12,7 @@ import graft.sources.Tables
   * column, and kNN classification accuracy — the "is the cheap model good
   * enough to route 100 TB" reads.
   */
-object DataQueries14 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
-  private def embs(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
-
-  private def toDouble(a: Column): Column = transform(a, x => x.cast("double"))
-  private def dot(a: Column, b: Column): Column = graft.functions.prom.vec_dot(a, b)
+object DataQueries14 extends QueryModule {
 
   val queries: Map[String, Q] = Map[String, Q](
     // duplication length profile: at gram lengths {3, 5, 8}, how many
@@ -126,7 +117,7 @@ object DataQueries14 {
       val e = embs(s, dir)
         .select(col("vec_id"), toDouble(col("embedding")).as("v"),
           col("label").cast("long").as("label"))
-        .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+        .withColumn("nrm", sqrt(vec_dot(col("v"), col("v"))))
       val q = e.filter(col("vec_id") >= 8 && col("vec_id") < 24)
         .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"),
           col("label").as("truth"))
@@ -134,7 +125,7 @@ object DataQueries14 {
       // side is the broadcast one (the d126/d133 discipline)
       val scored = e.join(broadcast(q), col("vec_id") =!= col("qid"))
         .select(col("qid"), col("truth"), col("vec_id"), col("label"),
-          (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos"))
+          (vec_dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos"))
       val wRank = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
       val top3 = scored.withColumn("rn", row_number().over(wRank)).filter(col("rn") <= 3)
       val votes = top3.groupBy(col("qid"), col("truth"), col("label"))

@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.functions.prom.vec_dot
 
 /** Wave 12 closing set — corpus-composition forensics: embedding-space
   * decontamination (the semantic complement of the d23/d50 n-gram
@@ -12,15 +12,7 @@ import graft.sources.Tables
   * per language, and the hapax-legomena rate — the reads behind "what
   * does each slice contribute, and what leaks between slices".
   */
-object DataQueries15 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
-  private def embs(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
-
-  private def toDouble(a: Column): Column = transform(a, x => x.cast("double"))
-  private def dot(a: Column, b: Column): Column = graft.functions.prom.vec_dot(a, b)
+object DataQueries15 extends QueryModule {
 
   val queries: Map[String, Q] = Map[String, Q](
     // embedding-space decontamination: for each held-out (val-split)
@@ -36,7 +28,7 @@ object DataQueries15 {
     "d126_semantic_decon" -> ((s, dir) => {
       val e = embs(s, dir)
         .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-        .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+        .withColumn("nrm", sqrt(vec_dot(col("v"), col("v"))))
         .withColumn("split",
           when(conv(substring(md5(col("vec_id").cast("string")), 9, 5), 16, 10)
             .cast("long") % 20 === 0, "val").otherwise("train"))
@@ -44,7 +36,7 @@ object DataQueries15 {
         .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
       val scored = e.filter(col("split") === "train").crossJoin(broadcast(q))
         .select(col("qid"), col("vec_id"),
-          floor(dot(col("qv"), col("v")) / (col("qn") * col("nrm")) * lit(1000000.0))
+          floor(vec_dot(col("qv"), col("v")) / (col("qn") * col("nrm")) * lit(1000000.0))
             .cast("long").as("cos_q6"))
       scored.groupBy(col("qid"))
         .agg(max(struct(col("cos_q6").as("cos_q6"),
@@ -125,8 +117,8 @@ object DataQueries15 {
         .withColumn("q8", transform(col("v"),
           x => floor(x * lit(127.0) / greatest(col("mx"), lit(1e-30))).cast("double")))
         .select(col("vec_id"), col("v"), col("q8"))
-        .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-        .withColumn("n8", sqrt(dot(col("q8"), col("q8"))))
+        .withColumn("nrm", sqrt(vec_dot(col("v"), col("v"))))
+        .withColumn("n8", sqrt(vec_dot(col("q8"), col("q8"))))
       val q = e.filter(col("vec_id") >= 8 && col("vec_id") < 16)
         .select(col("vec_id").as("qid"), col("v").as("qv"), col("q8").as("q8q"),
           col("nrm").as("qn"), col("n8").as("qn8"))
@@ -136,8 +128,8 @@ object DataQueries15 {
         scored.withColumn("cos", c).withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 3).select(col("qid"), col("vec_id"))
       }
-      val exact = top3(dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      val int8 = top3(dot(col("q8q"), col("q8")) / (col("qn8") * col("n8")))
+      val exact = top3(vec_dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
+      val int8 = top3(vec_dot(col("q8q"), col("q8")) / (col("qn8") * col("n8")))
       exact.join(int8, Seq("qid", "vec_id"), "left_semi")
         .groupBy(col("qid")).agg(count(lit(1)).as("hits"))
         .join(exact.groupBy(col("qid")).agg(count(lit(1)).as("k")), Seq("qid"), "right")

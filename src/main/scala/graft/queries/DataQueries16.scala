@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.functions.prom.vec_dot
 
 /** Wave 13 — shipping the promised second halves of two stated designs:
   * the SRP-banded 100 TB variant of d126's semantic decontamination
@@ -20,15 +20,8 @@ import graft.sources.Tables
   * expressions, argmax/argmin as min/max-struct rollups with explicit id
   * tiebreaks.
   */
-object DataQueries16 {
+object DataQueries16 extends QueryModule {
 
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
-  private def embs(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
-
-  private def toDouble(a: Column): Column = transform(a, x => x.cast("double"))
-  private def dot(a: Column, b: Column): Column = graft.functions.prom.vec_dot(a, b)
   private def d2q(x: Column, c: Column): Column = graft.functions.prom.vec_sqdist_q(x, c)
 
   val queries: Map[String, Q] = Map[String, Q](
@@ -47,7 +40,7 @@ object DataQueries16 {
     "d134_banded_decon" -> ((s, dir) => {
       val e = embs(s, dir)
         .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-        .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+        .withColumn("nrm", sqrt(vec_dot(col("v"), col("v"))))
         .withColumn("split",
           when(conv(substring(md5(col("vec_id").cast("string")), 9, 5), 16, 10)
             .cast("long") % 20 === 0, "val").otherwise("train"))
@@ -79,7 +72,7 @@ object DataQueries16 {
           .select(col("vec_id").as("id"), col("v"), col("nrm")), "id")
         .join(broadcast(qv), "qid")
         .select(col("qid"), col("id"),
-          floor(dot(col("qv"), col("v")) / (col("qn") * col("nrm")) * lit(1000000.0))
+          floor(vec_dot(col("qv"), col("v")) / (col("qn") * col("nrm")) * lit(1000000.0))
             .cast("long").as("cos_q6"))
         .groupBy(col("qid"))
         .agg(max(struct(col("cos_q6").as("cos_q6"), (-col("id")).as("neg_id"))).as("m"))
@@ -88,7 +81,7 @@ object DataQueries16 {
       // exact baseline — byte-identical to d126's computation
       val exactNN = e.filter(col("split") === "train").crossJoin(broadcast(qv))
         .select(col("qid"), col("vec_id"),
-          floor(dot(col("qv"), col("v")) / (col("qn") * col("nrm")) * lit(1000000.0))
+          floor(vec_dot(col("qv"), col("v")) / (col("qn") * col("nrm")) * lit(1000000.0))
             .cast("long").as("cos_q6"))
         .groupBy(col("qid"))
         .agg(max(struct(col("cos_q6").as("cos_q6"), (-col("vec_id")).as("neg_id"))).as("m"))

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.functions.prom.vec_dot
+import graft.sources.Caches
 
 /** Wave 14 (round 13) — the language-model estimation and ingest-planning
   * reads that sit between the counting layer (d14/d28/d70) and the
@@ -19,15 +20,7 @@ import graft.sources.Tables
   * precedent applies (pow/exp on a bounded per-key table, quantized q6
   * before anything crosses rows).
   */
-object DataQueries17 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
-  private def embs(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
-
-  private def toDouble(a: Column): Column = transform(a, x => x.cast("double"))
-  private def dot(a: Column, b: Column): Column = graft.functions.prom.vec_dot(a, b)
+object DataQueries17 extends QueryModule {
 
   /** Non-empty word array of `text` (d79's tokenization). */
   private val wordsExpr = "filter(split(text, ' '), x -> length(x) >= 1)"
@@ -37,24 +30,10 @@ object DataQueries17 {
     * is ~60 driver-side strings (no cached RDDs), and stopped sessions
     * purge on access.
     */
-  private val lexMemoMax = 8
-  private val lexMemo = // access-order = LRU iteration order
-    new java.util.LinkedHashMap[(SparkSession, String), Seq[String]](16, 0.75f, true)
+  private val lexMemo = Caches.memo[Seq[String]]()
 
   private def wpLexicon(s: SparkSession, dir: String): Seq[String] =
-    lexMemo.synchronized {
-      lexMemo.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-      Option(lexMemo.get((s, dir))).getOrElse {
-        val r = graft.operators.BpeTokenizer
-          .wordpieceLexicon(docs(s, dir), "text", 32, 4)
-        lexMemo.put((s, dir), r)
-        if (lexMemo.size > lexMemoMax) {
-          val it = lexMemo.entrySet().iterator()
-          it.next(); it.remove()
-        }
-        r
-      }
-    }
+    lexMemo((s, dir))(graft.operators.BpeTokenizer.wordpieceLexicon(docs(s, dir), "text", 32, 4))
 
   val queries: Map[String, Q] = Map[String, Q](
     // interpolated Kneser-Ney bigram probabilities (Kneser & Ney 1995;
@@ -460,14 +439,14 @@ object DataQueries17 {
     "d149_hard_negatives" -> ((s, dir) => {
       val e = embs(s, dir)
         .select(col("vec_id"), toDouble(col("embedding")).as("v"), col("label"))
-        .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+        .withColumn("nrm", sqrt(vec_dot(col("v"), col("v"))))
       val q = e.filter(col("vec_id") >= 8 && col("vec_id") < 16)
         .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"),
           col("label").as("qlabel"))
       val scored = e.join(broadcast(q),
           col("vec_id") =!= col("qid") && col("label") =!= col("qlabel"))
         .select(col("qid"), col("vec_id"), col("label"),
-          floor(dot(col("qv"), col("v")) / (col("qn") * col("nrm")) * lit(1000000.0))
+          floor(vec_dot(col("qv"), col("v")) / (col("qn") * col("nrm")) * lit(1000000.0))
             .cast("long").as("cos_q6"))
       val w = Window.partitionBy(col("qid")).orderBy(col("cos_q6").desc, col("vec_id"))
       scored.withColumn("rank", row_number().over(w).cast("long"))
@@ -492,7 +471,7 @@ object DataQueries17 {
           col("x.cell") === col("y.cell") && col("x.id") =!= col("y.id"))
         .select(col("x.id").as("vid"), col("x.label").as("own"),
           col("y.id").as("nid"), col("y.label").as("nlabel"),
-          (dot(col("x.v"), col("y.v")) / (col("x.nrm") * col("y.nrm"))).as("cos"))
+          (vec_dot(col("x.v"), col("y.v")) / (col("x.nrm") * col("y.nrm"))).as("cos"))
       val w = Window.partitionBy(col("vid")).orderBy(col("cos").desc, col("nid"))
       val top3 = pairs.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
       val votes = top3.groupBy(col("vid"), col("own"), col("nlabel"))

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
-
 /** Wave 15 (round 13) — storage-cost, shuffle-quality, and eval-rigor
   * audits a 100 TB pipeline runs around its core operators: the
   * inverted-index compression bill (d157), embedding-space drift across
@@ -25,12 +23,7 @@ import graft.sources.Tables
   * strat, 14-18 mix, 19-26 A-ES): 27-29 = jackknife block, 30-32 = d162
   * position shard.
   */
-object DataQueries18 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
-  private def embs(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
+object DataQueries18 extends QueryModule {
 
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
 

@@ -1,10 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.sources.Tables
 
 /** Wave 16 (round 13) — the evaluation tail: an honest retrieval eval
   * (query and target halves disjoint, unlike echo-style self-retrieval),
@@ -12,11 +9,7 @@ import graft.sources.Tables
   * filters), and language-purity / code-switch profiling on the router's
   * own evidence.
   */
-object DataQueries19 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
+object DataQueries19 extends QueryModule {
 
   private def dec(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     c.cast("decimal(38,0)")

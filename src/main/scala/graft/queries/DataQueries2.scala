@@ -1,59 +1,34 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.functions.prom.vec_dot
+import graft.sources.{Caches, Tables}
 
 /** Second wave of north-star operators: SimHash fingerprints, IVF-bucketed
   * approximate nearest neighbors (the scale path for similarity search),
   * event-time windowed aggregation, and gap-based sessionization.
   */
-object DataQueries2 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
-  private def embs(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
+object DataQueries2 extends QueryModule {
 
   /** ONE memoized+persisted IVF cell assignment per (session, dir), shared
     * by every consumer of the index (d10 search, d11 near-dup, d55 recall
     * audit) — the same bounded-cache discipline as DataQueries3's
     * clustersMemo: per-call persist() would leak one cached copy per run
-    * for the session lifetime. LRU-bounded; stopped sessions purged on
-    * access; inputs assumed immutable within a session.
+    * for the session lifetime ([[Caches.Memo]]).
     */
-  private val ivfMemoMax = 8
-  private val ivfMemo = // access-order = LRU iteration order
-    new java.util.LinkedHashMap[(SparkSession, String), DataFrame](16, 0.75f, true)
+  private val ivfMemo = Caches.memo[DataFrame](Caches.unpersist)
 
   private[graft] def ivfAssigned(s: SparkSession, dir: String): DataFrame =
-    ivfMemo.synchronized {
-      ivfMemo.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-      Option(ivfMemo.get((s, dir))).getOrElse {
-        val e = embs(s, dir)
-        val df = graft.operators.VectorSearch
-          .ivfAssign(e, "vec_id", "embedding",
-            e.filter(col("vec_id") < 4), "vec_id", "embedding")
-          .persist()
-        ivfMemo.put((s, dir), df)
-        if (ivfMemo.size > ivfMemoMax) {
-          val it = ivfMemo.entrySet().iterator()
-          val oldest = it.next()
-          it.remove()
-          try oldest.getValue.unpersist(blocking = false)
-          catch { case _: Exception => () }
-        }
-        df
-      }
+    ivfMemo((s, dir)) {
+      val e = embs(s, dir)
+      graft.operators.VectorSearch
+        .ivfAssign(e, "vec_id", "embedding",
+          e.filter(col("vec_id") < 4), "vec_id", "embedding")
+        .persist()
     }
-  private def events(s: SparkSession, dir: String) = Tables.load(s, dir, "events")
-
-  // codegen'd kernel expression; same left-fold order as
-  // aggregate(zip_with(...)) => bit-identical to the DuckDB fold oracle
-  private def dot(a: Column, b: Column): Column = graft.functions.prom.vec_dot(a, b)
-  private def toDouble(a: Column): Column = transform(a, x => x.cast("double"))
 
   val queries: Map[String, Q] = Map(
     // 64-bit SimHash over token md5s (frequency-weighted, strict >0 rule);
@@ -79,7 +54,7 @@ object DataQueries2 {
       val scored = q.join(assigned, Seq("cell"))
         .filter(col("id") =!= col("qid"))
         .select(col("qid"), col("id").as("vec_id"),
-          (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos"))
+          (vec_dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos"))
       val wRank = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
       scored.withColumn("rank", row_number().over(wRank).cast("long"))
         .filter(col("rank") <= 3)
@@ -99,7 +74,7 @@ object DataQueries2 {
       assigned.as("x").join(assigned.as("y"),
           col("x.cell") === col("y.cell") && col("x.id") < col("y.id"))
         .select(col("x.id").as("a"), col("y.id").as("b"),
-          (dot(col("x.v"), col("y.v")) / (col("x.nrm") * col("y.nrm"))).as("cos"))
+          (vec_dot(col("x.v"), col("y.v")) / (col("x.nrm") * col("y.nrm"))).as("cos"))
         .filter(col("cos") >= 0.4)
         .orderBy("a", "b")
     }),

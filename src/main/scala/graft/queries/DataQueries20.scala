@@ -4,19 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
-
 /** Twentieth wave — the r13 verdict's ordered follow-ups: batched BPE merge
   * selection (the production-vocab trainer path), the binned AUC beside
   * d154's exact audit, the tie-averaged Spearman a 100 TB run would
   * publish beside d155's exact ranks, and the REAL image decode through
   * the multimodal codec seam (m08).
   */
-object DataQueries20 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
+object DataQueries20 extends QueryModule {
 
   private val wordsExpr = "filter(split(text, ' '), x -> length(x) >= 1)"
 

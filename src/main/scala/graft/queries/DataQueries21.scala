@@ -1,19 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.sources.Tables
 
 /** Twenty-first wave — the r15 verdict's ordered follow-ups: media near-dup
   * candidates keyed by a REAL codec-derived perceptual hash (m11), which
   * retires the last multimodal test-double from the near-dup path.
   */
-object DataQueries21 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
+object DataQueries21 extends QueryModule {
 
   val queries: Map[String, Q] = Map[String, Q](
     // media near-dup where the candidate key is a REAL perceptual hash:

@@ -1,19 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.sources.Tables
 
 /** Twenty-second wave — the r16 verdict's ordered follow-ups: media
   * near-dup as a PUBLIC operator (operators/MediaDedup) with a persistable
   * hash index, exercised through the oracle gate.
   */
-object DataQueries22 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
+object DataQueries22 extends QueryModule {
 
   val queries: Map[String, Q] = Map[String, Q](
     // index-based media dedup — the cross-dump loop TextDedup.buildIndex/

@@ -1,9 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.sources.Tables
 
 /** Twenty-third wave: privacy auditing for training-data metadata
   * (k-anonymity / generalization / l-diversity — the release-gate checks a
@@ -22,12 +19,7 @@ import graft.sources.Tables
   * partitions/shards like any long sum); the exact per-key side exists to
   * audit the sketch's overestimate guarantee at test scale.
   */
-object DataQueries23 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def customer(s: SparkSession, dir: String) = Tables.load(s, dir, "customer")
-  private def events(s: SparkSession, dir: String) = Tables.load(s, dir, "events")
+object DataQueries23 extends QueryModule {
 
   val queries: Map[String, Q] = Map[String, Q](
     // k-anonymity audit: equivalence classes over the quasi-identifiers

@@ -1,9 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import graft.sources.Tables
 
 /** Twenty-fourth wave: differentially-private release noise as the privacy
   * family's coda (deterministic two-sided-geometric noise on the count
@@ -25,13 +23,7 @@ import graft.sources.Tables
   * before anything widens and prices on |pairs| x gram-matches, never
   * corpus^2.
   */
-object DataQueries24 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def customer(s: SparkSession, dir: String) = Tables.load(s, dir, "customer")
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
-  private def events(s: SparkSession, dir: String) = Tables.load(s, dir, "events")
+object DataQueries24 extends QueryModule {
 
   /** d189's composed budget (1/2 + 1/4), computed ONCE and interpolated
     * into both the Spark plan and the oracle so the ledger's total can

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -25,13 +25,9 @@ import graft.sources.Tables
   * into a <=~700-row bucket table; q54's audit joins the corpus once
   * against a broadcast 5-row quantile table — no global sort anywhere.
   */
-object DataQueries25 {
+object DataQueries25 extends QueryModule {
 
-  type Q = (SparkSession, String) => DataFrame
-
-  private def events(s: SparkSession, dir: String) = Tables.load(s, dir, "events")
   private def lineitem(s: SparkSession, dir: String) = Tables.load(s, dir, "lineitem")
-  private def customer(s: SparkSession, dir: String) = Tables.load(s, dir, "customer")
 
   /** d193's contribution bound: each user keeps at most this many events
     * (md5-ordered), and the release charges exactly this L1 sensitivity.

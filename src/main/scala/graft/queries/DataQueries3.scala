@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.functions.prom.vec_dot
+import graft.sources.{Caches, Tables}
 
 /** Third wave of operators: deterministic stratified sampling, n-gram
   * language-model counts, dedup clustering (connected components over the
@@ -12,15 +13,7 @@ import graft.sources.Tables
   * label classification over embeddings, and relational breadth (cube,
   * correlated scalar subquery, exact medians).
   */
-object DataQueries3 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
-  private def embs(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
-
-  private def dot(a: Column, b: Column): Column = graft.functions.prom.vec_dot(a, b)
-  private def toDouble(a: Column): Column = transform(a, x => x.cast("double"))
+object DataQueries3 extends QueryModule {
 
   /** Connected components over the MinHash-LSH candidate graph via iterative
     * min-label propagation (the standard large-scale CC algorithm; O(graph
@@ -37,42 +30,26 @@ object DataQueries3 {
     *
     * The memo assumes a dir's data is immutable within a session (the
     * corpus-snapshot contract); call [[invalidateClusters]] after rewriting
-    * a dir in place to force a recompute. It cannot grow with JVM lifetime:
-    * entries of stopped sessions are purged on every access (their cached
-    * blocks died with the context), and the cache is LRU-bounded — an
-    * insert past the cap unpersists and evicts the oldest entry.
+    * a dir in place to force a recompute. It is bounded as every
+    * [[Caches.Memo]] is; an evicted table is unpersisted.
     */
-  private val MaxClusterMemos = 8
-  private val clustersMemo = // access-order = LRU iteration order
-    new java.util.LinkedHashMap[(SparkSession, String), DataFrame](16, 0.75f, true)
+  private val clustersMemo = Caches.memo[DataFrame](Caches.unpersist)
 
   private[graft] def dedupClusters(s: SparkSession, dir: String): DataFrame =
-    clustersMemo.synchronized {
-      clustersMemo.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-      Option(clustersMemo.get((s, dir))).getOrElse {
-        // public API binding (operators/TextDedup.clusters): min-label
-        // propagation with sum-convergence detection — the LSH candidate graph
-        // is near-clique (diameter ~2-3), so O(1) rounds; alternatingStar is
-        // the O(log n) general-graph path.
-        // memo-owned lineage: the plain localCheckpoint keeps the loop's
-        // truncation blocks OUT of the Caches.release registry — this frame
-        // outlives any single query, so release must never be able to drop
-        // blocks it still recomputes from (freed via ContextCleaner once
-        // the memo evicts the entry)
-        val df = graft.operators.TextDedup.clusters(DataQueries.minhashPairs(s, dir),
-            checkpoint = _.localCheckpoint())
-          .select(col("id").as("doc_id"), col("cluster"))
-          .persist()
-        clustersMemo.put((s, dir), df)
-        if (clustersMemo.size > MaxClusterMemos) {
-          val it = clustersMemo.entrySet().iterator()
-          val oldest = it.next()
-          it.remove()
-          try oldest.getValue.unpersist(blocking = false)
-          catch { case _: Exception => () }
-        }
-        df
-      }
+    clustersMemo((s, dir)) {
+      // public API binding (operators/TextDedup.clusters): min-label
+      // propagation with sum-convergence detection — the LSH candidate graph
+      // is near-clique (diameter ~2-3), so O(1) rounds; alternatingStar is
+      // the O(log n) general-graph path.
+      // memo-owned lineage: the plain localCheckpoint keeps the loop's
+      // truncation blocks OUT of the Caches.release registry — this frame
+      // outlives any single query, so release must never be able to drop
+      // blocks it still recomputes from (freed via ContextCleaner once
+      // the memo evicts the entry)
+      graft.operators.TextDedup.clusters(DataQueries.minhashPairs(s, dir),
+          checkpoint = _.localCheckpoint())
+        .select(col("id").as("doc_id"), col("cluster"))
+        .persist()
     }
 
   /** Drop (and unpersist) the memoized cluster table for (session, dir) —
@@ -80,12 +57,7 @@ object DataQueries3 {
     * memo otherwise serves the snapshot it first computed.
     */
   def invalidateClusters(s: SparkSession, dir: String): Unit =
-    clustersMemo.synchronized {
-      val df = clustersMemo.remove((s, dir))
-      if (df != null) {
-        try df.unpersist(blocking = false) catch { case _: Exception => () }
-      }
-    }
+    clustersMemo.invalidate((s, dir))
 
   val queries: Map[String, Q] = Map(
     // deterministic hash-based stratified sampling: ~10% per document,
@@ -142,12 +114,12 @@ object DataQueries3 {
     "d16_knn_classify" -> ((s, dir) => {
       val e = embs(s, dir)
         .select(col("vec_id"), toDouble(col("embedding")).as("v"), col("label"))
-        .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+        .withColumn("nrm", sqrt(vec_dot(col("v"), col("v"))))
       val q = e.filter(col("vec_id") >= 8 && col("vec_id") < 24)
         .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
       val scored = q.join(broadcast(e), col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id"), col("label"),
-          (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos"))
+          (vec_dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos"))
       val wRank = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
       val top3 = scored.withColumn("rn", row_number().over(wRank)).filter(col("rn") <= 3)
       val votes = top3.groupBy(col("qid"), col("label")).agg(count(lit(1)).as("votes"))
@@ -166,12 +138,12 @@ object DataQueries3 {
     // distributed k-means shape.
     "d18_kmeans_step" -> ((s, dir) => {
       val e = embs(s, dir).select(col("vec_id"), toDouble(col("embedding")).as("v"))
-        .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+        .withColumn("nrm", sqrt(vec_dot(col("v"), col("v"))))
       val cents = e.filter(col("vec_id") < 4)
         .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))
       val scoredCells = e.join(broadcast(cents))
         .select(col("vec_id"), col("v"), col("nrm"), col("cid"),
-          (dot(col("v"), col("cv")) / (col("nrm") * col("cn"))).as("ccos"))
+          (vec_dot(col("v"), col("cv")) / (col("nrm") * col("cn"))).as("ccos"))
       val wCell = Window.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("cid"))
       val assigned = scoredCells.withColumn("rn", row_number().over(wCell))
         .filter(col("rn") === 1)

@@ -1,10 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.sources.Tables
 
 /** Fourth wave of training-data pipeline operators: pattern redaction (the
   * PII-scrub shape), benchmark decontamination, signed-random-projection LSH
@@ -14,12 +12,7 @@ import graft.sources.Tables
   * sampling. All narrow maps or single partial-aggregatable shuffles — the
   * 100 TB shapes; every one oracle-checked against DuckDB.
   */
-object DataQueries4 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
-  private def embs(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
+object DataQueries4 extends QueryModule {
 
   private val EmailRe = "[a-z0-9._]+@[a-z0-9.-]+"
   private val NumRe = "[0-9]+"

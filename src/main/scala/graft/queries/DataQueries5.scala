@@ -3,8 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
-
 /** Fifth wave of training-data pipeline operators: SimHash band blocking
   * (the Hamming-space near-dup candidate generator), cross-source overlap
   * auditing, SRP-banded embedding near-dup with exact-cosine verification
@@ -13,15 +11,7 @@ import graft.sources.Tables
   * pair expansion (groupBy bucket -> sorted collect -> in-array pairs) — no
   * self-joins, no corpus-sized broadcasts; the filters are pure narrow maps.
   */
-object DataQueries5 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
-  private def embs(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
-
-  private def dot(a: Column, b: Column): Column = graft.functions.prom.vec_dot(a, b)
-  private def toDouble(a: Column): Column = transform(a, x => x.cast("double"))
+object DataQueries5 extends QueryModule {
 
   /** Expand a sorted id array into its (a, b), a &lt; b combinations — the
     * reducer-side pair generator shared by every banded candidate query.

@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.functions.prom.vec_dot
 
 /** Sixth wave: sequence packing — the last mile of a training-data pipeline,
   * where filtered/deduped/mixed documents become fixed-length training
@@ -12,11 +12,7 @@ import graft.sources.Tables
   * [[graft.operators.SequencePacking]] API to the documents table with
   * whitespace token counts, seqLen=256, 8 shards.
   */
-object DataQueries6 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
+object DataQueries6 extends QueryModule {
 
   private def withTok(df: DataFrame): DataFrame =
     df.select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n_tok"))
@@ -67,7 +63,7 @@ object DataQueries6 {
     // oracle.
     "d51_truncate_embed" -> ((s, dir) => {
       val v = transform(col("embedding"), x => x.cast("double"))
-      Tables.load(s, dir, "embeddings")
+      embs(s, dir)
         .select(col("vec_id"), slice(v, 1, 16).as("t"))
         .withColumn("nrm",
           sqrt(graft.functions.prom.vec_dot(col("t"), col("t"))))
@@ -232,8 +228,6 @@ object DataQueries6 {
       val assigned = DataQueries2.ivfAssigned(s, dir)
       val q = assigned.filter(col("id") >= 8 && col("id") < 16)
         .select(col("id").as("qid"), col("v").as("qv"), col("nrm").as("qn"), col("cell"))
-      def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-        graft.functions.prom.vec_dot(a, b)
       def top3(scored: DataFrame): DataFrame = {
         val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
         scored.withColumn("rank", row_number().over(w))
@@ -242,11 +236,11 @@ object DataQueries6 {
       val ivf = top3(q.join(assigned, Seq("cell"))
         .filter(col("id") =!= col("qid"))
         .select(col("qid"), col("id").as("vec_id"),
-          (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos")))
+          (vec_dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos")))
       val exact = top3(assigned.join(broadcast(q.drop("cell")),
           col("id") =!= col("qid"))
         .select(col("qid"), col("id").as("vec_id"),
-          (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos")))
+          (vec_dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos")))
       val hits = exact.join(ivf, Seq("qid", "vec_id"), "left_semi")
         .groupBy(col("qid")).agg(count(lit(1)).as("n_hits"))
       exact.groupBy(col("qid")).agg(count(lit(1)).as("k"))

@@ -1,9 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.sources.Tables
 
 /** Seventh wave: span-level dedup forensics and cluster curation — the
   * ExactSubstr-style positional coverage metric (Lee et al., "Deduplicating
@@ -11,11 +8,7 @@ import graft.sources.Tables
   * verification of MinHash candidates, and quality-based representative
   * selection for near-dup clusters.
   */
-object DataQueries7 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
+object DataQueries7 extends QueryModule {
 
   val queries: Map[String, Q] = Map(
     // duplicated-span coverage (the ExactSubstr dedup metric): per document,

@@ -1,20 +1,17 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.functions.prom.vec_dot
+import graft.sources.Caches
 
 /** Eighth wave: position-aware fingerprint sketching (winnowing / MOSS) and
   * tokenizer-training statistics — the corpus-level counting passes a BPE
   * trainer and a collocation extractor run before any model sees the data.
   */
-object DataQueries8 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
+object DataQueries8 extends QueryModule {
 
   /** ONE memoized+persisted winnowing sketch (K=3, W=4) per (session,
     * dir), shared by every winnowing consumer — d69 density, d72 pairs,
@@ -23,27 +20,13 @@ object DataQueries8 {
     * sharing it prices the family at one sketch per corpus instead of one
     * per query.
     */
-  private val winnowMemoMax = 8
-  private val winnowMemo = // access-order = LRU iteration order
-    new java.util.LinkedHashMap[(SparkSession, String), org.apache.spark.sql.DataFrame](16, 0.75f, true)
+  private val winnowMemo = Caches.memo[DataFrame](Caches.unpersist)
 
   private[queries] def winnowFp(s: SparkSession, dir: String): DataFrame =
-    winnowMemo.synchronized {
-      winnowMemo.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-      Option(winnowMemo.get((s, dir))).getOrElse {
-        val df = graft.operators.TextDedup
-          .winnowFingerprints(docs(s, dir), "doc_id", "text", gramN = 3, window = 4)
-          .persist()
-        winnowMemo.put((s, dir), df)
-        if (winnowMemo.size > winnowMemoMax) {
-          val it = winnowMemo.entrySet().iterator()
-          val oldest = it.next()
-          it.remove()
-          try oldest.getValue.unpersist(blocking = false)
-          catch { case _: Exception => () }
-        }
-        df
-      }
+    winnowMemo((s, dir)) {
+      graft.operators.TextDedup
+        .winnowFingerprints(docs(s, dir), "doc_id", "text", gramN = 3, window = 4)
+        .persist()
     }
 
   val queries: Map[String, Q] = Map(
@@ -137,7 +120,7 @@ object DataQueries8 {
     // are per-row and bit-identical across engines. Nothing is collected:
     // at 100 TB this is a narrow map + a 64-key partial-agg rollup.
     "d73_power_iter" -> ((s, dir) =>
-      Tables.load(s, dir, "embeddings")
+      embs(s, dir)
         .select(expr("transform(embedding, x -> cast(x as double))").as("v"))
         .select(expr("aggregate(v, cast(0.0 as double), (a, x) -> a + x)").as("t"),
           posexplode(col("v")).as(Seq("dim", "x")))
@@ -185,7 +168,6 @@ object DataQueries8 {
     // All outputs are exact small integers.
     "d75_ivf_multiprobe" -> ((s, dir) => {
       val assigned = DataQueries2.ivfAssigned(s, dir)
-      def dot(a: Column, b: Column) = graft.functions.prom.vec_dot(a, b)
       val cents = assigned.filter(col("id") < 4)
         .select(col("id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))
       val q = assigned.filter(col("id") >= 8 && col("id") < 16)
@@ -193,14 +175,14 @@ object DataQueries8 {
       val wp = Window.partitionBy(col("qid")).orderBy(col("ccos").desc, col("cid"))
       val probes = q.crossJoin(broadcast(cents))
         .select(col("qid"), col("qv"), col("qn"), col("cid"),
-          (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("ccos"))
+          (vec_dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("ccos"))
         .withColumn("prank", row_number().over(wp))
         .filter(col("prank") <= 2)
         .select(col("qid"), col("qv"), col("qn"), col("cid").as("cell"), col("prank"))
       val scored = probes.join(assigned, Seq("cell"))
         .filter(col("id") =!= col("qid"))
         .select(col("qid"), col("prank"), col("id").as("vec_id"),
-          (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos"))
+          (vec_dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos"))
       def top3(df: DataFrame) = {
         val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
         df.withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
@@ -210,7 +192,7 @@ object DataQueries8 {
       val r2 = top3(scored)
       val exact = top3(assigned.join(broadcast(q), col("id") =!= col("qid"))
         .select(col("qid"), col("id").as("vec_id"),
-          (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos")))
+          (vec_dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos")))
       def hits(r: DataFrame, name: String) =
         exact.join(r, Seq("qid", "vec_id"), "left_semi")
           .groupBy("qid").agg(count(lit(1)).as(name))

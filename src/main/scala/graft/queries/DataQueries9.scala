@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.functions.prom.vec_dot
+import graft.sources.Caches
 
 /** Ninth wave: iterative tokenizer training. d70 computes the FIRST BPE
   * merge's pair table; a real trainer loops merge -> recount. d76 runs that
@@ -14,11 +15,7 @@ import graft.sources.Tables
   * the (symbols, word-count) vocabulary table, which is Heaps'-law bounded,
   * not corpus-bounded, and each round's merge is a codegen'd array fold.
   */
-object DataQueries9 {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
+object DataQueries9 extends QueryModule {
 
   /** Rounds of the BPE training loop (Sennrich et al.: merge the most
     * frequent adjacent symbol pair, recount, repeat). Fixed small so the
@@ -63,25 +60,11 @@ object DataQueries9 {
     * dozen DRIVER-side scalars (no cached RDDs to leak), so the memo is
     * bounded by construction. Stopped sessions are purged on access.
     */
-  private val bpeMemoMax = 8
-  private val bpeMemo = // access-order = LRU iteration order
-    new java.util.LinkedHashMap[(SparkSession, String),
-      (Seq[(Long, String, Long)], Seq[(Long, Long)])](16, 0.75f, true)
+  private val bpeMemo = Caches.memo[(Seq[(Long, String, Long)], Seq[(Long, Long)])]()
 
   private[graft] def bpeRun(s: SparkSession, dir: String)
       : (Seq[(Long, String, Long)], Seq[(Long, Long)]) =
-    bpeMemo.synchronized {
-      bpeMemo.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-      Option(bpeMemo.get((s, dir))).getOrElse {
-        val r = bpeRunOnce(s, dir)
-        bpeMemo.put((s, dir), r)
-        if (bpeMemo.size > bpeMemoMax) {
-          val it = bpeMemo.entrySet().iterator()
-          it.next(); it.remove()
-        }
-        r
-      }
-    }
+    bpeMemo((s, dir))(bpeRunOnce(s, dir))
 
   /** Batched-selection BPE training (the r13-ordered production-vocab
     * path): per round ONE pair rollup, ONE bounded top-K collect
@@ -101,24 +84,11 @@ object DataQueries9 {
   private[graft] val BatchM = 16 // max merges accepted per round
   private[graft] val BatchRounds = 8
 
-  private val bpeBatchMemo =
-    new java.util.LinkedHashMap[(SparkSession, String),
-      (Seq[(Long, Long, String, Long)], Seq[(Long, Long)])](16, 0.75f, true)
+  private val bpeBatchMemo = Caches.memo[(Seq[(Long, Long, String, Long)], Seq[(Long, Long)])]()
 
   private[graft] def bpeBatchRun(s: SparkSession, dir: String)
       : (Seq[(Long, Long, String, Long)], Seq[(Long, Long)]) =
-    bpeBatchMemo.synchronized {
-      bpeBatchMemo.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-      Option(bpeBatchMemo.get((s, dir))).getOrElse {
-        val r = bpeBatchRunOnce(s, dir)
-        bpeBatchMemo.put((s, dir), r)
-        if (bpeBatchMemo.size > bpeMemoMax) {
-          val it = bpeBatchMemo.entrySet().iterator()
-          it.next(); it.remove()
-        }
-        r
-      }
-    }
+    bpeBatchMemo((s, dir))(bpeBatchRunOnce(s, dir))
 
   private def bpeBatchRunOnce(s: SparkSession, dir: String)
       : (Seq[(Long, Long, String, Long)], Seq[(Long, Long)]) =
@@ -313,8 +283,7 @@ object DataQueries9 {
     // Per-sub errors are floor*1e6-quantized BEFORE the cross-sub sum
     // (the d57/d73 rule), so totals are accumulation-order-exact.
     "d78_pq_codes" -> ((s, dir) => {
-      def dot(a: Column, b: Column) = graft.functions.prom.vec_dot(a, b)
-      val sub = Tables.load(s, dir, "embeddings")
+      val sub = embs(s, dir)
         .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("v"))
         .select(col("vec_id"), explode(expr(
           "transform(sequence(0, 7), m -> struct(m AS m, slice(v, m*8+1, 8) AS sv))")).as("s"))
@@ -323,8 +292,8 @@ object DataQueries9 {
         .select(col("vec_id").as("cid"), col("m"), col("sv").as("cv"))
       val scored = sub.join(broadcast(cent), Seq("m"))
         .select(col("vec_id"), col("m"), col("cid"),
-          ((dot(col("sv"), col("sv")) + dot(col("cv"), col("cv"))) -
-            lit(2.0) * dot(col("sv"), col("cv"))).as("d2"))
+          ((vec_dot(col("sv"), col("sv")) + vec_dot(col("cv"), col("cv"))) -
+            lit(2.0) * vec_dot(col("sv"), col("cv"))).as("d2"))
       scored.groupBy(col("vec_id"), col("m"))
         .agg(min(struct(col("d2"), col("cid"))).as("a"))
         .select(col("vec_id"), col("m"), col("a.cid").as("code"),

@@ -12,9 +12,7 @@ import graft.queries.{SqlFragments => F}
   * the deterministic events->samples mapping, with a DuckDB oracle that
   * recomputes the expected output byte-for-byte.
   */
-object PipelineQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object PipelineQueries extends QueryModule {
 
   private def samples(s: SparkSession, dir: String) = EventSamples.df(s, dir)
 

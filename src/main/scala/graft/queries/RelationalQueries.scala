@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,9 +20,7 @@ import graft.sources.Tables
   *   - every output ends with ORDER BY on a unique key
   *   - counts/ranks cast to BIGINT on both sides
   */
-object RelationalQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object RelationalQueries extends QueryModule {
 
   private def t(s: SparkSession, dir: String, name: String) = Tables.load(s, dir, name)
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,9 +10,7 @@ import graft.sources.Tables
   * functions, distribution functions, positional explode, ordered string
   * aggregation. Same determinism rules as [[RelationalQueries]].
   */
-object RelationalQueries2 {
-
-  type Q = (SparkSession, String) => DataFrame
+object RelationalQueries2 extends QueryModule {
 
   private def t(s: SparkSession, dir: String, name: String) = Tables.load(s, dir, name)
 
@@ -161,7 +159,7 @@ object RelationalQueries2 {
     // correlated LATERAL subquery with per-row ORDER BY + LIMIT (top-2
     // customers per nation — decorrelates without a manual window)
     "q32_lateral_topn" -> ((s, dir) => {
-      Tables.load(s, dir, "customer").createOrReplaceTempView("customer_v")
+      customer(s, dir).createOrReplaceTempView("customer_v")
       Tables.load(s, dir, "nation").createOrReplaceTempView("nation_v")
       s.sql(
         """SELECT n_name, t.c_custkey, CAST(t.c_acctbal AS DOUBLE) AS bal

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,12 +14,9 @@ import graft.sources.Tables
   * time-series resampling with LOCF gap fill — each
   * oracle-checked against DuckDB.
   */
-object RelationalQueries3 {
-
-  type Q = (SparkSession, String) => DataFrame
+object RelationalQueries3 extends QueryModule {
 
   private def li(s: SparkSession, dir: String) = Tables.load(s, dir, "lineitem")
-  private def events(s: SparkSession, dir: String) = Tables.load(s, dir, "events")
 
   val queries: Map[String, Q] = Map(
     // unpivot (melt): wide per-flag measures -> long (flag, measure, value).
@@ -37,7 +34,7 @@ object RelationalQueries3 {
     // correlated EXISTS / NOT EXISTS (Catalyst rewrites to semi/anti joins —
     // the decorrelated plan shuffles each side once on the correlation key)
     "q34_exists" -> ((s, dir) => {
-      Tables.load(s, dir, "customer").createOrReplaceTempView("customer_v")
+      customer(s, dir).createOrReplaceTempView("customer_v")
       Tables.load(s, dir, "orders").createOrReplaceTempView("orders_v")
       s.sql(
         """SELECT c_custkey, c_name FROM customer_v c
@@ -65,7 +62,7 @@ object RelationalQueries3 {
     // negative indexing, lexicographic max — all narrow codegen'd ops
     "q36_arrays" -> ((s, dir) => {
       val tok = split(col("text"), " ")
-      Tables.load(s, dir, "documents").select(
+      docs(s, dir).select(
         col("doc_id"),
         array_position(tok, "spark").as("pos_spark"),
         size(array_distinct(tok)).cast("long").as("n_uniq"),

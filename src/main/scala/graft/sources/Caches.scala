@@ -27,8 +27,61 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the loop discipline (truncate lineage every round) is identical.
   *
   * Sessions are weak keys: a stopped/collected session drops its list.
+  *
+  * The cross-query memos are [[Memo]]s, made by [[memo]].
   */
 object Caches {
+
+  /** A bounded cross-query memo: one value per key, built on first use and
+    * shared by every later query that asks for it. The (session, dir) memos
+    * that [[memo]] makes hold what several queries over one corpus read (the
+    * IVF cell assignment, the dedup clusters, the winnowing sketch, the
+    * trained BPE merges, the WordPiece lexicon). A dir's data is assumed
+    * immutable within a session; [[invalidate]] drops an entry after a
+    * rewrite.
+    *
+    * It cannot grow with JVM lifetime: on every access the entries whose key
+    * is `stale` (a stopped session: its cached blocks died with the context)
+    * are dropped, and past 8 entries the least recently used entry
+    * is evicted and `release`d. The build runs under the memo's lock, so two
+    * queries asking for one key build it once.
+    */
+  final class Memo[K, V](stale: K => Boolean, release: V => Unit) {
+    private val maxEntries = 8
+    private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) // access order = LRU order
+
+    def apply(key: K)(build: => V): V = m.synchronized {
+      m.entrySet().removeIf(e => stale(e.getKey))
+      Option(m.get(key)).getOrElse {
+        val v = build
+        m.put(key, v)
+        if (m.size > maxEntries) {
+          val it = m.entrySet().iterator()
+          val oldest = it.next()
+          it.remove()
+          release(oldest.getValue)
+        }
+        v
+      }
+    }
+
+    /** Drop and release the entry for `key`, if there is one. */
+    def invalidate(key: K): Unit = m.synchronized {
+      Option(m.remove(key)).foreach(release)
+    }
+  }
+
+  /** A memo keyed by (session, dir). `release` frees an evicted or
+    * invalidated value: [[unpersist]] for a persisted frame, nothing for a
+    * driver-side value.
+    */
+  def memo[V](release: V => Unit = (_: V) => ()): Memo[(SparkSession, String), V] =
+    new Memo[(SparkSession, String), V](_._1.sparkContext.isStopped, release)
+
+  /** Unpersist without blocking; a failure (a stopped context) is ignored. */
+  def unpersist(df: DataFrame): Unit =
+    try { df.unpersist(blocking = false); () }
+    catch { case _: Exception => () }
 
   private val reg =
     new java.util.WeakHashMap[SparkSession, java.util.ArrayList[DataFrame]]
@@ -88,10 +141,7 @@ object Caches {
       val l = reg.remove(spark)
       if (l == null) java.util.Collections.emptyList[DataFrame] else l
     }
-    drained.forEach { df =>
-      try df.unpersist(blocking = false)
-      catch { case _: Exception => () }
-    }
+    drained.forEach(unpersist(_))
     val ckDrained = ckReg.synchronized {
       val l = ckReg.remove(spark)
       if (l == null) java.util.Collections.emptyList[RDD[_]] else l

@@ -7,8 +7,11 @@ import org.apache.spark.sql.{ForeachWriter, Row}
   * in this environment; the contract is the public pulsar-client API).
   *
   * Reference semantics preserved:
-  *   - one long-lived producer per executor/partition, reused across rows
-  *     (single shared producer, pulsar.go:80-96, CHANGELOG.md:19-22)
+  *   - one long-lived producer per JVM, shared by every partition and
+  *     micro-batch (single shared producer, pulsar.go:80-96,
+  *     CHANGELOG.md:19-22): `open` takes a handle from the factory per
+  *     partition per epoch, and [[PulsarSink.Factory]] hands out the same
+  *     producer each time
   *   - rows carry (key, payload); null payload (serialize failure) is logged
   *     and skipped, not fatal (pulsar.go:239-243)
   *   - async sends flushed on commit (pulsar.go:261-262); commit fails =>

@@ -206,16 +206,34 @@ object PulsarSink {
             s"org.apache.pulsar:pulsar-client jar to $what " + cfg.url, e)
     }
 
-  /** One producer per executor partition against a real broker; all
-    * pulsar-client calls go through the public builder API by reflection
-    * (see [[buildClient]] for the flag mapping).
+  /** Produces to a real broker through one client and producer per JVM and
+    * [[Config]], shared by every partition and epoch of the produce query: the
+    * reference's single shared producer (pulsar.go:80-96). Spark opens a
+    * writer per partition per micro-batch; each gets a handle whose `flush`
+    * flushes the shared producer and whose `close` leaves it open. The
+    * client and producer close at JVM shutdown. All pulsar-client calls go
+    * through the public builder API by reflection (see [[buildClient]] for
+    * the flag mapping).
     */
-  final class Factory(cfg: Config) extends KeyedSink.ProducerFactory {
-    override def create(partitionId: Long): KeyedSink.Producer = {
+  class Factory(cfg: Config) extends KeyedSink.ProducerFactory {
+
+    /** Overridable seam: tests inject a fake producer (same method shape).
+      * Returns the producer and what closes it and its client.
+      */
+    protected def connect(): (AnyRef, () => Unit) = {
       val client = buildClient(cfg, "produce to")
       val producerBuilder = call(client, "newProducer")
       call(producerBuilder, "topic", classOf[String] -> cfg.topic)
       val producer = call(producerBuilder, "create")
+      (producer, () => { try call(producer, "close") finally call(client, "close"); () })
+    }
+
+    override def create(partitionId: Long): KeyedSink.Producer = {
+      val producer = Factory.producers.computeIfAbsent(cfg, _ => {
+        val (p, close) = connect()
+        sys.addShutdownHook(close())
+        p
+      })
       new KeyedSink.Producer {
         override def sendAsync(key: String, payload: Array[Byte]): Unit = {
           val msg = call(producer, "newMessage")
@@ -225,11 +243,12 @@ object PulsarSink {
           ()
         }
         override def flush(): Unit = { call(producer, "flush"); () }
-        override def close(): Unit = {
-          try call(producer, "close") finally call(client, "close")
-          ()
-        }
+        override def close(): Unit = ()
       }
     }
+  }
+
+  private object Factory {
+    val producers = new java.util.concurrent.ConcurrentHashMap[Config, AnyRef]()
   }
 }

@@ -2,7 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 
 /** Bridge into Spark's `private[sql]` Column <-> Expression conversions
   * (org.apache.spark.sql.classic.ExpressionUtils). Needed because the engine
@@ -12,4 +12,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `c` as a Catalyst expression with every Column node in it converted, as
+    * a Dataset converts the Columns it is given. A SQL function builder
+    * must return this form: the analyzer does not convert Column nodes in
+    * the expressions a builder returns.
+    */
+  def converted(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
 }

@@ -10,7 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *     audits SURVEY as the blueprint; both said "126" for two rounds
   *     after the count hit 133);
   *   - every class the run recipes name still exists (deleted mains kept
-  *     their `runMain` recipes in four docs).
+  *     their `runMain` recipes in four docs);
+  *   - hand-placed `broadcast(` hints and `Caches.ephemeral` persists in
+  *     src/main do not grow unnoticed (ROADMAP aim 2: each must pay for
+  *     itself), counted as `grep -o` counts them.
   */
 class DocsSpec extends AnyFunSuite {
 
@@ -47,5 +50,19 @@ class DocsSpec extends AnyFunSuite {
       scala.util.Try(Class.forName(n, false, getClass.getClassLoader)).isFailure
     }
     assert(missing.isEmpty, s"docs name classes that do not exist: ${missing.mkString(", ")}")
+  }
+
+  test("broadcast hints and ephemeral persists stay within their budget") {
+    // Lower a budget when a hint or a persist goes; a new one raises it in
+    // its own change, with the measurement that justifies it.
+    val budget = Map("broadcast(" -> 124, "Caches.ephemeral" -> 78)
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(p => java.nio.file.Files.isRegularFile(p))
+      .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+    budget.foreach { case (needle, max) =>
+      val n = sources.map(java.util.regex.Pattern.quote(needle).r.findAllMatchIn(_).size).sum
+      assert(n <= max, s"src/main has $n occurrences of '$needle', over its budget of $max")
+    }
   }
 }

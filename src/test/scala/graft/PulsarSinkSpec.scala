@@ -2,8 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.types.{BinaryType, StringType, StructType}
+
 import graft.sources.BrokerSource
-import graft.streaming.PulsarSink
+import graft.streaming.{KeyedSink, PulsarSink}
 
 /** Pulsar adapter config plumbing (pkg/app/pulsar.go:74-115) — parse,
   * validation, and factory selection, all without a live broker.
@@ -131,5 +134,43 @@ class PulsarSinkSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       new graft.sources.BrokerSourceProvider().getTable(null, Array.empty, props))
     assert(e.getMessage.contains("both pulsar.client-key and pulsar.client-certificate"))
+  }
+
+  test("the produce sink connects once per JVM and config, and flushes every epoch") {
+    val producer = new FakeProducer
+    var connects = 0
+    val f = new PulsarSink.Factory(PulsarSink.Config.from(Flags("pulsar.url" -> "pulsar://fake-epochs:6650"))) {
+      override protected def connect(): (AnyRef, () => Unit) = {
+        connects += 1
+        (producer, () => ())
+      }
+    }
+    val schema = new StructType().add("key", StringType).add("payload", BinaryType)
+    val w = KeyedSink.writer(f)
+    (0L to 1L).foreach { epoch =>
+      assert(w.open(0L, epoch))
+      w.process(new GenericRowWithSchema(Array[Any](s"k$epoch", Array[Byte](1, 2)), schema))
+      w.close(null)
+    }
+    assert(connects == 1)
+    assert(producer.flushes == 2)
+    assert(producer.sent == Seq("k0", "k1"))
+  }
+
+  /** The pulsar-client `Producer` and `TypedMessageBuilder` methods the sink
+    * calls by reflection.
+    */
+  class FakeProducer {
+    val sent = scala.collection.mutable.Buffer.empty[String]
+    var flushes = 0
+    def newMessage(): FakeMessageBuilder = new FakeMessageBuilder(this)
+    def flush(): Unit = flushes += 1
+  }
+
+  class FakeMessageBuilder(p: FakeProducer) {
+    private var k: String = _
+    def key(key: String): FakeMessageBuilder = { k = key; this }
+    def value(v: AnyRef): FakeMessageBuilder = this
+    def sendAsync(): AnyRef = { p.sent += k; null }
   }
 }
